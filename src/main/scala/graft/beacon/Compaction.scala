@@ -172,20 +172,10 @@ object Compaction {
     }
     val results =
       if (maxConcurrentMonths <= 1) wanted.sorted.flatMap(compactMonth)
-      else {
-        // independent Spark jobs submitted from a bounded driver pool; a
-        // month failure propagates after the in-flight months finish
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(maxConcurrentMonths, math.max(1, wanted.size)))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(
-              wanted.sorted.map(m => scala.concurrent.Future(compactMonth(m)))),
-            scala.concurrent.duration.Duration.Inf).flatten
-        finally pool.shutdown()
-      }
+      // independent Spark jobs submitted from a bounded driver pool; a
+      // month failure propagates after every other month has finished
+      else graft.core.Parallel.all(
+        wanted.sorted.map(m => () => compactMonth(m)), maxConcurrentMonths).flatten
     // the roots only ever hold in-flight state; leave nothing behind
     graft.core.Fs.deleteDir(spark, tmpRoot(tableDir))
     graft.core.Fs.deleteDir(spark, oldRoot(tableDir))

@@ -93,8 +93,6 @@ final case class MapSlotFetcher(payloads: Map[Long, String]) extends SlotFetcher
   */
 object RawIngest {
 
-  /** Fetch a slot list into raw rows. Partition count bounds concurrent
-    * HTTP connections (the reference's BACKFILL_WORKERS knob, D2). */
   /** Bounded-cardinality metrics route for a fetcher (C16; reference:
     * observability.py:124-145 — labels by normalized endpoint). */
   private def routeOf(fetcher: SlotFetcher): String = fetcher match {
@@ -104,6 +102,8 @@ object RawIngest {
     case _ => "offline"
   }
 
+  /** Fetch a slot list into raw rows. Partition count bounds concurrent
+    * HTTP connections (the reference's BACKFILL_WORKERS knob, D2). */
   def fetchSlots(
       spark: SparkSession, slots: Seq[Long], fetcher: SlotFetcher,
       parallelism: Int = 4): DataFrame = {
@@ -318,50 +318,40 @@ object RawIngest {
       ranges: Seq[(Long, Long)], workers: Int = 4,
       parallelism: Int = 4,
       split: Boolean = false,
-      gate: Option[Long => Boolean] = None): Seq[Boolean] = {
-    if (ranges.isEmpty) return Seq.empty
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, workers))
-    try {
-      val futures = ranges.map { case (s, e) =>
-        pool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = {
-            val version = System.currentTimeMillis()
-            val chunk = Ledger.chunkRow(spark, loader, s, e)
-            commitLock.synchronized {
-              ledger.append(Ledger.transition(chunk, "claimed", "spark-pool", version))
-            }
-            val slots = gate match {
-              case Some(g) => s.to(e).filter(g)
-              case None => s.to(e)
-            }
-            val rows = (
-              if (split) fetchSlotsSplit(spark, slots, fetcher, parallelism)
-              else fetchSlots(spark, slots, fetcher, parallelism)).persist()
-            try {
-              rows.count() // fetch runs NOW, outside the commit lock
-              commitLock.synchronized {
-                writeRaw(rows, cfg, rawDir)
-                ledger.append(Ledger.transition(chunk, "completed", "spark-pool", version + 1))
-                // driver-side accumulator adds are NOT thread-safe —
-                // concurrent pool threads would lose increments
-                graft.core.Metrics.of(spark).chunksCompleted.add(1)
-              }
-              true
-            } catch {
-              case scala.util.control.NonFatal(ex) =>
-                graft.core.Observability.reportError(s"ingestChunksPooled($loader, $s-$e)", ex)
-                commitLock.synchronized {
-                  ledger.append(Ledger.transition(chunk, "failed", "spark-pool", version + 1))
-                  graft.core.Metrics.of(spark).chunksFailed.add(1)
-                }
-                false
-            } finally rows.unpersist(blocking = false)
-          }
-        })
+      gate: Option[Long => Boolean] = None): Seq[Boolean] =
+    graft.core.Parallel.all(ranges.map { case (s, e) => () =>
+      val version = System.currentTimeMillis()
+      val chunk = Ledger.chunkRow(spark, loader, s, e)
+      commitLock.synchronized {
+        ledger.append(Ledger.transition(chunk, "claimed", "spark-pool", version))
       }
-      futures.map(_.get())
-    } finally pool.shutdown()
-  }
+      val slots = gate match {
+        case Some(g) => s.to(e).filter(g)
+        case None => s.to(e)
+      }
+      val rows = (
+        if (split) fetchSlotsSplit(spark, slots, fetcher, parallelism)
+        else fetchSlots(spark, slots, fetcher, parallelism)).persist()
+      try {
+        rows.count() // fetch runs NOW, outside the commit lock
+        commitLock.synchronized {
+          writeRaw(rows, cfg, rawDir)
+          ledger.append(Ledger.transition(chunk, "completed", "spark-pool", version + 1))
+          // driver-side accumulator adds are NOT thread-safe —
+          // concurrent pool threads would lose increments
+          graft.core.Metrics.of(spark).chunksCompleted.add(1)
+        }
+        true
+      } catch {
+        case scala.util.control.NonFatal(ex) =>
+          graft.core.Observability.reportError(s"ingestChunksPooled($loader, $s-$e)", ex)
+          commitLock.synchronized {
+            ledger.append(Ledger.transition(chunk, "failed", "spark-pool", version + 1))
+            graft.core.Metrics.of(spark).chunksFailed.add(1)
+          }
+          false
+      } finally rows.unpersist(blocking = false)
+    }, workers)
 
   /** First slot the loader's endpoint exists at — `Long.MaxValue` when the
     * NAMED fork is missing from this network's schedule (gates everything

@@ -1,7 +1,7 @@
 package graft.beacon
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 
 import java.sql.Timestamp
 
@@ -104,15 +104,18 @@ object Transformer {
       true
     })
 
-  private def writeTable(df: DataFrame, cfg: ChainConfig, outDir: String, table: String): Long = {
+  /** Appends one table and returns its row count and its rows per range of
+    * `perRange`, both observed on the write action itself — a separate
+    * count would re-run the whole parse pipeline once more per table. */
+  private def writeTable(df: DataFrame, cfg: ChainConfig, outDir: String, table: String,
+      perRange: graft.core.RangeCounts): (Long, Array[Long]) = {
     val out = df.withColumn(
       "month", date_format(cfg.slotTimestamp(col("slot")), "yyyy-MM"))
     requireCompatibleSchema(out, s"$outDir/$table", table)
-    // Observation rides the write action itself — a separate .count()
-    // would re-run the whole parse pipeline once more per table
     val obs = org.apache.spark.sql.Observation()
     try
-      out.observe(obs, count(lit(1)).as("n"))
+      out.observe(obs, count(lit(1)).as("n"),
+          udaf(perRange, Encoders.LONG)(col("slot")).as("per_range"))
         .sortWithinPartitions("slot")
         .write.mode(SaveMode.Append).partitionBy("month")
         // K3: width-aware output file sizing per table
@@ -126,9 +129,31 @@ object Transformer {
         schemaProbed.remove(s"$outDir/$table")
         throw e
     }
-    val n = obs.get("n").asInstanceOf[Long]
-    graft.core.Metrics.of(df.sparkSession).rowsWritten.add(n)
-    n
+    val m = obs.get
+    (m("n").asInstanceOf[Long], m("per_range").asInstanceOf[scala.collection.Seq[Long]].toArray)
+  }
+
+  /** Appends every parsed table and returns the rows written and the rows
+    * per range of `ranges` (sorted by start), summed over the tables. The
+    * first table, by name, is written alone: when the parse is persisted,
+    * that write fills the cache the other tables read. The rest are then
+    * written at once, one pool thread per table, and this returns only
+    * after every write has finished — the caller may unpersist the parse
+    * on return, even when a write failed. Rows of a failed call are not
+    * added to `rows_written`. */
+  private def writeTables(
+      spark: SparkSession, tables: Map[String, DataFrame], cfg: ChainConfig,
+      outDir: String, ranges: IndexedSeq[(Long, Long)]): (Long, Array[Long]) = {
+    val perRange = new graft.core.RangeCounts(ranges)
+    val ordered = tables.toSeq.sortBy(_._1)
+    def write(t: (String, DataFrame)) =
+      writeTable(t._2.drop("month"), cfg, outDir, t._1, perRange)
+    val written = ordered.take(1).map(write) ++
+      graft.core.Parallel.all(ordered.drop(1).map(t => () => write(t)), ordered.size - 1)
+    val rows = written.map(_._1).sum
+    // accumulator adds are not thread-safe: one add, on the calling thread
+    graft.core.Metrics.of(spark).rowsWritten.add(rows)
+    (rows, written.map(_._2).foldLeft(perRange.zero)(perRange.merge))
   }
 
   /** Generic chunk transform for any registered loader: read its raw
@@ -165,10 +190,7 @@ object Transformer {
       try {
         val tables = loader.parse(prepared, cfg, version)
           .view.filterKeys(loader.tables).toMap // F8
-        var total = 0L
-        tables.foreach { case (name, df) =>
-          total += writeTable(df.drop("month"), cfg, outDir, name)
-        }
+        val (total, _) = writeTables(spark, tables, cfg, outDir, Vector((startSlot, endSlot)))
         progress.append(progressRow(spark, loader.rawTable, startSlot, endSlot,
           "completed", total, 0L, None, version))
         graft.core.Metrics.histogram(
@@ -228,48 +250,22 @@ object Transformer {
       startSlot, endSlot, version)
   }
 
-  /** Tag rows with the (start_slot, end_slot) of the owning chunk from a
-    * driver-known set of DISJOINT ranges, as a broadcast equi-join — the
-    * scalable interval-join shape. Each range of width ≤ W overlaps at
-    * most two buckets of width W, so exploding ranges into their covered
-    * buckets keeps the broadcast side ≤ 2·|ranges| rows and the probe an
-    * equi-join on the bucket plus a residual BETWEEN — no nested-loop
-    * range join, no per-row CASE chain over thousands of ranges. */
-  /** Shared bucket-explosion for the interval joins below: each range of
-    * width ≤ W covers at most two W-buckets, so the broadcast side stays
-    * ≤ 2·|ranges| rows; probes equi-join on `slot div W` plus a residual
-    * BETWEEN. Returns (bucket width, buckets frame with the given range
-    * column names). */
-  private def bucketize(
-      spark: SparkSession, ranges: Seq[(Long, Long)],
-      startName: String, endName: String): (Long, DataFrame) = {
-    val w = math.max(1L, ranges.map { case (s, e) => e - s + 1 }.max)
-    import spark.implicits._
-    (w, ranges.flatMap { case (s, e) =>
-      (s / w).to(e / w).map(b => (b, s, e))
-    }.toDF("__bucket", startName, endName))
-  }
-
-  def tagChunks(df: DataFrame, ranges: Seq[(Long, Long)]): DataFrame = {
-    require(ranges.nonEmpty, "tagChunks needs at least one range")
-    val (w, buckets) = bucketize(df.sparkSession, ranges, "start_slot", "end_slot")
-    df.withColumn("__bucket", expr(s"slot div $w"))
-      .join(broadcast(buckets), Seq("__bucket"))
-      .filter(col("slot").between(col("start_slot"), col("end_slot")))
-      .drop("__bucket")
-  }
-
-  /** Exact range-membership filter over the same broadcast bucket shape as
-    * [[tagChunks]], but as a LEFT SEMI join: a slot that falls in several
-    * ranges (mixed chunk grids in the ledger — streaming exact runs vs
-    * planned chunks after a chunk-size change) passes ONCE instead of
-    * being duplicated per owning range. The fused transform parses through
-    * this (it only needs membership); [[tagChunks]] remains for the
-    * per-chunk counts, where a shared slot legitimately counts in every
-    * owning range's progress row. */
+  /** Exact range-membership filter as a broadcast LEFT SEMI join — the
+    * scalable interval-join shape. Each range of width ≤ W (the widest
+    * range) covers at most two W-buckets, so the broadcast side stays
+    * ≤ 2·|ranges| rows and the probe is an equi-join on `slot div W` plus a
+    * residual BETWEEN: no nested-loop range join, no per-row CASE chain
+    * over thousands of ranges. A slot that falls in several ranges (mixed
+    * chunk grids in the ledger — streaming exact runs vs planned chunks
+    * after a chunk-size change) passes ONCE instead of once per range. */
   def filterToRanges(df: DataFrame, ranges: Seq[(Long, Long)]): DataFrame = {
     require(ranges.nonEmpty, "filterToRanges needs at least one range")
-    val (w, buckets) = bucketize(df.sparkSession, ranges, "__fs", "__fe")
+    val w = math.max(1L, ranges.map { case (s, e) => e - s + 1 }.max)
+    val spark = df.sparkSession
+    import spark.implicits._
+    val buckets = ranges.flatMap { case (s, e) =>
+      (s / w).to(e / w).map(b => (b, s, e))
+    }.toDF("__bucket", "__fs", "__fe")
     val probed = df.withColumn("__bucket", expr(s"slot div $w"))
     probed.join(broadcast(buckets),
       probed("__bucket") === buckets("__bucket") &&
@@ -281,16 +277,17 @@ object Transformer {
   /** D2/D4 at scale: transform ALL pending ranges as ONE Spark job per
     * output table instead of one driver-loop iteration per chunk. The
     * union of ranges is scanned once (partition/row-group pruned by the
-    * global slot bounds), deduped latest-per-slot once, parsed once
-    * (persisted for the multi-table fan-out), and each output table is
-    * written with a single action. Per-chunk progress rows are preserved:
-    * one fused count job (a union-aggregate over the persisted parse)
-    * yields rows-written per chunk, appended as a single progress write.
+    * global slot bounds), deduped latest-per-slot once and parsed once,
+    * persisted for the multi-table fan-out. The first table's write fills
+    * that cache; the other tables are then written concurrently. Each
+    * write also counts its rows per range, so the per-chunk progress rows
+    * (one progress write for all ranges) need no second pass.
     *
-    * All-or-nothing: any failure rolls up to `false` and the caller falls
-    * back to per-chunk [[transformChunk]] for failure isolation (the
-    * reference's chunk-at-a-time loop, loader.py:463-485, becomes the
-    * EXCEPTION path instead of the steady-state).
+    * All-or-nothing: any failure rolls up to `false` — only after every
+    * write has finished — and the caller falls back to per-chunk
+    * [[transformChunk]] for failure isolation (the reference's
+    * chunk-at-a-time loop, loader.py:463-485, becomes the EXCEPTION path
+    * instead of the steady-state).
     */
   def transformChunksFused(
       spark: SparkSession, cfg: ChainConfig, loader: LoaderDef,
@@ -305,7 +302,7 @@ object Transformer {
     // anyway: overlapping grids mean per-chunk counts double-count the
     // shared slots (each owning range reports them), worth an operator's
     // attention even though the output tables stay duplicate-free.
-    val sorted = ranges.sortBy(_._1)
+    val sorted = ranges.sorted.toVector
     if (sorted.exists { case (s, e) => s > e }) {
       graft.core.Observability.reportError(s"transformChunksFused(${loader.name})",
         new IllegalArgumentException(s"inverted chunk ranges: ${sorted.take(5)}…"))
@@ -340,24 +337,9 @@ object Transformer {
       try {
         val tables = loader.parse(prepared, cfg, version)
           .view.filterKeys(loader.tables).toMap // F8
-        tables.foreach { case (name, df) =>
-          writeTable(df.drop("month"), cfg, outDir, name)
-        }
-        // per-chunk counts: ONE union-aggregate action over the persisted
-        // parse (not one job per chunk) — each branch re-derives its table
-        // from cache, tags the chunk, and the union groups to chunk totals
-        val counts: Map[(Long, Long), Long] =
-          if (tables.isEmpty) Map.empty
-          else tables.values
-            .map(df => tagChunks(df.select("slot"), ranges)
-              .groupBy("start_slot", "end_slot").agg(count(lit(1)).as("n")))
-            .reduce(_ unionByName _)
-            .groupBy("start_slot", "end_slot").agg(sum("n").as("n"))
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-            .toMap
+        val (_, perRange) = writeTables(spark, tables, cfg, outDir, sorted)
         progress.append(progressRows(spark, loader.rawTable, ranges,
-          "completed", counts, version))
+          "completed", sorted.zip(perRange).toMap, version))
         true
       } finally prepared.unpersist()
     } catch {
@@ -371,8 +353,10 @@ object Transformer {
 
   /** D4 batch loop: discover untransformed chunks (J1) in rounds of
     * `chunksPerFetch` until the backlog drains. The steady-state path is
-    * [[transformChunksFused]] — one Spark action per output table over the
-    * whole round, not one job cascade per chunk; a fused-round failure
+    * [[transformChunksFused]] — one parse and one write action per output
+    * table over the whole round (the writes after the first run
+    * concurrently and also yield the per-chunk counts), not one job
+    * cascade per chunk; a fused-round failure
     * falls back to per-chunk [[transformChunk]] so one poisoned chunk
     * fails alone. Chunks whose transform FAILS stay "untransformed"
     * (progress row != completed), so each range is attempted at most once

@@ -1,5 +1,9 @@
 package graft.core
 
+import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
+
 /** Interval coalescing shared by the maintenance and streaming paths —
   * one implementation of the sort-then-fold merge so its edge cases
   * (duplicates, containment, adjacency) are fixed in one place.
@@ -19,4 +23,51 @@ object Ranges {
   /** Contiguous runs of a slot list: [5,6,6,7,100] → [(5,7),(100,100)]. */
   def runsOf(slots: Seq[Long]): Seq[(Long, Long)] =
     merge(slots.map(s => (s, s)))
+}
+
+/** Rows per range as a typed aggregate over a slot column: element `i` of
+  * the result counts the input slots inside `ranges(i)`. A slot inside
+  * several overlapping ranges counts once in each of them; a slot outside
+  * every range, or a null slot, counts nowhere. `ranges` must be sorted by
+  * start. Each slot costs one binary search for the last range starting at
+  * or before it, then a backward walk that stops once no earlier range
+  * reaches the slot — a single step on a disjoint grid. */
+final class RangeCounts(ranges: IndexedSeq[(Long, Long)])
+    extends Aggregator[java.lang.Long, Array[Long], Array[Long]] {
+  private val starts = ranges.map(_._1).toArray
+  private val ends = ranges.map(_._2).toArray
+  require(starts.indices.drop(1).forall(i => starts(i - 1) <= starts(i)),
+    "RangeCounts needs ranges sorted by start")
+  /** reach(i) = the largest end among ranges 0..i */
+  private val reach = ends.scanLeft(Long.MinValue)(math.max).drop(1)
+
+  def zero: Array[Long] = new Array[Long](starts.length)
+
+  def reduce(b: Array[Long], slot: java.lang.Long): Array[Long] = {
+    if (slot != null) {
+      val s = slot.longValue
+      var lo = 0
+      var hi = starts.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (starts(mid) <= s) lo = mid + 1 else hi = mid
+      }
+      var i = lo - 1
+      while (i >= 0 && reach(i) >= s) {
+        if (ends(i) >= s) b(i) += 1
+        i -= 1
+      }
+    }
+    b
+  }
+
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  def finish(b: Array[Long]): Array[Long] = b
+  def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+  def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
 }

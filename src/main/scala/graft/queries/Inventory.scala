@@ -1370,6 +1370,9 @@ object Inventory {
     require(frames.nonEmpty, "staged drain needs at least one frame")
     val srcDir = scratchDir(prefix + "src_")
     val t0 = System.currentTimeMillis()
+    // every temp dir any task creates, so a FAILED staging run can
+    // clean up after itself instead of leaking stage dirs
+    val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
     // The per-frame single-file writes are INDEPENDENT jobs — run them
     // from a small thread pool so each job's tail back-fills the others'
     // idle cores (guide §2.6 overlap; measured: 4-6 sequential staging
@@ -1378,53 +1381,37 @@ object Inventory {
     // file CONTENT and row order are byte-identical to the sequential
     // form; the mtime stamping that fixes frame→batch order happens
     // strictly AFTER every write has finished, sequentially.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, frames.length))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    // every temp dir any future creates, so a FAILED staging run can
-    // clean up after itself instead of leaking stage dirs (r16 advisory)
-    val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-    try {
-      val futures = frames.zipWithIndex.map { case (dfx, i) =>
-        scala.concurrent.Future {
-          val stage = scratchDir(prefix + "stage_")
-          created.add(stage)
-          dfx.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          (i, stage)
-        }
+    val staged =
+      try graft.core.Parallel.all(frames.zipWithIndex.map { case (dfx, i) => () =>
+        val stage = scratchDir(prefix + "stage_")
+        created.add(stage)
+        dfx.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        (i, stage)
+      }, threads = 4)
+      catch { case t: Throwable =>
+        // every write has finished (deleting under one would race the
+        // parquet committer): remove every dir this call created
+        created.forEach(p => deleteRecursively(p))
+        deleteRecursively(srcDir)
+        throw t
       }
-      val staged =
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration.Inf)
-        catch { case t: Throwable =>
-          // let in-flight writes finish (deleting under them races the
-          // parquet committer), then remove every dir this call created
-          pool.shutdown()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          created.forEach(p => deleteRecursively(p))
-          deleteRecursively(srcDir)
-          throw t
-        }
-      staged.foreach { case (i, stage) =>
-        val part = JFiles.list(stage).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        val dst = srcDir.resolve(f"b$i%04d.parquet")
-        JFiles.move(part, dst)
-        // spacing derives from frames.length so the LAST staged file still
-        // sits comfortably in the past — a fixed t0-100s start reaches
-        // "now" at i=10 and future mtimes could collide with fresh
-        // checkpoint/source files, breaking the frame-i-is-batch-i order
-        JFiles.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            t0 - (frames.length + 2).toLong * 10000L + i * 10000L))
-        try {
-          JFiles.walk(stage).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { JFiles.deleteIfExists(p); () })
-        } catch { case _: Throwable => () }
-      }
-    } finally pool.shutdown()
+    staged.foreach { case (i, stage) =>
+      val part = JFiles.list(stage).filter(p =>
+        p.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      val dst = srcDir.resolve(f"b$i%04d.parquet")
+      JFiles.move(part, dst)
+      // spacing derives from frames.length so the LAST staged file still
+      // sits comfortably in the past — a fixed t0-100s start reaches
+      // "now" at i=10 and future mtimes could collide with fresh
+      // checkpoint/source files, breaking the frame-i-is-batch-i order
+      JFiles.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(
+          t0 - (frames.length + 2).toLong * 10000L + i * 10000L))
+      try {
+        JFiles.walk(stage).sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => { JFiles.deleteIfExists(p); () })
+      } catch { case _: Throwable => () }
+    }
     srcDir
   }
 

@@ -906,6 +906,58 @@ class PipelineSpec extends AnyFunSuite {
       .select("slot").collect().map(_.getLong(0)).sorted.toSeq
     assert(slots === slots.distinct) // no duplicated slots in the output
     assert(slots === (0L to 15L).filterNot(_ % 5 === 4L)) // full coverage
+    // each range's processed_count counts every table row inside it, so
+    // the shared slots 5-10 count in both ranges
+    val prog = Ledger.progressStates(
+      LedgerStore(s"$base/progress").read(spark, Schemas.transformerProgress))
+      .select("start_slot", "end_slot", "processed_count").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val tables = Loaders.blocks.tables.toSeq
+      .filter(t => graft.core.Fs.hasParquetFiles(spark, s"$base/tables/$t"))
+      .map(t => spark.read.parquet(s"$base/tables/$t").select("slot"))
+    def naive(s: Long, e: Long) =
+      tables.map(_.filter(col("slot").between(s, e)).count()).sum
+    assert(prog === Map((0L, 10L) -> naive(0L, 10L), (5L, 15L) -> naive(5L, 15L)))
+    assert(naive(0L, 10L) > 0L)
+  }
+
+  test("fused transform: rows_written equals the rows of every table") {
+    val base = tmp()
+    RawIngest.ingestChunk(spark, cfg, fetcherFor(0 until 40), s"$base/raw",
+      LedgerStore(s"$base/cl"), "blocks", 0, 39)
+    val before = graft.core.Metrics.of(spark).rowsWritten.value
+    assert(Transformer.transformChunksFused(spark, cfg, Loaders.blocks,
+      s"$base/raw", s"$base/tables", LedgerStore(s"$base/progress"),
+      Seq((0L, 9L), (10L, 19L), (20L, 29L), (30L, 39L))))
+    val tableRows = Loaders.blocks.tables.toSeq
+      .filter(t => graft.core.Fs.hasParquetFiles(spark, s"$base/tables/$t"))
+      .map(t => spark.read.parquet(s"$base/tables/$t").count()).sum
+    assert(tableRows > 0L)
+    assert(graft.core.Metrics.of(spark).rowsWritten.value - before === tableRows)
+  }
+
+  test("fused transform: a drifted table fails the call only after every concurrent write ends") {
+    val base = tmp()
+    import spark.implicits._
+    // a withdrawals directory written by an older engine: a long column
+    // stored as string
+    Seq((1L, "0")).toDF("slot", "withdrawal_index")
+      .write.parquet(s"$base/tables/withdrawals")
+    RawIngest.ingestChunk(spark, cfg, fetcherFor(0 until 20), s"$base/raw",
+      LedgerStore(s"$base/cl"), "blocks", 0, 19)
+    val progress = LedgerStore(s"$base/progress")
+    graft.core.Observability.updateHealth("last_error" -> "none")
+    assert(!Transformer.transformChunksFused(spark, cfg, Loaders.blocks,
+      s"$base/raw", s"$base/tables", progress, Seq((0L, 9L), (10L, 19L))))
+    // no write of this call is still running on return: every job event
+    // posted so far is delivered before the status store is read
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(progress.read(spark, Schemas.transformerProgress)
+      .filter(col("status") === "completed").isEmpty)
+    val err = graft.core.Observability.health("last_error")
+    assert(err.contains("schema drift") && err.contains("withdrawals"), err)
   }
 
   test("ingestChunksFused split + gate: part columns and gated slots (P19/F5 bulk wiring)") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.queries.{Inventory, LlmInventory}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, substring}
+import org.apache.spark.sql.functions.{col, substring, udaf}
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -183,18 +183,37 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("partial"), p.take(2000))
   }
 
-  test("fused transform chunk tagging: broadcast equi-join on the bucket, no NLJ") {
+  test("fused transform per-range counts equal a naive count") {
     import spark.implicits._
-    val raw = (0L until 10000L).map(s => (s, s"p$s")).toDF("slot", "payload")
-    val ranges = (0 until 40).map(i => (i * 100L, i * 100L + 99L))
-    val tagged = graft.beacon.Transformer.tagChunks(raw, ranges)
-    val plan = tagged.queryExecution.executedPlan.toString
-    // the interval join must plan as a broadcast HASH join on the bucket
-    // key (residual BETWEEN as filter) — a range-only join would be a
-    // BroadcastNestedLoopJoin scanning |raw| x |ranges|
-    assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
-    assert(tagged.count() === 4000L) // 40 ranges x 100 slots
+    // slots -50..1099 over 7 partitions (merge runs), every 3rd slot twice,
+    // plus null slots that count nowhere
+    val slots: Seq[Option[Long]] =
+      (-50L until 1100L).flatMap(s => if (s % 3 == 0) Seq(Some(s), Some(s)) else Seq(Some(s))) ++
+        Seq(None, None)
+    val df = slots.toDF("slot").repartition(7)
+    def naive(ranges: IndexedSeq[(Long, Long)]): Seq[Long] =
+      ranges.map { case (s, e) => slots.flatten.count(x => x >= s && x <= e).toLong }
+    val grids: Seq[(String, IndexedSeq[(Long, Long)])] = Seq(
+      "aligned" -> (0 until 10).map(i => (i * 100L, i * 100L + 99L)),
+      "non-aligned" -> Vector((5L, 17L), (18L, 40L), (41L, 41L), (60L, 99L), (250L, 612L)),
+      "overlapping grids" -> ((0 until 5).map(i => (i * 100L, i * 100L + 99L)) ++
+        (0 until 4).map(i => (i * 130L + 40L, i * 130L + 169L))).sorted,
+      "nested" -> Vector((0L, 1000L), (10L, 20L), (30L, 40L), (35L, 35L)),
+      "equal start slots" -> Vector((0L, 4L), (0L, 9L), (0L, 19L), (10L, 19L)),
+      "outside every range" -> Vector((2000L, 2099L), (-500L, -100L), (100L, 100L)).sorted)
+    grids.foreach { case (name, ranges) =>
+      val counts = new graft.core.RangeCounts(ranges)
+      val got = df.agg(udaf(counts, org.apache.spark.sql.Encoders.LONG)(col("slot")))
+        .head().getSeq[Long](0)
+      assert(got === naive(ranges), name)
+    }
+    // the production shape: observed on a write-like action
+    val ranges = grids.find(_._1 == "overlapping grids").get._2
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, udaf(new graft.core.RangeCounts(ranges),
+      org.apache.spark.sql.Encoders.LONG)(col("slot")).as("per_range"))
+      .write.format("noop").mode("overwrite").save()
+    assert(obs.get("per_range").asInstanceOf[scala.collection.Seq[Long]].toSeq === naive(ranges))
   }
 
   test("fused transform membership: broadcast LEFT SEMI on the bucket, overlap-safe") {
@@ -206,8 +225,7 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"), plan.take(1500))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
     assert(kept.count() === 4000L)
-    // overlap: slots in two ranges pass ONCE (the guarantee tagChunks
-    // cannot give — it owns per-range counting instead)
+    // overlap: slots in two ranges pass ONCE
     assert(graft.beacon.Transformer
       .filterToRanges(raw, Seq((0L, 100L), (50L, 150L))).count() === 151L)
   }
@@ -738,7 +756,9 @@ class PlanSpec extends AnyFunSuite {
     // the declared query checkpoints each iteration (its final plan is an
     // opaque RDD scan), so the gate inspects the same construction
     // UN-checkpointed: the full 5-iteration tree must contain no nested
-    // loop anywhere and keep map-side partial aggregation
+    // loop anywhere and keep map-side partial aggregation.
+    // driverThreshold = 0 keeps this small graph on the distributed loop
+    // (DriverRankSpec pins the driver path)
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, count, lag, lit}
     val events = spark.read.parquet(s"$sf/events.parquet")
@@ -749,7 +769,7 @@ class PlanSpec extends AnyFunSuite {
       .groupBy(col("prev").as("src"), col("event_type").as("dst"))
       .agg(count(lit(1)).as("w"))
     val df = graft.operators.Graph.pageRank(
-      edges, "src", "dst", "w", iterations = 5, exact = true)
+      edges, "src", "dst", "w", iterations = 5, exact = true, driverThreshold = 0)
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(3000))
