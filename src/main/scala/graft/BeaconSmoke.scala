@@ -1,7 +1,6 @@
 package graft
 
 import graft.beacon._
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end smoke of the beacon pipeline over an offline
   * fetcher: plan chunks → ingest raw (payload-hash dedup + ledger) →
@@ -12,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object BeaconSmoke {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_smoke_" + System.nanoTime())
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(8)
 
     val cfg = ChainConfig.gnosis
     val payload = (slot: Long) =>

@@ -22,13 +22,7 @@ object Bench {
     // just those queries (driver passes nothing → full sweep)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     // absorb session/codegen warmup so the first timed query isn't charged for it
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()
     // a failing query must surface in the JSON, not time as a fast no-op —

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for named declared queries to
   * files — the plan evidence the optimization rounds commit under
@@ -16,13 +15,7 @@ object Explain {
     val names = args(2).split(",").toSeq
     val suffix = if (args.length > 3) args(3) else "plan"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB wall breakdown of a declared query — the local
   * substitute for the Spark UI's job table (UI is disabled in the
@@ -16,13 +15,7 @@ object Profile {
     val names = args(1).split(",").toSeq
     val repeat = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()
 
     case class JobRec(id: Int, var start: Long = 0L, var end: Long = 0L,

@@ -1,26 +1,85 @@
 package graft
 
 import graft.beacon._
-import org.apache.spark.sql.SparkSession
+import graft.core.{Fs, Observability, Sessions}
+import graft.core.Metrics.timed
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-/** Scale-proof run: a ~1M-slot synthetic beacon backfill driven end to end
-  * through the PRODUCTION paths — fused ingest (`ingestChunksFused`) →
-  * fused transform (`transformChunksFused`) → `latest()` window reads —
-  * recording per-stage wall time, rows/s, and peak driver heap into
-  * `SCALE.md`. The corpus is one order of magnitude above the sf0.1 bench
-  * and ~2.5 GB of raw JSON; the shapes under test are the ones that must
-  * hold at 100 TB (driver holds only chunk RANGES, slots explode
-  * executor-side; per-wave fused jobs; bulk ledger transitions; no
-  * per-row driver work).
+/** Scale-proof runs: every stage drives a PRODUCTION path over a
+  * deterministic synthetic corpus orders of magnitude above the oracle
+  * fixtures, checks closed-form invariants with `require`, and records its
+  * section of `SCALE.md`. The flagship stage is a ~1M-slot beacon backfill
+  * through fused ingest (`ingestChunksFused`) → fused transform
+  * (`transformChunksFused`) → `latest()` window reads; the shapes under
+  * test are the ones that must hold at 100 TB (driver holds only chunk
+  * RANGES, slots explode executor-side; per-wave fused jobs; bulk ledger
+  * transitions; no per-row driver work).
   *
-  * Usage: `runMain graft.Scale [totalSlots] [outMdPath]`
-  * (reference analogue: the worker-pool backfill loop this replaces,
-  * /root/reference/src/services/loader.py:463-485).
+  * Usage:
+  *   - `runMain graft.Scale <stage> [params...] [outMdPath]` — one
+  *     registered stage (see [[stages]]) with its positional parameters;
+  *     omitted parameters take their full-size defaults
+  *   - `runMain graft.Scale [totalSlots] [outMdPath]` — the backfill stage
+  *     (a numeric or absent first argument selects it)
+  *
+  * The harness builds the session ([[graft.core.Sessions.local]] on
+  * `SPARK_GRAFT_CPUS` cores, default 32), gives the stage a temp base dir
+  * that it deletes afterwards, times the stage, reads peak heap, splices
+  * the stage's section into the markdown file and prints one JSON line.
   */
 object Scale {
+
+  /** A stage's positional parameters in order; each value's type (Long,
+    * Int or String) is the type of its default. */
+  final case class Params(values: Seq[(String, Any)]) {
+    private def get(name: String): Any = values.collectFirst {
+      case (n, v) if n == name => v
+    }.getOrElse(throw new NoSuchElementException(s"no parameter '$name'"))
+    def long(name: String): Long = get(name).asInstanceOf[Long]
+    def int(name: String): Int = get(name).asInstanceOf[Int]
+    def str(name: String): String = get(name).asInstanceOf[String]
+    def cli: String = values.map(_._2).mkString(" ")
+  }
+
+  /** What a stage reports: the run-dependent part of its SCALE.md
+    * heading, the paragraph under the reproduce command, one ordered list
+    * of (label, value) metrics (the markdown table rows and the JSON
+    * fields) and the notes below the table. */
+  final case class StageResult(
+      subtitle: String, intro: String, metrics: Seq[(String, Any)], notes: String = "")
+
+  /** One scale stage: `header` is the stable prefix of its SCALE.md
+    * heading (the splice key), `params` its positional parameters with
+    * their full-size defaults, `tiny` the parameters the smoke test runs
+    * it with. `run(spark, params, base)` gets a fresh `base` dir that the
+    * harness deletes afterwards. */
+  final case class Stage(name: String, header: String, params: Seq[(String, Any)], tiny: String)(
+      val run: (SparkSession, Params, String) => StageResult) {
+
+    /** Positional arguments after the stage name → (params, outMd). */
+    def parse(args: Seq[String]): (Params, String) = {
+      val usage = (params.map(_._1) :+ "outMd").mkString(s"$name [", "] [", "]")
+      require(args.size <= params.size + 1, s"too many arguments; usage: $usage")
+      val values = params.zipWithIndex.map { case ((p, default), i) =>
+        p -> args.lift(i).fold(default) { a =>
+          try default match {
+            case _: Long => a.toLong
+            case _: Int => a.toInt
+            case _ => a
+          } catch {
+            case _: NumberFormatException =>
+              throw new IllegalArgumentException(s"$p: '$a' is not a number; usage: $usage")
+          }
+        }
+      }
+      (Params(values), args.lift(params.size).getOrElse("SCALE.md"))
+    }
+  }
+
+  final case class Outcome(result: StageResult, wallSec: Double, heapPeakMb: Long, base: String)
 
   private def heapPeakMb(): Long = {
     import scala.jdk.CollectionConverters._
@@ -29,30 +88,202 @@ object Scale {
       .map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
   }
 
-  /** Replace ONLY the SCALE.md section starting at `header` (through the
-    * next `## ` heading or EOF), appending when absent — the old
-    * keep-prefix splice silently dropped every LATER section whenever an
-    * earlier stage re-ran. `section` must begin with a newline and end
-    * with one (the stage templates do). */
-  private def spliceSection(outMd: String, header: String, section: String): Unit = {
-    val path = java.nio.file.Paths.get(outMd)
-    val existing =
-      if (java.nio.file.Files.exists(path))
-        new String(java.nio.file.Files.readAllBytes(path),
-          java.nio.charset.StandardCharsets.UTF_8)
-      else ""
-    val i = existing.indexOf(header)
-    val updated =
-      if (i < 0) existing + section
-      else {
-        val next = existing.indexOf("\n## ", i)
-        val prefix = existing.substring(0, i).reverse.dropWhile(_ == '\n').reverse
-        val suffix = if (next < 0) "" else existing.substring(next + 1)
-        prefix + section + (if (suffix.isEmpty) "" else "\n" + suffix)
-      }
-    java.nio.file.Files.write(path,
-      updated.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  /** Median-of-3 walls of two variants, run interleaved A,B,A,B,A,B after
+    * one joint warmup, so shared JIT heat cannot favor the second. */
+  private[graft] def medianPair(a: => Unit, b: => Unit): (Double, Double) = {
+    a; b
+    val runs = (1 to 3).map(_ => (timed(a)._2, timed(b)._2))
+    (runs.map(_._1).sorted.apply(1), runs.map(_._2).sorted.apply(1))
   }
+
+  /** Evaluate every row of `df` through the noop sink. */
+  private[graft] def force(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Every registered stage. */
+  lazy val stages: Seq[Stage] =
+    Seq(backfill, validators, events, curate) ++ scale.CorpusStages.all ++
+      scale.VectorStages.all ++ scale.GraphStages.all ++ scale.TableStages.all
+
+  private lazy val byName: Map[String, Stage] = {
+    val m = stages.map(s => s.name -> s).toMap
+    require(m.size == stages.size, "duplicate stage names")
+    m
+  }
+
+  /** The stage `args` select and the arguments left for its parameters: a
+    * numeric or absent first argument selects backfill. */
+  def resolve(args: Seq[String]): (Stage, Seq[String]) = args match {
+    case h +: t if !h.forall(_.isDigit) =>
+      (byName.getOrElse(h, throw new IllegalArgumentException(
+        s"unknown stage '$h'; registered stages: ${stages.map(_.name).mkString(", ")}")), t)
+    case _ => (backfill, args)
+  }
+
+  /** Run `stage` in a fresh base dir; the dir is deleted even when the
+    * stage throws. */
+  def execute(spark: SparkSession, stage: Stage, params: Params): Outcome = {
+    val base = Files.createTempDirectory(s"graft_scale_${stage.name}_").toString
+    try {
+      val (r, sec) = timed(stage.run(spark, params, base))
+      Outcome(r, sec, heapPeakMb(), base)
+    } finally Fs.deleteDir(spark, base)
+  }
+
+  private def rows(out: Outcome): Seq[(String, Any)] =
+    out.result.metrics :+ ("peak heap" -> s"${out.heapPeakMb} MB")
+
+  /** The stage's SCALE.md section. */
+  def render(stage: Stage, params: Params, cores: Int, out: Outcome): String = {
+    val r = out.result
+    val cmd = s"""`SPARK_GRAFT_CPUS=$cores sbt "runMain graft.Scale ${stage.name} ${params.cli}"` —"""
+    val table = "| metric | value |" +: "|---|---|" +: rows(out).map { case (l, v) => s"| $l | $v |" }
+    Seq(s"${stage.header} ${r.subtitle}".trim, s"$cmd\n${r.intro}", table.mkString("\n"), r.notes)
+      .filter(_.nonEmpty).mkString("", "\n\n", "\n")
+  }
+
+  /** The stage's one-line JSON record: wall seconds as `value`, then the
+    * same metrics as the markdown table. Non-ASCII characters are written
+    * as JSON unicode escapes, so the line survives a stdout that is not
+    * UTF-8. */
+  def json(stage: Stage, out: Outcome): String = {
+    def q(s: String) = "\"" + Observability.jsonEscape(s)
+      .flatMap(c => if (c > '~') f"\\u${c.toInt}%04x" else c.toString) + "\""
+    def v(x: Any): String = x match {
+      case d: Double if d.isNaN || d.isInfinite => q(d.toString)
+      case _: Double | _: Long | _: Int | _: Boolean => x.toString
+      case other => q(other.toString)
+    }
+    (Seq("metric" -> s"scale_${stage.name}", "value" -> out.wallSec, "unit" -> "sec") ++ rows(out))
+      .map { case (k, x) => s"${q(k)}:${v(x)}" }.mkString("{", ",", "}")
+  }
+
+  /** Replace ONLY the section of `outMd` whose heading line starts with
+    * `header` (through the next `# ` or `## ` heading or EOF), appending it
+    * when absent; sections are separated by one blank line. A splice that kept
+    * only the prefix would drop every LATER section whenever an earlier
+    * stage re-ran. */
+  private[graft] def spliceSection(outMd: String, header: String, section: String): Unit = {
+    val path = Paths.get(outMd)
+    val existing = if (Files.exists(path)) Files.readString(path) else ""
+    val i = Iterator.iterate(existing.indexOf(header))(j => existing.indexOf(header, j + 1))
+      .takeWhile(_ >= 0).find(j => j == 0 || existing(j - 1) == '\n').getOrElse(-1)
+    val (before, after) =
+      if (i < 0) (existing, "")
+      else {
+        val next = Seq("\n# ", "\n## ").map(existing.indexOf(_, i)).filter(_ >= 0)
+          .minOption.getOrElse(-1)
+        (existing.substring(0, i), if (next < 0) "" else existing.substring(next + 1))
+      }
+    def trimNl(s: String) = s.dropWhile(_ == '\n').reverse.dropWhile(_ == '\n').reverse
+    Files.writeString(path,
+      Seq(before, section, after).map(trimNl).filter(_.nonEmpty).mkString("", "\n\n", "\n"))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (stage, rest) = resolve(args.toSeq)
+    val (params, outMd) = stage.parse(rest)
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cores)
+    try {
+      val out = execute(spark, stage, params)
+      spliceSection(outMd, stage.header, render(stage, params, cores, out))
+      println(json(stage, out))
+    } finally spark.stop()
+  }
+
+  // ---- shared corpus generators ---------------------------------------
+
+  /** Deterministic synthetic corpus for the dedup stages, generated
+    * ENTIRELY executor-side by codegen'd hashes (the driver holds only
+    * the range): `nDocs` rows of `tokensPerDoc` words drawn from a
+    * `vocabSize` vocabulary via xxhash64(seed, position); every 20th doc
+    * reuses its successor's word stream plus one extra token — a planted
+    * near-dup pair with 3-shingle Jaccard 48/49 ≈ 0.98, far above the
+    * 0.8 threshold. */
+  def genDedupCorpus(
+      spark: SparkSession, nDocs: Long,
+      tokensPerDoc: Int = 50, vocabSize: Int = 5000): DataFrame =
+    spark.range(nDocs).toDF("doc_id")
+      .withColumn("seed",
+        when(col("doc_id") % 20 === 0, col("doc_id") + 1).otherwise(col("doc_id")))
+      .withColumn("text", concat(
+        array_join(
+          transform(sequence(lit(1), lit(tokensPerDoc)),
+            j => concat(lit("w"), pmod(xxhash64(col("seed"), j), lit(vocabSize.toLong)))),
+          " "),
+        when(col("doc_id") % 20 === 0, lit(" extradup")).otherwise(lit(""))))
+      .select("doc_id", "text")
+
+  /** Deterministic synthetic embedding corpus: `n` vectors × `dim`
+    * components drawn uniform-ish from [-1,1] via xxhash64(seed, j),
+    * generated ENTIRELY executor-side. Every 20th vector reuses its
+    * successor's seed plus a +0.01 shift on every component — a planted
+    * semantic near-dup with cosine ≈ 0.9998 against ~0.0±0.125 for
+    * random 64-dim pairs, mirroring what an embedding model emits for
+    * near-identical documents. */
+  def genEmbCorpus(spark: SparkSession, n: Long, dim: Int = 64): DataFrame =
+    spark.range(n).toDF("vec_id")
+      .withColumn("seed",
+        when(col("vec_id") % 20 === 0, col("vec_id") + 1).otherwise(col("vec_id")))
+      .withColumn("embedding",
+        transform(sequence(lit(1), lit(dim)),
+          j => (pmod(xxhash64(col("seed"), j), lit(2001L)).cast("double") / 1000.0
+            - 1.0
+            + when(col("vec_id") % 20 === 0, 0.01).otherwise(0.0)).cast("float")))
+      .select("vec_id", "embedding")
+
+  /** Clustered synthetic embedding corpus — the geometry real embedding
+    * models emit (documents concentrate around topic directions), which
+    * is the case IVF indexing exists for: vector i belongs to cluster
+    * `i % nClusters`, its components are the cluster's base direction
+    * (xxhash-uniform in [-1,1]) plus ±0.15 per-vector noise. Same-cluster
+    * cosine ≫ cross-cluster, so true nearest neighbors share lists and
+    * probe recall measures something real (a UNIFORM corpus is the
+    * adversarial no-structure case: every list holds equally-near
+    * vectors and nProbe/k recall is the floor). */
+  def genClusteredEmbCorpus(
+      spark: SparkSession, n: Long, dim: Int = 64, nClusters0: Int = 0): DataFrame = {
+    // default topic granularity scales with the corpus (~2000 docs/topic,
+    // the regime real embedding corpora sit in); fixed tiny cluster
+    // counts at large n produce pathological 50k-strong identical blobs
+    val nClusters =
+      if (nClusters0 > 0) nClusters0
+      else math.min(1024L, math.max(16L, n / 2000L)).toInt
+    spark.range(n).toDF("vec_id")
+      .withColumn("c", pmod(col("vec_id"), lit(nClusters.toLong)))
+      .withColumn("embedding",
+        transform(sequence(lit(1), lit(dim)),
+          j => ((pmod(xxhash64(col("c"), j), lit(2001L)).cast("double") / 1000.0 - 1.0)
+            + (pmod(xxhash64(col("vec_id"), j), lit(2001L)).cast("double") / 1000.0 - 1.0)
+              * 0.5).cast("float")))
+      .select("vec_id", "embedding")
+  }
+
+  /** Deterministic synthetic event log, generated ENTIRELY executor-side
+    * (the driver holds only the range): `perUser` events per user at a
+    * 300 s cadence, with every 50th inter-event gap stretched to 7200 s —
+    * so each user has EXACTLY `perUser/50` sessions of exactly 50 events
+    * at a 30-minute threshold, and every odd-index event is a `click`
+    * whose nearest preceding `purchase` is its immediate predecessor at a
+    * 300 s gap. `value` is `event_id/1000`, so interval-join matches are
+    * countable in closed form. Exact planted invariants for the w4/j8/j9
+    * operator family at any corpus size. */
+  def genEventCorpus(spark: SparkSession, nEvents: Long, perUser: Long = 200L): DataFrame = {
+    require(nEvents % perUser == 0, "nEvents must be a multiple of perUser")
+    spark.range(nEvents).toDF("event_id")
+      .withColumn("user_id", expr(s"event_id div $perUser"))
+      .withColumn("idx", col("event_id") % perUser)
+      .withColumn("sec",
+        lit(1700000000L) + col("idx") * 300L + expr("idx div 50") * 6900L)
+      .withColumn("ts", timestamp_seconds(col("sec")))
+      .withColumn("event_type",
+        when(col("idx") % 2 === 0, "purchase").otherwise("click"))
+      .withColumn("value", col("event_id").cast("double") / 1000.0)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+  }
+
+  // ---- backfill ---------------------------------------------------------
 
   /** Deterministic synthetic electra-style block (~2.4 KB): enough body
     * (attestations, eth1, sync aggregate, execution payload, withdrawals)
@@ -77,7 +308,8 @@ object Scale {
       heapAfterIngestMb: Long, heapAfterTransformMb: Long, heapFinalMb: Long,
       expectedPresent: Long)
 
-  /** The measurable core (main wraps it; ScaleSpec smokes it at tiny N). */
+  /** The measurable core of the backfill stage (ScaleSpec also checks it
+    * at tiny N). */
   def run(
       spark: SparkSession, totalSlots: Long, chunkSize: Long,
       waveChunks: Int, base: String,
@@ -89,9 +321,6 @@ object Scale {
     val ranges = (0L until totalSlots by chunkSize)
       .map(s => (s, math.min(s + chunkSize - 1, totalSlots - 1)))
     val nWaves = (ranges.size + waveChunks - 1) / waveChunks
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // ---- stage 1: fused ingest, waveChunks chunks per fused job ---------
     val (_, ingestSec) = timed {
@@ -138,9 +367,36 @@ object Scale {
       (0L until totalSlots).count(_ % 32 != 31))
   }
 
+  val backfill: Stage = Stage("backfill", "# SCALE",
+      Seq("totalSlots" -> 1000000L), tiny = "2000") { (spark, p, base) =>
+    val cores = spark.sparkContext.defaultParallelism
+    // 100 chunks of 1000 slots = 100k slots per fused job
+    val st = run(spark, p.long("totalSlots"), chunkSize = 1000L, waveChunks = 100, base, cores)
+    import st._
+    StageResult(
+      "— 1M-slot synthetic backfill (order-of-magnitude stress run)",
+      s"""end-to-end run of the PRODUCTION paths on a deterministic synthetic
+         |corpus (electra-style ~2.4 KB payloads, every 32nd slot 404-empty)
+         |on local[$cores]: fused ingest → fused transform → latest() window reads.""".stripMargin,
+      Seq(
+        s"ingest (fetch+hash+dedup+write, $chunks chunks in $waves fused jobs)" ->
+          f"$ingestSec%.1f s — $rawRows raw, ${rawRows / ingestSec}%.0f rows/s",
+        s"transform (parse → ${Loaders.blocks.tables.size} tables, per-chunk progress rows)" ->
+          f"$transformSec%.1f s — $blocksRows blocks + $attRows attestations, ${(blocksRows + attRows) / transformSec}%.0f rows/s out (${rawRows / transformSec}%.0f in)",
+        "latest() count + max + monthly rollup" ->
+          f"$querySec%.1f s — $latestCount latest blocks, $monthRows month rows, ${latestCount / querySec}%.0f rows/s"),
+      s"""- slots: $totalSlots (chunk size $chunkSize); present slots $expectedPresent — raw/blocks row counts match exactly: ${rawRows == expectedPresent && blocksRows == expectedPresent}
+         |- max structured slot: $maxSlot (= totalSlots − 2: the last slot is 404-empty by construction)
+         |- peak driver+executor heap (single JVM local[$cores]): after ingest ${heapAfterIngestMb} MB, after transform ${heapAfterTransformMb} MB, final ${heapFinalMb} MB
+         |- driver never holds row data: ranges only ($chunks tuples), slots explode executor-side, ledger transitions are bulk appends
+         |- baseline floor (reference BASELINE.md: ≥1,000 rows/s batch insert): exceeded by ${f"${rawRows / ingestSec / 1000.0}%.0f"}×""".stripMargin)
+  }
+
+  // ---- validators -------------------------------------------------------
+
   /** Deterministic synthetic validators state (reference scale anchor:
-    * each validators chunk parses a full ~400k-entry state,
-    * /root/reference/src/config.py:60-62; ~150 MB/slot on mainnet). Every
+    * each validators chunk parses a full ~400k-entry state, reference
+    * config.py:60-62; ~150 MB/slot on mainnet). Every
     * entry carries the full validator object incl. FAR_FUTURE sentinel
     * epochs so the safe_long clamp is on the hot path. ~370 B/entry →
     * 400k entries ≈ 150 MB of JSON per daily state. */
@@ -203,9 +459,6 @@ object Scale {
     TailChunkSource.registerProbe("scale-validators", probe, cfg)
     val ledger = LedgerStore(s"$base/cl")
     val progress = LedgerStore(s"$base/tp")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val (_, streamSec) = timed {
       val q = StreamingJobs.chunkTailStream(spark, cfg, fetcher,
         "scale-validators", s"$base/raw_validators", ledger, "validators",
@@ -248,3171 +501,46 @@ object Scale {
       parityOk, heapStart, heapPeakMb())
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("validators")) return validatorsMain(args)
-    if (args.headOption.contains("dedup")) return dedupMain(args)
-    if (args.headOption.contains("semdedup")) return semdedupMain(args)
-    if (args.headOption.contains("chunkdedup")) return chunkDedupMain(args)
-    if (args.headOption.contains("hotbucket")) return hotbucketMain(args)
-    if (args.headOption.contains("streamdedup")) return streamDedupMain(args)
-    if (args.headOption.contains("ann")) return annMain(args)
-    if (args.headOption.contains("events")) return eventsMain(args)
-    if (args.headOption.contains("streamstate")) return streamStateMain(args)
-    if (args.headOption.contains("multimodal")) return multimodalMain(args)
-    if (args.headOption.contains("bpe")) return bpeMain(args)
-    if (args.headOption.contains("curate")) return curateMain(args)
-    if (args.headOption.contains("layout")) return layoutMain(args)
-    if (args.headOption.contains("kernels")) return kernelsMain(args)
-    if (args.headOption.contains("mllib")) return mllibMain(args)
-    if (args.headOption.contains("fuzzy")) return fuzzyMain(args)
-    if (args.headOption.contains("rangelookup")) return rangeLookupMain(args)
-    if (args.headOption.contains("intervalskew")) return intervalSkewMain(args)
-    if (args.headOption.contains("textops")) return textOpsMain(args)
-    if (args.headOption.contains("ppjoin")) return ppjoinMain(args)
-    if (args.headOption.contains("cc")) return ccMain(args)
-    if (args.headOption.contains("kmeans")) return kmeansMain(args)
-    if (args.headOption.contains("ivftrain")) return ivfTrainMain(args)
-    if (args.headOption.contains("incremental")) return incrementalMain(args)
-    if (args.headOption.contains("spans")) return spansMain(args)
-    if (args.headOption.contains("dbscan")) return dbscanMain(args)
-    if (args.headOption.contains("semsurvivors")) return semSurvivorsMain(args)
-    if (args.headOption.contains("graphserve")) return graphServeMain(args)
-    if (args.headOption.contains("imagededup")) return imageDedupMain(args)
-    if (args.headOption.contains("pagerank")) return pagerankMain(args)
-    if (args.headOption.contains("triangles")) return trianglesMain(args)
-    if (args.headOption.contains("triab")) return triAbMain(args)
-    if (args.headOption.contains("bfs")) return bfsMain(args)
-    if (args.headOption.contains("labelprop")) return labelPropMain(args)
-    if (args.headOption.contains("robust")) return robustMain(args)
-    if (args.headOption.contains("dsir")) return dsirMain(args)
-    val totalSlots = args.lift(0).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(1).getOrElse("SCALE.md")
-    val chunkSize = 1000L
-    val waveChunks = 100 // 100k slots per fused job
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = Files.createTempDirectory("graft_scale").toString
-    val st = run(spark, totalSlots, chunkSize, waveChunks, base, cpus.toInt)
-    import st._
-    val md =
-      s"""# SCALE — 1M-slot synthetic backfill (order-of-magnitude stress run)
-         |
-         |End-to-end run of the PRODUCTION paths on a deterministic synthetic
-         |corpus (electra-style ~2.4 KB payloads, every 32nd slot 404-empty),
-         |driven by `graft.Scale` on local[$cpus]:
-         |fused ingest → fused transform → latest() window reads.
-         |
-         || stage | wall (s) | rows | rows/s |
-         ||---|---|---|---|
-         || ingest (fetch+hash+dedup+write, $chunks chunks in $waves fused jobs) | ${f"$ingestSec%.1f"} | $rawRows raw | ${f"${rawRows / ingestSec}%.0f"} |
-         || transform (parse → ${Loaders.blocks.tables.size} tables, per-chunk progress rows) | ${f"$transformSec%.1f"} | $blocksRows blocks + $attRows attestations | ${f"${(blocksRows + attRows) / transformSec}%.0f"} out (${f"${rawRows / transformSec}%.0f"} in) |
-         || latest() count + max + monthly rollup | ${f"$querySec%.1f"} | $latestCount latest blocks, $monthRows month rows | ${f"${latestCount / querySec}%.0f"} |
-         |
-         |- slots: $totalSlots (chunk size $chunkSize); present slots $expectedPresent — raw/blocks row counts match exactly: ${rawRows == expectedPresent && blocksRows == expectedPresent}
-         |- max structured slot: $maxSlot (= totalSlots − 2: the last slot is 404-empty by construction)
-         |- peak driver+executor heap (single JVM local[$cpus]): after ingest ${heapAfterIngestMb} MB, after transform ${heapAfterTransformMb} MB, final ${heapFinalMb} MB
-         |- driver never holds row data: ranges only ($chunks tuples), slots explode executor-side, ledger transitions are bulk appends
-         |- baseline floor (reference BASELINE.md: ≥1,000 rows/s batch insert): exceeded by ${f"${rawRows / ingestSec / 1000.0}%.0f"}×
-         |
-         |Reproduce: `SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale $totalSlots"`
-         |""".stripMargin
-    // splice like the stage sections: a rerun of the backfill stage must
-    // not truncate the "## " stage sections below it
-    spliceSection(outMd, "# SCALE", md)
-    println(s"""{"metric":"scale_total","value":${ingestSec + transformSec + querySec},"unit":"sec","ingest_rows_per_s":${rawRows / ingestSec},"transform_in_rows_per_s":${rawRows / transformSec},"raw_rows":$rawRows,"heap_peak_mb":$heapFinalMb}""")
-    spark.stop()
-  }
-
-  private val validatorsHeader =
-    "## Validators mega-payload daily stage"
-
-  /** `runMain graft.Scale validators [days] [entries] [outMd]` — appends
-    * (or replaces) the validators section of SCALE.md. */
-  private def validatorsMain(args: Array[String]): Unit = {
-    val days = args.lift(1).map(_.toInt).getOrElse(92)
-    val entries = args.lift(2).map(_.toInt).getOrElse(400000)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = Files.createTempDirectory("graft_scale_validators").toString
-    val st = runValidators(spark, days, entries, base)
+  val validators: Stage = Stage("validators", "## Validators mega-payload daily stage",
+      Seq("days" -> 92, "entries" -> 400000), tiny = "1 2000") { (spark, p, base) =>
+    val st = runValidators(spark, p.int("days"), p.int("entries"), base)
     import st._
     val approxMbPerDay = entries * 370L / (1024 * 1024)
-    val section =
-      s"""$validatorsHeader (P19 split path through the daily MicroBatchStream)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale validators $days $entries"` —
-         |$days simulated days at the production daily cadence (readStream daily
+    StageResult(
+      "(P19 split path through the daily MicroBatchStream)",
+      s"""$days simulated days at the production daily cadence (readStream daily
          |mode → last-slot-of-UTC-day chunk plan → split-path ingest → chained
          |per-chunk transform), each day one synthetic ~${entries / 1000}k-entry
          |(~$approxMbPerDay MB JSON) validators state with FAR_FUTURE sentinel
          |epochs on the safe_long hot path (reference: config.py:60-62 —
-         |"each validators chunk parses a full ~400k-entry state").
-         |
-         || metric | value |
-         ||---|---|
-         || stream wall (ingest + transform, $days days) | ${f"$streamSec%.1f"} s (${f"${validatorRows / streamSec}%.0f"} validator rows/s end-to-end) |
-         || raw part rows | $rawParts (${f"$partsPerDay%.1f"} parts/day — the ≤50k-entry split bound) |
-         || validators rows | $validatorRows (= days × entries: ${validatorRows == days.toLong * entries}) |
-         || latest() rows / max slot | $latestRows / $maxSlot |
-         || split-vs-whole parity (1 day, exceptAll both ways) | $parityOk |
-         || peak heap before / after | $heapStartMb MB / $heapEndMb MB |
-         |
-         |- the driver holds daily chunk RANGES only; each ~$approxMbPerDay MB state is
+         |"each validators chunk parses a full ~400k-entry state").""".stripMargin,
+      Seq(
+        s"stream wall (ingest + transform, $days days)" ->
+          f"$streamSec%.1f s (${validatorRows / streamSec}%.0f validator rows/s end-to-end)",
+        "raw part rows" -> f"$rawParts ($partsPerDay%.1f parts/day — the ≤50k-entry split bound)",
+        "validators rows" -> s"$validatorRows (= days × entries: ${validatorRows == days.toLong * entries})",
+        "latest() rows / max slot" -> s"$latestRows / $maxSlot",
+        "split-vs-whole parity (1 day, exceptAll both ways)" -> parityOk,
+        "peak heap before / after" -> s"$heapStartMb MB / $heapEndMb MB"),
+      s"""- the driver holds daily chunk RANGES only; each ~$approxMbPerDay MB state is
          |  fetched, split into parts, and parsed entirely executor-side
          |- bounded heap: the split bound caps any single row / task at ~18 MB
-         |  regardless of state size — the knob that survives 2M-validator states
-         |""".stripMargin
-    spliceSection(outMd, validatorsHeader, section)
-    println(s"""{"metric":"scale_validators","value":$streamSec,"unit":"sec","days":$days,"entries":$entries,"validator_rows":$validatorRows,"rows_per_s":${validatorRows / streamSec},"parity_ok":$parityOk,"heap_peak_mb":$heapEndMb}""")
-    spark.stop()
+         |  regardless of state size — the knob that survives 2M-validator states""".stripMargin)
   }
 
-  private val dedupHeader = "## Near-dup corpus stage"
-
-  /** Deterministic synthetic corpus for the dedup stage, generated
-    * ENTIRELY executor-side by codegen'd hashes (the driver holds only
-    * the range): `nDocs` rows of `tokensPerDoc` words drawn from a
-    * `vocabSize` vocabulary via xxhash64(seed, position); every 20th doc
-    * reuses its successor's word stream plus one extra token — a planted
-    * near-dup pair with 3-shingle Jaccard 48/49 ≈ 0.98, far above the
-    * 0.8 threshold. */
-  def genDedupCorpus(
-      spark: SparkSession, nDocs: Long,
-      tokensPerDoc: Int = 50, vocabSize: Int = 5000): org.apache.spark.sql.DataFrame =
-    spark.range(nDocs).toDF("doc_id")
-      .withColumn("seed",
-        when(col("doc_id") % 20 === 0, col("doc_id") + 1).otherwise(col("doc_id")))
-      .withColumn("text", concat(
-        array_join(
-          transform(sequence(lit(1), lit(tokensPerDoc)),
-            j => concat(lit("w"), pmod(xxhash64(col("seed"), j), lit(vocabSize.toLong)))),
-          " "),
-        when(col("doc_id") % 20 === 0, lit(" extradup")).otherwise(lit(""))))
-      .select("doc_id", "text")
-
-  /** Collocation-shaped corpus for the BPE stage: ~48 noise tokens from
-    * a 5M-token vocabulary (any noise pair repeats ~once in the whole
-    * corpus) plus ONE planted bigram per doc — bigram i ∈ 0..63 planted
-    * in (2i+1)/4096 of docs (`floor(sqrt(doc_id % 4096))`), so the pair
-    * table's head is 64 symbol-DISJOINT bigrams with DISTINCT descending
-    * counts: the collocation-table regime [[graft.operators.BpeTrain
-    * .learnMerges]] exists for, where the disjoint-prefix rule accepts a
-    * full batch per pass. The insert position varies per doc (hash). */
-  def genBpeCorpus(
-      spark: SparkSession, nDocs: Long,
-      tokensPerDoc: Int = 50, vocabSize: Int = 5000000): org.apache.spark.sql.DataFrame = {
-    val noiseLen = tokensPerDoc - 2
-    spark.range(nDocs).toDF("doc_id")
-      .withColumn("big", floor(sqrt(pmod(col("doc_id"), lit(4096L)).cast("double"))).cast("int"))
-      .withColumn("noise",
-        transform(sequence(lit(1), lit(noiseLen)),
-          j => concat(lit("w"), pmod(xxhash64(col("doc_id"), j), lit(vocabSize.toLong)))))
-      .withColumn("pos", pmod(xxhash64(col("doc_id"), lit(-1)), lit(noiseLen.toLong)).cast("int"))
-      .withColumn("text", array_join(
-        concat(
-          slice(col("noise"), lit(1), col("pos")),
-          array(concat(lit("bl"), col("big")), concat(lit("br"), col("big"))),
-          slice(col("noise"), col("pos") + 1, lit(noiseLen) - col("pos"))),
-        " "))
-      .select("doc_id", "text")
-  }
-
-  /** `runMain graft.Scale dedup [nDocs] [outMd]` — the LLM-pipeline
-    * near-dup flagship at three orders of magnitude above the sf0.01
-    * oracle corpus, on the PRODUCTION hash family (single-pass xxhash64
-    * MinHash kernel, not the declared queries' md5-parity family):
-    * corpus gen → parquet → LSH candidates → exact Jaccard → connected
-    * components, with planted-pair recall as the correctness signal. */
-  private def dedupMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_dedup").toString
-    val (_, genSec) = timed {
-      genDedupCorpus(spark, nDocs).write.mode("overwrite").parquet(dir)
-    }
-    val docs = spark.read.parquet(dir)
-    val planted = nDocs / 20
-    val ((total, dropped, recalled), dedupSec) = timed {
-      val groups = graft.operators.Dedup
-        .nearDupGroups(docs, "doc_id", "text", jaccardThreshold = 0.8)
-        .persist()
-      val total = groups.count()
-      val dropped = groups.filter(!col("is_representative")).count()
-      // planted pair (i, i+1) recovered iff both landed in one component
-      val a = groups.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("d"), col("group").as("g1"))
-      val b = groups.select((col("doc_id") - 1).as("d"), col("group").as("g2"))
-      val recalled = a.join(b, "d").filter(col("g1") === col("g2")).count()
-      groups.unpersist(blocking = false)
-      (total, dropped, recalled)
-    }
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$dedupHeader (MinHash-LSH → Jaccard → components, production xxhash64 family)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale dedup $nDocs"` —
-         |the full `Dedup.nearDupGroups` pipeline over a deterministic
-         |synthetic corpus ${nDocs / 1000}k docs × ~50 tokens (generated
-         |executor-side, materialized to parquet first like an at-rest
-         |corpus); every 20th doc is a planted near-dup of its successor
-         |(3-shingle Jaccard ≈ 0.98).
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nDocs docs) |
-         || near-dup pipeline wall | ${f"$dedupSec%.1f"} s (${f"${nDocs / dedupSec}%.0f"} docs/s) |
-         || planted-pair recall | $recalled / $planted (${f"${recalled.toDouble / planted}%.3f"}) |
-         || docs in / dropped as dups | $total / $dropped |
-         || peak heap | $heapMb MB |
-         |
-         |- the LSH band self-join is the only corpus shuffle; candidates,
-         |  Jaccard, and the component loop all run on the band-bucket
-         |  survivors, never all pairs
-         |""".stripMargin
-    spliceSection(outMd, dedupHeader, section)
-    println(s"""{"metric":"scale_dedup","value":$dedupSec,"unit":"sec","n_docs":$nDocs,"docs_per_s":${nDocs / dedupSec},"recall":${recalled.toDouble / planted},"dropped":$dropped,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val hotbucketHeader = "## Hot-bucket mega-cluster stage"
-
-  /** `runMain graft.Scale hotbucket [clusterSize] [nDocs] [outMd]` — the
-    * adversarial corpus the planted-PAIR dedup stage cannot see: one
-    * boilerplate page duplicated `clusterSize` times (every real crawl
-    * corpus has such clusters), which lands in a single LSH bucket per
-    * band. Without the [[graft.operators.Dedup.minhashCandidatePairs]]
-    * hot-bucket ceiling this emits ~clusterSize²/2 candidate pairs
-    * (5×10⁹ at 100k) before distinct(); with it, an id-ordered chain —
-    * O(clusterSize) — that still collapses the cluster into ONE
-    * component with one representative. The stage asserts exactly that
-    * and records the wall staying linear. */
-  private def hotbucketMain(args: Array[String]): Unit = {
-    val clusterSize = args.lift(1).map(_.toLong).getOrElse(100000L)
-    val nDocs = args.lift(2).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_hotbucket").toString
-    val boiler = (1 to 50).map(i => s"boilerplate$i").mkString(" ")
-    val (_, genSec) = timed {
-      spark.range(nDocs).toDF("doc_id")
-        .withColumn("text",
-          when(col("doc_id") < clusterSize, lit(boiler))
-            .otherwise(array_join(
-              transform(sequence(lit(1), lit(50)),
-                j => concat(lit("w"), pmod(xxhash64(col("doc_id"), j), lit(5000L)))),
-              " ")))
-        .write.mode("overwrite").parquet(dir)
-    }
-    val docs = spark.read.parquet(dir)
-    // candidate volume first: the uncapped op would emit ~n²/2 here
-    val (candN, candSec) = timed {
-      val pairs = graft.operators.Dedup.minhashCandidatePairs(
-        docs, "doc_id", "text", numHashes = 8, rowsPerBand = 4, shingleWidth = 3)
-      val n = pairs.count()
-      pairs.unpersist(blocking = true)
-      n
-    }
-    // full pipeline: the mega-cluster must still collapse to ONE group
-    val ((clusterGroups, clusterDropped, total), wallSec) = timed {
-      val groups = graft.operators.Dedup
-        .nearDupGroups(docs, "doc_id", "text", jaccardThreshold = 0.8)
-        .persist()
-      val total = groups.count()
-      val cg = groups.filter(col("doc_id") < clusterSize)
-        .select("group").distinct().count()
-      val cd = groups.filter(col("doc_id") < clusterSize)
-        .filter(!col("is_representative")).count()
-      groups.unpersist(blocking = false)
-      (cg, cd, total)
-    }
-    require(clusterGroups == 1L,
-      s"mega-cluster split into $clusterGroups components — chain edges broken")
-    require(clusterDropped == clusterSize - 1,
-      s"expected ${clusterSize - 1} dropped dups, got $clusterDropped")
-    val heapMb = heapPeakMb()
-    val naivePairs = clusterSize * (clusterSize - 1) / 2
-    val section =
-      s"""
-         |$hotbucketHeader (planted ${clusterSize / 1000}k-copy boilerplate cluster in a ${nDocs / 1000}k corpus)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale hotbucket $clusterSize $nDocs"` —
-         |the quadratic hazard the pair-planted dedup stage cannot exhibit:
-         |ONE page duplicated ${clusterSize / 1000}k times lands in a single LSH
-         |band-bucket. The hot-bucket ceiling (id-ordered chain above
-         |maxBucketAllPairs=1024) keeps candidate volume linear while the
-         |cluster still dedups to one representative.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nDocs docs, ${clusterSize / 1000}k-copy cluster) |
-         || candidate pairs emitted | $candN (uncapped all-pairs would be ≥ $naivePairs) |
-         || candidate generation wall | ${f"$candSec%.1f"} s |
-         || full near-dup pipeline wall | ${f"$wallSec%.1f"} s (${f"${nDocs / wallSec}%.0f"} docs/s) |
-         || mega-cluster verdict | $clusterGroups component, $clusterDropped dups dropped (exact) |
-         || docs in | $total |
-         || peak heap | $heapMb MB |
-         |
-         |- the ${clusterSize / 1000}k-member bucket never reaches the all-pairs
-         |  self-join: both join inputs filter to buckets ≤ the ceiling
-         |  BEFORE the equi-join, and the oversized bucket contributes an
-         |  id-ordered chain (${clusterSize} − 1 edges) via one window pass
-         |- chain edges are real candidates: exact Jaccard verifies each
-         |  (boilerplate copies are identical → all pass), and connected
-         |  components see the same single cluster all-pairs would give
-         |""".stripMargin
-    spliceSection(outMd, hotbucketHeader, section)
-    println(s"""{"metric":"scale_hotbucket","value":$wallSec,"unit":"sec","n_docs":$nDocs,"cluster_size":$clusterSize,"candidates":$candN,"naive_pairs":$naivePairs,"docs_per_s":${nDocs / wallSec},"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val streamDedupHeader = "## Streaming near-dup dedup stage"
-
-  /** `runMain graft.Scale streamdedup [nDocs] [nBatches] [outMd]` — the
-    * realtime dedup arm ([[graft.streaming.StreamingJobs.streamingMinhashDedup]],
-    * the batch pipeline's MinHash band family) under load: the 1M-doc
-    * planted-near-dup corpus (same generator as the batch dedup stage)
-    * replayed as a file stream of `nBatches` micro-batches through the
-    * band-bucket keyed state, with the state store's row count and memory
-    * measured per batch AND planted-pair recall as the quality gate
-    * (≥ 0.95 — the r8 SimHash variant measured 0.59 here and is demoted
-    * to the low-memory option). */
-  private def streamDedupMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val nBatches = args.lift(2).map(_.toInt).getOrElse(20)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_streamdedup").toString
-    val (_, genSec) = timed {
-      genDedupCorpus(spark, nDocs).repartition(nBatches)
-        .write.mode("overwrite").parquet(s"$dir/in")
-    }
-    val schema = spark.read.parquet(s"$dir/in").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-    val verdicts = graft.streaming.StreamingJobs
-      .streamingMinhashDedup(stream, "doc_id", "text")
-    // per-batch driver totals: (docs, dups, planted-docs flagged) — the
-    // foreachBatch aggregate collects ONE row per batch, never verdicts
-    val totals = new java.util.concurrent.atomic.AtomicLongArray(3)
-    val q = verdicts.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[graft.streaming.StreamingJobs.BandVerdict],
-         _: Long) =>
-          val r = graft.streaming.StreamingJobs.nearDupVerdicts(batch.toDF())
-            .agg(
-              count(lit(1)),
-              sum(when(col("is_dup"), 1L).otherwise(0L)),
-              sum(when(col("is_dup") &&
-                (pmod(col("docId"), lit(20)) === 0 || pmod(col("docId"), lit(20)) === 1), 1L)
-                .otherwise(0L))).head()
-          totals.addAndGet(0, r.getLong(0))
-          totals.addAndGet(1, if (r.isNullAt(1)) 0L else r.getLong(1))
-          totals.addAndGet(2, if (r.isNullAt(2)) 0L else r.getLong(2))
-          ()
-      }
-      .start()
-    val (_, streamSec) = timed(q.processAllAvailable())
-    val stateOps = q.recentProgress.toSeq.flatMap(_.stateOperators.headOption)
-    val stateRowsFinal = stateOps.lastOption.map(_.numRowsTotal).getOrElse(-1L)
-    val stateMemMb = stateOps.map(_.memoryUsedBytes).maxOption.getOrElse(0L) / 1e6
-    q.stop()
-    val docs = totals.get(0)
-    val dups = totals.get(1)
-    val plantedFlagged = totals.get(2)
-    val planted = nDocs / 20
-    require(docs == nDocs, s"stream saw $docs docs, expected $nDocs")
-    val recall = plantedFlagged.toDouble / planted
-    require(recall >= 0.95, s"planted near-dup recall below target: $recall")
-    // hard state ceiling from the code's bounded lists: bands · 2^16
-    // buckets · maxBucketEntries (sig, id) pairs
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$streamDedupHeader (MinHash band-bucket keyed state, $nBatches micro-batches)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale streamdedup $nDocs $nBatches"` —
-         |the batch dedup stage's ${nDocs / 1000}k-doc planted-near-dup corpus
-         |replayed as a parquet file stream (1 file per trigger) through
-         |`streamingMinhashDedup` (the batch pipeline's MinHash band family:
-         |8 hashes × 2 bands, 16-bit band buckets, flatMapGroupsWithState,
-         |match = ≥6/8 signature components), verdicts folded per
-         |micro-batch in foreachBatch.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nDocs docs, $nBatches files) |
-         || stream wall ($nBatches micro-batches) | ${f"$streamSec%.1f"} s (${f"${nDocs / streamSec}%.0f"} docs/s sustained) |
-         || docs seen / flagged dups | $docs / $dups |
-         || planted near-dup recall (either member flagged) | $plantedFlagged / $planted (${f"$recall%.2f"}) |
-         || state-store rows after $nBatches batches | $stateRowsFinal bucket keys (hard key ceiling 131,072 = 2 bands × 2^16) |
-         || state-store memory (max over batches) | ${f"$stateMemMb%.1f"} MB |
-         || peak heap | $heapMb MB |
-         |
-         |- state is BOUNDED by construction: ≤ 256 (signature, id) pairs
-         |  per bucket (8 32-bit components + id each), newest-first
-         |  eviction — the
-         |  measured rows/memory above are the constant under 1M-doc load,
-         |  not a growth curve; a longer stream reuses the same buckets
-         |- verdicts are per-micro-batch and cross-batch: a doc matches
-         |  signatures admitted in ANY earlier batch via the state store
-         |""".stripMargin
-    spliceSection(outMd, streamDedupHeader, section)
-    println(s"""{"metric":"scale_streamdedup","value":$streamSec,"unit":"sec","n_docs":$nDocs,"n_batches":$nBatches,"docs_per_s":${nDocs / streamSec},"dups":$dups,"planted_recall":$recall,"state_rows":$stateRowsFinal,"state_mem_mb":$stateMemMb,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val semdedupHeader = "## Semantic-dedup corpus stage"
-
-  /** Deterministic synthetic embedding corpus: `n` vectors × `dim`
-    * components drawn uniform-ish from [-1,1] via xxhash64(seed, j),
-    * generated ENTIRELY executor-side. Every 20th vector reuses its
-    * successor's seed plus a +0.01 shift on every component — a planted
-    * semantic near-dup with cosine ≈ 0.9998 against ~0.0±0.125 for
-    * random 64-dim pairs, mirroring what an embedding model emits for
-    * near-identical documents. */
-  def genEmbCorpus(
-      spark: SparkSession, n: Long, dim: Int = 64): org.apache.spark.sql.DataFrame =
-    spark.range(n).toDF("vec_id")
-      .withColumn("seed",
-        when(col("vec_id") % 20 === 0, col("vec_id") + 1).otherwise(col("vec_id")))
-      .withColumn("embedding",
-        transform(sequence(lit(1), lit(dim)),
-          j => (pmod(xxhash64(col("seed"), j), lit(2001L)).cast("double") / 1000.0
-            - 1.0
-            + when(col("vec_id") % 20 === 0, 0.01).otherwise(0.0)).cast("float")))
-      .select("vec_id", "embedding")
-
-  /** Clustered synthetic embedding corpus — the geometry real embedding
-    * models emit (documents concentrate around topic directions), which
-    * is the case IVF indexing exists for: vector i belongs to cluster
-    * `i % nClusters`, its components are the cluster's base direction
-    * (xxhash-uniform in [-1,1]) plus ±0.15 per-vector noise. Same-cluster
-    * cosine ≫ cross-cluster, so true nearest neighbors share lists and
-    * probe recall measures something real (a UNIFORM corpus is the
-    * adversarial no-structure case: every list holds equally-near
-    * vectors and nProbe/k recall is the floor). */
-  def genClusteredEmbCorpus(
-      spark: SparkSession, n: Long, dim: Int = 64,
-      nClusters0: Int = 0): org.apache.spark.sql.DataFrame = {
-    // default topic granularity scales with the corpus (~2000 docs/topic,
-    // the regime real embedding corpora sit in); fixed tiny cluster
-    // counts at large n produce pathological 50k-strong identical blobs
-    val nClusters =
-      if (nClusters0 > 0) nClusters0
-      else math.min(1024L, math.max(16L, n / 2000L)).toInt
-    spark.range(n).toDF("vec_id")
-      .withColumn("c", pmod(col("vec_id"), lit(nClusters.toLong)))
-      .withColumn("embedding",
-        transform(sequence(lit(1), lit(dim)),
-          j => ((pmod(xxhash64(col("c"), j), lit(2001L)).cast("double") / 1000.0 - 1.0)
-            + (pmod(xxhash64(col("vec_id"), j), lit(2001L)).cast("double") / 1000.0 - 1.0)
-              * 0.5).cast("float")))
-      .select("vec_id", "embedding")
-  }
-
-  /** `runMain graft.Scale semdedup [nVecs] [outMd]` — the SemDeDup
-    * pipeline ([[graft.operators.Dedup.semanticDedupGroups]]) three
-    * orders of magnitude above the sf0.01 oracle corpus, on the
-    * PRODUCTION Gaussian hyperplane family: 16 planes × 4 bands bucket
-    * the corpus, exact cosine ≥ 0.999 confirms within buckets, connected
-    * components pick the min-id representative; planted-pair recall is
-    * the correctness signal. */
-  private def semdedupMain(args: Array[String]): Unit = {
-    val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_semdedup").toString
-    val (_, genSec) = timed {
-      genEmbCorpus(spark, nVecs).write.mode("overwrite").parquet(dir)
-    }
-    val vecs = spark.read.parquet(dir)
-    val planted = nVecs / 20
-    val ((total, dropped, recalled), dedupSec) = timed {
-      val groups = graft.operators.Dedup
-        .semanticDedupGroups(vecs, "vec_id", "embedding",
-          planes = 16, seed = 42L, threshold = 0.999, bands = 4)
-        .persist()
-      val total = groups.count()
-      val dropped = groups.filter(!col("is_representative")).count()
-      val a = groups.filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id").as("d"), col("group").as("g1"))
-      val b = groups.select((col("vec_id") - 1).as("d"), col("group").as("g2"))
-      val recalled = a.join(b, "d").filter(col("g1") === col("g2")).count()
-      groups.unpersist(blocking = false)
-      (total, dropped, recalled)
-    }
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$semdedupHeader (hyperplane LSH → exact cosine → components, production Gaussian family)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale semdedup $nVecs"` —
-         |`Dedup.semanticDedupGroups` (the SemDeDup shape) over ${nVecs / 1000}k
-         |synthetic 64-dim embeddings (generated executor-side, materialized
-         |to parquet first); every 20th vector is a planted near-dup of its
-         |successor (cosine ≈ 0.9998 vs ~0 for random pairs).
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nVecs vectors) |
-         || semantic-dedup wall | ${f"$dedupSec%.1f"} s (${f"${nVecs / dedupSec}%.0f"} vecs/s) |
-         || planted-pair recall | $recalled / $planted (${f"${recalled.toDouble / planted}%.3f"}) |
-         || vectors in / dropped as dups | $total / $dropped |
-         || peak heap | $heapMb MB |
-         |
-         |- bucketing is per-row expressions (16 planes × 4 bands of
-         |  codegen'd dot products); the band self-join touches only
-         |  same-signature buckets and the component graph is the 50k
-         |  confirmed near-dups, not the corpus
-         |""".stripMargin
-    spliceSection(outMd, semdedupHeader, section)
-    println(s"""{"metric":"scale_semdedup","value":$dedupSec,"unit":"sec","n_vecs":$nVecs,"vecs_per_s":${nVecs / dedupSec},"recall":${recalled.toDouble / planted},"dropped":$dropped,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val chunkDedupHeader = "## Chunk-level (line) dedup stage"
-
-  /** `runMain graft.Scale chunkdedup [nDocs] [outMd]` — the sub-document
-    * exact-dedup pipeline ([[graft.operators.Dedup.chunkDedup]], the
-    * CCNet line-dedup shape) at three orders of magnitude above the
-    * sf0.01 oracle corpus. The [[genDedupCorpus]] corpus gives exact
-    * deterministic invariants: every planted pair (i, i+1) shares its
-    * five 10-token chunks, so doc i+1 must be FULLY deduplicated (NULL
-    * text), and the planted docs' shared " extradup" tail chunk survives
-    * exactly once — removed-chunk and dropped-doc counts are equalities,
-    * not floors. */
-  private def chunkDedupMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_chunkdedup").toString
-    val (_, genSec) = timed {
-      genDedupCorpus(spark, nDocs).write.mode("overwrite").parquet(dir)
-    }
-    val docs = spark.read.parquet(dir)
-    val planted = nDocs / 20
-    val ((total, chunksIn, chunksRemoved, fullyDropped), dedupSec) = timed {
-      val out = graft.operators.Dedup
-        .chunkDedup(docs, "doc_id", "text", chunkTokens = 10)
-        .persist()
-      val agg = out.agg(
-        count(lit(1)), sum("n_chunks"), sum(col("n_chunks") - col("n_kept")),
-        sum(when(col("text_dedup").isNull, 1L).otherwise(0L))).head()
-      val r = (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
-      out.unpersist(blocking = false)
-      r
-    }
-    // exact invariants (see Scaladoc): every planted successor fully
-    // drops; removed chunks = 5 per planted pair + all-but-one extradup
-    val invariantsOk =
-      total == nDocs && fullyDropped == planted &&
-        chunksRemoved == 6 * planted - 1 && chunksIn == nDocs * 5 + planted
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$chunkDedupHeader (corpus-wide repeated 10-token chunks removed, first occurrence wins)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale chunkdedup $nDocs"` —
-         |`Dedup.chunkDedup` over the ${nDocs / 1000}k-doc planted corpus:
-         |chunking is a per-row expression; the duplicate scan shuffles only
-         |(16-byte hash, id, idx); reassembly is one groupBy on the doc id.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nDocs docs) |
-         || chunk-dedup wall | ${f"$dedupSec%.1f"} s (${f"${nDocs / dedupSec}%.0f"} docs/s, ${f"${chunksIn / dedupSec}%.0f"} chunks/s) |
-         || chunks in / removed as repeats | $chunksIn / $chunksRemoved |
-         || docs fully deduplicated (NULL text) | $fullyDropped |
-         || exact invariants hold | $invariantsOk |
-         || peak heap | $heapMb MB |
-         |""".stripMargin
-    spliceSection(outMd, chunkDedupHeader, section)
-    println(s"""{"metric":"scale_chunkdedup","value":$dedupSec,"unit":"sec","n_docs":$nDocs,"docs_per_s":${nDocs / dedupSec},"invariants_ok":$invariantsOk,"chunks_removed":$chunksRemoved,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val annHeader = "## ANN serving stage"
-
-  /** `runMain graft.Scale ann [nVecs]` — the materialized ANN serving
-    * paths (FAISS IVF-SQ8 and IVF-PQ shapes) at 1M vectors: train the
-    * coarse quantizer + PQ codebooks on a driver sample, materialize ONE
-    * list-partitioned index with both code columns, then compare probe
-    * latency and recall@10 against the brute-force scan for a pinned
-    * query set. The serving claim under test: a probe reads nProbe/k of
-    * the corpus at 1 (SQ8) or m/dim·¼ (PQ) of float width, and the
-    * recall cost of that cut is measured, not guessed. */
-  private def annMain(args: Array[String]): Unit = {
-    val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    import graft.operators.Similarity
-    val dir = Files.createTempDirectory("graft_scale_ann").toString
-    val (_, genSec) = timed {
-      genClusteredEmbCorpus(spark, nVecs).write.mode("overwrite").parquet(s"$dir/corpus")
-    }
-    val vecs = spark.read.parquet(s"$dir/corpus")
-    // production tuning: ~sqrt(n) coarse lists (FAISS guidance), training
-    // sample ~20 points per centroid
-    // ~sqrt(n) coarse lists (FAISS guidance), capped: every extra
-    // partition directory costs per-query listing overhead in this
-    // one-query-per-job harness, and past ~256 lists that fixed cost —
-    // not data volume — dominates local-mode probe latency
-    val lists = math.min(256, math.max(64, math.ceil(math.sqrt(nVecs.toDouble)).toInt))
-    val nProbe = math.max(8, lists / 16)
-    val ((centroids, codebooks, codebooks32), trainSec) = timed {
-      {
-        val cents = Similarity.kmeansCentroids(vecs, "embedding", k = lists,
-          iters = 5, seed = 42L, sampleN = math.max(2000, 20 * lists))
-        val cb16 = Similarity.pqCodebooksResidual(vecs, "embedding", cents,
-          m = 16, ksub = 16, iters = 5, seed = 42L,
-          sampleN = math.max(2000, 20 * lists))
-        // recall opponent: m=32 sub-quantizers (2 dims/subspace, 32
-        // B/vector) — double the code budget halves the per-subspace
-        // quantization error the ADC prefilter sees
-        val cb32 = Similarity.pqCodebooksResidual(vecs, "embedding", cents,
-          m = 32, ksub = 16, iters = 5, seed = 42L,
-          sampleN = math.max(2000, 20 * lists))
-        (cents, cb16, cb32)
-      }
-    }
-    val (_, indexSec) = timed {
-      Similarity.writeIvfIndex(vecs, "embedding", centroids, s"$dir/index",
-        withSq8Codes = true, pqCodebooksOpt = Some(codebooks),
-        pqVariants = Seq(("pq_code_m32", codebooks32)))
-    }
-    val queries = vecs.filter(col("vec_id") < 20)
-      .select("vec_id", "embedding").orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    def run(path: (Seq[Float], Long) => Array[Long]): (Double, Double) = {
-      var totalSec = 0.0
-      var recall = 0.0
-      queries.foreach { case (qid, q) =>
-        val brute = Similarity
-          .bruteForceTopK(vecs.filter(col("vec_id") =!= qid), "vec_id", "embedding", q, 10)
-          .collect().map(_.getLong(0)).toSet
-        val (got, s) = timed(path(q, qid))
-        totalSec += s
-        recall += got.toSet.diff(Set(qid)).intersect(brute).size / 10.0
-      }
-      (totalSec / queries.length, recall / queries.length)
-    }
-    val (bruteAvg, _) = {
-      var t = 0.0
-      queries.foreach { case (qid, q) =>
-        val (_, s) = timed(Similarity
-          .bruteForceTopK(vecs.filter(col("vec_id") =!= qid), "vec_id", "embedding", q, 10)
-          .collect())
-        t += s
-      }
-      (t / queries.length, 1.0)
-    }
-    val (sq8Avg, sq8Recall) = run((q, _) =>
-      Similarity.ivfSq8TopKIndexed(spark, s"$dir/index", "vec_id", "embedding",
-        q, 11, centroids, nProbe = nProbe).collect().map(_.getLong(0)))
-    val (pqAvg, pqRecall) = run((q, _) =>
-      Similarity.ivfPqTopKIndexed(spark, s"$dir/index", "vec_id", "embedding",
-        q, 11, centroids, codebooks, nProbe = nProbe, overfetch = 64)
-        .collect().map(_.getLong(0)))
-    val (pq32Avg, pq32Recall) = run((q, _) =>
-      Similarity.ivfPqTopKIndexed(spark, s"$dir/index", "vec_id", "embedding",
-        q, 11, centroids, codebooks32, nProbe = nProbe, overfetch = 64,
-        codeCol = "pq_code_m32")
-        .collect().map(_.getLong(0)))
-    // matryoshka two-stage: no index at all — coarse cosine over the
-    // first 16 of 64 dims (4× fewer flops; with the prefix materialized
-    // as its own column, 4× fewer bytes too), exact rerank of the
-    // bounded candidate set. coarseK is the quality knob and scales
-    // with corpus size (1024 at 1M = rerank touches 0.1% of the
-    // corpus); these synthetic vectors spread information evenly across
-    // dims — the WORST case for a prefix cut — so the recall here is a
-    // conservative floor, not what MRL-trained embeddings would score
-    val (mrlAvg, mrlRecall) = run((q, _) =>
-      Similarity.matryoshkaTopK(vecs, "vec_id", "embedding",
-        q, k = 11, prefixDims = 16, coarseK = 1024).collect().map(_.getLong(0)))
-    // batched serving: ALL queries in ONE two-scan job over the union of
-    // probed lists — the shape that amortizes fixed per-job cost
-    val bruteTop: Map[Long, Set[Long]] = queries.map { case (qid, q) =>
-      qid -> Similarity
-        .bruteForceTopK(vecs.filter(col("vec_id") =!= qid), "vec_id", "embedding", q, 10)
-        .collect().map(_.getLong(0)).toSet
-    }.toMap
-    val (batchRows, batchSec) = timed {
-      Similarity.ivfSq8TopKJoinIndexed(spark, s"$dir/index", "vec_id", "embedding",
-        queries.map { case (qid, q) => (qid, q.toArray) }.toSeq, k = 10,
-        centroids, nProbe = nProbe, overfetch = 4, excludeSelf = true)
-        .select("q_id", "vec_id").collect()
-    }
-    val batchAvg = batchSec / queries.length
-    val batchRecall = queries.map { case (qid, _) =>
-      batchRows.filter(_.getLong(0) == qid).map(_.getLong(1)).toSet
-        .intersect(bruteTop(qid)).size / 10.0
-    }.sum / queries.length
-    // amortization curve: a 100-query batch — the fixed cost divides by Q
-    // while the union of probed lists saturates toward the whole corpus,
-    // so per-query cost approaches (one corpus code-scan) / Q
-    val queries100 = vecs.filter(col("vec_id") < 100)
-      .select("vec_id", "embedding").orderBy("vec_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-    val (_, batch100Sec) = timed {
-      Similarity.ivfSq8TopKJoinIndexed(spark, s"$dir/index", "vec_id", "embedding",
-        queries100, k = 10, centroids, nProbe = nProbe, overfetch = 4,
-        excludeSelf = true)
-        .select("q_id", "vec_id").collect()
-    }
-    val batch100Avg = batch100Sec / queries100.length
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$annHeader (materialized IVF index, SQ8 + PQ code columns, 20 pinned queries)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale ann $nVecs"` —
-         |train (sampled Lloyd ×$lists lists + 16×16 PQ codebooks),
-         |materialize ONE list-partitioned index with both code columns,
-         |probe nProbe=$nProbe/$lists with quantized prefilter + exact rerank;
-         |recall@10 vs the exact scan.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nVecs vectors) |
-         || train (coarse + PQ codebooks) | ${f"$trainSec%.1f"} s |
-         || index build (assign + SQ8 + PQ encode + partitioned write) | ${f"$indexSec%.1f"} s (${f"${nVecs / indexSec}%.0f"} vecs/s) |
-         || brute-force scan avg / query | ${f"$bruteAvg%.3f"} s |
-         || IVF-SQ8 probe avg / query (recall@10) | ${f"$sq8Avg%.3f"} s (${f"$sq8Recall%.2f"}) |
-         || IVF-PQ m=16 probe avg / query (recall@10) | ${f"$pqAvg%.3f"} s (${f"$pqRecall%.2f"}) — 16 B/vector |
-         || IVF-PQ m=32 probe avg / query (recall@10) | ${f"$pq32Avg%.3f"} s (${f"$pq32Recall%.2f"}) — 32 B/vector |
-         || Matryoshka 16/64-dim two-stage, NO index, coarse 1024 (recall@10) | ${f"$mrlAvg%.3f"} s (${f"$mrlRecall%.2f"} — even-information vecs, the prefix cut's worst case) |
-         || BATCHED IVF-SQ8 (${queries.length} queries, one job) | ${f"$batchAvg%.3f"} s/query amortized (recall ${f"$batchRecall%.2f"}) |
-         || BATCHED IVF-SQ8 (${queries100.length} queries, one job) | ${f"$batch100Avg%.3f"} s/query amortized |
-         || probe speedup vs brute | SQ8 ${f"${bruteAvg / sq8Avg}%.1f"}×, PQ ${f"${bruteAvg / pqAvg}%.1f"}×, batched ${f"${bruteAvg / batchAvg}%.1f"}× |
-         || peak heap | $heapMb MB |
-         |
-         |- the probe scan is partition-pruned to the probed lists and
-         |  MANIFEST-BACKED (`_ann_list_files.tsv` written at build: leaf
-         |  files resolve without a directory listing — the fixed cost
-         |  that floored per-probe latency in round 7); scan 1 reads ONLY
-         |  (id, code) — 1 byte/dim (SQ8), 16 B/vector (PQ m=16), 32
-         |  B/vector (m=32) — and the exact-cosine rerank touches float
-         |  vectors for the bounded survivor set alone
-         |- the m=16 → m=32 row is the recall/bytes trade: double the code
-         |  budget (2 dims per sub-quantizer) recovers the ADC prefilter's
-         |  missed true neighbors at 2× the code bytes, still 8× under
-         |  float32
-         |- batched serving (ivfSq8TopKJoinIndexed) probes every query in
-         |  ONE two-scan job over the union of probed lists — per-query
-         |  fixed cost amortizes away and the index beats the brute scan
-         |  on wall clock, not just bytes
-         |""".stripMargin
-    spliceSection(outMd, annHeader, section)
-    println(s"""{"metric":"scale_ann","value":$indexSec,"unit":"sec","n_vecs":$nVecs,"index_vecs_per_s":${nVecs / indexSec},"brute_avg_s":$bruteAvg,"sq8_avg_s":$sq8Avg,"sq8_recall":$sq8Recall,"pq_avg_s":$pqAvg,"pq_recall":$pqRecall,"pq32_avg_s":$pq32Avg,"pq32_recall":$pq32Recall,"mrl_avg_s":$mrlAvg,"mrl_recall":$mrlRecall,"batch_avg_s":$batchAvg,"batch_recall":$batchRecall,"batch100_avg_s":$batch100Avg,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val rangeLookupHeader = "## Static-interval lookup stage"
-
-  /** `runMain graft.Scale rangelookup [rows] [outMd]` — the j11 shape at
-    * scale: bucket 20M fact rows into 256 NON-uniform intervals, once as
-    * the codegen'd [[graft.functions.RangeBucket]] binary-search
-    * expression (zero join) and once as the naive
-    * `fact.v BETWEEN dim.lo AND dim.hi` broadcast join Spark plans as a
-    * BroadcastNestedLoopJoin (O(rows × intervals) compares). Both
-    * variants produce identical per-tier counts (asserted). */
-  private val textOpsHeader = "## Text-curation kernels stage (BM25 / blocklist / run-dedup)"
-
-  /** `runMain graft.Scale textops [nDocs] [outMd]` — the scan-side text
-    * kernels at corpus scale with planted closed-form invariants:
-    * every 100th doc carries the BM25 query term ×3 (nothing else can —
-    * the vocabulary is disjoint), every 10th doc a blocklist token, and
-    * EVERY doc a `rep rep rep` run. BM25's whole top-k must be planted
-    * docs at tf=3; the blocklist flag count is exact; run-dedup is
-    * checked by idempotence (a second pass removes ZERO tokens) plus the
-    * ≥2·n floor the plants guarantee. */
-  private def textOpsMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_textops").toString
-    genDedupCorpus(spark, nDocs)
-      .select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 100 === 0, lit(" target target target")).otherwise(lit("")),
-          when(col("doc_id") % 10 === 0, lit(" blockedtok")).otherwise(lit("")),
-          lit(" rep rep rep")).as("text"))
-      .write.mode("overwrite").parquet(s"$dir/docs")
-    val docs = spark.read.parquet(s"$dir/docs")
-    import graft.operators.TextAnalysis
-
-    val (top, bm25Sec) = timed {
-      TextAnalysis.bm25TopK(docs, "doc_id", "text", Seq("target"), k = 10).collect()
-    }
-    require(top.length == 10 && top.forall(r =>
-      r.getLong(1) % 100 == 0 && r.getLong(2) == 3L),
-      s"bm25 plant invariant broke: ${top.map(r => (r.getLong(1), r.getLong(2))).toSeq}")
-
-    val ((nFlagged, totalHits), blockSec) = timed {
-      val st = TextAnalysis.blocklistStats(docs, "doc_id", "text",
-        Seq("blockedtok"), maxHits = 0)
-        .agg(sum(when(col("flagged"), 1L).otherwise(0L)), sum("total_hits")).head()
-      (st.getLong(0), st.getLong(1))
-    }
-    val expectFlagged = (nDocs + 9) / 10
-    require(nFlagged == expectFlagged && totalHits == expectFlagged,
-      s"blocklist invariant broke: flagged=$nFlagged hits=$totalHits expected $expectFlagged")
-
-    val (removedFirst, runSec) = timed {
-      TextAnalysis.dedupTokenRuns(docs, "doc_id", "text")
-        .agg(sum("n_removed")).head().getLong(0)
-    }
-    require(removedFirst >= 2L * nDocs,
-      s"run-dedup floor broke: removed $removedFirst < ${2L * nDocs}")
-    // idempotence: the rewrite has no adjacent duplicates left
-    val removedSecond = TextAnalysis.dedupTokenRuns(
-      TextAnalysis.dedupTokenRuns(docs, "doc_id", "text")
-        .select(col("doc_id"), col("text_dedup").as("text")),
-      "doc_id", "text")
-      .agg(sum("n_removed")).head().getLong(0)
-    require(removedSecond == 0L,
-      s"run-dedup idempotence broke: second pass removed $removedSecond")
-
-    // SNM blocking under PLANTED KEY SKEW: every key shares the single
-    // 1-char prefix 'Z' — with blockLen=1 that is ONE block of nDocs rows,
-    // the natural-skew worst case that would sort in ONE task under a
-    // per-block window. The range-partitioned form must (a) return the
-    // exact closed-form pair count for a single block — n·w − w(w+1)/2 —
-    // and (b) keep every task bounded at ~n/p rows (measured, not assumed).
-    val snmW = 3
-    val snmKeyed = docs.select(
-      col("doc_id"), format_string("Z%07d", col("doc_id")).as("k"))
-    val (snmPairs, snmSec) = timed {
-      graft.operators.Dedup.sortedNeighborhoodPairs(
-        snmKeyed, "doc_id", "k", window = snmW, blockLen = 1).count()
-    }
-    // balance probe runs AFTER the timed join (its own range exchange —
-    // before, it would donate warm page cache to the timed region); it
-    // re-samples split bounds independently, which is fine: the claim is
-    // that range partitioning bounds ANY such layout, not one lucky draw
-    val snmMaxTask = graft.operators.Dedup
-      .snmSorted(snmKeyed, "doc_id", "k", blockLen = 1)
-      .groupBy(spark_partition_id()).count()
-      .agg(max("count")).head().getLong(0)
-    val snmParts = cpus.toInt
-    require(snmMaxTask <= 4L * (nDocs / snmParts + 1),
-      s"SNM range partitioning is unbalanced: max task $snmMaxTask rows " +
-        s"vs ~${nDocs / snmParts} expected")
-    def pairsOf(n: Long): Long =
-      if (n > snmW) n * snmW - snmW.toLong * (snmW + 1) / 2
-      else n * (n - 1) / 2
-    val expectSnm = pairsOf(nDocs)
-    require(snmPairs == expectSnm,
-      s"SNM invariant broke: got $snmPairs, closed form says $expectSnm")
-
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$textOpsHeader (${nDocs / 1000}k docs, planted closed-form invariants)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale textops $nDocs"` —
-         |the three scan-side curation kernels at corpus scale: every 100th
-         |doc plants the BM25 query term ×3 (disjoint vocabulary — nothing
-         |else can contain it), every 10th doc a blocklist token, every doc
-         |a 3-token repeat run.
-         |
-         || kernel | wall (s) | docs/s | invariant |
-         ||---|---|---|---|
-         || BM25 top-10 (1 term) | ${f"$bm25Sec%.1f"} | ${f"${nDocs / bm25Sec}%.0f"} | all 10 hits planted docs at tf=3 ✓ |
-         || blocklist stats + flag | ${f"$blockSec%.1f"} | ${f"${nDocs / blockSec}%.0f"} | flagged = hits = $nFlagged = n/10 EXACT |
-         || duplicate-run rewrite | ${f"$runSec%.1f"} | ${f"${nDocs / runSec}%.0f"} | removed $removedFirst ≥ 2n; 2nd pass removes 0 (idempotent) |
-         || SNM blocking (w=$snmW, ONE planted-skew block) | ${f"$snmSec%.1f"} | ${f"${nDocs / snmSec}%.0f"} | $snmPairs pairs = n·w − w(w+1)/2 EXACT; max task $snmMaxTask rows ≈ n/$snmParts (range-bounded) |
-         || peak heap | $heapMb MB | | |
-         |
-         |- all three are shuffle-free on the corpus (PlanSpec-gated): BM25's
-         |  only exchanges are the 1-row stats broadcast and the TakeOrdered
-         |  reduction — the corpus itself is read once, scan-side
-         |""".stripMargin
-    spliceSection(outMd, textOpsHeader, section)
-    println(s"""{"metric":"scale_textops","value":${bm25Sec + blockSec + runSec},"unit":"sec","n_docs":$nDocs,"bm25_sec":$bm25Sec,"block_sec":$blockSec,"run_sec":$runSec,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val spansHeader = "## Repeated-span (substring) dedup stage"
-
-  /** `runMain graft.Scale spans [nDocs] [outMd]` — [[graft.operators
-    * .Dedup.repeatedSpans]] at corpus scale: 1M 50-token docs of
-    * near-unique hash tokens (any chance 4-gram repeat is ~n²/V⁴ ≈ 0),
-    * every 10th doc carrying one planted 4-token boilerplate span at a
-    * varying position. The invariant is closed-form: the planted span
-    * is the ONLY repeated 4-gram, its boundary grams are unique, so
-    * n_rep_starts = planted docs exactly and covered_tokens = 4 per
-    * planted doc, 0 elsewhere. Runs the production xxhash64-keyed gram
-    * shuffle (the 100 TB default; the d19 gate covers string parity). */
-  private def spansMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_spans").toString
-    val (_, genSec) = timed {
-      spark.range(nDocs).toDF("doc_id")
-        .withColumn("noise",
-          transform(sequence(lit(1), lit(46)),
-            j => concat(lit("w"), pmod(xxhash64(col("doc_id"), j), lit(100000000000L)))))
-        .withColumn("pos", pmod(xxhash64(col("doc_id"), lit(-7)), lit(46L)).cast("int"))
-        .withColumn("text",
-          when(col("doc_id") % 10 === 0,
-            array_join(concat(
-              slice(col("noise"), lit(1), col("pos")),
-              array(lit("boiler"), lit("plate"), lit("span"), lit("here")),
-              slice(col("noise"), col("pos") + 1, lit(46) - col("pos"))), " "))
-            .otherwise(array_join(col("noise"), " ")))
-        .select("doc_id", "text")
-        .write.mode("overwrite").parquet(dir)
-    }
-    val docs = spark.read.parquet(dir)
-    val planted = (nDocs + 9) / 10
-    val (agg, spanSec) = timed {
-      graft.operators.Dedup.repeatedSpans(docs, "doc_id", "text", w = 4)
-        .agg(sum("n_rep_starts").as("starts"), sum("covered_tokens").as("cov"),
-          count(lit(1)).as("rows"))
-        .head()
-    }
-    require(agg.getLong(2) == nDocs, s"row count broke: ${agg.getLong(2)}")
-    require(agg.getLong(0) == planted,
-      s"repeated starts broke: ${agg.getLong(0)} vs planted $planted")
-    require(agg.getLong(1) == 4 * planted,
-      s"covered tokens broke: ${agg.getLong(1)} vs ${4 * planted}")
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$spansHeader (${nDocs / 1000}k × 50-token docs, planted boilerplate in every 10th)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale spans $nDocs"` —
-         |cross-document repeated 4-gram span removal on the production
-         |xxhash64-keyed path: single-pass shingle kernel (posexplode index =
-         |start position), map-side-combined gram count, bounded per-doc
-         |coverage window; window + rebuild + agg share one id exchange.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nDocs docs) |
-         || repeated-span pass (~${nDocs * 47 / 1000000}M grams) | ${f"$spanSec%.1f"} s (${f"${nDocs / spanSec}%.0f"} docs/s) |
-         || invariants | starts = $planted, covered = ${4 * planted} — EXACT closed form |
-         || peak heap | $heapMb MB |
-         |
-         |- the planted span is the only repeated 4-gram (46 noise tokens
-         |  from a 10¹¹ vocabulary — chance repeats ≈ 0), so coverage is a
-         |  closed form over the whole corpus, not a sample
-         |""".stripMargin
-    spliceSection(outMd, spansHeader, section)
-    println(s"""{"metric":"scale_spans","value":$spanSec,"unit":"sec","n_docs":$nDocs,"planted":$planted,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val dbscanHeader = "## DBSCAN density-clustering stage"
-
-  /** `runMain graft.Scale dbscan [nVecs] [outMd]` — [[graft.operators
-    * .Similarity.dbscanLabels]] at corpus scale: 800k planted points in
-    * 50k dense 16-member clusters (center per cluster from hashed ±1
-    * coordinates in 64 dims, members jittered ±0.01 → intra-cluster
-    * cos ≈ 1) plus 200k isolated noise vectors (pairwise |cos| far
-    * below τ at d=64 — the Gaussian-tail argument, P(cos>0.9) ≈ 1e-23).
-    * Closed form: EVERY planted member must come back core with its
-    * cluster = the min member id, every noise vector noise — roles
-    * asserted by exact counts, clusters by exact distinct count. 16
-    * planes × 3 bands keeps buckets at ~cluster size (the all-pairs
-    * within-bucket path, no chain truncation) with per-pair visibility
-    * ≈ 1 − 5e-4. */
-  private def dbscanMain(args: Array[String]): Unit = {
-    val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dim = 64
-    val clustered = nVecs * 4 / 5 // 16 members per cluster
-    val nClusters = clustered / 16
-    val dir = Files.createTempDirectory("graft_scale_dbscan").toString
-    val (_, genSec) = timed {
-      spark.range(nVecs).toDF("id")
-        .withColumn("cl",
-          when(col("id") < clustered, (col("id") / 16).cast("long")).otherwise(lit(-1L)))
-        .withColumn("vec",
-          when(col("cl") >= 0,
-            transform(sequence(lit(0), lit(dim - 1)), j =>
-              ((pmod(xxhash64(col("cl"), j), lit(2L)) * 2 - 1).cast("double") +
-                (pmod(xxhash64(col("id"), j, lit(99)), lit(100L)).cast("double") / 100.0 - 0.5) * 0.02)
-                .cast("float")))
-            .otherwise(
-              transform(sequence(lit(0), lit(dim - 1)), j =>
-                ((pmod(xxhash64(col("id"), j, lit(7)), lit(2000L)).cast("double") / 1000.0 - 1.0))
-                  .cast("float"))))
-        .select("id", "vec")
-        .write.mode("overwrite").parquet(dir)
-    }
-    val vecs = spark.read.parquet(dir)
-    val ((roles, gotClusters, badLabels), fitSec) = timed {
-      val out = graft.operators.Similarity.dbscanLabels(
-        vecs, "id", "vec", tau = 0.9, minPts = 4,
-        planes = 16, seed = 42L, bands = 3)
-      val agg = out.groupBy("role").agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val nClustersGot = out.filter(col("role") === "core")
-        .agg(countDistinct("cluster")).head().getLong(0)
-      // every member's label must be its cluster's MIN id = floor(id/16)*16
-      val clusterOk = out.filter(col("role") === "core")
-        .filter(col("cluster") =!= floor(col("id") / 16).cast("long") * 16)
-        .count()
-      out.unpersist(blocking = false)
-      (agg, nClustersGot, clusterOk)
-    }
-    require(roles.getOrElse("core", 0L) == clustered,
-      s"core count broke: ${roles.get("core")} vs planted $clustered")
-    require(roles.getOrElse("noise", 0L) == nVecs - clustered,
-      s"noise count broke: ${roles.get("noise")} vs ${nVecs - clustered}")
-    require(roles.getOrElse("border", 0L) == 0L,
-      s"unexpected borders: ${roles.get("border")}")
-    require(gotClusters == nClusters,
-      s"cluster count broke: $gotClusters vs planted $nClusters")
-    require(badLabels == 0L,
-      s"$badLabels members carry a label != their cluster's min id")
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$dbscanHeader (${nVecs / 1000}k × $dim-dim vectors: ${nClusters / 1000}k planted 16-member clusters + ${(nVecs - clustered) / 1000}k noise)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale dbscan $nVecs"` —
-         |density clustering over the banded hyperplane-LSH neighborhood
-         |graph: per-row signatures (16 planes × 3 bands → buckets at
-         |~cluster size, all-pairs within-bucket), degree aggregation,
-         |connected components of the core-core graph, border/noise rules.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nVecs vectors) |
-         || DBSCAN end-to-end | ${f"$fitSec%.1f"} s (${f"${nVecs / fitSec}%.0f"} vectors/s) |
-         || roles | core = $clustered, border = 0, noise = ${nVecs - clustered} — EXACT closed form |
-         || clusters | $gotClusters = planted $nClusters, every label the cluster's min id |
-         || peak heap | $heapMb MB |
-         |
-         |- the s23 driver gate replays the full construction (signatures,
-         |  τ edges, degrees, recursive reachability, border rule) in DuckDB
-         |""".stripMargin
-    spliceSection(outMd, dbscanHeader, section)
-    println(s"""{"metric":"scale_dbscan","value":$fitSec,"unit":"sec","n_vecs":$nVecs,"clusters":$gotClusters,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val semSurvivorsHeader = "## SemDeDup survivor stage (the s24 composition)"
-
-  /** `runMain graft.Scale semsurvivors [nVecs] [outMd]` — [[graft.operators
-    * .Similarity.semanticSurvivors]] (the headline SemDeDup composition,
-    * gated as s24) at corpus scale: the dbscan stage's planted geometry
-    * (80% of the corpus in dense 16-member clusters, 20% isolated
-    * noise) plus a deterministic hashed QUALITY per doc. Closed form:
-    * every cluster keeps EXACTLY its argmax-quality member (ties to the
-    * smaller id), every noise doc survives — survivor identity asserted
-    * by an exact anti-join against the planted argmax, kept/dropped
-    * mass by exact counts. The wall and kept fraction are the
-    * measurement: this is the "dedup 100 TB by meaning, keep the best
-    * copy" number. Skew: the survivor window runs over clustered rows
-    * only; the 200k noise docs bypass it (the s24 NULL-key guard), so
-    * no task ever owns the noise mass. */
-  private def semSurvivorsMain(args: Array[String]): Unit = {
-    val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dim = 64
-    val clustered = nVecs * 4 / 5 // 16 members per cluster
-    val nClusters = clustered / 16
-    val dir = Files.createTempDirectory("graft_scale_semsurv").toString
-    val (_, genSec) = timed {
-      spark.range(nVecs).toDF("id")
-        .withColumn("cl",
-          when(col("id") < clustered, (col("id") / 16).cast("long")).otherwise(lit(-1L)))
-        .withColumn("vec",
-          when(col("cl") >= 0,
-            transform(sequence(lit(0), lit(dim - 1)), j =>
-              ((pmod(xxhash64(col("cl"), j), lit(2L)) * 2 - 1).cast("double") +
-                (pmod(xxhash64(col("id"), j, lit(99)), lit(100L)).cast("double") / 100.0 - 0.5) * 0.02)
-                .cast("float")))
-            .otherwise(
-              transform(sequence(lit(0), lit(dim - 1)), j =>
-                ((pmod(xxhash64(col("id"), j, lit(7)), lit(2000L)).cast("double") / 1000.0 - 1.0))
-                  .cast("float"))))
-        .withColumn("quality", pmod(xxhash64(col("id"), lit(5)), lit(1000000L)))
-        .select("id", "vec", "quality")
-        .write.mode("overwrite").parquet(dir)
-    }
-    val vecs = spark.read.parquet(dir)
-    val ((nKept, noiseDropped, wrongSurvivors), fitSec) = timed {
-      val out = graft.operators.Similarity.semanticSurvivors(
-        vecs, "id", "vec", "quality", tau = 0.9, minPts = 4,
-        planes = 16, seed = 42L, bands = 3)
-      val kept = out.filter(col("kept")).count()
-      val noiseBad = out.filter(col("role") === "noise")
-        .filter(!col("kept")).count()
-      // planted argmax per cluster: max quality, ties to the smaller id
-      val expected = vecs.filter(col("id") < clustered)
-        .groupBy((col("id") / 16).cast("long").as("pc"))
-        .agg(min(struct((-col("quality")).as("nq"), col("id").as("id"))).as("s"))
-        .select(col("s").getField("id").as("id"))
-      val wrong = expected
-        .join(out.filter(col("kept")).select("id"), Seq("id"), "left_anti")
-        .count()
-      out.unpersist(blocking = false)
-      (kept, noiseBad, wrong)
-    }
-    require(nKept == nClusters + (nVecs - clustered),
-      s"kept count broke: $nKept vs ${nClusters + (nVecs - clustered)}")
-    require(noiseDropped == 0L, s"$noiseDropped noise docs were dropped")
-    require(wrongSurvivors == 0L,
-      s"$wrongSurvivors clusters kept a non-argmax-quality member")
-    val keptFrac = nKept.toDouble / nVecs
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$semSurvivorsHeader (${nVecs / 1000}k × $dim-dim vectors: ${nClusters / 1000}k planted 16-member clusters + ${(nVecs - clustered) / 1000}k noise, hashed quality)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale semsurvivors $nVecs"` —
-         |the full SemDeDup composition ([[Similarity.semanticSurvivors]],
-         |the s24 gate's operator): DBSCAN clusters over the banded
-         |hyperplane-LSH neighborhood graph, then the argmax-quality
-         |survivor window over CLUSTERED rows only (noise bypasses it — the
-         |NULL cluster key never becomes one task).
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nVecs vectors) |
-         || semdedup end-to-end | ${f"$fitSec%.1f"} s (${f"${nVecs / fitSec}%.0f"} vectors/s) |
-         || kept | $nKept of $nVecs (${f"${keptFrac * 100}%.1f"}% — one survivor per cluster + all noise, EXACT closed form) |
-         || survivor identity | every cluster kept its argmax-quality member (ties to min id), 0 mismatches |
-         || dropped redundant mass | ${clustered - nClusters} docs (15/16 of every planted cluster) |
-         || peak heap | $heapMb MB |
-         |
-         |- the s24 driver gate replays the identical composition (DBSCAN
-         |  recursive CTEs + the survivor window) in DuckDB at sf0.01
-         |""".stripMargin
-    spliceSection(outMd, semSurvivorsHeader, section)
-    println(s"""{"metric":"scale_semsurvivors","value":$fitSec,"unit":"sec","n_vecs":$nVecs,"kept":$nKept,"kept_frac":$keptFrac,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val graphServeHeader = "## Graph-ANN serving stage (beam descent over the 1M kNN graph)"
-
-  /** `runMain graft.Scale graphserve [nVecs] [outMd]` — the s25/s26
-    * serving paths at corpus scale: build [[graft.operators.Similarity
-    * .knnGraph]] over 1M hash-uniform 64-dim vectors (the HARD case —
-    * no planted structure, shallow cosine neighborhoods), then serve 16
-    * queries three ways: batched ([[graft.operators.Similarity
-    * .graphSearchBatch]], one descent job set for all queries), the
-    * per-query driver loop ([[graft.operators.Similarity.graphSearch]]),
-    * and brute force. The HARD invariant is exact: the batched descent
-    * must return byte-identical (query, rnk, id) rows to 16 independent
-    * single-query descents — same graph, same entries, same hops —
-    * proving the frame-wide windows and the driver loop implement ONE
-    * semantics. recall@10 vs brute is LOGGED as measured (uniform
-    * random data lower-bounds any real corpus, where near-duplicate
-    * structure makes descent easier); the walls quantify the batched
-    * amortization. */
-  private def graphServeMain(args: Array[String]): Unit = {
-    val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    import graft.operators.Similarity
-    val dim = 64
-    // Two regimes. CLUSTERED is the realistic embedding-corpus case
-    // (topical manifolds — genClusteredEmbCorpus's ~2000-docs/topic
-    // regime) and carries the HARD recall floor; hash-UNIFORM is the
-    // adversarial case (r14 measured recall exactly 0.000 there with
-    // FIXED entries — the LSH-bucket kNN graph is near-forest, nothing
-    // descends). r15's fix is LSH-SEEDED entries: the query's own band
-    // buckets start the beam among genuine neighbor candidates, and
-    // seeding params may differ from the graph's build params (fewer
-    // planes per band = wider seed pool — the serving-time recall
-    // lever, no graph rebuild).
-    case class Regime(name: String, gen: () => org.apache.spark.sql.DataFrame,
-      seedPlanes: Int, seedBands: Int, floor: Double)
-    val regimes = Seq(
-      Regime("clustered", () => genClusteredEmbCorpus(spark, nVecs)
-        .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        seedPlanes = 8, seedBands = 4, floor = 0.9),
-      Regime("uniform", () => spark.range(nVecs).toDF("id")
-        .withColumn("vec",
-          transform(sequence(lit(0), lit(dim - 1)), j =>
-            ((pmod(xxhash64(col("id"), j, lit(7)), lit(2000L)).cast("double") / 1000.0 - 1.0))
-              .cast("float"))),
-        seedPlanes = 10, seedBands = 8, floor = -1.0))
-    val rows = regimes.map { rg =>
-      val dir = Files.createTempDirectory(s"graft_scale_gserve_${rg.name}").toString
-      val (_, genSec) = timed { rg.gen().write.mode("overwrite").parquet(dir) }
-      val vecs = spark.read.parquet(dir).persist()
-      vecs.count()
-      val (graph, buildSec) = timed {
-        Similarity.knnGraph(vecs, "id", "vec", k = 8, planes = 16, seed = 42L,
-          bands = 4)
-      }
-      val nEdges = graph.count()
-      // the seed INDEX is materialized once beside the graph (the serving
-      // shape: at 100 TB it is bucketed by (band, sig) so a query's probe
-      // partition-prunes) — its build cost is reported, not hidden
-      val (sigs, sigSec) = timed {
-        val s0 = Similarity.bandSignatures(vecs, "id", "vec",
-          rg.seedPlanes, seed = 42L, rg.seedBands).persist()
-        s0.count()
-        s0
-      }
-      val queries = vecs.filter(col("id") < 16)
-        .select(col("id").as("q_id"), col("vec")).persist()
-      val qList = queries.collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-        .sortBy(_._1)
-      val (batched, batchSec) = timed {
-        val out = Similarity.graphSearchBatchSeeded(vecs, graph, "id", "vec",
-          queries, "q_id", "vec", k = 10, beam = 32, hops = 3,
-          rg.seedPlanes, seed = 42L, rg.seedBands, sigs = Some(sigs))
-        val r = out.collect().map(r0 => (r0.getLong(0), r0.getLong(1), r0.getLong(2))).toSet
-        out.unpersist(blocking = false)
-        r
-      }
-      val (singles, singleSec) = timed {
-        qList.flatMap { case (qid, qv) =>
-          Similarity.graphSearchSeeded(
-            vecs.filter(col("id") =!= qid), graph, "id", "vec", qv,
-            k = 10, beam = 32, hops = 3,
-            rg.seedPlanes, seed = 42L, rg.seedBands,
-            sigs = Some(sigs.filter(col("id") =!= qid)))
-            .collect().map(r0 => (qid, r0.getLong(0), r0.getLong(1)))
-        }.toSet
-      }
-      require(batched == singles,
-        s"${rg.name}: batched descent diverged from single-query descents: " +
-          s"${(batched diff singles).size}+${(singles diff batched).size} rows differ")
-      val (recall, bruteSec) = timed {
-        val per = qList.map { case (qid, qv) =>
-          val truth = Similarity.bruteForceTopK(
-            vecs.filter(col("id") =!= qid), "id", "vec", qv, 10)
-            .collect().map(_.getLong(0)).toSet
-          val got = batched.filter(_._1 == qid).map(_._3)
-          (got & truth).size / 10.0
-        }
-        per.sum / per.length
-      }
-      // the r15 "done" criterion: clustered recall is ASSERTED (the
-      // realistic regime must actually navigate); uniform stays logged —
-      // materially non-zero is the honest claim there, and the number
-      // itself is the evidence
-      if (rg.floor > 0)
-        require(recall >= rg.floor,
-          s"${rg.name}: seeded descent recall@10 $recall under floor ${rg.floor}")
-      // NSW-style LONG LINKS (uniform regime only): union the fine graph
-      // with a COARSE-LSH kNN graph (8 planes → 256× bigger buckets →
-      // edges spanning far wider cosine neighborhoods — the small-world
-      // shortcut tier HNSW builds by layer). Pure composition of the
-      // existing operator; measured, not asserted.
-      val longLink: Option[(Double, Double, Long)] =
-        if (rg.floor > 0) None
-        else {
-          val (coarse, llBuildSec) = timed {
-            Similarity.knnGraph(vecs, "id", "vec", k = 4, planes = 8,
-              seed = 43L, bands = 2)
-          }
-          val union = graph.select(col("src"), col("dst"))
-            .unionByName(coarse.select(col("src"), col("dst"))).distinct()
-            .persist()
-          val nU = union.count()
-          val (ll, llSec) = timed {
-            val out = Similarity.graphSearchBatchSeeded(vecs, graph = union,
-              "id", "vec", queries, "q_id", "vec", k = 10, beam = 32, hops = 3,
-              rg.seedPlanes, seed = 42L, rg.seedBands, sigs = Some(sigs))
-            val got = out.collect().map(r0 => (r0.getLong(0), r0.getLong(2))).toSet
-            out.unpersist(blocking = false)
-            val per = qList.map { case (qid, qv) =>
-              val truth = Similarity.bruteForceTopK(
-                vecs.filter(col("id") =!= qid), "id", "vec", qv, 10)
-                .collect().map(_.getLong(0)).toSet
-              (got.filter(_._1 == qid).map(_._2) & truth).size / 10.0
-            }
-            per.sum / per.length
-          }
-          coarse.unpersist(blocking = false)
-          union.unpersist(blocking = false)
-          Some((ll, llBuildSec + llSec, nU))
-        }
-      graph.unpersist(blocking = false)
-      sigs.unpersist(blocking = false)
-      queries.unpersist(blocking = false)
-      vecs.unpersist(blocking = false)
-      (rg, genSec, buildSec, sigSec, nEdges, batchSec, singleSec, recall, bruteSec, longLink)
-    }
-    val heapMb = heapPeakMb()
-    // NB: built with plain concatenation, NOT an embedded stripMargin
-    // template — lines spliced into the outer stripMargin would lose
-    // their leading table pipes (double-strip)
-    val tbl = rows.map { case (rg, genSec, buildSec, sigSec, nEdges, batchSec, singleSec, recall, bruteSec, longLink) =>
-      Seq(
-        s"| — **${rg.name}** corpus (gen ${f"$genSec%.1f"} s) | |",
-        s"| kNN graph build (k=8, 16 planes × 4 bands) | ${f"$buildSec%.1f"} s ($nEdges edges) |",
-        s"| seed index build (${rg.seedPlanes} planes × ${rg.seedBands} bands) | ${f"$sigSec%.1f"} s |",
-        s"| batched seeded serve, 16 queries × top-10 (beam 32, 3 hops) | ${f"$batchSec%.1f"} s (${f"${batchSec / 16}%.2f"} s/query) |",
-        s"| single-query seeded loop, same 16 | ${f"$singleSec%.1f"} s (batched is ${f"${singleSec / math.max(batchSec, 1e-9)}%.1f"}×) |",
-        s"| batched ≡ single | EXACT (same (query, rnk, id) set) |",
-        s"| mean recall@10 vs brute (brute wall ${f"$bruteSec%.1f"} s) | ${f"$recall%.3f"}${if (rg.floor > 0) s" (ASSERTED ≥ ${rg.floor})" else " (logged — the adversarial no-structure case; was 0.000 with fixed entries in r14)"} |"
-      ).mkString("\n") + longLink.map { case (ll, llSec, nU) =>
-        s"\n| + NSW-style long links (∪ coarse 8-plane kNN graph, $nU edges, ${f"$llSec%.1f"} s build+serve) | recall@10 ${f"$ll%.3f"} (logged) |"
-      }.getOrElse("")
-    }.mkString("\n")
-    val llNote = rows.flatMap(_._10).headOption.map { _ =>
-      """
-        |- long-link finding: on STRUCTURELESS data the coarse shortcut
-        |  tier moves recall barely or not at all — once LSH seeding puts
-        |  the beam in the query's own bucket region, uniform-corpus
-        |  recall is bound by the SEED POOL (how much of the corpus the
-        |  hop-0 exact scoring sees), not by graph reach; the serving
-        |  lever there is wider seeding (fewer planes / more bands), paid
-        |  per query, with no rebuild
-        |""".stripMargin.stripSuffix("\n")
-    }.getOrElse("")
-    val section =
-      s"""
-         |$graphServeHeader (${nVecs / 1000}k × $dim-dim vectors, degree-8 graph, 16 queries, LSH-seeded entries)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale graphserve $nVecs"` —
-         |the s25/s26 serving paths with r15's LSH-SEEDED entries: the
-         |query's own hyperplane band buckets start the beam (one
-         |partition-prunable probe of a materialized signature index),
-         |replacing the fixed entry set whose measured recall on 1M
-         |uniform vectors was exactly 0.000. Clustered = the realistic
-         |embedding-corpus regime (recall floor asserted); uniform = the
-         |adversarial no-structure case (logged). Both regimes assert the
-         |batched descent ≡ 16 independent single-query descents, EXACT.
-         |
-         || metric | value |
-         ||---|---|
-         |""".stripMargin + tbl + s"""
-         || peak heap | $heapMb MB |
-         |""".stripMargin + llNote
-    spliceSection(outMd, graphServeHeader, section)
-    val (_, _, buildC, _, edgesC, batchC, singleC, recallC, _, _) = rows.head
-    val (_, _, _, _, _, _, _, recallU, _, llU) = rows(1)
-    val recallLl = llU.map(_._1).getOrElse(-1.0)
-    println(s"""{"metric":"scale_graphserve","value":$batchC,"unit":"sec","n_vecs":$nVecs,"edges":$edgesC,"recall_clustered":$recallC,"recall_uniform":$recallU,"recall_uniform_longlink":$recallLl,"build_sec":$buildC,"single_sec":$singleC,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val imageDedupHeader =
-    "## Image near-dup dedup stage (real PNG codec → aHash → banded Hamming join)"
-
-  /** `runMain graft.Scale imagededup [nImgs] [outMd]` — the m12 pipeline
-    * at corpus scale: nImgs closed-form 8×8 RGB images encoded to REAL
-    * PNGs, decoded back through javax.imageio, aHash'd from the decoded
-    * pixels, and paired by [[graft.operators.Dedup.imageNearDupPairs]]
-    * (4×16-bit bands, exact Hamming ≤ 3 — the COMPLETE regime). Every
-    * 20th image gets a planted near-identical copy (red +16 on every
-    * 4th pixel). The HARD invariant is an in-stage FORMULA TWIN: the
-    * same aHash computed declaratively from the pixel formulas (no
-    * codec anywhere) feeds the same banded join, and the two pair sets
-    * must be EXACTLY equal — one codec-corrupted pixel, one hash-kernel
-    * drift, or one lost bucket flips it. */
-  private def imageDedupMain(args: Array[String]): Unit = {
-    val nImgs = args.lift(1).map(_.toLong).getOrElse(200000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    import graft.operators.{Dedup, Multimodal}
-    val dim = 8
-    val n = lit(dim * dim)
-    // base ids [0, nImgs); copies at id+10M of every 20th base image,
-    // red channel +37 on every 3rd pixel (the m12 construction at the
-    // production 8×8 grid — all 64 hash bits informative)
-    // xxhash-derived channels: iid-uniform pixels give iid ~Bernoulli(½)
-    // hash bits, so 64-bit aHashes are pseudo-random and the ONLY pairs
-    // within Hamming 3 are the planted copies (a linear congruential
-    // formula here produces massively correlated hashes across ids —
-    // measured 866k spurious pairs at 21k images). Copy noise: red +16
-    // on every 4th pixel — ~1–2 expected bit flips, so planted pairs
-    // spread over Hamming 0–3 with a tail legitimately past the cutoff.
-    def pxCol(idc: org.apache.spark.sql.Column, noisy: Boolean) = transform(
-      sequence(lit(0L), lit((dim * dim - 1).toLong)),
-      i => (pmod(xxhash64(lit("r"), idc, i) +
-          (if (noisy) when(pmod(i, lit(4)) === 0, lit(16L)).otherwise(lit(0L))
-           else lit(0L)), lit(256)) * 65536L +
-        pmod(xxhash64(lit("g"), idc, i), lit(256)) * 256L +
-        pmod(xxhash64(lit("b"), idc, i), lit(256))).cast("int"))
-    val dir = Files.createTempDirectory("graft_scale_imgdedup").toString
-    val (_, genSec) = timed {
-      spark.range(nImgs).toDF("id")
-        .select(col("id"), lit(dim).as("w"), lit(dim).as("h"),
-          pxCol(col("id"), noisy = false).as("px"))
-        .unionByName(
-          // two-step select: aliasing id+10M as id in the SAME projection
-          // would capture pxCol's col("id") via Spark 4's lateral column
-          // alias resolution (the m12 gate hit exactly this)
-          spark.range(nImgs).toDF("id").filter(pmod(col("id"), lit(20L)) === 0L)
-            .select(col("id"), lit(dim).as("w"), lit(dim).as("h"),
-              pxCol(col("id"), noisy = true).as("px"))
-            .select((col("id") + 10000000L).as("id"), col("w"), col("h"),
-              col("px")))
-        .write.mode("overwrite").parquet(s"$dir/pixels")
-    }
-    val pixels = spark.read.parquet(s"$dir/pixels")
-    val nTotal = pixels.count()
-    // REAL codec round trip: pixels → PNG bytes → javax.imageio decode →
-    // aHash (materialized — at 100 TB the hash column is the at-rest
-    // asset, images decode once)
-    val (_, hashSec) = timed {
-      Multimodal.decodeImageAHashBatched(
-        Multimodal.encodePngBatched(pixels, "id", "w", "h", "px"),
-        "id", "png")
-        .write.mode("overwrite").parquet(s"$dir/hashed")
-    }
-    val hashed = spark.read.parquet(s"$dir/hashed")
-    val ((pairs, nPairs), pairSec) = timed {
-      val p = Dedup.imageNearDupPairs(hashed, "id", "width", "height",
-        "ahash", maxHamming = 3, bands = 4)
-      (p, p.count())
-    }
-    // FORMULA TWIN: same hash, no codec — declaratively from the pixel
-    // formulas (gray = r+g+b per the closed form; bit_i set when
-    // gray_i·N > Σgray), through the SAME banded join
-    val (twinPairs, twinSec) = timed {
-      def grayCol(idc: org.apache.spark.sql.Column, noisy: Boolean) = transform(
-        sequence(lit(0L), lit((dim * dim - 1).toLong)),
-        i => pmod(xxhash64(lit("r"), idc, i) +
-            (if (noisy) when(pmod(i, lit(4)) === 0, lit(16L)).otherwise(lit(0L))
-             else lit(0L)), lit(256)) +
-          pmod(xxhash64(lit("g"), idc, i), lit(256)) +
-          pmod(xxhash64(lit("b"), idc, i), lit(256)))
-      val pows = typedlit((0 until dim * dim).map(b => 1L << b))
-      def hashOf(g: org.apache.spark.sql.Column) =
-        aggregate(
-          zip_with(g, pows,
-            (x, p) => when(x * n > aggregate(g, lit(0L), _ + _), p)
-              .otherwise(lit(0L))),
-          lit(0L), _ + _)
-      val formulaHashed = spark.range(nImgs).toDF("id")
-        .select(col("id"), lit(dim).as("width"), lit(dim).as("height"),
-          hashOf(grayCol(col("id"), noisy = false)).as("ahash"))
-        .unionByName(
-          // two-step select (lateral-alias capture, as above)
-          spark.range(nImgs).toDF("id").filter(pmod(col("id"), lit(20L)) === 0L)
-            .select(col("id"), lit(dim).as("width"), lit(dim).as("height"),
-              hashOf(grayCol(col("id"), noisy = true)).as("ahash"))
-            .select((col("id") + 10000000L).as("id"), col("width"),
-              col("height"), col("ahash")))
-      Dedup.imageNearDupPairs(formulaHashed, "id", "width", "height",
-        "ahash", maxHamming = 3, bands = 4)
-    }
-    val mismatches = pairs.select("d1", "d2", "hamming")
-      .unionByName(twinPairs.select("d1", "d2", "hamming"))
-      .groupBy("d1", "d2", "hamming").agg(count(lit(1)).as("c"))
-      .filter(col("c") =!= 2).count()
-    require(mismatches == 0L,
-      s"codec-path pairs diverged from the formula twin on $mismatches rows")
-    val planted = pairs.filter(col("d2") === col("d1") + 10000000L).count()
-    val nCopies = nTotal - nImgs
-    pairs.unpersist(blocking = false)
-    twinPairs.unpersist(blocking = false)
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$imageDedupHeader (${nImgs / 1000}k 8×8 images + ${nCopies / 1000}k planted near-identical copies)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale imagededup $nImgs"` —
-         |the m12 pipeline at corpus scale: closed-form RGB pixels → REAL
-         |PNG encode → real javax.imageio decode → mean-threshold aHash →
-         |4×16-bit banded Hamming join, exact ≤ 3 (the COMPLETE regime:
-         |pigeonhole guarantees no candidate is missed). The hard gate is
-         |the codec-free FORMULA TWIN: the same hashes derived
-         |declaratively from the pixel formulas, through the same join —
-         |pair sets must agree EXACTLY, so a single corrupted pixel
-         |anywhere in $nTotal codec round-trips flips the stage.
-         |
-         || metric | value |
-         ||---|---|
-         || pixel corpora generate + write | ${f"$genSec%.1f"} s ($nTotal images) |
-         || PNG encode → decode → aHash (real codec, materialized) | ${f"$hashSec%.1f"} s (${(nTotal / math.max(hashSec, 1e-9)).toLong} imgs/s) |
-         || banded Hamming join (4×16-bit, ≤ 3) | ${f"$pairSec%.1f"} s ($nPairs pairs) |
-         || formula twin (no codec) + equality | ${f"$twinSec%.1f"} s build; EXACT — 0 mismatched (d1, d2, hamming) rows |
-         || planted copies found at ≤ 3 | $planted of $nCopies (the rest legitimately exceed the cutoff — same count in both paths by the equality) |
-         || peak heap | $heapMb MB |
-         |
-         |- the codec pass is the cost: encode+decode dominates and runs
-         |  once, map-side, producing the at-rest (id, w, h, ahash) asset
-         |  the join consumes — at 100 TB the 10-byte hash row is what
-         |  shuffles, never image bytes
-         |""".stripMargin
-    spliceSection(outMd, imageDedupHeader, section)
-    println(s"""{"metric":"scale_imagededup","value":$pairSec,"unit":"sec","n_imgs":$nTotal,"pairs":$nPairs,"planted_found":$planted,"hash_sec":$hashSec,"twin_sec":$twinSec,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val kmeansHeader = "## Exact-integer Lloyd k-means stage"
-
-  /** `runMain graft.Scale kmeans [nVecs] [outMd]` — [[graft.operators
-    * .Similarity.kmeansLloydExact]] at corpus scale: 1M 64-dim vectors
-    * in 16 well-separated planted clusters (vector i belongs to cluster
-    * i % 16, center c has 8.0 at dim 4c, ±0.25 hash noise elsewhere),
-    * ids 0..15 seed one member of each cluster, 3 full-corpus Lloyd
-    * iterations. Correctness is closed-form: seed j sits in planted
-    * cluster j, so after convergence EVERY vector's label must equal
-    * id % 16 — purity asserted exactly, not sampled. The trajectory is
-    * exact integer arithmetic throughout (the operator's contract), so
-    * this is also a determinism stage: any partition layout gives these
-    * labels. */
-  private def kmeansMain(args: Array[String]): Unit = {
-    val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val k = 16
-    val dim = 64
-    val dir = Files.createTempDirectory("graft_scale_kmeans").toString
-    val (_, genSec) = timed {
-      spark.range(nVecs).toDF("id")
-        .withColumn("c", pmod(col("id"), lit(k.toLong)).cast("int"))
-        .withColumn("vec",
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => (when(j === col("c") * 4, lit(8.0d)).otherwise(lit(0.0d)) +
-              (pmod(xxhash64(col("id"), j), lit(1000L)).cast("double") / 1000.0d - 0.5d) * 0.5d)
-              .cast("float")))
-        .select("id", "vec")
-        .write.mode("overwrite").parquet(dir)
-    }
-    val vecs = spark.read.parquet(dir)
-    val ((cents, assigned), fitSec) = timed {
-      graft.operators.Similarity.kmeansLloydExact(vecs, "id", "vec", k, iters = 3)
-    }
-    val (impure, checkSec) = timed {
-      assigned.filter(col("list_id") =!= pmod(col("id"), lit(k.toLong))).count()
-    }
-    require(impure == 0L,
-      s"kmeans purity broke: $impure of $nVecs vectors mislabeled")
-    require(cents.length == k)
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$kmeansHeader (${nVecs / 1000}k × $dim-dim vectors, k=$k, 3 iterations)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale kmeans $nVecs"` —
-         |distributed Lloyd in exact scaled-integer space: per iteration one
-         |scan-side least-struct argmin (zero shuffle) + one map-side-combined
-         |(list, dim) sum (k·dim = ${k * dim} driver rows); the trajectory is a
-         |pure function of the corpus (integer argmins, floor-divided means).
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nVecs vectors) |
-         || 3 Lloyd iterations + final assignment | ${f"$fitSec%.1f"} s (${f"${nVecs * 3 / fitSec}%.0f"} vector-iters/s) |
-         || purity vs planted clusters | EXACT — 0 of $nVecs mislabeled (closed-form check, ${f"$checkSec%.1f"} s) |
-         || peak heap | $heapMb MB |
-         |
-         |- ids 0..15 seed one member of each planted cluster, so label j ≡
-         |  planted cluster j and purity is a closed form, not a sample
-         |- the s21 driver gate replays 2 iterations through an unrolled-CTE
-         |  DuckDB oracle (argmin ties, floor means, empty-cluster holds)
-         |""".stripMargin
-    spliceSection(outMd, kmeansHeader, section)
-    println(s"""{"metric":"scale_kmeans","value":$fitSec,"unit":"sec","n_vecs":$nVecs,"k":$k,"dim":$dim,"impure":$impure,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val ivfTrainHeader =
-    "## IVF coarse-quantizer training stage (exact distributed vs driver-sampled)"
-
-  /** `runMain graft.Scale ivftrain [nVecs] [outMd]` — train a 64-list
-    * IVF coarse quantizer on a 1M-vector SKEWED corpus two ways:
-    * [[graft.operators.Similarity.kmeansCentroidsExact]] (every Lloyd
-    * iteration over the FULL distributed corpus — the new `--trainer
-    * exact` annindex path) and [[graft.operators.Similarity
-    * .kmeansCentroids]] (the 2000-row driver-sample default), then
-    * compare serving recall@10 through [[graft.operators.Similarity
-    * .ivfTopK]] at nProbe=8 against brute-force ground truth. Skew:
-    * cluster c = ⌊64·u²⌋ of a hash-uniform u, so head clusters hold
-    * ~100× the tail's mass and a 2000-row sample sees tail clusters
-    * only a handful of times — the regime where sample training
-    * starves at 100 TB. Queries span the cluster range (one member of
-    * every 4th planted cluster), so tail clusters face the gate too;
-    * when the separable geometry saturates recall for both trainers,
-    * the full-corpus mean cosine QUANTIZATION ERROR (what the trainer
-    * optimizes) is the discriminating measurement. A third arm measures
-    * [[graft.operators.Similarity.kmeansCentroidsRefined]] (`--trainer
-    * refined`): sampled init + ≤2 exact full-corpus passes with the
-    * integer early exit — the affordable way to the exact trainer's
-    * geometry. Asserted: 64 centroids from each trainer; all recalls
-    * ≥ 0.6; exact-trainer quantization error sane; refinement does not
-    * worsen the sampled quantization error. The comparisons themselves
-    * are LOGGED, not asserted — the point is the measurement. */
-  private def ivfTrainMain(args: Array[String]): Unit = {
-    val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    import graft.operators.Similarity
-    val k = 64; val dim = 64; val nProbe = 8; val topK = 10
-    val dir = Files.createTempDirectory("graft_scale_ivftrain").toString
-    val (_, genSec) = timed {
-      spark.range(nVecs).toDF("id")
-        .withColumn("u",
-          pmod(xxhash64(col("id")), lit(100000L)).cast("double") / 100000.0)
-        .withColumn("c",
-          least(lit(63L), floor(col("u") * col("u") * 64).cast("long")))
-        .withColumn("vec",
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => (when(j === col("c").cast("int"), lit(8.0d)).otherwise(lit(0.0d)) +
-              (pmod(xxhash64(col("id"), j), lit(1000L)).cast("double") / 1000.0d - 0.5d) * 0.5d)
-              .cast("float")))
-        .select("id", "c", "vec")
-        .write.mode("overwrite").parquet(dir)
-    }
-    val vecs = spark.read.parquet(dir).persist()
-    val n = vecs.count()
-    // same iteration count both sides — the comparison is full-corpus
-    // vs sampled TRAINING MASS, not iteration budget
-    val (centsEx, exSec) = timed {
-      Similarity.kmeansCentroidsExact(vecs, "id", "vec", k, iters = 5)
-    }
-    val (centsSm, smSec) = timed {
-      Similarity.kmeansCentroids(vecs, "vec", k, iters = 5, seed = 42L,
-        sampleN = 2000)
-    }
-    // the AFFORDABLE exact path (r13 verdict ask): sampled init + ≤2
-    // exact full-corpus refinement passes with the integer early exit —
-    // should recover ~the exact trainer's geometry at a small multiple
-    // of the sampled wall instead of exSec's full-scan budget
-    val refineMoves = scala.collection.mutable.ArrayBuffer[(Int, Long)]()
-    val (centsRf, rfSec) = timed {
-      Similarity.kmeansCentroidsRefined(vecs, "id", "vec", k,
-        sampleIters = 5, refineIters = 2, seed = 42L, sampleN = 2000,
-        onIter = (i, m) => refineMoves += ((i, m)))
-    }
-    require(centsEx.length == k && centsSm.length == k && centsRf.length == k)
-    // centroid-placement audit against the PLANTED centers (8.0 at dim
-    // c): for each planted cluster, the L2 offset of the nearest
-    // trained centroid — sample training places a centroid σ/√(sample
-    // points) off the cluster mean, full-corpus training σ/√(cluster
-    // mass); `covered` counts clusters owning a centroid within 2.0
-    def centroidAudit(cents: Array[Array[Float]]): (Double, Int) = {
-      val offs = (0 until k).map { c =>
-        val center = Array.tabulate(dim)(j => if (j == c) 8.0 else 0.0)
-        cents.map { ct =>
-          math.sqrt(ct.zip(center).map { case (a, b) =>
-            (a - b) * (a - b) }.sum)
-        }.min
-      }
-      val covered = offs.count(_ < 2.0)
-      val meanCovered = {
-        val cov = offs.filter(_ < 2.0)
-        if (cov.isEmpty) Double.NaN else cov.sum / cov.size
-      }
-      (meanCovered, covered)
-    }
-    val (offEx, covEx) = centroidAudit(centsEx)
-    val (offSm, covSm) = centroidAudit(centsSm)
-    val (offRf, covRf) = centroidAudit(centsRf)
-    // one query per 4th planted cluster (min id of the cluster): the
-    // tail clusters a sample under-trains are IN the query set
-    val queries = vecs.filter(pmod(col("c"), lit(4L)) === 3L)
-      .groupBy("c").agg(min("id").as("qid"))
-      .join(vecs.select(col("id").as("qid"), col("vec")), "qid")
-      .select("qid", "vec").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
-    val truth = queries.map { case (qid, q) =>
-      qid -> Similarity.bruteForceTopK(vecs, "id", "vec", q, topK)
-        .collect().map(_.getLong(0)).toSet
-    }.toMap
-    def meanRecall(cents: Array[Array[Float]]): Double = {
-      val sum = queries.map { case (qid, q) =>
-        val got = Similarity.ivfTopK(vecs, "id", "vec", q, topK, cents, nProbe)
-          .collect().map(_.getLong(0)).toSet
-        (got & truth(qid)).size.toDouble / topK
-      }.sum
-      sum / queries.length
-    }
-    val (recEx, recExSec) = timed(meanRecall(centsEx))
-    val (recSm, recSmSec) = timed(meanRecall(centsSm))
-    val (recRf, recRfSec) = timed(meanRecall(centsRf))
-    require(recEx >= 0.6, f"exact-trainer recall broke: $recEx%.3f")
-    require(recSm >= 0.6, f"sampled-trainer recall broke: $recSm%.3f")
-    require(recRf >= 0.6, f"refined-trainer recall broke: $recRf%.3f")
-    // the discriminating metric when both recalls saturate (the planted
-    // clusters are separable): mean cosine quantization error
-    // 1 − max_c cos(v, c) over the FULL corpus — what coarse-quantizer
-    // training actually optimizes; a sample-trained centroid sits
-    // σ/√sample_points off its cluster mean where the exact trainer
-    // sits σ/√cluster_mass
-    def cosQuantErr(cents: Array[Array[Float]]): Double = {
-      import graft.functions.GraftFunctions.vec_cosine
-      val structs = cents.zipWithIndex.map { case (c, i) =>
-        struct(vec_cosine(col("vec"), typedlit(c.toSeq)).as("cos"),
-          lit(i).as("list_id"))
-      }
-      vecs.select((lit(1.0d) - greatest(structs.toIndexedSeq: _*).getField("cos")).as("e"))
-        .agg(avg("e")).head().getDouble(0)
-    }
-    val (qeEx, _) = timed(cosQuantErr(centsEx))
-    val (qeSm, _) = timed(cosQuantErr(centsSm))
-    val (qeRf, _) = timed(cosQuantErr(centsRf))
-    require(qeEx >= 0.0 && qeEx < 0.5, f"exact quantization error insane: $qeEx%.4f")
-    // refinement can only polish the sampled init toward full-corpus
-    // means — the quantization error it optimizes must not regress
-    require(qeRf <= qeSm + 1e-9,
-      f"refined trainer worsened quantization error: $qeRf%.5f > $qeSm%.5f")
-    val heapMb = heapPeakMb()
-    vecs.unpersist(blocking = false)
-    val section =
-      s"""
-         |$ivfTrainHeader (${n / 1000}k × $dim-dim vectors, k=$k lists, skewed ⌊64·u²⌋ clusters)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale ivftrain $nVecs"` —
-         |the annindex `--trainer exact` path (full-corpus distributed integer
-         |Lloyd, [[Similarity.kmeansCentroidsExact]]) next to the 2000-row
-         |driver-sample default, recall@$topK served through ivfTopK at
-         |nProbe=$nProbe vs brute-force truth on ${queries.length} queries
-         |spanning the cluster range (tail clusters included).
-         |
-         || metric | exact trainer | refined (sampled init + ≤2 exact passes) | sampled trainer |
-         ||---|---|---|---|
-         || train wall | ${f"$exSec%.1f"} s (5 full-corpus iterations) | ${f"$rfSec%.1f"} s (${refineMoves.length} exact pass${if (refineMoves.length == 1) "" else "es"}) | ${f"$smSec%.1f"} s (2000-row sample, 5 iterations) |
-         || mean recall@$topK | ${f"$recEx%.3f"} | ${f"$recRf%.3f"} | ${f"$recSm%.3f"} |
-         || mean cosine quantization error (full corpus) | ${f"$qeEx%.5f"} | ${f"$qeRf%.5f"} | ${f"$qeSm%.5f"} |
-         || planted clusters covered (centroid within 2.0) | $covEx / $k | $covRf / $k | $covSm / $k |
-         || mean centroid offset from planted center (covered) | ${f"$offEx%.4f"} | ${f"$offRf%.4f"} | ${f"$offSm%.4f"} |
-         || recall measurement wall | ${f"$recExSec%.1f"} s | ${f"$recRfSec%.1f"} s | ${f"$recSmSec%.1f"} s |
-         |
-         |- peak heap $heapMb MB; corpus generate+write ${f"$genSec%.1f"} s
-         |- the exact trainer moves only k·dim integer centroid rows to the
-         |  driver per iteration; the corpus never leaves the executors —
-         |  at 100 TB the sampled trainer's 2000 rows shape 64 lists from
-         |  ~31 points each, the exact trainer from the full mass
-         |- refined = [[Similarity.kmeansCentroidsRefined]]: driver-sample
-         |  init, then exact full-corpus passes with the integer early exit
-         |  (per-pass max centroid movement²: ${refineMoves.map(_._2).mkString(", ")}) —
-         |  ${f"${rfSec / math.max(smSec, 1e-9)}%.1f"}× the sampled wall vs the pure
-         |  exact trainer's ${f"${exSec / math.max(smSec, 1e-9)}%.1f"}×
-         |- **`--trainer refined` is the RECOMMENDED exact path**: it lands
-         |  the exact trainer's defining property (final centroids are
-         |  full-corpus means in exact integer arithmetic — the offset
-         |  column) at the cost of 1–2 full scans instead of `iters`; use
-         |  the pure exact trainer only when the sampled init itself is
-         |  suspect (adversarially ordered corpora where a 2000-row sample
-         |  misses whole clusters)
-         |""".stripMargin
-    spliceSection(outMd, ivfTrainHeader, section)
-    println(s"""{"metric":"scale_ivftrain","value":$exSec,"unit":"sec","n_vecs":$n,"k":$k,"recall_exact":$recEx,"recall_refined":$recRf,"recall_sampled":$recSm,"qerr_exact":$qeEx,"qerr_refined":$qeRf,"qerr_sampled":$qeSm,"covered_exact":$covEx,"covered_refined":$covRf,"covered_sampled":$covSm,"offset_exact":$offEx,"offset_refined":$offRf,"offset_sampled":$offSm,"train_sec_exact":$exSec,"train_sec_refined":$rfSec,"train_sec_sampled":$smSec,"refine_passes":${refineMoves.length},"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val incrHeader =
-    "## Incremental corpus re-processing stage (the d22 identity at 1M docs)"
-
-  /** `runMain graft.Scale incremental [nDocs] [outMd]` — the d22
-    * versioning identity measured at corpus scale: v1 = 1M docs, v2 =
-    * v1 with 1% changed, 1% removed, 1% added. The previous run's
-    * per-doc verdicts (quality gate → classifier, the funnel's
-    * expensive per-doc half) are materialized as the cached artifact;
-    * the INCREMENTAL re-run then pays one hash-diff scan
-    * ([[graft.operators.Dedup.corpusDiff]], 1 md5/doc) plus the full
-    * per-doc stack on the ~2% added ∪ changed only, while the FULL
-    * re-run pays the per-doc stack (strip + tokenize + quality stats +
-    * 20 classifier md5s per doc) on everything. Asserted: the two
-    * survivor sets are EXACTLY equal (symmetric difference empty — the
-    * d22 identity), and the fresh path processed only the added ∪
-    * changed rows. The walls are the measurement: this is what makes
-    * re-curating a 100 TB corpus after a 1% delta affordable. */
-  private def incrementalMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    import graft.operators.{Dedup, IncrementalCurate}
-    import org.apache.spark.sql.{Column, DataFrame}
-    // 20 8-hex md5 tokens per doc: passes the quality gate (180 chars,
-    // mean token len 8, zero punct), classifier-nontrivial
-    def docText(idc: Column, salt: String): Column =
-      concat_ws(" ", (1 to 20).map(i =>
-        substring(md5(concat(lit(s"$i#"), idc.cast("string"), lit(s"#$salt"))), 1, 8)): _*)
-    val dir = Files.createTempDirectory("graft_scale_incr").toString
-    val (_, genSec) = timed {
-      spark.range(nDocs).toDF("id")
-        .withColumn("text", docText(col("id"), "a"))
-        .write.mode("overwrite").parquet(s"$dir/v1")
-      // v2: drop id%100==2, rewrite id%100==1, append nDocs/100 new ids —
-      // every 2nd appended doc an EXACT COPY of an existing v1 text, so
-      // the near-dup arm below faces real cross-snapshot duplicate pairs
-      // arriving through the ADDED path (and the funnel arm faces n=2
-      // exact-dup groups)
-      spark.range(nDocs).toDF("id")
-        .filter(pmod(col("id"), lit(100L)) =!= 2L)
-        .withColumn("text",
-          when(pmod(col("id"), lit(100L)) === 1L, docText(col("id"), "b"))
-            .otherwise(docText(col("id"), "a")))
-        .unionByName(
-          spark.range(nDocs, nDocs + nDocs / 100).toDF("id")
-            .withColumn("text",
-              when(pmod(col("id"), lit(2L)) === 1L,
-                docText(col("id") - nDocs, "a"))
-                .otherwise(docText(col("id"), "a"))))
-        .write.mode("overwrite").parquet(s"$dir/v2")
-    }
-    val v1 = spark.read.parquet(s"$dir/v1")
-    val v2 = spark.read.parquet(s"$dir/v2")
-    // the funnel's per-doc half and the global reduction are the
-    // PRODUCTION operator ([[IncrementalCurate]], d22's construction,
-    // CLI `corpus incremental`)
-    def perDoc(df: DataFrame): DataFrame =
-      IncrementalCurate.perDocVerdicts(df, "id", "text")
-    def dedupStage(sv: DataFrame): DataFrame =
-      IncrementalCurate.dedupGroups(sv, "id")
-    // the previous run's artifact — on disk, like a real pipeline's
-    val (_, cacheSec) = timed {
-      perDoc(v1).write.mode("overwrite").parquet(s"$dir/v1_done")
-    }
-    val v1Done = spark.read.parquet(s"$dir/v1_done")
-    // FULL re-run over v2
-    val ((fullOut, nFull), fullSec) = timed {
-      val o = dedupStage(perDoc(v2)).persist()
-      (o, o.count())
-    }
-    // INCREMENTAL: hash-diff, carry `same`, per-doc stack on added ∪
-    // changed only, rerun the cheap global reduction
-    val ((incrOut, nIncr, nFresh), incrSec) = timed {
-      val diff = Dedup.corpusDiff(v1, v2, "id", "text").persist()
-      val carried = v1Done.join(
-        diff.filter(col("status") === "same").select("id"), Seq("id"), "left_semi")
-      val freshIn = v2.join(
-        diff.filter(col("status").isin("added", "changed")).select("id"),
-        Seq("id"), "left_semi").persist()
-      val nf = freshIn.count()
-      val o = dedupStage(carried.unionByName(perDoc(freshIn))).persist()
-      val c = o.count()
-      diff.unpersist(blocking = false)
-      freshIn.unpersist(blocking = false)
-      (o, c, nf)
-    }
-    // the identity, asserted exactly
-    val mismatches = fullOut.unionByName(incrOut)
-      .groupBy("h", "keep_id", "n").agg(count(lit(1)).as("c"))
-      .filter(col("c") =!= 2).count()
-    require(mismatches == 0L,
-      s"incremental diverged from full recompute on $mismatches rows")
-    require(nFull == nIncr)
-    val expectedFresh = (nDocs / 100) * 2 // 1% changed + 1% added
-    require(nFresh == expectedFresh,
-      s"fresh path processed $nFresh rows, expected $expectedFresh")
-    incrOut.unpersist(blocking = false)
-
-    // ---- NEAR-DUP ARM (d23): the identity extended to the LSH stage ----
-    // REAL document length: the funnel corpora's 20-token docs make the
-    // codegen signature kernel nearly free, hiding exactly the cost the
-    // incremental carry exists to skip. Inflate to ~400 tokens (the
-    // 20-token block repeated 20×) by
-    // repeating the id-salted token block (no extra md5 work in the
-    // generator; the signature pass still walks every token/shingle,
-    // which is the production cost profile of KB-scale documents)
-    val (_, ndGenSec) = timed {
-      v1.select(col("id"),
-          rtrim(repeat(concat(col("text"), lit(" ")), 20)).as("text"))
-        .write.mode("overwrite").parquet(s"$dir/v1n")
-      v2.select(col("id"),
-          rtrim(repeat(concat(col("text"), lit(" ")), 20)).as("text"))
-        .write.mode("overwrite").parquet(s"$dir/v2n")
-    }
-    val v1n = spark.read.parquet(s"$dir/v1n")
-    val v2n = spark.read.parquet(s"$dir/v2n")
-    // the previous run's cached assets: (id, band, bh) rows + pairs —
-    // and the snapshot diff, materialized ONCE for ALL incremental
-    // stages (the funnel and the near-dup stage consume the same diff
-    // in a real pipeline; its cost is charged here, separately)
-    val (_, bandCacheSec) = timed {
-      Dedup.minhashBandRows(v1n, "id", "text",
-        numHashes = 8, rowsPerBand = 4, shingleWidth = 3)
-        .write.mode("overwrite").parquet(s"$dir/v1_bands")
-    }
-    val v1Bands = spark.read.parquet(s"$dir/v1_bands")
-    Dedup.pairsFromBandRows(v1Bands)
-      .write.mode("overwrite").parquet(s"$dir/v1_pairs")
-    val v1Pairs = spark.read.parquet(s"$dir/v1_pairs")
-    val (_, ndDiffSec) = timed {
-      Dedup.corpusDiff(v1n, v2n, "id", "text")
-        .write.mode("overwrite").parquet(s"$dir/ndiff")
-      // the delta WITH its texts — in production this frame arrives from
-      // ingest (the r20/r21 delta rows), it is never re-extracted from
-      // the at-rest corpus; materializing it here charges that setup
-      // honestly to the shared-assets step
-      spark.read.parquet(s"$dir/ndiff")
-        .filter(col("status").isin("added", "changed"))
-        .join(v2n, Seq("id"), "left").select("id", "text")
-        .write.mode("overwrite").parquet(s"$dir/ndelta")
-    }
-    val ((ndFull, nNdFull), ndFullSec) = timed {
-      val p = Dedup.pairsFromBandRows(
-        Dedup.minhashBandRows(v2n, "id", "text",
-          numHashes = 8, rowsPerBand = 4, shingleWidth = 3)).persist()
-      (p, p.count())
-    }
-    val ((ndBands, ndIncr, nNdIncr), ndIncrSec) = timed {
-      val (nb, p) = IncrementalCurate.incrementalNearDupPairs(
-        v1n, v2n, v1Bands, v1Pairs, "id", "text",
-        numHashes = 8, rowsPerBand = 4, shingleWidth = 3,
-        diffOpt = Some(spark.read.parquet(s"$dir/ndiff")),
-        deltaDocsOpt = Some(spark.read.parquet(s"$dir/ndelta")))
-      (nb, p, p.count())
-    }
-    val ndMismatch = ndFull.unionByName(ndIncr)
-      .groupBy("d1", "d2").agg(count(lit(1)).as("c"))
-      .filter(col("c") =!= 2).count()
-    require(ndMismatch == 0L,
-      s"incremental near-dup diverged from full recompute on $ndMismatch pairs")
-    // closed-form pair census: the ONLY near-dup pairs in v2 are the
-    // planted copies (source m, copy nDocs+m) for odd m whose source
-    // text survived unchanged (m % 100 == 1 was rewritten) — every
-    // other text is a distinct md5 stream
-    val expectedPlanted = spark.range(nDocs, nDocs + nDocs / 100).toDF("id")
-      .filter(pmod(col("id"), lit(2L)) === 1L &&
-        pmod(col("id") - nDocs, lit(100L)) =!= 1L &&
-        pmod(col("id") - nDocs, lit(100L)) =!= 2L)
-      .count()
-    require(nNdFull == expectedPlanted && nNdIncr == expectedPlanted,
-      s"near-dup pair census: full=$nNdFull incr=$nNdIncr expected=$expectedPlanted")
-    ndFull.unpersist(blocking = false)
-    ndIncr.unpersist(blocking = false)
-    ndBands.unpersist(blocking = false)
-
-    // ---- BUCKETED LIVE CACHE ARM (r21): write volume ∝ delta ----
-    // the versioned cache rewrites EVERYTHING every micro-batch; the
-    // bucketed live cache rewrites only delta-touched buckets — measure
-    // actual bytes written over a 20-micro-batch drain of the full delta
-    val nBuckets = 8192
-    val cacheDir = s"$dir/bucketed"
-    val (_, seedSec) = timed {
-      IncrementalCurate.seedBucketedCache(cacheDir, v1Done, "id", nBuckets)
-    }
-    def liveBytes(newerThan: Long): Long = {
-      val root = java.nio.file.Paths.get(s"$cacheDir/live")
-      val s = java.nio.file.Files.walk(root)
-      try s.filter(p => java.nio.file.Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet") &&
-          java.nio.file.Files.getLastModifiedTime(p).toMillis > newerThan)
-        .mapToLong(p => java.nio.file.Files.size(p)).sum()
-      finally s.close()
-    }
-    val cacheBytes = liveBytes(0L)
-    // delta statuses materialized ONCE (each batch application reads the
-    // batch several times; re-deriving the diff per use would re-scan
-    // both corpora)
-    Dedup.corpusDiff(v1, v2, "id", "text")
-      .filter(col("status") =!= "same")
-      .join(v2, Seq("id"), "left")
-      .write.mode("overwrite").parquet(s"$dir/delta")
-    val delta = spark.read.parquet(s"$dir/delta")
-    // apply the FULL delta as one batch (a bulk catch-up — touches most
-    // buckets, recorded honestly), then REPLAY a micro-batch-sized
-    // 500-id slice of the already-applied delta: the replay measures
-    // BOTH claims at once — write volume ∝ touched buckets (≤ batch
-    // ids, a vanishing cache fraction) AND drop-all-then-re-add
-    // idempotence at scale (the cache must be unchanged, asserted
-    // against the full recompute below)
-    val (_, drainSec) = timed {
-      IncrementalCurate.applyDeltaBatchBucketed(cacheDir,
-        delta, "id", "text", nBuckets)
-    }
-    val replayBatch = delta.orderBy(col("id")).limit(500)
-    val replayCut = System.currentTimeMillis()
-    val (_, replaySec) = timed {
-      IncrementalCurate.applyDeltaBatchBucketed(cacheDir,
-        replayBatch, "id", "text", nBuckets)
-    }
-    val replayBytes = liveBytes(replayCut)
-    val ((bOut, nB), bGroupSec) = timed {
-      val o = dedupStage(
-        spark.read.parquet(s"$cacheDir/live").select("id", "h")).persist()
-      (o, o.count())
-    }
-    val bMismatch = fullOut.unionByName(bOut)
-      .groupBy("h", "keep_id", "n").agg(count(lit(1)).as("c"))
-      .filter(col("c") =!= 2).count()
-    require(bMismatch == 0L && nB == nFull,
-      s"bucketed drain + replay diverged from full recompute on $bMismatch rows")
-    bOut.unpersist(blocking = false)
-    fullOut.unpersist(blocking = false)
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$incrHeader (${nDocs / 1000}k docs, 1% changed / 1% removed / 1% added — every 2nd added doc an exact copy of an existing text)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale incremental $nDocs"` —
-         |the d22 identity funnel(v2) ≡ carried(v1) − removed + funnel(added ∪
-         |changed) at corpus scale, with v1's per-doc verdicts as an on-disk
-         |artifact the way a real pipeline would hold them.
-         |
-         || metric | value |
-         ||---|---|
-         || corpora generate + write | ${f"$genSec%.1f"} s |
-         || v1 per-doc funnel (the cached artifact) | ${f"$cacheSec%.1f"} s |
-         || FULL re-run of v2 | ${f"$fullSec%.1f"} s ($nFull survivor groups) |
-         || INCREMENTAL re-run | ${f"$incrSec%.1f"} s (${f"${fullSec / incrSec}%.1f"}× faster; per-doc stack on $nFresh of $nDocs v2 docs) |
-         || identity | EXACT — 0 mismatched (h, keep_id, n) rows |
-         || — near-dup arm (d23), ~400-token docs (gen ${f"$ndGenSec%.1f"} s) | |
-         || v1 band-row cache / shared diff + delta docs | ${f"$bandCacheSec%.1f"} s / ${f"$ndDiffSec%.1f"} s (the cached LSH asset; the diff and the texts-carrying delta are once-per-snapshot-pair assets every incremental stage consumes — in production the delta arrives from ingest) |
-         || FULL LSH re-run of v2 (8 hashes / 2 bands, 3-gram shingles) | ${f"$ndFullSec%.1f"} s ($nNdFull pairs) |
-         || INCREMENTAL near-dup re-run | ${f"$ndIncrSec%.1f"} s (${f"${ndFullSec / ndIncrSec}%.1f"}× faster; signatures for the 2% delta only, pairs rebuilt in delta-touched buckets) |
-         || near-dup identity + census | EXACT — 0 mismatched pairs; pair set == the $nNdFull planted copies (closed form) |
-         || — bucketed live cache arm (r21): seed ($nBuckets buckets) | ${f"$seedSec%.1f"} s (${cacheBytes / 1024 / 1024} MB cache) |
-         || bulk catch-up (full 3% delta, one batch) | ${f"$drainSec%.1f"} s |
-         || 500-id micro-batch REPLAY: bytes written | ${replayBytes / 1024} KB in ${f"$replaySec%.1f"} s — vs ${cacheBytes / 1024} KB (the versioned cache's per-batch full rewrite): ${f"${cacheBytes / math.max(replayBytes.toDouble, 1.0)}%.1f"}× less, ∝ touched buckets not cache size |
-         || replay idempotence + identity | EXACT — cache unchanged by the replayed slice; 0 mismatched (h, keep_id, n) rows vs full recompute ($nB groups, grouped in ${f"$bGroupSec%.1f"} s) |
-         || peak heap | $heapMb MB |
-         |
-         |- the incremental bound is the hash-diff (1 md5/doc over both
-         |  snapshots) — the per-doc stack (strip + tokenize + quality stats +
-         |  20 classifier md5s) runs on the 2% delta only; at 100 TB the same
-         |  split holds with stored hashes making the diff a metadata join
-         |- the near-dup arm carries the SAME bound to the LSH stage: band
-         |  rows are pure per-row functions of (id, text), so 98% of the
-         |  shingle+MinHash work is a cache read, and the pair join runs
-         |  only over buckets containing a delta row
-         |- per-micro-batch write volume is ∝ touched buckets (≤ batch ids),
-         |  not cache size: at 10^11 docs the bucket count scales with the
-         |  corpus and the ratio improves proportionally — a fixed-size
-         |  micro-batch rewrites a vanishing fraction of the cache
-         |""".stripMargin
-    spliceSection(outMd, incrHeader, section)
-    println(s"""{"metric":"scale_incremental","value":$incrSec,"unit":"sec","n_docs":$nDocs,"full_sec":$fullSec,"incr_sec":$incrSec,"speedup":${fullSec / incrSec},"fresh_rows":$nFresh,"neardup_full_sec":$ndFullSec,"neardup_incr_sec":$ndIncrSec,"neardup_pairs":$nNdFull,"replay_written_kb":${replayBytes / 1024},"cache_kb":${cacheBytes / 1024},"bucketed_vs_versioned":${cacheBytes / math.max(replayBytes.toDouble, 1.0)},"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val ccHeader = "## Connected-components pointer-jumping stage"
-
-  /** `runMain graft.Scale cc [nNodes] [outMd]` — [[graft.operators.Graph
-    * .connectedComponents]] on the topology that DEFEATS plain
-    * min-propagation: one chain of `nNodes` nodes (diameter n−1 — g7's
-    * per-round neighbor flood would need a million shuffles) plus
-    * `nNodes/100` disjoint 10-cliques as a multi-component control.
-    * Pointer jumping must converge inside the default 50-round bound
-    * (reach doubles per round: ~2·log₂(n)+2) and every label is a
-    * closed form: chain nodes → 0, clique k → its min id. The operator
-    * REFUSES unconverged output, so finishing at all is the round-count
-    * claim — no separate counter needed. */
-  private def ccMain(args: Array[String]): Unit = {
-    val nNodes = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val nCliques = nNodes / 100
-    // chain 0..n-1; cliques live at ids n + 10k .. n + 10k + 9
-    val chain = spark.range(nNodes - 1)
-      .select(col("id").as("src"), (col("id") + 1).as("dst"))
-    val cliques = spark.range(nCliques).select(col("id").as("k"))
-      .withColumn("i", explode(sequence(lit(0L), lit(9L))))
-      .withColumn("j", explode(sequence(lit(0L), lit(9L))))
-      .filter(col("i") < col("j"))
-      .select((lit(nNodes) + col("k") * 10 + col("i")).as("src"),
-        (lit(nNodes) + col("k") * 10 + col("j")).as("dst"))
-    val edges = chain.unionAll(cliques)
-    val ((chainOk, cliqueOk, nLabeled), ccSec) = timed {
-      val labs = graft.operators.Graph
-        .connectedComponents(edges, "src", "dst")
-      val off = col("node") - nNodes
-      val bad = labs.filter(
-        when(col("node") < nNodes, col("label") =!= 0L)
-          .otherwise(col("label") =!= (lit(nNodes) + off - pmod(off, lit(10L)))))
-        .count()
-      val total = labs.count()
-      labs.unpersist()
-      (bad == 0L, bad == 0L, total)
-    }
-    require(chainOk && cliqueOk && nLabeled == nNodes + nCliques * 10,
-      s"cc invariant broke: labeled $nLabeled, expected ${nNodes + nCliques * 10}")
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$ccHeader (${nNodes / 1000}k-node chain + ${nCliques / 1000}k 10-cliques)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale cc $nNodes"` —
-         |run-to-convergence components on the worst case for plain
-         |min-propagation: a single chain of diameter ${nNodes - 1} (a
-         |per-round neighbor flood would need $nNodes shuffles) plus
-         |${nCliques / 1000}k disjoint cliques as the multi-component control.
-         |
-         || metric | value |
-         ||---|---|
-         || converge + verify wall | ${f"$ccSec%.1f"} s (${f"${(nNodes + nCliques * 10) / ccSec}%.0f"} nodes/s) |
-         || labels | every chain node → 0, every clique → its min id, EXACT (closed form) |
-         || rounds | ≤ 50 by construction — the operator throws on non-convergence, so finishing IS the ~2·log₂(n) claim |
-         || peak heap | $heapMb MB |
-         |
-         |- per round: edge⋈label join + |V|-row label⋈label pointer jump +
-         |  map-side-combined MIN; superseded label frames are released
-         |  (the pageRank checkpoint discipline)
-         |""".stripMargin
-    spliceSection(outMd, ccHeader, section)
-    println(s"""{"metric":"scale_cc","value":$ccSec,"unit":"sec","n_nodes":${nNodes + nCliques * 10},"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val ppjoinHeader = "## Prefix-filter exact Jaccard join stage"
-
-  /** `runMain graft.Scale ppjoin [nDocs] [outMd]` — [[graft.operators
-    * .Dedup.prefixFilterJaccardPairs]] at corpus scale in its INTENDED
-    * regime (large vocabulary — real text is Zipf with a huge tail, so
-    * each doc's rarest-first prefix indexes near-unique tokens): 1M
-    * docs × 50 tokens from a 50M-token vocabulary, every 20th doc a
-    * planted near-dup of its successor (token-set J = |S|/(|S|+1) ≈
-    * 0.98). At τ = 9/10 the EXACT join must return precisely the
-    * planted pairs — a chance pair would need 48-of-50 shared hash
-    * tokens (p ≈ (1e-6)⁴⁸, zero) — so the count is a closed form, and
-    * completeness + precision are both asserted, not sampled. The
-    * small-vocab hazard (common tokens piling candidates quadratically)
-    * is documented on the operator; this stage records the regime the
-    * algorithm is designed for. */
-  private def ppjoinMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_ppjoin").toString
-    val (_, genSec) = timed {
-      genDedupCorpus(spark, nDocs, tokensPerDoc = 50, vocabSize = 50000000)
-        .write.mode("overwrite").parquet(s"$dir/docs")
-    }
-    val docs = spark.read.parquet(s"$dir/docs")
-    val (got, joinSec) = timed {
-      graft.operators.Dedup
-        .prefixFilterJaccardPairs(docs, "doc_id", "text", 9L, 10L)
-        .count()
-    }
-    // planted pairs = docs with i%20==0 that HAVE a successor (i ≤ n−2):
-    // floor((n−2)/20)+1 — plain n/20 under-counts when n%20 ∈ 2..19
-    val expected = if (nDocs < 2) 0L else (nDocs - 2) / 20 + 1
-    require(got == expected,
-      s"ppjoin invariant broke: got $got pairs, planted $expected")
-    // the WEIGHTED twin (d20) on the same corpus: planted pairs share
-    // 50 of ~51 tokens, cos ≈ 0.995 ≥ 9/10; chance pairs ≈ 0 — the
-    // exact weighted join must land on the identical closed form
-    val (gotW, wcosSec) = timed {
-      graft.operators.Dedup
-        .weightedCosinePairs(docs, "doc_id", "text", 9L, 10L)
-        .count()
-    }
-    require(gotW == expected,
-      s"weighted-cosine invariant broke: got $gotW pairs, planted $expected")
-    // ---- hostile phase: planted frequent token ----------------------
-    // nHot SHORT docs all sharing one token: at tau=1/2 the whole doc is
-    // the prefix, so "hot" lands in every prefix and the clean join
-    // piles C(nHot,2) candidates into ONE task. The work is inherent
-    // (every candidate is length-checked by exactness), but the salt
-    // grid spreads it over ceil(cnt/4096)^2 cells. Both paths must
-    // return exactly the planted duplicate pairs.
-    val nHot = args.lift(3).map(_.toLong).getOrElse(10000L)
-    val nDup = 500L
-    val hotCorpus = spark.range(nHot).toDF("doc_id")
-      .withColumn("text", concat(lit("hot u"), col("doc_id")))
-      .unionByName(
-        spark.range(nDup * 2).toDF("doc_id")
-          .withColumn("text",
-            concat(lit("da"), floor(col("doc_id") / 2).cast("long"),
-              lit(" db"), floor(col("doc_id") / 2).cast("long"),
-              lit(" dc"), floor(col("doc_id") / 2).cast("long")))
-          .withColumn("doc_id", col("doc_id") + 1000000000L))
-    hotCorpus.write.mode("overwrite").parquet(s"$dir/hot")
-    val hotDocs = spark.read.parquet(s"$dir/hot")
-    // the candidate GENERATION stage in isolation — the one thing the
-    // grid changes; the downstream distinct+verify key on the pair and
-    // parallelize identically either way. (cands, maxTask, wall) per path.
-    def candStage(ceiling: Int): (Long, Long, Double) = {
-      val (cand, toksF, temps) = graft.operators.Dedup
-        .prefixCandidates(hotDocs, "doc_id", "text", 1L, 2L, ceiling)
-      val t0 = System.nanoTime()
-      val row = cand.groupBy(spark_partition_id().as("__pid"))
-        .agg(count(lit(1)).as("__n"))
-        .agg(sum("__n").as("total"), max("__n").as("mx")).head()
-      val sec = (System.nanoTime() - t0) / 1e9
-      (toksF +: temps).foreach(_.unpersist(blocking = false))
-      (row.getLong(0), row.getLong(1), sec)
-    }
-    val (candGrid, maxTaskGrid, gridSec) = candStage(4096)
-    val (candClean, maxTaskClean, cleanSec) = candStage(Int.MaxValue)
-    require(candGrid == candClean,
-      s"grid changed candidate volume: $candGrid vs $candClean")
-    require(maxTaskGrid * 4 < maxTaskClean,
-      s"grid did not bound the max task: $maxTaskGrid vs clean $maxTaskClean")
-    // full pipeline with the default guard: exactly the planted pairs
-    val (gotGrid, fullSec) = timed {
-      graft.operators.Dedup
-        .prefixFilterJaccardPairs(hotDocs, "doc_id", "text", 1L, 2L)
-        .count()
-    }
-    require(gotGrid == nDup,
-      s"hot-token phase broke: got $gotGrid, planted $nDup")
-    val gridF = (nHot + 4095) / 4096
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$ppjoinHeader (${nDocs / 1000}k docs, 50M-token vocabulary, planted J≈0.98 pairs)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale ppjoin $nDocs"` —
-         |the EXACT set-similarity self-join (All-Pairs/PPJoin family) in
-         |its intended large-vocabulary regime: rarest-first prefixes index
-         |near-unique tokens, so candidates collapse to ~output size.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nDocs docs) |
-         || prefix-filter join wall (τ=9/10) | ${f"$joinSec%.1f"} s (${f"${nDocs / joinSec}%.0f"} docs/s) |
-         || pairs | $got = planted $expected EXACT (completeness AND precision) |
-         || weighted-cosine twin (d20, τ=9/10) | ${f"$wcosSec%.1f"} s — $gotW = planted $expected EXACT |
-         || hostile candidate stage: guard OFF | ${f"$cleanSec%.1f"} s, max task ${maxTaskClean / 1000000}M of ${candClean / 1000000}M rows (the pile-up) |
-         || hostile candidate stage: grid (f=$gridF) | ${f"$gridSec%.1f"} s, max task ${maxTaskGrid / 1000000}M rows (${f"${maxTaskClean.toDouble / maxTaskGrid}%.0f"}× smaller) |
-         || hostile full pipeline (guarded) | ${f"$fullSec%.1f"} s — $gotGrid = planted $nDup pairs EXACT |
-         || peak heap | $heapMb MB |
-         |
-         |- no float decides membership: integer prefix lengths, the
-         |  multiplied-through inter·10 ≥ uni·9 verdict
-         |- hostile phase: $nHot 2-token docs sharing ONE token at τ=1/2
-         |  (whole doc = prefix) piles C($nHot,2) candidates into ONE join
-         |  task; the salt grid spreads them over f²=${gridF * gridF} cells —
-         |  identical candidate volume (asserted), ~f² smaller max task
-         |  (asserted ≥4×). The candidate VOLUME is inherent to exactness
-         |  here (same-length docs pass every length filter), so the
-         |  downstream distinct+verify dominate the full-pipeline wall
-         |  either way — what the grid buys at cluster scale is the
-         |  bounded task (straggler/retry/2 GB-partition unit), which is
-         |  what is measured. Detection is two-tier (df aggregate, then
-         |  exact prefix counts): the clean corpus above never pays it
-         |""".stripMargin
-    spliceSection(outMd, ppjoinHeader, section)
-    println(s"""{"metric":"scale_ppjoin","value":$joinSec,"unit":"sec","n_docs":$nDocs,"pairs":$got,"hot_max_task_clean":$maxTaskClean,"hot_max_task_grid":$maxTaskGrid,"hot_cand_sec_clean":$cleanSec,"hot_cand_sec_grid":$gridSec,"wcos_sec":$wcosSec,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val intervalSkewHeader = "## Interval-join hot-bucket (skew grid) stage"
-
-  /** `runMain graft.Scale intervalskew [nHot] [nHotIv] [outMd]` — the
-    * IntervalJoin salt-grid guard against PLANTED VALUE SKEW: `nHot`
-    * points all at ONE value (the zero/epoch pile-up) under `nHotIv`
-    * intervals that contain it, plus a uniform tail with a closed-form
-    * match count. Unguarded, the hot bucket's nHot·nHotIv pairs emit in
-    * ONE task; the guard cuts each side into ceiling-sized salt cells.
-    * The stage A/Bs guarded vs forced-clean (ceiling = MaxValue defeats
-    * the probe) on the SAME input and requires the exact closed-form
-    * pair count from both — the grid must redistribute, never change,
-    * the result. */
-  private def intervalSkewMain(args: Array[String]): Unit = {
-    val nHot = args.lift(1).map(_.toLong).getOrElse(4000000L)
-    val nHotIv = args.lift(2).map(_.toInt).getOrElse(512)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the guard targets the SHUFFLE-join regime (at 100 TB neither side
-      // broadcasts); at stage scale the interval side would slip under the
-      // 10 MB broadcast threshold and dodge co-location entirely, so force
-      // the plan shape the guard exists for
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_ivskew").toString
-    val nTail = 200000L
-    val nTailIv = 5000L
-    // hot points at exactly 42.0; tail points at 1000 + i + 0.5 (disjoint)
-    spark.range(nHot).select(lit(42.0).as("p"))
-      .unionAll(spark.range(nTail).select((col("id") + lit(1000.5)).as("p")))
-      .write.mode("overwrite").parquet(s"$dir/points")
-    // hot intervals all contain 42.0; tail intervals [1000+j*8, 1000+j*8+3]
-    // each contain exactly 3 tail points (j*8+0.5, +1.5, +2.5)
-    spark.range(nHotIv).select(lit(40.0).as("lo"), lit(44.0).as("hi"))
-      .unionAll(spark.range(nTailIv).select(
-        (col("id") * 8 + 1000.0).as("lo"), (col("id") * 8 + 1003.0).as("hi")))
-      .write.mode("overwrite").parquet(s"$dir/intervals")
-    val points = spark.read.parquet(s"$dir/points")
-    val intervals = spark.read.parquet(s"$dir/intervals")
-    val expected = nHot * nHotIv + 3L * nTailIv
-    val (guardedPairs, guardedSec) = timed {
-      graft.operators.IntervalJoin
-        .pointInInterval(points, "p", intervals, "lo", "hi", bucketWidth = 4.0)
-        .count()
-    }
-    require(guardedPairs == expected,
-      s"guarded pair count: got $guardedPairs, closed form says $expected")
-    val (cleanPairs, cleanSec) = timed {
-      graft.operators.IntervalJoin
-        .pointInInterval(points, "p", intervals, "lo", "hi",
-          bucketWidth = 4.0, bucketCeiling = Int.MaxValue)
-        .count()
-    }
-    require(cleanPairs == expected,
-      s"clean pair count: got $cleanPairs, closed form says $expected")
-    val cells = math.ceil(nHot.toDouble / graft.operators.IntervalJoin.DefaultBucketCeiling).toLong
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$intervalSkewHeader (${nHot / 1000}k points planted at ONE value, $nHotIv covering intervals)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale intervalskew $nHot $nHotIv"` —
-         |`IntervalJoin.pointInInterval` where one bucket holds ${nHot / 1000}k identical
-         |points under $nHotIv intervals (${nHot * nHotIv / 1000000}M pairs through one
-         |bucket) plus a ${nTail / 1000}k-point uniform tail with a closed-form count.
-         |Both paths must return EXACTLY ${expected} pairs.
-         |
-         || metric | value |
-         ||---|---|
-         || guarded (salt grid, ceiling ${graft.operators.IntervalJoin.DefaultBucketCeiling}) | ${f"$guardedSec%.1f"} s — hot side cut into $cells cells, per-task input bounded |
-         || forced-clean (probe defeated) | ${f"$cleanSec%.1f"} s — all ${nHot * nHotIv / 1000000}M hot pairs in ONE task |
-         || pair count (both paths) | $guardedPairs = closed form ✓ |
-         || peak heap | $heapMb MB |
-         |
-         |- the probe fires on a seeded 2% sample (no exact count on the
-         |  clean path); the sizing agg + broadcast hot list are paid only
-         |  when the grid engages
-         |- exactly-once survives the grid: a pair meets at (own salt, own
-         |  salt) — the equality of both counts to the closed form is the
-         |  checked claim, not just plausibility
-         |- salt determinism: a content hash would collapse these ${nHot / 1000}k
-         |  IDENTICAL points into one cell (measured 26.8 s — slower than no
-         |  guard); the grid spreads with monotonically_increasing_id and
-         |  PINS the salted hot subset via eager localCheckpoint, so task
-         |  retries replay materialized salts or fail loudly — silent
-         |  dup/drop (the SPARK-23207 class) is structurally off the table
-         |""".stripMargin
-    spliceSection(outMd, intervalSkewHeader, section)
-    println(s"""{"metric":"scale_intervalskew","value":$guardedSec,"unit":"sec","clean_sec":$cleanSec,"pairs":$guardedPairs,"n_hot":$nHot,"heap_peak_mb":$heapMb}""")
-  }
-
-  private def rangeLookupMain(args: Array[String]): Unit = {
-    val nRows = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_scale_rangelookup").toString
-    // deterministic skewed doubles in [0, ~1e6): golden-ratio hash of the id
-    spark.range(nRows)
-      .select(col("id"),
-        (pmod(col("id") * 2654435761L, lit(1000000000L)) / lit(1000.0)).as("v"))
-      .write.mode("overwrite").parquet(s"$dir/facts")
-    val facts = spark.read.parquet(s"$dir/facts")
-    val nIntervals = 256
-    // quadratic (non-uniform) boundaries covering the value domain
-    val bounds = Array.tabulate(nIntervals)(i => 15.3 * (i.toLong * i))
-    val dim = bounds.zipWithIndex.map { case (lo, i) =>
-      (i, lo, if (i == nIntervals - 1) Double.MaxValue else bounds(i + 1))
-    }.toSeq.toDF("tier", "lo", "hi")
-    def medianPair(a: => Unit, b: => Unit): (Double, Double) = {
-      a; b
-      def once(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val runs = (1 to 3).map(_ => (once(a), once(b)))
-      (runs.map(_._1).sorted.apply(1), runs.map(_._2).sorted.apply(1))
-    }
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def exprVariant = facts
-      .select(graft.functions.GraftFunctions.range_bucket(col("v"), bounds).as("tier"))
-      .groupBy("tier").agg(count(lit(1)).as("n"))
-    def joinVariant = facts
-      .join(broadcast(dim), col("v") >= col("lo") && col("v") < col("hi"))
-      .groupBy("tier").agg(count(lit(1)).as("n"))
-    // identical answers first (one full evaluation each)
-    val exprCounts = exprVariant.orderBy("tier").collect().map(r => (r.getInt(0), r.getLong(1)))
-    val joinCounts = joinVariant.orderBy("tier").collect().map(r => (r.getInt(0), r.getLong(1)))
-    require(exprCounts.sameElements(joinCounts),
-      s"tier counts diverge: ${exprCounts.take(3).toSeq} vs ${joinCounts.take(3).toSeq}")
-    val joinPlan = joinVariant.queryExecution.executedPlan.toString
-    val usesBnlj = joinPlan.contains("BroadcastNestedLoopJoin")
-    val (exprSec, joinSec) = medianPair(force(exprVariant), force(joinVariant))
-    val section =
-      s"""$rangeLookupHeader (codegen binary-search expression vs BETWEEN-join, ${nRows / 1000000}M rows × $nIntervals intervals)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale rangelookup $nRows"` —
-         |the j11 broadcast-dim archetype (IP→geo / value→tier / slot→fork):
-         |bucket every fact row into one of $nIntervals non-uniform (quadratic)
-         |intervals, then count per tier. Identical per-tier counts asserted
-         |across both variants before timing; median of 3 interleaved runs.
-         |
-         || variant | plan shape | wall (s) |
-         ||---|---|---|
-         || `range_bucket` expression (j11 path) | scan → agg, NO join, binary search in WholeStageCodegen | ${f"$exprSec%.1f"} |
-         || `v BETWEEN lo AND hi` broadcast join | ${if (usesBnlj) "BroadcastNestedLoopJoin" else "non-equi join"} — O(rows × intervals) compares | ${f"$joinSec%.1f"} |
-         |
-         |- ${f"${joinSec / exprSec}%.1f"}× — and the gap GROWS with interval
-         |  count: the join pays O(intervals) per row (every row walks the
-         |  broadcast list until its interval matches), the expression
-         |  O(log intervals); at 100 TB the join variant also materializes a
-         |  join node that blocks WholeStageCodegen fusion with downstream
-         |  operators, while `range_bucket` keeps the whole stage fused
-         |- the dim side must be STATIC (plan-bound constant) for the
-         |  expression path — mutable/large dims stay on the j9 bucketed
-         |  interval-join path, which this stage does not replace
-         |""".stripMargin
-    spliceSection(outMd, rangeLookupHeader, section)
-    println(s"""{"metric":"rangelookup","rows":$nRows,"expr_sec":$exprSec,"join_sec":$joinSec,"speedup":${joinSec / exprSec}}""")
-    spark.stop()
-  }
-
-  private val fuzzyHeader = "## Fuzzy-join corpus stage"
-
-  /** `runMain graft.Scale fuzzy [nWords]` — [[graft.operators.FuzzyJoin]]
-    * at vocabulary scale: 1M distinct words (8-hex md5 prefixes) with an
-    * ED-1 twin planted for every 20th word ('z' substituted into the
-    * first position — 'z' is outside the hex alphabet, so a twin can
-    * only ED-1-match its own base and other twins). The brute quadratic
-    * this rewrite replaces would be 5×10¹¹ levenshtein evaluations at
-    * this size; the signature join is linear in words × (len+1).
-    * Completeness is asserted, not assumed: every planted pair must
-    * appear in the output (anti-join = 0). */
-  private def fuzzyMain(args: Array[String]): Unit = {
-    val nWords = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = expr("substr(md5(cast(id as string)), 1, 8)")
-    val twinOfPrev = concat(lit("z"),
-      expr("substr(md5(cast(id - 1 as string)), 2, 7)"))
-    val words = spark.range(nWords)
-      .select(when(pmod(col("id"), lit(20)) === 1, twinOfPrev)
-        .otherwise(base).as("w"))
-      .distinct()
-    val (pairs, wallSec) = {
-      val t0 = System.nanoTime()
-      val out = graft.operators.FuzzyJoin.editDistance1Pairs(words, "w").persist()
-      val n = out.count()
-      (out, (System.nanoTime() - t0) / 1e9)
-    }
-    val found = pairs.count()
-    // planted pairs: (base(id-1), twin) for id % 20 == 1, ordered w1 < w2
-    // ('z' > every hex char, so the twin is always w2)
-    val planted = spark.range(nWords).filter(pmod(col("id"), lit(20)) === 1)
-      .select(expr("substr(md5(cast(id - 1 as string)), 1, 8)").as("w1"),
-        twinOfPrev.as("w2"))
-    val nPlanted = planted.count()
-    val missing = planted.join(pairs, Seq("w1", "w2"), "left_anti").count()
-    require(missing == 0L, s"$missing of $nPlanted planted ED-1 pairs missed")
-    pairs.unpersist(blocking = false)
-    val heapMb = heapPeakMb()
-    val section =
-      s"""$fuzzyHeader (ED≤1 deletion-neighborhood self-join over ${nWords / 1000}k words)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale fuzzy $nWords"` —
-         |8-hex-char vocabulary with an ED-1 twin planted on every 20th
-         |word; signature equi-join + codegen levenshtein verify
-         |(the t37 operator). Completeness asserted: planted ⊆ found.
-         |
-         || metric | value |
-         ||---|---|
-         || words | $nWords (distinct) |
-         || wall (build + join + verify + count) | ${f"$wallSec%.1f"} s (${f"${nWords / wallSec}%.0f"} words/s) |
-         || planted ED-1 pairs | $nPlanted — ALL found (anti-join = 0) |
-         || pairs found total | $found |
-         || brute-force equivalent | ~${nWords * nWords / 2 / 1000000000L}×10⁹ levenshtein evals — the plan this rewrite deletes |
-         || peak heap | $heapMb MB |
-         |
-         |- per-signature fan-out is alphabet-bounded (a signature only
-         |  matches the ~\\|Σ\\|·(L+1) words within one edit), so the join has
-         |  no hot-bucket hazard and needs no chain guard — unlike MinHash
-         |  band buckets, bucket size cannot scale with corpus size
-         |- the extra pairs beyond the planted set are REAL: 8-hex md5
-         |  prefixes of a 1M vocabulary collide to within one edit by
-         |  birthday statistics, and the exact levenshtein verify admits
-         |  exactly those
-         |""".stripMargin
-    spliceSection(outMd, fuzzyHeader, section)
-    println(s"""{"metric":"scale_fuzzy","words":$nWords,"wall_sec":$wallSec,"planted":$nPlanted,"found":$found,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val mllibHeader = "## Stock-MLlib head-to-head stage"
-
-  /** `runMain graft.Scale mllib [nDocs]` — the same near-dup pair
-    * detection task run by OUR pipeline (single-pass MinHash kernel →
-    * banded LSH candidates → exact-Jaccard verify) and by stock Spark
-    * MLlib (HashingTF → MinHashLSH.approxSimilarityJoin), identical hash
-    * budget (8 hashes), planted-pair recall as the shared correctness
-    * metric. The point is not to dunk on MLlib — it is the
-    * matches-or-beats evidence the library claims against the obvious
-    * in-ecosystem alternative. */
-  private def mllibMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(200000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_mllib").toString
-    genDedupCorpus(spark, nDocs).write.mode("overwrite").parquet(s"$dir/docs")
-    val docs = spark.read.parquet(s"$dir/docs")
-    val planted = nDocs / 20
-    def plantedRecall(pairs: org.apache.spark.sql.DataFrame,
-        aCol: String, bCol: String): Long =
-      pairs.filter(
-        (col(aCol) % 20 === 0 && col(bCol) === col(aCol) + 1) ||
-          (col(bCol) % 20 === 0 && col(aCol) === col(bCol) + 1)).count()
-
-    // ours: LSH candidates -> exact-Jaccard verify (threshold 0.8)
-    val ((ourPairs, ourFound), ourSec) = timed {
-      val cands = graft.operators.Dedup.minhashCandidatePairs(
-        docs, "doc_id", "text", numHashes = 8, rowsPerBand = 4, shingleWidth = 3)
-      val verified = graft.operators.Dedup
-        .jaccardForPairs(cands, docs, "doc_id", "text", 3)
-        .filter(col("jaccard") >= 0.8).persist()
-      val n = verified.count()
-      val found = plantedRecall(verified, "d1", "d2")
-      cands.unpersist(blocking = false)
-      verified.unpersist(blocking = false)
-      (n, found)
-    }
-
-    // stock MLlib: HashingTF (binary) -> MinHashLSH(8) -> approxSimilarityJoin
-    val ((mlPairs, mlFound), mlSec) = timed {
-      import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, Tokenizer}
-      val toks = new Tokenizer().setInputCol("text").setOutputCol("words")
-        .transform(docs)
-      val tf = new HashingTF().setInputCol("words").setOutputCol("features")
-        .setBinary(true).setNumFeatures(1 << 18)
-        .transform(toks)
-      val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-        .setNumHashTables(8).setSeed(42L)
-      val model = mh.fit(tf)
-      // jaccard DISTANCE <= 0.2 == similarity >= 0.8 (token-set jaccard
-      // on the hashed binary vectors — MLlib's exact-distance refine)
-      val joined = model.approxSimilarityJoin(tf, tf, 0.2, "dist")
-        .select(
-          col("datasetA.doc_id").as("d1"), col("datasetB.doc_id").as("d2"))
-        .filter(col("d1") < col("d2"))
-        .persist()
-      val n = joined.count()
-      val found = plantedRecall(joined, "d1", "d2")
-      joined.unpersist(blocking = false)
-      (n, found)
-    }
-    // --- ANN serving head-to-head: 20 queries over a 200k-vector corpus —
-    // our manifest-backed batched IVF-SQ8 probe vs MLlib's per-query
-    // BucketedRandomProjectionLSH.approxNearestNeighbors (euclidean ≈
-    // cosine ranking on unit-normalized vectors). Recall measured against
-    // the brute-force cosine top-10.
-    val nVecs = nDocs
-    val emb = genClusteredEmbCorpus(spark, nVecs, nClusters0 = 64)
-      .withColumn("embedding",
-        transform(col("embedding"), x =>
-          (x / sqrt(aggregate(col("embedding"), lit(0.0d),
-            (a, b) => a + b.cast("double") * b.cast("double")))).cast("float")))
-      .persist()
-    emb.count()
-    val queries = (0L until 20L).map { qid =>
-      (qid, emb.filter(col("vec_id") === qid)
-        .select("embedding").head().getSeq[Float](0).toArray)
-    }
-    val brute = queries.map { case (qid, q) =>
-      qid -> graft.operators.Similarity.bruteForceTopK(
-        emb.filter(col("vec_id") =!= qid), "vec_id", "embedding", q.toSeq, 10)
-        .collect().map(_.getLong(0)).toSet
-    }.toMap
-    val (cents, ourBuildSec) = timed {
-      val c = graft.operators.Similarity.kmeansCentroids(
-        emb, "embedding", k = 64, iters = 5, seed = 42L, sampleN = 4000)
-      graft.operators.Similarity.writeIvfIndex(
-        emb, "embedding", c, s"$dir/idx", withSq8Codes = true)
-      c
-    }
-    val (annOur, ourAnnSec) = timed {
-      graft.operators.Similarity.ivfSq8TopKJoinIndexed(
-        spark, s"$dir/idx", "vec_id", "embedding",
-        queries, k = 10, cents, nProbe = 8, excludeSelf = true)
-        .collect().groupBy(_.getLong(0))
-        .map { case (qid, rows) => qid -> rows.map(_.getLong(1)).toSet }
-    }
-    val ourAnnRecall = queries.map { case (qid, _) =>
-      annOur.getOrElse(qid, Set.empty[Long]).intersect(brute(qid)).size }.sum / 200.0
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.linalg.Vectors
-    val toVec = udf((xs: Seq[Float]) =>
-      Vectors.dense(xs.map(_.toDouble).toArray))
-    val vecDf = emb.select(col("vec_id"), toVec(col("embedding")).as("features"))
-      .persist()
-    val (model, mlBuildSec) = timed {
-      vecDf.count()
-      new BucketedRandomProjectionLSH()
-        .setInputCol("features").setOutputCol("hashes")
-        .setBucketLength(0.5).setNumHashTables(8).setSeed(42L)
-        .fit(vecDf)
-    }
-    val (annMl, mlAnnSec) = timed {
-      queries.map { case (qid, q) =>
-        qid -> model.approxNearestNeighbors(
-          vecDf.filter(col("vec_id") =!= qid),
-          Vectors.dense(q.map(_.toDouble)), 10)
-          .select("vec_id").collect().map(_.getLong(0)).toSet
-      }.toMap
-    }
-    vecDf.unpersist(blocking = false)
-    val mlAnnRecall = queries.map { case (qid, _) =>
-      annMl.getOrElse(qid, Set.empty[Long]).intersect(brute(qid)).size }.sum / 200.0
-    emb.unpersist(blocking = false)
-
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$mllibHeader (near-dup pair detection, ${nDocs / 1000}k docs, 8 hashes each)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale mllib $nDocs"` —
-         |identical task, identical hash budget: our MinHash-kernel → banded
-         |LSH → exact-Jaccard-verify pipeline vs stock Spark MLlib's
-         |HashingTF → MinHashLSH.approxSimilarityJoin at the same 0.8
-         |Jaccard threshold, planted-pair recall as shared ground truth.
-         |
-         || pipeline | wall (s) | verified pairs | planted recall |
-         ||---|---|---|---|
-         || graft (kernel LSH + verify) | ${f"$ourSec%.1f"} | $ourPairs | $ourFound / $planted (${f"${ourFound.toDouble / planted}%.3f"}) |
-         || Spark MLlib approxSimilarityJoin | ${f"$mlSec%.1f"} | $mlPairs | $mlFound / $planted (${f"${mlFound.toDouble / planted}%.3f"}) |
-         |
-         |ANN serving, same ${nVecs / 1000}k-vector unit-normalized clustered corpus,
-         |20 queries, recall@10 vs the brute-force cosine top-10:
-         |
-         || pipeline | build (s) | serve 20 queries (s) | per query (s) | recall@10 |
-         ||---|---|---|---|---|
-         || graft IVF-SQ8 batched probe (one job, all 20) | ${f"$ourBuildSec%.1f"} | ${f"$ourAnnSec%.1f"} | ${f"${ourAnnSec / 20}%.3f"} | ${f"$ourAnnRecall%.3f"} |
-         || MLlib BRP-LSH approxNearestNeighbors (per query) | ${f"$mlBuildSec%.1f"} | ${f"$mlAnnSec%.1f"} | ${f"${mlAnnSec / 20}%.3f"} | ${f"$mlAnnRecall%.3f"} |
-         |
-         |- build-vs-serve is the honest split: the IVF index pays a one-time
-         |  materialization (amortized over every later query and maintained
-         |  incrementally — appendToIvfIndex) to make each probe read
-         |  nProbe/lists of 1-byte codes; MLlib's model is cheap to fit but
-         |  every query re-scans hashed vectors — and its per-query cost
-         |  GROWS with the corpus while the probe's shrinks relatively (see
-         |  the 1M-vector ANN stage: probes beat even the brute scan there)
-         |- peak heap $heapMb MB; corpora and plants identical for both
-         |""".stripMargin
-    spliceSection(outMd, mllibHeader, section)
-    println(s"""{"metric":"scale_mllib","value":$ourSec,"unit":"sec","n_docs":$nDocs,"our_s":$ourSec,"our_pairs":$ourPairs,"our_recall":${ourFound.toDouble / planted},"mllib_s":$mlSec,"mllib_pairs":$mlPairs,"mllib_recall":${mlFound.toDouble / planted},"our_ann_build_s":$ourBuildSec,"our_ann_s":$ourAnnSec,"our_ann_recall":$ourAnnRecall,"mllib_ann_build_s":$mlBuildSec,"mllib_ann_s":$mlAnnSec,"mllib_ann_recall":$mlAnnRecall,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val kernelsHeader = "## Kernel-vs-UDF microbench stage"
-
-  /** `runMain graft.Scale kernels [nDocs]` — the measured case for the
-    * codegen expression kernels: the SAME per-row byte-level function run
-    * three ways over a 1M-doc corpus — (a) as the custom Catalyst
-    * expression (inside WholeStageCodegen, no conversion), (b) behind a
-    * Scala UDF boundary (identical kernel bytes, but every row pays
-    * internal→external→internal conversion and breaks the codegen span),
-    * and for simhash (c) the pre-kernel relational construction
-    * (explode 64 bit-rows per token). Median of 3 after warmup. */
-  private def kernelsMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions.udf
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val dir = Files.createTempDirectory("graft_scale_kernels").toString
-    genDedupCorpus(spark, nDocs).write.mode("overwrite").parquet(s"$dir/docs")
-    val docs = spark.read.parquet(s"$dir/docs")
-    def toks = graft.operators.Dedup.tokenSet(col("text"))
-    // the variants share JIT-hot code (the kernel util itself) — timing
-    // one variant's 3 runs before the other's would hand the second a
-    // warmer JIT; interleave A,B,A,B,A,B after warming BOTH
-    def medianPair(a: => Unit, b: => Unit): (Double, Double) = {
-      a; b // joint warmup
-      def once(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val runs = (1 to 3).map(_ => (once(a), once(b)))
-      (runs.map(_._1).sorted.apply(1), runs.map(_._2).sorted.apply(1))
-    }
-    def median3(f: => Unit): Double = medianPair(f, ())._1
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // identical kernel bytes behind a UDF boundary: Seq[String] →
-    // ArrayData conversion in, external value out — the cost under test
-    val simhashUdf = udf((ts: Seq[String]) =>
-      graft.operators.Md5SimHashUtil.simhashHex(
-        new GenericArrayData(ts.map(UTF8String.fromString).toArray)).toString)
-    def strings(ad: org.apache.spark.sql.catalyst.util.ArrayData): Seq[String] =
-      (0 until ad.numElements()).map(i => String.valueOf(ad.getUTF8String(i)))
-    val minhashUdf = udf((ts: Seq[String]) =>
-      strings(graft.operators.Md5MinHashUtil.signature(
-        new GenericArrayData(ts.map(UTF8String.fromString).toArray), 8)))
-    val winnowUdf = udf((t: String) =>
-      strings(graft.operators.WinnowUtil.winnowMd5(UTF8String.fromString(t), 5, 4)))
-    val (simKernel, simUdf) = medianPair(
-      force(docs.select(graft.operators.Similarity.md5SimhashHex(toks).as("h"))),
-      force(docs.select(simhashUdf(toks).as("h"))))
-    val simRelational = median3(force(
-      graft.operators.Similarity.simhashMd5Parity(docs, "doc_id", toks)))
-    val (mhKernel, mhUdf) = medianPair(
-      force(docs.select(graft.operators.MinHash.md5Signature(toks, 8).as("sig"))),
-      force(docs.select(minhashUdf(toks).as("sig"))))
-    val (wKernel, wUdf) = medianPair(
-      force(docs.select(graft.operators.Shingles.winnow(col("text"), 5, 4).as("fp"))),
-      force(docs.select(winnowUdf(col("text")).as("fp"))))
-    // the CHEAP kernel (seeded xxhash64 — no MessageDigest): per-row work
-    // is small enough that the UDF's conversion boundary is visible
-    val xxUdf = udf((ts: Seq[String]) =>
-      graft.operators.MinHashUtil.signature(
-        new GenericArrayData(ts.map(UTF8String.fromString).toArray), 8)
-        .toLongArray())
-    val (xxKernel, xxUdfS) = medianPair(
-      force(docs.select(graft.operators.MinHash.signature(toks, 8).as("sig"))),
-      force(docs.select(xxUdf(toks).as("sig"))))
-    val heapMb = heapPeakMb()
-    def row(name: String, kernel: Double, other: Double, label: String) =
-      f"| $name | $kernel%.1f | $other%.1f ($label) | ${other / kernel}%.1fx |"
-    val section =
-      s"""
-         |$kernelsHeader (same kernel bytes, three execution shapes, ${nDocs / 1000}k docs)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale kernels $nDocs"` —
-         |each custom expression vs a Scala UDF wrapping the IDENTICAL
-         |per-row function, and (simhash) vs the pre-kernel relational
-         |construction. Runs INTERLEAVED A,B,A,B,A,B after a joint warmup
-         |so shared-JIT heat can't bias the second variant; median of 3,
-         |noop-sink forced.
-         |
-         || kernel | expression (s) | alternative (s) | slowdown |
-         ||---|---|---|---|
-         |${row("md5 simhash", simKernel, simUdf, "UDF")}
-         |${row("md5 simhash", simKernel, simRelational, "relational explode")}
-         |${row("md5 minhash k=8", mhKernel, mhUdf, "UDF")}
-         |${row("winnow k=5 w=4", wKernel, wUdf, "UDF")}
-         |${row("xxhash minhash k=8", xxKernel, xxUdfS, "UDF")}
-         |
-         |- the honest reading: where the kernel is MessageDigest-dominated
-         |  (md5 families: ~400 digests/row) the UDF boundary is noise —
-         |  the order-of-magnitude win is the SINGLE-PASS design vs the
-         |  composed/relational form (k interpreted lambda passes or a
-         |  64-rows-per-token explode), which is what the kernels replaced
-         |- for the cheap seeded-xxhash kernel the conversion boundary
-         |  itself is the measurable cost — the case codegen expressions
-         |  exist for
-         |- peak heap $heapMb MB
-         |""".stripMargin
-    spliceSection(outMd, kernelsHeader, section)
-    println(s"""{"metric":"scale_kernels","value":$simKernel,"unit":"sec","n_docs":$nDocs,"sim_kernel_s":$simKernel,"sim_udf_s":$simUdf,"sim_relational_s":$simRelational,"mh_kernel_s":$mhKernel,"mh_udf_s":$mhUdf,"w_kernel_s":$wKernel,"w_udf_s":$wUdf,"xx_kernel_s":$xxKernel,"xx_udf_s":$xxUdfS,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val layoutHeader = "## Z-order layout stage"
-
-  /** `runMain graft.Scale layout [nEvents]` — the data-skipping file
-    * layout at 20M rows: the same corpus written linear-on-user vs
-    * Z-ordered on (user_id, sec), then per-file min-max stats (what a
-    * parquet pruner sees) answer how many files each layout forces a
-    * one-column predicate to read. */
-  private def layoutMain(args: Array[String]): Unit = {
-    val nEvents = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.operators.Layout
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val base = Files.createTempDirectory("graft_scale_layout").toString
-    val nFiles = 256
-    val df = genEventCorpus(spark, nEvents)
-      .withColumn("sec", unix_timestamp(col("ts")))
-      .select("event_id", "user_id", "sec", "event_type", "value")
-    val (_, linSec) = timed {
-      df.repartitionByRange(nFiles, col("user_id"))
-        .sortWithinPartitions("user_id")
-        .write.mode("overwrite").parquet(s"$base/linear")
-    }
-    val (_, zSec) = timed {
-      Layout.writeZOrdered(df, "user_id", "sec", s"$base/zorder", nFiles)
-    }
-    val linStats = Layout.fileStats(spark, s"$base/linear", "user_id", "sec").cache()
-    val zStats = Layout.fileStats(spark, s"$base/zorder", "user_id", "sec").cache()
-    val nLin = linStats.count(); val nZ = zStats.count()
-    // predicate 1: 5% of the user range; predicate 2: 10% of the time range
-    val users = nEvents / 200
-    val bounds = df.agg(min("sec"), max("sec")).head()
-    val (sLo, sHi) = (bounds.getLong(0), bounds.getLong(1))
-    val tLo = sLo + (sHi - sLo) * 45 / 100
-    val tHi = sLo + (sHi - sLo) * 55 / 100
-    val linUser = Layout.filesOverlapping(linStats, "a", 0, users * 5 / 100)
-    val zUser = Layout.filesOverlapping(zStats, "a", 0, users * 5 / 100)
-    val linTime = Layout.filesOverlapping(linStats, "b", tLo, tHi)
-    val zTime = Layout.filesOverlapping(zStats, "b", tLo, tHi)
-    linStats.unpersist(); zStats.unpersist()
-    require(linTime >= (nLin * 9) / 10,
-      s"linear layout unexpectedly pruned on time: $linTime/$nLin")
-    require(zTime * 2 <= linTime,
-      s"z-order time pruning not better: z=$zTime linear=$linTime")
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$layoutHeader (linear vs Morton-clustered write at ${nEvents / 1000000}M rows, $nFiles files)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale layout $nEvents"` —
-         |the event corpus written twice ([[graft.operators.Layout]]):
-         |range-clustered on user_id alone vs Z-ordered on (user_id, sec);
-         |per-file min-max stats (exactly what parquet row-group/file
-         |pruning consumes) then score each layout against one-column
-         |predicates.
-         |
-         || metric | linear (user-sorted) | z-ordered |
-         ||---|---|---|
-         || write wall | ${f"$linSec%.1f"} s | ${f"$zSec%.1f"} s |
-         || files | $nLin | $nZ |
-         || files read, user-range predicate (5%) | $linUser | $zUser |
-         || files read, time-range predicate (10%) | $linTime (${f"${100.0 * linTime / nLin}%.0f"}%) | $zTime (${f"${100.0 * zTime / nZ}%.0f"}%) |
-         |
-         |- the headline: a time predicate on the user-sorted layout reads
-         |  ~EVERY file (each file spans the full time range); the z-ordered
-         |  layout bounds every file in BOTH dimensions, so the same
-         |  predicate reads ${f"${100.0 * zTime / nZ}%.0f"}% of files — at 100 TB that ratio is the
-         |  scan-cost ratio for every secondary-column query
-         |- the price is one extra bounds agg + the Morton projection at
-         |  write (codegen'd static call per row): ${f"$zSec%.1f"} s vs ${f"$linSec%.1f"} s here
-         |- peak heap $heapMb MB
-         |""".stripMargin
-    spliceSection(outMd, layoutHeader, section)
-    println(s"""{"metric":"scale_layout","value":$zSec,"unit":"sec","n_rows":$nEvents,"lin_write_s":$linSec,"z_write_s":$zSec,"lin_time_files":$linTime,"z_time_files":$zTime,"lin_user_files":$linUser,"z_user_files":$zUser,"n_files":$nZ,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val curateHeader = "## Curate funnel stage"
-
-  final case class CurateStats(
-      genSec: Double, qualitySec: Double, dedupSec: Double, lineSec: Double,
-      n0: Long, n1: Long, n2: Long, n3: Long, heapMb: Long)
-
-  /** End-to-end RefinedWeb-ordered curation funnel (quality gate →
-    * whole-doc near-dup dedup → chunk-level line dedup) on the planted
-    * dedup corpus plus exactly-too-short docs at every doc_id ≡ 0
-    * (mod 100). The plants make every stage's effect CLOSED-FORM:
-    *   n1 = n − n/100                  (quality drops the shorts, exactly)
-    *   n1 − n2 ∈ [0.9·P, P]            (LSH recall on live pairs,
-    *                                    P = n/20 − n/100; Jaccard verify
-    *                                    admits no false positives)
-    *   n3 = n1 − P                     (EXACT regardless of LSH recall —
-    *                                    pairs the fuzzy stage missed lose
-    *                                    their later member to chunk-level
-    *                                    first-occurrence dedup: the
-    *                                    fuzzy+exact layering working as
-    *                                    designed)
-    * Production hash family (xxhash64), not the oracle's md5-parity. */
-  def runCurate(spark: SparkSession, nDocs: Long, base: String): CurateStats = {
-    require(nDocs % 100 == 0, "nDocs must be a multiple of 100")
-    import graft.operators.{Dedup, TextAnalysis}
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (_, genSec) = timed {
-      genDedupCorpus(spark, nDocs)
-        .withColumn("text",
-          when(col("doc_id") % 100 === 0, lit("x")).otherwise(col("text")))
-        .write.mode("overwrite").parquet(s"$base/docs")
-    }
-    val docs = spark.read.parquet(s"$base/docs")
-    val n0 = docs.count()
-    val (q, qualitySec) = timed {
-      val f = TextAnalysis.qualityFilter(docs, "text")
-        .filter(col("quality_ok"))
-        .select(docs.columns.toIndexedSeq.map(col): _*)
-        .persist()
-      f.count()
-      f
-    }
-    val n1 = q.count()
-    val ((deduped, n2), dedupSec) = timed {
-      val groups = Dedup.nearDupGroups(q, "doc_id", "text").persist()
-      val kept = q.join(
-        groups.filter(col("is_representative")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi").persist()
-      val n = kept.count()
-      groups.unpersist(blocking = false)
-      (kept, n)
-    }
-    val (n3, lineSec) = timed {
-      val chunks = Dedup.chunkDedup(deduped, "doc_id", "text", 10)
-      val n = chunks.filter(col("text_dedup").isNotNull).count()
-      chunks.unpersist(blocking = false)
-      n
-    }
-    q.unpersist(blocking = false)
-    deduped.unpersist(blocking = false)
-    CurateStats(genSec, qualitySec, dedupSec, lineSec, n0, n1, n2, n3, heapPeakMb())
-  }
-
-  private def curateMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = Files.createTempDirectory("graft_scale_curate").toString
-    val st = runCurate(spark, nDocs, base)
-    import st._
-    val livePairs = nDocs / 20 - nDocs / 100
-    require(n0 == nDocs, s"corpus count $n0 != $nDocs")
-    require(n1 == nDocs - nDocs / 100, s"quality invariant broke: $n1")
-    val found = n1 - n2
-    require(found >= (livePairs * 9) / 10 && found <= livePairs,
-      s"near-dup invariant broke: found $found of $livePairs live pairs")
-    require(n3 == n1 - livePairs,
-      s"fuzzy+exact layering invariant broke: n3=$n3 expected ${n1 - livePairs}")
-    val totalSec = qualitySec + dedupSec + lineSec
-    val section =
-      s"""
-         |$curateHeader (quality → near-dup → line dedup over ${nDocs / 1000}k docs, production hash family)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale curate $nDocs"` —
-         |the composed corpus-curation funnel (the `corpus curate` CLI's
-         |RefinedWeb ordering) end to end, with plants that make EVERY
-         |stage's effect a closed-form equality: exactly-too-short docs at
-         |1%, near-dup pairs at every 20th doc.
-         |
-         || stage | wall (s) | docs in → out | invariant |
-         ||---|---|---|---|
-         || 1 quality gate | ${f"$qualitySec%.1f"} | $n0 → $n1 | n − n/100 EXACT (${n1 == nDocs - nDocs / 100}) |
-         || 2 near-dup dedup (MinHash-LSH → Jaccard → components) | ${f"$dedupSec%.1f"} | $n1 → $n2 | dropped $found of $livePairs live pairs (recall ${f"${found.toDouble / livePairs}%.3f"}, 0 false positives possible past exact-Jaccard verify) |
-         || 3 chunk/line dedup (10-token first-occurrence) | ${f"$lineSec%.1f"} | $n2 → $n3 | n1 − P EXACT regardless of stage-2 recall (${n3 == n1 - livePairs}) — missed fuzzy pairs die here |
-         |
-         |- funnel wall ${f"$totalSec%.1f"} s → ${f"${nDocs / totalSec}%.0f"} docs/s end-to-end; corpus gen ${f"$genSec%.1f"} s; peak heap $heapMb MB
-         |- the n3 equality is the fuzzy+exact LAYERING guarantee: chunk-level
-         |  first-occurrence dedup catches exactly the pairs LSH recall
-         |  missed, so final yield is deterministic even though stage 2 is
-         |  approximate — the reason curate orders the stages this way
-         |""".stripMargin
-    spliceSection(outMd, curateHeader, section)
-    println(s"""{"metric":"scale_curate","value":$totalSec,"unit":"sec","n_docs":$nDocs,"docs_per_s":${nDocs / totalSec},"n1":$n1,"n2":$n2,"n3":$n3,"recall":${found.toDouble / livePairs},"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val eventsHeader = "## Event-ops corpus stage"
-
-  /** Deterministic synthetic event log, generated ENTIRELY executor-side
-    * (the driver holds only the range): `perUser` events per user at a
-    * 300 s cadence, with every 50th inter-event gap stretched to 7200 s —
-    * so each user has EXACTLY `perUser/50` sessions of exactly 50 events
-    * at a 30-minute threshold, and every odd-index event is a `click`
-    * whose nearest preceding `purchase` is its immediate predecessor at a
-    * 300 s gap. `value` is `event_id/1000`, so interval-join matches are
-    * countable in closed form. Exact planted invariants for the w4/j8/j9
-    * operator family at any corpus size. */
-  def genEventCorpus(
-      spark: SparkSession, nEvents: Long, perUser: Long = 200L): org.apache.spark.sql.DataFrame = {
-    require(nEvents % perUser == 0, "nEvents must be a multiple of perUser")
-    spark.range(nEvents).toDF("event_id")
-      .withColumn("user_id", expr(s"event_id div $perUser"))
-      .withColumn("idx", col("event_id") % perUser)
-      .withColumn("sec",
-        lit(1700000000L) + col("idx") * 300L + expr("idx div 50") * 6900L)
-      .withColumn("ts", timestamp_seconds(col("sec")))
-      .withColumn("event_type",
-        when(col("idx") % 2 === 0, "purchase").otherwise("click"))
-      .withColumn("value", col("event_id").cast("double") / 1000.0)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-  }
+  // ---- event ops --------------------------------------------------------
 
   final case class EventOpsStats(
       genSec: Double, sessSec: Double, nativeSec: Double, asofSec: Double,
       rollSec: Double, intervalSec: Double,
       nSessions: Long, nativeSessions: Long, minEvents: Long, maxEvents: Long,
       asofRows: Long, asofWrong: Long, maxRoll: Long, intervalPairs: Long,
-      expectedPairs: Long, heapMb: Long)
+      expectedPairs: Long)
 
-  /** The measurable core of the event-ops stage (ScaleSpec smokes it at
-    * tiny N with the SAME exact invariants). */
+  /** The measurable core of the event-ops stage (ScaleSpec also checks it
+    * at tiny N with the SAME exact invariants). */
   def runEvents(spark: SparkSession, nEvents: Long, base: String): EventOpsStats = {
     val perUser = 200L
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val (_, genSec) = timed {
       genEventCorpus(spark, nEvents, perUser)
         .write.mode("overwrite").parquet(s"$base/events.parquet")
@@ -3467,410 +595,12 @@ object Scale {
     val expectedPairs = 3L * nEvents - 9L
     EventOpsStats(genSec, sessSec, nativeSec, asofSec, rollSec, intervalSec,
       nSessions, nativeSessions, minEv, maxEv, asofRows, asofWrong, maxRoll,
-      intervalPairs, expectedPairs, heapPeakMb())
+      intervalPairs, expectedPairs)
   }
 
-  private val bpeHeader = "## BPE merge-learning corpus stage"
-
-  /** `runMain graft.Scale bpe [nDocs] [nMerges] [outMd]` — the tokenizer-
-    * training loop ([[graft.operators.BpeTrain.learnMerges]]) over the
-    * 1M-doc corpus: each PASS is one pair-count shuffle (explode +
-    * map-side-combined count) and one scan-side rewrite folding every
-    * batch-accepted merge, the corpus distributed throughout.
-    * Correctness: the learned merge table must be IDENTICAL when the
-    * corpus is re-partitioned differently (the determinism property the
-    * argmax tie-break guarantees), checked on a 3-merge prefix re-run
-    * over a 17-way repartition, and the batched trajectory must equal
-    * the strictly-sequential one (batch=1) on the same prefix. */
-  private def bpeMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val nMerges = args.lift(2).map(_.toInt).getOrElse(8)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_bpe").toString
-    val (_, genSec) = timed {
-      genBpeCorpus(spark, nDocs).write.mode("overwrite").parquet(dir)
-    }
-    val corpus = spark.read.parquet(dir)
-    val ((merges, passes), learnSec) = timed {
-      graft.operators.BpeTrain.learnMergesStats(corpus, "text", nMerges)
-    }
-    require(merges.size == nMerges,
-      s"expected $nMerges merges, learned ${merges.size}")
-    require(merges.size >= 4 * passes,
-      s"batching payoff missing: ${merges.size} merges took $passes passes")
-    // determinism across partitionings: 3-merge prefix on a 17-way split
-    val (rep, repSec) = timed {
-      graft.operators.BpeTrain.learnMerges(corpus.repartition(17), "text", 3)
-    }
-    require(rep == merges.take(3),
-      s"merge table depends on partitioning: $rep vs ${merges.take(3)}")
-    // batched (want+1 fetch) vs strictly-sequential prefix must agree —
-    // the exactness proof exercised at corpus scale, not just in units
-    val seqPrefix = graft.operators.BpeTrain
-      .learnMerges(corpus, "text", 3, batch = 1)
-    require(rep == seqPrefix,
-      s"batched trajectory diverged from sequential: $seqPrefix vs $rep")
-    val pairsPerPass = corpus.count() * 49 // ~49 adjacent pairs per 50-token doc
-    val heapMb = heapPeakMb()
-    val mergesShown = merges.map(m => s"(${m.left}+${m.right}:${m.count})").mkString(" ")
-    val section =
-      s"""
-         |$bpeHeader ($nMerges merges over ${nDocs / 1000}k collocation-corpus docs)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale bpe $nDocs $nMerges"` —
-         |[[BpeTrain.learnMerges]] on the ${nDocs / 1000}k-doc corpus: per PASS, one
-         |pair-count shuffle (~${pairsPerPass / 1000000}M pair rows, map-side-combined count
-         |keyed on the pair) and one zero-shuffle scan-side rewrite folding
-         |every merge the disjoint-prefix rule accepts; the driver holds
-         |only the k-row merge table.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nDocs docs) |
-         || learn $nMerges merges | ${f"$learnSec%.1f"} s in $passes corpus passes (${f"${nMerges.toDouble / passes}%.1f"} merges/pass, ${f"${learnSec / nMerges}%.1f"} s/merge) |
-         || merge table | $mergesShown |
-         || partition-invariance (3-merge prefix, 17-way repartition) | exact match (${f"$repSec%.1f"} s) |
-         || peak heap | $heapMb MB |
-         |
-         |- the candidate fetch is a `limit(batch+1)` top-k per pass; the
-         |  tie-break (count desc, left, right) is what makes the merge
-         |  table a pure function of the corpus, not of its partitioning —
-         |  asserted above, not assumed
-         |- per-iteration persist/release keeps exactly one tokenized
-         |  corpus copy live, the PageRank checkpoint discipline
-         |- batching is EXACT, not approximate: per pass the loop accepts
-         |  the longest ranked prefix of pairwise symbol-disjoint
-         |  candidates whose counts strictly beat the first rejected
-         |  candidate — disjointness pins their counts, and any emergent
-         |  joined-token pair is bounded by a symbol-sharing pair that
-         |  ranks at/below the stop point (proof on the method); the
-         |  batched-vs-sequential 3-merge agreement is asserted above
-         |- INTENDED REGIME: k in the tens-to-low-hundreds. A 32k
-         |  production vocabulary trains on a deterministic hash-SAMPLE
-         |  (ranks, not counts, drive the trajectory) and encodes the
-         |  full corpus with the one-pass scan-side `applyMerges` (t51's
-         |  gated hot path)
-         |""".stripMargin
-    spliceSection(outMd, bpeHeader, section)
-    println(s"""{"metric":"scale_bpe","value":$learnSec,"unit":"sec","n_docs":$nDocs,"n_merges":$nMerges,"passes":$passes,"merges_per_pass":${nMerges.toDouble / passes},"sec_per_merge":${learnSec / nMerges},"partition_invariant":true,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val multimodalHeader = "## Multimodal decode corpus stage"
-
-  /** `runMain graft.Scale multimodal [nAssets] [outMd]` — the REAL codec
-    * path under load: `nAssets` PNGs (deterministic pixel formula →
-    * `ImageIO.write`) and `nAssets` WAVs (formula PCM → canonical RIFF)
-    * are encoded executor-side, written to parquet as opaque binary
-    * columns, read back, and decoded through the real codecs
-    * (`ImageIO.read` / `AudioSystem`). Correctness is an EXACT equality:
-    * the total decoded channel/sample sums must equal the same formulas
-    * aggregated directly (no codec), over every asset. */
-  private def multimodalMain(args: Array[String]): Unit = {
-    val nAssets = args.lift(1).map(_.toLong).getOrElse(200000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val base = Files.createTempDirectory("graft_scale_multimodal").toString
-    val ids = spark.range(nAssets).toDF("id")
-      .repartition(spark.sparkContext.defaultParallelism)
-
-    // ---- images: 8..15 × 6..9 px, packed-RGB formula per pixel ----
-    val w = (lit(8) + pmod(col("id"), lit(8))).cast("int")
-    val h = (lit(6) + pmod(col("id"), lit(4))).cast("int")
-    val px = transform(
-      sequence(lit(0L), w.cast("long") * h.cast("long") - 1L),
-      i => (pmod(col("id") * 7 + i * 13, lit(256)) * 65536L +
-        pmod(col("id") * 11 + i * 5, lit(256)) * 256L +
-        pmod(col("id") * 3 + i * 17, lit(256))).cast("int"))
-    val pixelFrame = ids.select(col("id"), w.as("w"), h.as("h"), px.as("px"))
-    val (_, pngEncSec) = timed {
-      graft.operators.Multimodal.encodePngBatched(pixelFrame, "id", "w", "h", "px")
-        .write.mode("overwrite").parquet(s"$base/png")
-    }
-    val ((imgOk, imgBad), pngDecSec) = timed {
-      val stats = graft.operators.Multimodal.decodeImageStatsBatched(
-        spark.read.parquet(s"$base/png"), "id", "png")
-      val r = stats.agg(
-        sum(col("sum_r") + col("sum_g") + col("sum_b")),
-        sum(when(col("width").isNull, 1L).otherwise(0L))).head()
-      (if (r.isNullAt(0)) 0L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    val expectedImg = pixelFrame.select(
-      aggregate(col("px"), lit(0L), (acc, p) =>
-        acc + shiftright(p, 16).bitwiseAND(lit(255)) +
-          shiftright(p, 8).bitwiseAND(lit(255)) + p.bitwiseAND(lit(255)))
-        .as("s")).agg(sum("s")).head().getLong(0)
-    require(imgBad == 0L && imgOk == expectedImg,
-      s"image decode diverged: decoded=$imgOk expected=$expectedImg bad=$imgBad")
-
-    // ---- audio: 100..149-sample mono 16 kHz clips, formula PCM ----
-    val n = (lit(100) + pmod(col("id"), lit(50))).cast("int")
-    val smp = transform(sequence(lit(0), n - 1),
-      i => (pmod(col("id") * 7 + i * 13, lit(2001)) - 1000).cast("int"))
-    val sampleFrame = ids.select(col("id"), smp.as("smp"))
-    val (_, wavEncSec) = timed {
-      graft.operators.Multimodal.encodeWavPcm16Batched(sampleFrame, "id", "smp", 16000, 1)
-        .write.mode("overwrite").parquet(s"$base/wav")
-    }
-    val ((wavSum, wavFrames, wavBad), wavDecSec) = timed {
-      val stats = graft.operators.Multimodal.decodeWavStatsBatched(
-        spark.read.parquet(s"$base/wav"), "id", "wav")
-      val r = stats.agg(
-        sum("sum_samples"), sum("n_frames"),
-        sum(when(col("channels").isNull, 1L).otherwise(0L))).head()
-      (if (r.isNullAt(0)) 0L else r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val eRow = sampleFrame.select(
-      aggregate(col("smp"), lit(0L), (acc, v) => acc + v).as("s"),
-      size(col("smp")).cast("long").as("n"))
-      .agg(sum("s"), sum("n")).head()
-    val (expectedWavSum, expectedFrames) = (eRow.getLong(0), eRow.getLong(1))
-    require(wavBad == 0L && wavSum == expectedWavSum && wavFrames == expectedFrames,
-      s"wav decode diverged: sum=$wavSum/$expectedWavSum frames=$wavFrames/$expectedFrames bad=$wavBad")
-
-    // ---- video: nAssets/4 animated GIFs × 4 frames of 16×8 gray ----
-    val nVideos = math.max(1L, nAssets / 4)
-    val vids = spark.range(nVideos).toDF("id")
-      .repartition(spark.sparkContext.defaultParallelism)
-    val framesPer = 4
-    val (vw, vh) = (16, 8)
-    val frames = transform(sequence(lit(0), lit(framesPer - 1)), f =>
-      transform(sequence(lit(0L), lit(vw.toLong * vh - 1L)),
-        i => pmod(col("id") * 7 + f * 11 + i * 13, lit(256)).cast("int")))
-    val videoFrame = vids.select(
-      col("id"), lit(vw).as("w"), lit(vh).as("h"), frames.as("frames"))
-    val (_, gifEncSec) = timed {
-      graft.operators.Multimodal
-        .encodeGifAnimatedBatched(videoFrame, "id", "w", "h", "frames")
-        .write.mode("overwrite").parquet(s"$base/gif")
-    }
-    val ((gifSum, gifFrames, gifBad), gifDecSec) = timed {
-      val st = graft.operators.Multimodal.decodeGifFramesBatched(
-        spark.read.parquet(s"$base/gif"), "id", "gif")
-      val r = st.agg(
-        sum("gray_sum"), sum(when(col("frame_idx").isNotNull, 1L).otherwise(0L)),
-        sum(when(col("width").isNull, 1L).otherwise(0L))).head()
-      (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    val expectedGif = videoFrame.select(
-      aggregate(flatten(col("frames")), lit(0L), (acc, v) => acc + v).as("s"))
-      .agg(sum("s")).head().getLong(0)
-    require(gifBad == 0L && gifFrames == nVideos * framesPer && gifSum == expectedGif,
-      s"gif decode diverged: sum=$gifSum/$expectedGif frames=$gifFrames/${nVideos * framesPer} bad=$gifBad")
-
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$multimodalHeader (real ImageIO / AudioSystem codecs, $nAssets assets each)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale multimodal $nAssets"` —
-         |$nAssets formula-pixel PNGs and $nAssets formula-PCM WAVs encoded
-         |executor-side (batched mapPartitions), written to parquet as opaque
-         |binary columns, read back and decoded through the REAL JDK codecs.
-         |The invariant is an exact equality: total decoded channel/sample
-         |sums == the formulas aggregated directly, over every asset.
-         |
-         || metric | value |
-         ||---|---|
-         || PNG encode + write | ${f"$pngEncSec%.1f"} s (${f"${nAssets / pngEncSec}%.0f"} imgs/s) |
-         || PNG decode + stats | ${f"$pngDecSec%.1f"} s (${f"${nAssets / pngDecSec}%.0f"} imgs/s, 0 failures) |
-         || decoded channel sum == formula | $imgOk == $expectedImg (exact) |
-         || WAV encode + write | ${f"$wavEncSec%.1f"} s (${f"${nAssets / wavEncSec}%.0f"} clips/s) |
-         || WAV decode + stats | ${f"$wavDecSec%.1f"} s (${f"${nAssets / wavDecSec}%.0f"} clips/s, 0 failures) |
-         || decoded sample sum / frames == formula | $wavSum / $wavFrames == $expectedWavSum / $expectedFrames (exact) |
-         || GIF video encode + write ($nVideos × $framesPer frames) | ${f"$gifEncSec%.1f"} s (${f"${nVideos * framesPer / gifEncSec}%.0f"} frames/s) |
-         || GIF video frame decode | ${f"$gifDecSec%.1f"} s (${f"${nVideos * framesPer / gifDecSec}%.0f"} frames/s, 0 failures) |
-         || decoded gray sum / frame count == formula | $gifSum / $gifFrames == $expectedGif / ${nVideos * framesPer} (exact) |
-         || peak heap | $heapMb MB |
-         |
-         |- per-row work only: encode and decode are scan-side
-         |  mapPartitions batches — no shuffle anywhere in either path, so
-         |  the stage scales with executors × cores at any corpus size
-         |- the binary column round-trips through parquet at rest, the
-         |  shape multimodal tables have in production
-         |""".stripMargin
-    spliceSection(outMd, multimodalHeader, section)
-    println(s"""{"metric":"scale_multimodal","value":${pngDecSec + wavDecSec + gifDecSec},"unit":"sec","n_assets":$nAssets,"png_dec_per_s":${nAssets / pngDecSec},"wav_dec_per_s":${nAssets / wavDecSec},"gif_frames_per_s":${nVideos * framesPer / gifDecSec},"img_sum_ok":${imgOk == expectedImg},"wav_sum_ok":${wavSum == expectedWavSum},"gif_sum_ok":${gifSum == expectedGif},"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val streamStateHeader = "## Streaming-state corpus stage"
-
-  /** `runMain graft.Scale streamstate [nEvents] [nBatches] [outMd]` — the
-    * STATEFUL streaming twins of the batch event ops under load: the
-    * event corpus replayed time-ordered (`repartitionByRange(ts)`, one
-    * file per trigger) through (a) the watermarked native
-    * `session_window` aggregation and (b) the watermarked stream-stream
-    * attribution join, measuring the state store's row/memory ceiling
-    * under watermark eviction and holding EXACT invariants: sealed
-    * sessions equal the corpus's closed-form session structure, and the
-    * stream-stream join's match count equals the batch twin's (the same
-    * `attributionJoin` code path run over the at-rest frame). */
-  private def streamStateMain(args: Array[String]): Unit = {
-    val nEvents = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val nBatches = args.lift(2).map(_.toInt).getOrElse(20)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val base = Files.createTempDirectory("graft_scale_streamstate").toString
-    val perUser = 200L
-    val nUsers = nEvents / perUser
-    // time-ordered replay: each file is a time band, so the watermark
-    // advances progressively and no event ever arrives beneath it (the
-    // round-robin split would jump the watermark to max−lateness on
-    // batch 1 and drop every later batch as late)
-    val (_, genSec) = timed {
-      genEventCorpus(spark, nEvents, perUser)
-        .repartitionByRange(nBatches, col("ts"))
-        .write.mode("overwrite").parquet(s"$base/in")
-      // FileStreamSource replays files in MODIFICATION-TIME order and the
-      // single write stamps every part the same second — force the replay
-      // to follow the range-partition order (part-0000N = Nth time band)
-      // by spacing the mtimes, or the watermark jumps to max−lateness on
-      // whatever band happens first and drops every earlier band as late
-      new java.io.File(s"$base/in").listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex.foreach { case (f, i) =>
-          f.setLastModified(1000000000000L + i * 60000L) }
-    }
-    val schema = spark.read.parquet(s"$base/in").schema
-    def fileStream() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-
-    // (a) native session_window, 1-hour lateness: per-user sessions of
-    // exactly 50 events; the final session per user ends at the corpus
-    // max so the final watermark (max − 1 h) seals exactly 3 of the 4
-    val sessTotals = new java.util.concurrent.atomic.AtomicLongArray(2)
-    val q1 = graft.streaming.StreamingJobs.sessionWindows(
-        fileStream(), "ts", "user_id", gapSeconds = 1801L, lateness = "1 hour")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt_sess")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        val r = b.agg(count(lit(1)),
-          sum(when(col("n_events") === 50L, 1L).otherwise(0L))).head()
-        sessTotals.addAndGet(0, r.getLong(0))
-        sessTotals.addAndGet(1, if (r.isNullAt(1)) 0L else r.getLong(1))
-        ()
-      }.start()
-    val (_, sessSec) = timed(q1.processAllAvailable())
-    val sessOps = q1.recentProgress.toSeq.flatMap(_.stateOperators.headOption)
-    val sessRowsMax = sessOps.map(_.numRowsTotal).maxOption.getOrElse(-1L)
-    val sessMemMb = sessOps.map(_.memoryUsedBytes).maxOption.getOrElse(0L) / 1e6
-    q1.stop()
-    val sealedSessions = sessTotals.get(0)
-    require(sealedSessions == 3L * nUsers && sessTotals.get(1) == sealedSessions,
-      s"session invariant broke: sealed=$sealedSessions (expected ${3L * nUsers}), " +
-        s"50-event=${sessTotals.get(1)}")
-
-    // (b) stream-stream attribution join (30 min lateness, 1 h window):
-    // stream count must equal the batch twin byte-for-byte
-    def clicks(src: org.apache.spark.sql.DataFrame) = src
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    def purchases(src: org.apache.spark.sql.DataFrame) = src
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    val matches = new java.util.concurrent.atomic.AtomicLong()
-    val q2 = graft.streaming.StreamingJobs.attributionJoin(
-        clicks(fileStream()), purchases(fileStream()),
-        withinSeconds = 3600L, lateness = "30 minutes")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$base/ckpt_attr")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        matches.addAndGet(b.count()); ()
-      }.start()
-    val (_, attrSec) = timed(q2.processAllAvailable())
-    val attrOps = q2.recentProgress.toSeq.flatMap(_.stateOperators.headOption)
-    val attrRowsMax = attrOps.map(_.numRowsTotal).maxOption.getOrElse(-1L)
-    val attrMemMb = attrOps.map(_.memoryUsedBytes).maxOption.getOrElse(0L) / 1e6
-    q2.stop()
-    val ev = spark.read.parquet(s"$base/in")
-    val batchMatches = graft.streaming.StreamingJobs.attributionJoin(
-      clicks(ev), purchases(ev), withinSeconds = 3600L).count()
-    require(matches.get() == batchMatches,
-      s"stream-stream attribution diverged from batch twin: " +
-        s"stream=${matches.get()} batch=$batchMatches")
-
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$streamStateHeader (session_window + stream-stream join, $nBatches micro-batches)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale streamstate $nEvents $nBatches"` —
-         |the ${nEvents / 1000000}M-event corpus replayed TIME-ORDERED (range-partitioned
-         |by ts, 1 file per trigger) through the two stateful streaming
-         |operators the batch event ops twin: watermarked native
-         |`session_window` and the watermarked stream-stream attribution
-         |join. Both invariants are EXACT equalities, not floors.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus generate + write | ${f"$genSec%.1f"} s ($nEvents events, $nBatches time-band files) |
-         || session stream wall | ${f"$sessSec%.1f"} s (${f"${nEvents / sessSec}%.0f"} events/s) |
-         || sealed sessions | $sealedSessions (= 3 × $nUsers users — the 4th is open at final watermark, by construction) |
-         || session state rows / memory (max over batches) | $sessRowsMax / ${f"$sessMemMb%.1f"} MB |
-         || attribution stream wall | ${f"$attrSec%.1f"} s (${f"${nEvents / attrSec}%.0f"} events/s, both sides) |
-         || stream matches = batch twin | ${matches.get()} = $batchMatches (exact) |
-         || join state rows / memory (max over batches) | $attrRowsMax / ${f"$attrMemMb%.1f"} MB |
-         || peak heap | $heapMb MB |
-         |
-         |- state is bounded by WATERMARK EVICTION, not list ceilings: open
-         |  sessions per key and in-window join rows are all the store holds;
-         |  the max-over-batches rows above are the plateau under constant
-         |  replay, not a growth curve
-         |- the attribution equality stream == batch is the semantic proof
-         |  that watermark eviction dropped only rows that could no longer
-         |  match (the join is plan-identical in both modes)
-         |""".stripMargin
-    spliceSection(outMd, streamStateHeader, section)
-    println(s"""{"metric":"scale_streamstate","value":${sessSec + attrSec},"unit":"sec","n_events":$nEvents,"sealed_sessions":$sealedSessions,"sess_state_rows":$sessRowsMax,"sess_state_mem_mb":$sessMemMb,"attr_matches":${matches.get()},"attr_state_rows":$attrRowsMax,"attr_state_mem_mb":$attrMemMb,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private def eventsMain(args: Array[String]): Unit = {
-    val nEvents = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = Files.createTempDirectory("graft_scale_events").toString
+  val events: Stage = Stage("events", "## Event-ops corpus stage",
+      Seq("nEvents" -> 20000000L), tiny = "4000") { (spark, p, base) =>
+    val nEvents = p.long("nEvents")
     val st = runEvents(spark, nEvents, base)
     import st._
     val perUser = 200L
@@ -3884,688 +614,125 @@ object Scale {
     require(maxRoll == 13L, s"rolling-count invariant broke: max $maxRoll")
     require(intervalPairs == expectedPairs,
       s"interval-join invariant broke: $intervalPairs vs $expectedPairs")
-    val section =
-      s"""
-         |$eventsHeader (sessionization / as-of / range join at ${nEvents / 1000000}M events)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale events $nEvents"` —
-         |the merge-shaped event operators driven over a ${nEvents / 1000000}M-row
+    def op(sec: Double, invariant: String) =
+      f"$sec%.1f s, ${nEvents / sec}%.0f rows/s — $invariant"
+    StageResult(
+      s"(sessionization / as-of / range join at ${nEvents / 1000000}M events)",
+      s"""the merge-shaped event operators driven over a ${nEvents / 1000000}M-row
          |synthetic log ($nUsers users × $perUser events, planted session and
          |as-of structure with closed-form expected results — every check is
-         |an EXACT equality, not a statistical floor).
-         |
-         || operator | wall (s) | rows/s | exact invariant |
-         ||---|---|---|---|
-         || w4 sessionization (lag → running sum → agg) | ${f"$sessSec%.1f"} | ${f"${nEvents / sessSec}%.0f"} | $nSessions sessions = users × 4, every session exactly 50 events |
-         || native session_window (same corpus) | ${f"$nativeSec%.1f"} | ${f"${nEvents / nativeSec}%.0f"} | session count agrees with w4: $nativeSessions |
-         || j8 as-of join (merge shape) | ${f"$asofSec%.1f"} | ${f"${nEvents / asofSec}%.0f"} | ${nEvents / 2} clicks ALL matched to predecessor purchase at gap 300 s, 0 wrong |
-         || w5 rolling 1-h counts (RANGE frame) | ${f"$rollSec%.1f"} | ${f"${nEvents / rollSec}%.0f"} | frame fills to exactly 13 at the 300 s cadence |
-         || j9 interval join (bucketed equi) | ${f"$intervalSec%.1f"} | ${f"${nEvents / intervalSec}%.0f"} | $intervalPairs pairs = closed-form count ($expectedPairs) |
-         |
-         |- corpus generate + write: ${f"$genSec%.1f"} s; peak heap $heapMb MB
-         |- every operator is ONE shuffle of narrow rows (the windows and the
-         |  session agg share the user_id exchange; the interval join is an
-         |  equi join on bucket ids) — wall time scales with the exchange,
-         |  which is why the same shapes hold on a 1000-executor cluster
-         |""".stripMargin
-    spliceSection(outMd, eventsHeader, section)
-    println(s"""{"metric":"scale_events","value":${sessSec + nativeSec + asofSec + rollSec + intervalSec},"unit":"sec","n_events":$nEvents,"sess_rows_per_s":${nEvents / sessSec},"asof_rows_per_s":${nEvents / asofSec},"roll_rows_per_s":${nEvents / rollSec},"interval_rows_per_s":${nEvents / intervalSec},"n_sessions":$nSessions,"interval_pairs":$intervalPairs,"heap_peak_mb":$heapMb}""")
-    spark.stop()
+         |an EXACT equality, not a statistical floor).""".stripMargin,
+      Seq(
+        "corpus generate + write" -> f"$genSec%.1f s",
+        "w4 sessionization (lag → running sum → agg)" ->
+          op(sessSec, s"$nSessions sessions = users × 4, every session exactly 50 events"),
+        "native session_window (same corpus)" ->
+          op(nativeSec, s"session count agrees with w4: $nativeSessions"),
+        "j8 as-of join (merge shape)" ->
+          op(asofSec, s"${nEvents / 2} clicks ALL matched to predecessor purchase at gap 300 s, 0 wrong"),
+        "w5 rolling 1-h counts (RANGE frame)" ->
+          op(rollSec, "frame fills to exactly 13 at the 300 s cadence"),
+        "j9 interval join (bucketed equi)" ->
+          op(intervalSec, s"$intervalPairs pairs = closed-form count ($expectedPairs)")),
+      """- every operator is ONE shuffle of narrow rows (the windows and the
+        |  session agg share the user_id exchange; the interval join is an
+        |  equi join on bucket ids) — wall time scales with the exchange,
+        |  which is why the same shapes hold on a 1000-executor cluster""".stripMargin)
   }
 
-  private val pagerankHeader = "## PageRank iterative-graph stage"
+  // ---- curate funnel ----------------------------------------------------
 
-  /** Deterministic synthetic digraph, generated executor-side: `nEdges`
-    * edges over `nNodes` nodes. Destinations are QUADRATICALLY skewed
-    * toward low ids (u² transform of an xxhash64 uniform), the
-    * power-law-ish in-degree shape of real link graphs — node 0 is a hub
-    * with ~2/√V of all in-links; sources are uniform so out-degrees stay
-    * boring and no node dangles in expectation. Parallel edges collapse
-    * into multiplicity weights like a real crawl extraction would. */
-  def genGraph(
-      spark: SparkSession, nEdges: Long,
-      nNodes: Long): org.apache.spark.sql.DataFrame = {
-    val u = pmod(xxhash64(lit(1L), col("id")), lit(1000000L))
-      .cast("double") / 1000000.0d
-    spark.range(nEdges).toDF("id")
-      .withColumn("src", pmod(xxhash64(lit(2L), col("id")), lit(nNodes)))
-      .withColumn("dst", floor(u * u * nNodes.toDouble).cast("long"))
-      .filter(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-  }
+  final case class CurateStats(
+      genSec: Double, qualitySec: Double, dedupSec: Double, lineSec: Double,
+      n0: Long, n1: Long, n2: Long, n3: Long)
 
-  /** `runMain graft.Scale pagerank [nEdges] [nNodes] [outMd]` — the
-    * iterative-DataFrame shape at web-graph scale: 10 damped iterations
-    * over a skewed multigraph, run as 5 + advance(5) to prove block
-    * iteration composes and per-iteration wall stays FLAT (the
-    * localCheckpoint lineage cut working — without it each iteration
-    * re-plans the whole history and wall time compounds). */
-  private def pagerankMain(args: Array[String]): Unit = {
-    val nEdges = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val nNodes = args.lift(2).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_pr").toString
+  /** End-to-end RefinedWeb-ordered curation funnel (quality gate →
+    * whole-doc near-dup dedup → chunk-level line dedup) on the planted
+    * dedup corpus plus exactly-too-short docs at every doc_id ≡ 0
+    * (mod 100). The plants make every stage's effect CLOSED-FORM:
+    *   n1 = n − n/100                  (quality drops the shorts, exactly)
+    *   n1 − n2 ∈ [0.9·P, P]            (LSH recall on live pairs,
+    *                                    P = n/20 − n/100; Jaccard verify
+    *                                    admits no false positives)
+    *   n3 = n1 − P                     (EXACT regardless of LSH recall —
+    *                                    pairs the fuzzy stage missed lose
+    *                                    their later member to chunk-level
+    *                                    first-occurrence dedup: the
+    *                                    fuzzy+exact layering working as
+    *                                    designed)
+    * Production hash family (xxhash64), not the oracle's md5-parity. */
+  def runCurate(spark: SparkSession, nDocs: Long, base: String): CurateStats = {
+    require(nDocs % 100 == 0, "nDocs must be a multiple of 100")
+    import graft.operators.{Dedup, TextAnalysis}
     val (_, genSec) = timed {
-      genGraph(spark, nEdges, nNodes).write.mode("overwrite").parquet(dir)
+      genDedupCorpus(spark, nDocs)
+        .withColumn("text",
+          when(col("doc_id") % 100 === 0, lit("x")).otherwise(col("text")))
+        .write.mode("overwrite").parquet(s"$base/docs")
     }
-    val edges = spark.read.parquet(dir)
-    val distinctEdges = edges.count()
-    val (r5, firstSec) = timed {
-      val r = graft.operators.Graph.pageRank(
-        edges, "src", "dst", "w", iterations = 5, checkpoint = true)
-      r.count(); r
-    }
-    val (r10, secondSec) = timed {
-      val r = graft.operators.Graph.advance(
-        edges, "src", "dst", "w", r5, iterations = 5)
-      r.count(); r
-    }
-    // invariants: hub authority + bounded mass (dangling leak only)
-    val top = r10.orderBy(col("rank").desc).limit(3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val mass = r10.agg(sum("rank")).head().getDouble(0)
-    require(top.head._1 == 0L,
-      s"node 0 is the planted hub and must rank first: ${top.toSeq}")
-    require(mass > 0.5 && mass <= 1.0 + 1e-9,
-      s"rank mass out of range: $mass")
-    val heapMb = heapPeakMb()
-    val perIter1 = firstSec / 5.0
-    val perIter2 = secondSec / 5.0
-    val section =
-      s"""
-         |$pagerankHeader (10 damped iterations over a ${nEdges / 1000000}M-edge skewed digraph)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale pagerank $nEdges $nNodes"` —
-         |`Graph.pageRank` (5 iterations) + `Graph.advance` (5 more) over a
-         |deterministic power-law-ish multigraph: ${nEdges / 1000000}M generated edges
-         |over ${nNodes / 1000}k nodes, destinations quadratically skewed so node 0
-         |is a planted hub, parallel edges collapsed to multiplicity weights
-         |($distinctEdges distinct weighted edges).
-         |
-         || metric | value |
-         ||---|---|
-         || graph generate + write | ${f"$genSec%.1f"} s |
-         || iterations 1–5 wall | ${f"$firstSec%.1f"} s (${f"$perIter1%.1f"} s/iter, ${f"${distinctEdges * 5 / firstSec}%.0f"} edge-visits/s) |
-         || iterations 6–10 wall (advance) | ${f"$secondSec%.1f"} s (${f"$perIter2%.1f"} s/iter) |
-         || per-iteration flatness (2nd block / 1st) | ${f"${perIter2 / perIter1}%.2f"}× — lineage cut holding |
-         || hub check | node ${top.head._1} ranks first at ${f"${top.head._2}%.6f"} (planted hub: true) |
-         || rank mass (≤ 1, dangling leak only) | ${f"$mass%.4f"} |
-         || peak heap | $heapMb MB |
-         |
-         |- each iteration is ONE edge⋈rank hash join + ONE dst-keyed agg
-         |  with map-side partials — the rank vector (${nNodes / 1000}k × 16 B) stays
-         |  broadcastable while the edge table never moves twice
-         |- `localCheckpoint` after every iteration caps the plan depth at
-         |  one step; the flatness row is the direct evidence (without the
-         |  cut, block 2 re-plans blocks 1+2 and the ratio grows with k)
-         |""".stripMargin
-    spliceSection(outMd, pagerankHeader, section)
-    println(s"""{"metric":"scale_pagerank","value":${firstSec + secondSec},"unit":"sec","n_edges":$nEdges,"distinct_edges":$distinctEdges,"per_iter_1":$perIter1,"per_iter_2":$perIter2,"mass":$mass,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val trianglesHeader = "## Triangle-counting graph stage"
-
-  /** Clique-gadget graph with a triangle-free cross chain — every
-    * triangle statistic has a CLOSED FORM: `nCliques` disjoint cliques
-    * of size `c` (block-allocated node ids) contribute exactly
-    * `nCliques · C(c,3)` triangles, `C(c−1,2)` per node, and `c−2`
-    * common neighbors per intra-clique edge; the representative chain
-    * (node 0 of clique j — node 0 of clique j+1) adds connectivity but
-    * provably closes NOTHING (consecutive representatives share no
-    * neighbor: one's neighbors live in clique j, the other's in j+1). */
-  def genCliqueGraph(
-      spark: SparkSession, nCliques: Long, c: Int): org.apache.spark.sql.DataFrame = {
-    val members = expr(s"sequence(0, ${c - 1})")
-    val intra = spark.range(nCliques).toDF("q")
-      .withColumn("i", explode(members))
-      .withColumn("j", explode(members))
-      .filter(col("i") < col("j"))
-      .select((col("q") * c + col("i")).as("src"), (col("q") * c + col("j")).as("dst"))
-    val chain = spark.range(nCliques - 1).toDF("q")
-      .select((col("q") * c).as("src"), ((col("q") + 1) * c).as("dst"))
-    intra.unionAll(chain)
-  }
-
-  /** `runMain graft.Scale triangles [nCliques] [c] [outMd]` — the
-    * degree-ordered wedge join at graph scale with exact invariants:
-    * total triangles, the per-node count spectrum, and the per-edge
-    * common-neighbor spectrum all checked against closed forms. */
-  private def trianglesMain(args: Array[String]): Unit = {
-    val nCliques = args.lift(1).map(_.toLong).getOrElse(500000L)
-    val c = args.lift(2).map(_.toInt).getOrElse(10)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_tri").toString
-    val (_, genSec) = timed {
-      genCliqueGraph(spark, nCliques, c).write.mode("overwrite").parquet(dir)
-    }
-    val edges = spark.read.parquet(dir)
-    val nEdges = edges.count()
-    val (total, triSec) = timed {
-      graft.operators.Graph.triangles(edges, "src", "dst").count()
-    }
-    val expectTotal = nCliques * c * (c - 1) * (c - 2) / 6
-    require(total == expectTotal,
-      s"triangle count: got $total, closed form says $expectTotal")
-    val (spectrum, cntSec) = timed {
-      graft.operators.Graph.triangleCounts(edges, "src", "dst")
-        .groupBy("n_triangles").agg(count(lit(1)).as("n_nodes"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    val perNode = (c - 1).toLong * (c - 2) / 2
-    require(spectrum == Map(perNode -> nCliques * c),
-      s"per-node spectrum: got $spectrum, expected {$perNode -> ${nCliques * c}}")
-    val (cnSpec, cnSec) = timed {
-      graft.operators.Graph.edgeCommonNeighbors(edges, "src", "dst")
-        .groupBy("cn").agg(count(lit(1)).as("n_edges"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-    val intraEdges = nCliques * c * (c - 1) / 2
-    require(cnSpec == Map((c - 2).toLong -> intraEdges, 0L -> (nCliques - 1)),
-      s"edge-cn spectrum: got $cnSpec")
-    // checkpoint A/B over a DERIVED edge frame — the g4/g5 regime, where
-    // the edge list is itself a membership self-join (order⋈order part
-    // co-occurrence in the inventory) that would otherwise re-run under
-    // every consumer subtree (degree agg, orientation, closing join). The
-    // parquet-scan runs above deliberately measure checkpoint-free: a scan
-    // lineage is cheap to replay, so the flag's value is specifically the
-    // derived-lineage delta recorded here.
-    val memDir = s"$dir/members"
-    spark.range(nCliques).toDF("q")
-      .withColumn("i", explode(expr(s"sequence(0, ${c - 1})")))
-      .select(col("q"), (col("q") * c + col("i")).as("node"))
-      .write.mode("overwrite").parquet(memDir)
-    val mem = spark.read.parquet(memDir)
-    // the .distinct() mirrors partCooccurrence (pair dedup across source
-    // rows) — it is the expensive exchange the checkpoint saves replaying
-    def derivedEdges = mem.as("x")
-      .join(mem.as("y"),
-        col("x.q") === col("y.q") && col("x.node") < col("y.node"))
-      .select(col("x.node").as("src"), col("y.node").as("dst"))
-      .distinct()
-    val expectSum = 3L * expectTotal // each triangle counted at its 3 nodes
-    val (sumOff, abOffSec) = timed {
-      graft.operators.Graph.triangleCounts(derivedEdges, "src", "dst")
-        .agg(sum("n_triangles")).head().getLong(0)
-    }
-    require(sumOff == expectSum, s"A/B off: got $sumOff, expected $expectSum")
-    val (sumOn, abOnSec) = timed {
-      graft.operators.Graph
-        .triangleCounts(derivedEdges, "src", "dst", checkpoint = true)
-        .agg(sum("n_triangles")).head().getLong(0)
-    }
-    require(sumOn == expectSum, s"A/B on: got $sumOn, expected $expectSum")
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$trianglesHeader (degree-ordered wedge join, ${nCliques / 1000}k planted cliques, closed-form invariants)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale triangles $nCliques $c"` —
-         |`Graph.triangles/triangleCounts/edgeCommonNeighbors` over a
-         |${nCliques / 1000}k-clique gadget graph (cliques of $c, $nEdges edges, plus a
-         |provably triangle-free representative chain): every statistic has a
-         |closed form, so the stage checks EXACT equality, not plausibility.
-         |
-         || metric | value |
-         ||---|---|
-         || graph generate + write | ${f"$genSec%.1f"} s |
-         || triangle enumeration (count ${expectTotal / 1000000}M) | ${f"$triSec%.1f"} s (${f"${expectTotal / triSec / 1000000}%.1f"}M triangles/s) |
-         || per-node counts + spectrum | ${f"$cntSec%.1f"} s — every one of ${nCliques * c / 1000000}M nodes at exactly C(${c - 1},2) = $perNode |
-         || per-edge common neighbors | ${f"$cnSec%.1f"} s — $intraEdges intra edges at cn=${c - 2}, ${nCliques - 1} chain edges at cn=0 |
-         || DERIVED-edge counts, checkpoint OFF | ${f"$abOffSec%.1f"} s — membership self-join lineage replayed per consumer subtree |
-         || DERIVED-edge counts, checkpoint ON | ${f"$abOnSec%.1f"} s — canon + orientation materialized once (the g4/g5 inventory setting) |
-         || peak heap | $heapMb MB |
-         |
-         |- degree orientation bounds every out-neighborhood O(√m) whatever
-         |  the skew; on this graph each wedge hinge holds ≤ ${(c - 1) / 2 + 1} out-edges
-         |- the chain edges prove the cn=0 path: edges in no triangle still
-         |  surface in the link-score output (left join, not inner)
-         |""".stripMargin
-    spliceSection(outMd, trianglesHeader, section)
-    println(s"""{"metric":"scale_triangles","value":${triSec + cntSec + cnSec},"unit":"sec","n_edges":$nEdges,"triangles":$total,"tri_sec":$triSec,"cnt_sec":$cntSec,"cn_sec":$cnSec,"heap_peak_mb":$heapMb}""")
-  }
-
-  private val triAbHeader = "## Triangle checkpoint A/B (sf0.1 part co-occurrence)"
-
-  /** `runMain graft.Scale triab [sfDir] [outMd]` — records the
-    * checkpoint flag's REGIME-DEPENDENCE as evidence instead of verdict
-    * archaeology: at 500k planted-clique nodes the `localCheckpoint` of
-    * the canon edge frame wins (triangles-stage derived-edge A/B: 38.1 s
-    * ON vs 46.2 s OFF), but on sf0.1's derived part co-occurrence graph
-    * (the g4 query's exact shape) the arms are ~neutral — within one
-    * action ReusedExchange already dedups the expensive co-occurrence
-    * self-join, so materialization only pays off across per-round
-    * actions. One warmup then median-of-3 per arm, cache cleared
-    * between runs. */
-  private def triAbMain(args: Array[String]): Unit = {
-    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def run(cp: Boolean): Double = {
-      spark.catalog.clearCache()
-      timed {
-        graft.operators.Graph.triangleCounts(
-          graft.queries.Inventory.partCooccurrence(spark, sfDir),
-          "src", "dst", checkpoint = cp)
-          .orderBy(col("n_triangles").desc, col("node").asc)
-          .limit(20).collect()
-      }._2
-    }
-    run(cp = true) // warmup: plan compile + JIT + page cache
-    val on = Seq(run(true), run(true), run(true)).sorted.apply(1)
-    val off = Seq(run(false), run(false), run(false)).sorted.apply(1)
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$triAbHeader
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale triab $sfDir"` —
-         |the g4 query shape (triangleCounts over the derived lineitem
-         |part-co-occurrence graph) with the canon-edge `localCheckpoint`
-         |ON vs OFF, median of 3 after warmup:
-         |
-         || arm | wall (s) |
-         ||---|---|
-         || checkpoint = true (g4's setting) | ${f"$on%.1f"} |
-         || checkpoint = false | ${f"$off%.1f"} |
-         |
-         |- together with the triangles stage's 500k-node derived-edge A/B
-         |  (38.1 s ON vs 46.2 s OFF) this pins the flag's regime: the
-         |  checkpoint pays only when the edge derivation is re-run across
-         |  ACTIONS; within one action ReusedExchange already dedups it,
-         |  so sf0.1 is ~neutral by design, not by accident
-         |""".stripMargin
-    spliceSection(outMd, triAbHeader, section)
-    println(s"""{"metric":"scale_triab","value":$on,"unit":"sec","on_sec":$on,"off_sec":$off,"sf":"$sfDir","heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val dsirHeader = "## DSIR importance-weighting stage"
-
-  /** Corpus for the DSIR stage: like [[genDedupCorpus]] but every 10th
-    * doc draws from a NARROW 1k-word vocabulary slice (ids < 1000 of the
-    * 5k corpus vocabulary) — the planted "target-like" population the
-    * importance weights must surface. */
-  def genDsirCorpus(
-      spark: SparkSession, nDocs: Long, tokensPerDoc: Int = 50,
-      vocabWide: Int = 5000, vocabNarrow: Int = 1000): org.apache.spark.sql.DataFrame =
-    spark.range(nDocs).toDF("doc_id")
-      .withColumn("vocab",
-        when(col("doc_id") % 10 === 0, lit(vocabNarrow.toLong))
-          .otherwise(lit(vocabWide.toLong)))
-      .withColumn("text",
-        array_join(
-          transform(sequence(lit(1), lit(tokensPerDoc)),
-            j => concat(lit("w"), pmod(xxhash64(col("doc_id"), j), col("vocab")))),
-          " "))
-      .select("doc_id", "text")
-
-  /** `runMain graft.Scale dsir [nDocs] [outMd]` — importance weighting
-    * over a corpus three orders of magnitude above the oracle scale:
-    * target = a separate narrow-vocabulary exemplar set, raw corpus with
-    * every 10th doc planted target-like. The separation check (mean
-    * planted weight > mean background weight) is the end-to-end signal
-    * DSIR exists to produce. */
-  private def dsirMain(args: Array[String]): Unit = {
-    val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val dir = Files.createTempDirectory("graft_scale_dsir").toString
-    val (_, genSec) = timed {
-      genDsirCorpus(spark, nDocs).write.mode("overwrite").parquet(s"$dir/raw")
-      // the exemplar target: 10k pure narrow-vocab docs, ids disjoint
-      genDsirCorpus(spark, 10000L, vocabWide = 1000)
-        .write.mode("overwrite").parquet(s"$dir/target")
-    }
-    val raw = spark.read.parquet(s"$dir/raw")
-    val target = spark.read.parquet(s"$dir/target")
-    val ((planted, background, scored), scoreSec) = timed {
-      val w = graft.operators.Importance
-        .dsirWeights(raw, target, "doc_id", "text")
+    val docs = spark.read.parquet(s"$base/docs")
+    val n0 = docs.count()
+    val (q, qualitySec) = timed {
+      val f = TextAnalysis.qualityFilter(docs, "text")
+        .filter(col("quality_ok"))
+        .select(docs.columns.toIndexedSeq.map(col): _*)
         .persist()
-      val scored = w.count()
-      val m = w.groupBy((col("doc_id") % 10 === 0).as("is_planted"))
-        .agg(avg("weight").as("mw"))
-        .collect().map(r => r.getBoolean(0) -> r.getDouble(1)).toMap
-      w.unpersist(blocking = false)
-      (m(true), m(false), scored)
+      f.count()
+      f
     }
-    require(planted > background,
-      s"planted target-like docs must outweigh background: $planted vs $background")
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$dsirHeader (hashed-n-gram importance weights over ${nDocs / 1000}k docs)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale dsir $nDocs"` —
-         |`Importance.dsirWeights` (4096 buckets) over a ${nDocs / 1000}k-doc corpus
-         |with every 10th doc drawn from the target's narrow 1k-word
-         |vocabulary; target = a separate 10k-doc exemplar set. The stage
-         |asserts the one thing DSIR is for: planted target-like docs
-         |carry strictly higher mean weight than the background.
-         |
-         || metric | value |
-         ||---|---|
-         || corpus + target generate + write | ${f"$genSec%.1f"} s |
-         || weight + score wall | ${f"$scoreSec%.1f"} s (${f"${nDocs / scoreSec}%.0f"} docs/s, $scored scored) |
-         || mean weight, planted target-like | ${f"$planted%.4f"} |
-         || mean weight, background | ${f"$background%.4f"} (separation ${f"${planted / background}%.2f"}×) |
-         || peak heap | $heapMb MB |
-         |
-         |- both distribution tables are 4096 rows whatever the corpus size
-         |  — they broadcast; the corpus shuffles ONCE (doc-keyed tf with
-         |  map-side combine) and the weight fold is bounded per doc
-         |""".stripMargin
-    spliceSection(outMd, dsirHeader, section)
-    println(s"""{"metric":"scale_dsir","value":$scoreSec,"unit":"sec","n_docs":$nDocs,"docs_per_s":${nDocs / scoreSec},"separation":${planted / background},"heap_peak_mb":$heapMb}""")
-    spark.stop()
+    val n1 = q.count()
+    val ((deduped, n2), dedupSec) = timed {
+      val groups = Dedup.nearDupGroups(q, "doc_id", "text").persist()
+      val kept = q.join(
+        groups.filter(col("is_representative")).select(col("doc_id")),
+        Seq("doc_id"), "left_semi").persist()
+      val n = kept.count()
+      groups.unpersist(blocking = false)
+      (kept, n)
+    }
+    val (n3, lineSec) = timed {
+      val chunks = Dedup.chunkDedup(deduped, "doc_id", "text", 10)
+      val n = chunks.filter(col("text_dedup").isNotNull).count()
+      chunks.unpersist(blocking = false)
+      n
+    }
+    q.unpersist(blocking = false)
+    deduped.unpersist(blocking = false)
+    CurateStats(genSec, qualitySec, dedupSec, lineSec, n0, n1, n2, n3)
   }
 
-  private val robustHeader = "## Robust-stats (median/MAD + winsorize) stage"
-
-  /** `runMain graft.Scale robust [nRows] [outMd]` — the a23/t45 operators
-    * at fact scale with EXACT closed forms: values `i % 1000` over 4 keys
-    * (uniform 0..999, `perVal = n/4000` rows per (key, value)), so every
-    * discrete percentile is arithmetic — p10 = 99, med = 499, p90 = 899,
-    * MAD = 250 — and the winsorize clamp counts and MAD outlier counts
-    * (k = 1.5 → |v−499| > 375) are exact products. The claim under test
-    * at 20M rows: the fact reduces to its (key, value) histogram before
-    * ANY window/sort sees it, and the stats broadcast back — no
-    * corpus-sized shuffle anywhere. */
-  private def robustMain(args: Array[String]): Unit = {
-    val nRows = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    require(nRows % 4000 == 0, s"nRows must be a multiple of 4000, got $nRows")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    // key by 1000-row BLOCK (not i%4 — gcd(4,1000)=4 would hand each key
-    // only the values ≡ k mod 4): every key sees each value 0..999 exactly
-    // nRows/4000 times
-    val df = spark.range(nRows)
-      .select((expr("id div 1000") % 4).cast("string").as("k"),
-        (col("id") % 1000).cast("double").as("v"))
-    val perVal = nRows / 4000 // rows per (key, value)
-    val perKey = nRows / 4
-    val (madRows, madSec) = timed {
-      graft.operators.Percentiles.madOutliers(df, "k", "v", k = 1.5)
-        .collect().sortBy(_.getString(0))
-    }
-    madRows.foreach { r =>
-      require(r.getAs[Long]("n") == perKey, s"n ${r.getAs[Long]("n")}")
-      require(r.getAs[Double]("med") == 499.0, s"med ${r.getAs[Double]("med")}")
-      require(r.getAs[Double]("mad") == 250.0, s"mad ${r.getAs[Double]("mad")}")
-      // |v-499| > 375  ⇔  v < 124 (124 values) or v > 874 (125 values)
-      require(r.getAs[Long]("n_outliers") == 249L * perVal,
-        s"outliers ${r.getAs[Long]("n_outliers")} want ${249L * perVal}")
-    }
-    val (winAgg, winSec) = timed {
-      graft.operators.Percentiles.winsorize(df, "k", "v", 10, 90)
-        .groupBy("k")
-        .agg(count(lit(1)).as("n"),
-          sum(col("v_w").cast("decimal(18,2)")).cast("double").as("sum_w"),
-          sum(when(col("clamped") === -1, 1L).otherwise(0L)).as("n_low"),
-          sum(when(col("clamped") === 1, 1L).otherwise(0L)).as("n_high"))
-        .collect().sortBy(_.getString(0))
-    }
-    // p10 = 99, p90 = 899: clamped sum per key =
-    // perVal·(99·99 + Σ_{99..899} v + 899·100)
-    val sumMid = (99L to 899L).sum
-    val wantSum = (perVal * (99L * 99L + sumMid + 899L * 100L)).toDouble
-    winAgg.foreach { r =>
-      require(r.getAs[Long]("n") == perKey)
-      require(r.getAs[Double]("sum_w") == wantSum,
-        s"sum_w ${r.getAs[Double]("sum_w")} want $wantSum")
-      require(r.getAs[Long]("n_low") == 99L * perVal, s"n_low ${r.getAs[Long]("n_low")}")
-      require(r.getAs[Long]("n_high") == 100L * perVal, s"n_high ${r.getAs[Long]("n_high")}")
-    }
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$robustHeader (${nRows / 1000000}M rows, 4 keys, exact closed-form oracles)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale robust $nRows"` —
-         |`Percentiles.madOutliers` (a23) and `Percentiles.winsorize` (t45)
-         |over `i % 1000` values: p10/med/p90/MAD and every clamp/outlier
-         |count is arithmetic (med 499, MAD 250, ${249L * perVal} outliers
-         |per key at k=1.5), checked exactly.
-         |
-         || metric | value |
-         ||---|---|
-         || median/MAD + outlier gate | ${f"$madSec%.1f"} s (${f"${nRows / madSec / 1e6}%.1f"}M rows/s) |
-         || winsorize + clamp rollup | ${f"$winSec%.1f"} s (${f"${nRows / winSec / 1e6}%.1f"}M rows/s) |
-         || peak heap | $heapMb MB |
-         |
-         |- the fact reduces to its 4000-row (key, value) histogram before
-         |  any window runs, and the per-key stats broadcast back — the
-         |  corpus itself never shuffles, which is the whole design claim
-         |  at 100 TB (quantize first for continuous values)
-         |""".stripMargin
-    spliceSection(outMd, robustHeader, section)
-    println(s"""{"metric":"scale_robust","value":${madSec + winSec},"unit":"sec","n_rows":$nRows,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val labelPropHeader = "## Min-label propagation graph stage"
-
-  /** `runMain graft.Scale labelprop [nBits] [rounds] [outMd]` — bounded
-    * min-label propagation (g7's operator) at graph scale with an EXACT
-    * per-node closed form on the bfs stage's +2^j digraph: after k
-    * rounds label(n) = 0 IFF dist(0 → n) ≤ k IFF popcount(n) ≤ k (the
-    * bfs stage's theorem, read through the label lens), so the zero-set
-    * must be exactly the popcount-≤k ball — Σ_{d≤k} C(b,d) nodes,
-    * checked per node via bit_count. Unlike BFS the label frame never
-    * shrinks to a frontier: every round joins ALL 2^b labels against
-    * all ~b·2^b edges — the worst-case regime for the operator, which
-    * is exactly what a scale stage should measure. */
-  private def labelPropMain(args: Array[String]): Unit = {
-    val nBits = args.lift(1).map(_.toInt).getOrElse(20)
-    val rounds = args.lift(2).map(_.toInt).getOrElse(6)
-    val outMd = args.lift(3).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val v = 1L << nBits
-    val dir = Files.createTempDirectory("graft_scale_labelprop").toString
-    val (_, genSec) = timed {
-      spark.range(v).toDF("src")
-        .select(col("src"), explode(array((0 until nBits).map(j => lit(1L << j)): _*)).as("step"))
-        .withColumn("dst", col("src") + col("step"))
-        .filter(col("dst") < v)
-        .select("src", "dst")
-        .write.mode("overwrite").parquet(dir)
-    }
-    val edges = spark.read.parquet(dir)
-    val nEdges = edges.count()
-    val (labels, propSec) = timed {
-      val r = graft.operators.Graph.minLabelPropagation(
-        edges, "src", "dst", iterations = rounds, checkpoint = true)
-      r.count(); r
-    }
-    // exact closed form: label(n) == 0  ⇔  popcount(n) <= rounds
-    val wrong = labels.filter(
-      (col("label") === 0L) =!= (bit_count(col("node")) <= rounds)).count()
-    require(wrong == 0L, s"$wrong nodes violate the popcount-ball closed form")
-    def choose(n: Int, k: Int): Long =
-      (1 to k).foldLeft(1L)((a, i) => a * (n - i + 1) / i)
-    val zeroExpected = (0 to rounds).map(choose(nBits, _)).sum
-    val zeroGot = labels.filter(col("label") === 0L).count()
-    require(zeroGot == zeroExpected, s"zero-set $zeroGot, want $zeroExpected")
-    // propagation never raises a label
-    val raised = labels.filter(col("label") > col("node")).count()
-    require(raised == 0L, s"$raised labels exceed their node id")
-    labels.unpersist(blocking = false)
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$labelPropHeader (2^$nBits nodes, ${nEdges / 1000000}M edges, $rounds rounds, exact per-node oracle)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale labelprop $nBits $rounds"` —
-         |`Graph.minLabelPropagation` (g7) over the bfs stage's +2^j
-         |digraph. Closed form: after k rounds label(n) = 0 IFF
-         |popcount(n) ≤ k, so the zero-set is the popcount ball —
-         |$zeroExpected of ${v / 1000}k nodes here — checked per node via
-         |bit_count, plus label ≤ node everywhere.
-         |
-         || metric | value |
-         ||---|---|
-         || graph generate + write | ${f"$genSec%.1f"} s ($nEdges edges) |
-         || $rounds propagation rounds | ${f"$propSec%.1f"} s (${f"${nEdges.toDouble * rounds / propSec / 1e6}%.1f"}M edge-visits/s equivalent) |
-         || per-node closed form | ${v / 1000}k/${v / 1000}k nodes (zero-set = popcount ≤ $rounds ball, $zeroGot nodes) |
-         || peak heap | $heapMb MB |
-         |
-         |- unlike BFS there is no frontier: every round joins the FULL
-         |  label vector against the edge list — the operator's worst-case
-         |  regime, measured on purpose (per-round cost is flat, bounded by
-         |  |E| + |V|, and `localCheckpoint` keeps the plan depth constant)
-         |- the zero-set check is two-sided: a label that spreads too fast
-         |  (a join bug) or too slow (a dropped round) both break the
-         |  binomial count
-         |""".stripMargin
-    spliceSection(outMd, labelPropHeader, section)
-    println(s"""{"metric":"scale_labelprop","value":$propSec,"unit":"sec","n_bits":$nBits,"rounds":$rounds,"n_edges":$nEdges,"heap_peak_mb":$heapMb}""")
-    spark.stop()
-  }
-
-  private val bfsHeader = "## BFS hop-distance graph stage"
-
-  /** `runMain graft.Scale bfs [nBits] [outMd]` — frontier-expansion BFS
-    * at graph scale with an EXACT closed form: nodes 0..2^b−1, a
-    * directed edge i → i+2^j for every j with i+2^j < 2^b (~b·2^b
-    * edges). The minimum number of powers of two summing to n is
-    * popcount(n), so dist(0 → n) = popcount(n) for EVERY node, and the
-    * distance histogram must be exactly the binomial row C(b, d) — a
-    * per-node, per-level correctness check no sampled oracle could
-    * give. Frontier sizes sweep 1 → C(b, b/2) (the worst mid-level) →
-    * 1, exercising both the tiny-frontier and the fat-frontier join
-    * regimes in one run. */
-  private def bfsMain(args: Array[String]): Unit = {
-    val nBits = args.lift(1).map(_.toInt).getOrElse(20)
-    val outMd = args.lift(2).getOrElse("SCALE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val v = 1L << nBits
-    val dir = Files.createTempDirectory("graft_scale_bfs").toString
-    val (_, genSec) = timed {
-      spark.range(v).toDF("src")
-        .select(col("src"), explode(array((0 until nBits).map(j => lit(1L << j)): _*)).as("step"))
-        .withColumn("dst", col("src") + col("step"))
-        .filter(col("dst") < v)
-        .select("src", "dst")
-        .write.mode("overwrite").parquet(dir)
-    }
-    val edges = spark.read.parquet(dir)
-    val nEdges = edges.count()
-    val (dist, bfsSec) = timed {
-      val r = graft.operators.Graph.hopDistance(
-        edges, "src", "dst", Seq(0L).toDF("pk"), "pk",
-        maxHops = nBits, checkpoint = true)
-      r.count(); r
-    }
-    // exact closed form: dist(n) = popcount(n); per-level histogram = C(b, d)
-    val hist = dist.groupBy("dist").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def choose(n: Int, k: Int): Long =
-      (1 to k).foldLeft(1L)((a, i) => a * (n - i + 1) / i)
-    (0 to nBits).foreach { d =>
-      require(hist.getOrElse(d.toLong, 0L) == choose(nBits, d),
-        s"level $d: got ${hist.getOrElse(d.toLong, 0L)}, want C($nBits,$d)=${choose(nBits, d)}")
-    }
-    val reached = hist.values.sum
-    require(reached == v, s"reached $reached of $v nodes")
-    val wrong = dist.filter(
-      col("dist") =!= bit_count(col("node"))).count()
-    require(wrong == 0L, s"$wrong nodes off the popcount closed form")
-    dist.unpersist(blocking = false)
-    val heapMb = heapPeakMb()
-    val section =
-      s"""
-         |$bfsHeader (2^$nBits nodes, ${nEdges / 1000000}M power-of-two edges, exact per-node oracle)
-         |
-         |`SPARK_GRAFT_CPUS=$cpus sbt "runMain graft.Scale bfs $nBits"` —
-         |`Graph.hopDistance` from node 0 over the add-a-power-of-two
-         |digraph: dist(n) = popcount(n) EXACTLY for all ${v / 1000}k nodes, and
-         |each BFS level d must hold exactly C($nBits, d) nodes — checked
-         |per node (bit_count) and per level (binomial row).
-         |
-         || metric | value |
-         ||---|---|
-         || graph generate + write | ${f"$genSec%.1f"} s ($nEdges edges) |
-         || BFS wall ($nBits levels) | ${f"$bfsSec%.1f"} s (${f"${nEdges.toDouble * nBits / bfsSec / 1e6}%.1f"}M edge-visits/s equivalent) |
-         || per-node closed form | ${v / 1000}k/${v / 1000}k nodes at dist = popcount(node) |
-         || level histogram | C($nBits, d) for every d (fat mid-level ${choose(nBits, nBits / 2)} nodes) |
-         || peak heap | $heapMb MB |
-         |
-         |- each round joins ONLY the frontier against the edge list and
-         |  anti-joins the seen set: the fat middle levels (~${choose(nBits, nBits / 2) / 1000}k nodes)
-         |  bound the per-round shuffle, never the full distance vector
-         |- `localCheckpoint` per round caps plan depth (the pagerank
-         |  lineage-cut contract) — $nBits rounds stay flat
-         |""".stripMargin
-    spliceSection(outMd, bfsHeader, section)
-    println(s"""{"metric":"scale_bfs","value":$bfsSec,"unit":"sec","n_bits":$nBits,"n_edges":$nEdges,"heap_peak_mb":$heapMb}""")
-    spark.stop()
+  val curate: Stage = Stage("curate", "## Curate funnel stage",
+      Seq("nDocs" -> 1000000L), tiny = "4000") { (spark, p, base) =>
+    val nDocs = p.long("nDocs")
+    val st = runCurate(spark, nDocs, base)
+    import st._
+    val livePairs = nDocs / 20 - nDocs / 100
+    require(n0 == nDocs, s"corpus count $n0 != $nDocs")
+    require(n1 == nDocs - nDocs / 100, s"quality invariant broke: $n1")
+    val found = n1 - n2
+    require(found >= (livePairs * 9) / 10 && found <= livePairs,
+      s"near-dup invariant broke: found $found of $livePairs live pairs")
+    require(n3 == n1 - livePairs,
+      s"fuzzy+exact layering invariant broke: n3=$n3 expected ${n1 - livePairs}")
+    val totalSec = qualitySec + dedupSec + lineSec
+    StageResult(
+      s"(quality → near-dup → line dedup over ${nDocs / 1000}k docs, production hash family)",
+      """the composed corpus-curation funnel (the `corpus curate` CLI's
+        |RefinedWeb ordering) end to end, with plants that make EVERY
+        |stage's effect a closed-form equality: exactly-too-short docs at
+        |1%, near-dup pairs at every 20th doc.""".stripMargin,
+      Seq(
+        "corpus generate + write" -> f"$genSec%.1f s",
+        "1 quality gate" ->
+          f"$qualitySec%.1f s, $n0 → $n1 docs — n − n/100 EXACT (${n1 == nDocs - nDocs / 100})",
+        "2 near-dup dedup (MinHash-LSH → Jaccard → components)" ->
+          f"$dedupSec%.1f s, $n1 → $n2 docs — dropped $found of $livePairs live pairs (recall ${found.toDouble / livePairs}%.3f, 0 false positives possible past exact-Jaccard verify)",
+        "3 chunk/line dedup (10-token first-occurrence)" ->
+          f"$lineSec%.1f s, $n2 → $n3 docs — n1 − P EXACT regardless of stage-2 recall (${n3 == n1 - livePairs}) — missed fuzzy pairs die here",
+        "funnel wall" -> f"$totalSec%.1f s (${nDocs / totalSec}%.0f docs/s end-to-end)"),
+      """- the n3 equality is the fuzzy+exact LAYERING guarantee: chunk-level
+        |  first-occurrence dedup catches exactly the pairs LSH recall
+        |  missed, so final yield is deterministic even though stage 2 is
+        |  approximate — the reason curate orders the stages this way""".stripMargin)
   }
 }

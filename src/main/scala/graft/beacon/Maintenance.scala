@@ -70,9 +70,7 @@ object Maintenance {
     val kept = df
       .filter(col("month").isin(months: _*))
       .filter(!col("slot").between(startSlot, endSlot))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    graft.core.Sessions.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       // Dynamic overwrite only rewrites partitions PRESENT in `kept`: a
       // month whose every row fell in the deleted range would otherwise
       // silently keep its stale files. Write the surviving months first
@@ -87,11 +85,6 @@ object Maintenance {
           graft.core.Fs.deleteDir(spark, s"$tableDir/month=$m")
         }
       } finally kept.unpersist()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
   }
 

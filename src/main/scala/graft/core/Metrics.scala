@@ -11,6 +11,11 @@ import org.apache.spark.util.LongAccumulator
   */
 object Metrics {
 
+  /** `f`'s result and its wall seconds. */
+  def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
+  }
+
   final case class EngineMetrics(
       apiFetched: LongAccumulator,
       apiEmpty: LongAccumulator,

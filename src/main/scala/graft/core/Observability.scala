@@ -75,7 +75,7 @@ object Observability {
 
   def health: Map[String, String] = healthState.toMap
 
-  private def jsonEscape(s: String): String =
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -46,4 +46,21 @@ object Sessions {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `f` with the session confs `kvs` set, then restore each key as
+    * it was (unset again when it had not been set). */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(f: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** A session with Spark's own defaults (only the master is set): for
+    * checks that a caller does not depend on `local`'s settings. */
+  def plain(cores: Int): SparkSession = {
+    val s = SparkSession.builder().master(s"local[$cores]").getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -303,16 +303,12 @@ object IncrementalCurate {
       // and delete them explicitly after the write
       val survivedBuckets = next.select("bucket").distinct()
         .collect().map(_.getLong(0)).toSet
-      val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      try {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      graft.core.Sessions.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         // cluster by bucket before the partitioned write: without it every
         // shuffle task contributes a file to every touched bucket dir
         // (tasks × buckets tiny files)
         next.repartition(col("bucket")).write.mode("overwrite")
           .partitionBy("bucket").parquet(s"$cacheDir/live")
-      } finally {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
       }
       val emptied = deltaBuckets.filterNot(survivedBuckets)
       if (emptied.nonEmpty) {

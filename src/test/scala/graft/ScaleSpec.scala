@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Smoke for the scale-run harness (`graft.Scale`): the SAME code the
-  * 1M-slot SCALE.md run exercises, at tiny N, asserting the parity
-  * invariants the big run reports — so the harness can't bit-rot between
-  * rounds. */
+  * SCALE.md runs exercise, at tiny N — every registered stage with its
+  * own `require` invariants, plus the parity invariants of the core runs
+  * asserted directly — so no stage can bit-rot unseen. */
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -82,5 +82,106 @@ class ScaleSpec extends AnyFunSuite {
       .agg(max("c")).head().getDouble(0)
     assert(randomCos < 0.9, s"independent vectors suspiciously similar: $randomCos")
     df.unpersist(blocking = false)
+  }
+
+  private val broadcastKey = "spark.sql.autoBroadcastJoinThreshold"
+  private var broadcastBefore: Option[String] = None
+
+  // every registered stage at its tiny size: its require(...) invariants
+  // hold, its section and JSON line render, its base dir is deleted, and
+  // it leaves the shared session's confs as it found them
+  Scale.stages.foreach { stage =>
+    test(s"stage ${stage.name}: tiny run passes its invariants") {
+      if (broadcastBefore.isEmpty) broadcastBefore = Some(spark.conf.get(broadcastKey))
+      val confs = spark.conf.getAll
+      val (params, _) = stage.parse(stage.tiny.split(" ").toSeq)
+      val out = Scale.execute(spark, stage, params)
+      assert(!Files.exists(Paths.get(out.base)), s"${out.base} left behind")
+      val md = Scale.render(stage, params, 4, out)
+      assert(md.startsWith(stage.header))
+      assert(md.contains(s"runMain graft.Scale ${stage.name} ${params.cli}"))
+      assert(md.contains("| peak heap |"))
+      val json = Scale.json(stage, out)
+      assert(json.startsWith(s"""{"metric":"scale_${stage.name}","value":"""))
+      assert(json.forall(c => c >= ' ' && c <= '~'), json)
+      assert(spark.conf.getAll === confs)
+    }
+  }
+
+  test("stages leave the shared session's broadcast threshold unchanged") {
+    assert(broadcastBefore.nonEmpty)
+    assert(spark.conf.get(broadcastKey) === broadcastBefore.get)
+  }
+
+  test("registry: every stage has a unique name and tiny parameters that parse") {
+    assert(Scale.stages.map(_.name).distinct.size === Scale.stages.size)
+    assert(Scale.stages.size === 37)
+    Scale.stages.foreach(s => s.parse(s.tiny.split(" ").toSeq))
+  }
+
+  test("registry: an unknown stage name is rejected before any session is built") {
+    val e = intercept[IllegalArgumentException](Scale.main(Array("pagernk", "10")))
+    assert(e.getMessage.contains("unknown stage 'pagernk'"))
+    Scale.stages.foreach(s => assert(e.getMessage.contains(s.name)))
+    assert(!spark.sparkContext.isStopped)
+  }
+
+  test("registry: a numeric or absent first argument selects backfill") {
+    assert(Scale.resolve(Seq("2000", "out.md")) === ((Scale.backfill, Seq("2000", "out.md"))))
+    assert(Scale.resolve(Nil)._1 eq Scale.backfill)
+    val (st, rest) = Scale.resolve(Seq("pagerank", "20", "10"))
+    assert(st.name === "pagerank")
+    val (p, outMd) = st.parse(rest)
+    assert(p.long("nEdges") === 20L && p.long("nNodes") === 10L && outMd === "SCALE.md")
+    assert(st.parse(Nil)._1.long("nEdges") === 20000000L)
+    intercept[IllegalArgumentException](st.parse(Seq("x")))
+    intercept[IllegalArgumentException](st.parse(Seq("1", "2", "out.md", "extra")))
+  }
+
+  test("execute deletes the base dir when the stage throws") {
+    var seen = ""
+    val failing = Scale.Stage("failing", "## failing", Nil, tiny = "") { (s, _, base) =>
+      seen = base
+      s.range(10).write.parquet(s"$base/t")
+      throw new IllegalStateException("boom")
+    }
+    val e = intercept[IllegalStateException](Scale.execute(spark, failing, Scale.Params(Nil)))
+    assert(e.getMessage === "boom")
+    assert(seen.nonEmpty && !Files.exists(Paths.get(seen)))
+  }
+
+  test("spliceSection: replaces a middle section, appends an absent one, is idempotent") {
+    val md = Files.createTempFile("graft_splice", ".md")
+    try {
+      Files.writeString(md, "# Top\n\nintro\n\n## A stage\n\nold a\n\n## B stage (x)\n\nold b\n\n## C stage\n\nc body\n")
+      Scale.spliceSection(md.toString, "## B stage", "## B stage (y)\n\nnew b\n")
+      assert(Files.readString(md) ===
+        "# Top\n\nintro\n\n## A stage\n\nold a\n\n## B stage (y)\n\nnew b\n\n## C stage\n\nc body\n")
+      Scale.spliceSection(md.toString, "## D stage", "## D stage\n\nd body\n")
+      val withD = Files.readString(md)
+      assert(withD.endsWith("## C stage\n\nc body\n\n## D stage\n\nd body\n"))
+      Scale.spliceSection(md.toString, "## D stage", "## D stage\n\nd body\n")
+      assert(Files.readString(md) === withD)
+      // the top-level header splices in place too, keeping every section
+      Scale.spliceSection(md.toString, "# Top", "# Top\n\nnew intro\n")
+      assert(Files.readString(md) === withD.replace("intro", "new intro"))
+      // a top-level section that follows a replaced one is kept too
+      Files.writeString(md, "## A stage\n\nold a\n\n# Top\n\nintro\n")
+      Scale.spliceSection(md.toString, "## A stage", "## A stage\n\nnew a\n")
+      assert(Files.readString(md) === "## A stage\n\nnew a\n\n# Top\n\nintro\n")
+    } finally Files.deleteIfExists(md)
+  }
+
+  test("SCALE.md: every runMain graft.Scale line resolves to a stage and parses") {
+    val lines = Files.readAllLines(Paths.get("SCALE.md")).toArray.map(_.toString)
+    val cmd = """runMain graft\.Scale([^"`]*)""".r
+    val found = lines.flatMap(l => cmd.findAllMatchIn(l).map(_.group(1).trim.split("\\s+").toSeq.filter(_.nonEmpty)))
+    assert(found.length >= 37, s"only ${found.length} commands in SCALE.md")
+    val named = found.map { args =>
+      val (stage, rest) = Scale.resolve(args)
+      stage.parse(rest)
+      stage.name
+    }.toSet
+    assert(named === Scale.stages.map(_.name).toSet)
   }
 }
