@@ -306,7 +306,7 @@ object Scale {
       rawRows: Long, blocksRows: Long, attRows: Long,
       latestCount: Long, maxSlot: Long, monthRows: Int,
       heapAfterIngestMb: Long, heapAfterTransformMb: Long, heapFinalMb: Long,
-      expectedPresent: Long)
+      expectedPresent: Long, expectedMaxSlot: Long)
 
   /** The measurable core of the backfill stage (ScaleSpec also checks it
     * at tiny N). */
@@ -360,11 +360,17 @@ object Scale {
       (n, maxSlot, monthly)
     }
     val (latestCount, maxSlot, monthRows) = queryResults
+    // every slot ≡ 31 (mod 32) is 404-empty, so the last structured slot
+    // is the largest s < totalSlots with s % 32 != 31
+    val expectedMaxSlot =
+      if ((totalSlots - 1) % 32 == 31) totalSlots - 2 else totalSlots - 1
+    require(maxSlot == expectedMaxSlot,
+      s"max structured slot $maxSlot, expected $expectedMaxSlot")
     ScaleStats(totalSlots, chunkSize, ranges.size, nWaves,
       ingestSec, transformSec, querySec, rawRows, blocksRows, attRows,
       latestCount, maxSlot, monthRows,
       heapAfterIngest, heapAfterTransform, heapPeakMb(),
-      (0L until totalSlots).count(_ % 32 != 31))
+      (0L until totalSlots).count(_ % 32 != 31), expectedMaxSlot)
   }
 
   val backfill: Stage = Stage("backfill", "# SCALE",
@@ -373,6 +379,9 @@ object Scale {
     // 100 chunks of 1000 slots = 100k slots per fused job
     val st = run(spark, p.long("totalSlots"), chunkSize = 1000L, waveChunks = 100, base, cores)
     import st._
+    val lastSlot =
+      if (expectedMaxSlot == totalSlots - 1) "= totalSlots − 1: the last slot is present"
+      else "= totalSlots − 2: the last slot is 404-empty"
     StageResult(
       "— 1M-slot synthetic backfill (order-of-magnitude stress run)",
       s"""end-to-end run of the PRODUCTION paths on a deterministic synthetic
@@ -386,7 +395,7 @@ object Scale {
         "latest() count + max + monthly rollup" ->
           f"$querySec%.1f s — $latestCount latest blocks, $monthRows month rows, ${latestCount / querySec}%.0f rows/s"),
       s"""- slots: $totalSlots (chunk size $chunkSize); present slots $expectedPresent — raw/blocks row counts match exactly: ${rawRows == expectedPresent && blocksRows == expectedPresent}
-         |- max structured slot: $maxSlot (= totalSlots − 2: the last slot is 404-empty by construction)
+         |- max structured slot: $maxSlot ($lastSlot; every slot ≡ 31 mod 32 is 404-empty by construction)
          |- peak driver+executor heap (single JVM local[$cores]): after ingest ${heapAfterIngestMb} MB, after transform ${heapAfterTransformMb} MB, final ${heapFinalMb} MB
          |- driver never holds row data: ranges only ($chunks tuples), slots explode executor-side, ledger transitions are bulk appends
          |- baseline floor (reference BASELINE.md: ≥1,000 rows/s batch insert): exceeded by ${f"${rawRows / ingestSec / 1000.0}%.0f"}×""".stripMargin)

@@ -434,119 +434,6 @@ object Dedup {
           size(array_union(col("sh1"), col("sh2"))))
       .select("d1", "d2", "jaccard")
 
-  /** Connected components over an undirected pair list (d1,d2): driver
-    * union-find below `driverThreshold` edges (exact, zero shuffles),
-    * else distributed min-label propagation WITH pointer jumping — the
-    * star-contraction-family combination that converges in O(log n)
-    * rounds rather than O(diameter) (a long chain of templated near-dups
-    * resolves in ~log₂ hops). Returns (id, component) where component =
-    * min id of the cluster. The distributed path returns a
-    * localCheckpoint-backed frame: lineage-free, outside the session
-    * cache, blocks reclaimed by the ContextCleaner once dropped. */
-  def connectedComponents(
-      pairs: DataFrame, maxIter: Int = 10,
-      driverThreshold: Long = 1000000L): DataFrame = {
-    // After jaccard confirmation the edge set is orders of magnitude
-    // smaller than the corpus (only actual near-dups). Below the
-    // threshold a driver union-find is exact, allocation-light, and
-    // avoids maxIter shuffle rounds; the distributed label-propagation
-    // loop below remains the giant-graph path. 1M edges ≈ 30 MB of
-    // driver heap in the primitive-array union-find (r17 — the boxed
-    // Map form this replaces cost ~0.5 GB at the old 5M ceiling, a
-    // cluster-driver OOM shape).
-    val spark = pairs.sparkSession
-    // the driver union-find works on long ids; string/UUID ids would cast
-    // to null and NPE — route them to the type-agnostic distributed path
-    val integralIds = {
-      import org.apache.spark.sql.types._
-      pairs.schema.fields
-        .filter(f => f.name == "d1" || f.name == "d2")
-        .forall(f => Set[DataType](ByteType, ShortType, IntegerType, LongType)(f.dataType))
-    }
-    // single bounded action decides the path AND fetches the edges — a
-    // separate count() probe would cost one full extra pass over the
-    // (possibly expensive) upstream pipeline. Collected as a PRIMITIVE
-    // Dataset[(Long,Long)] (tuple encoder), not Rows: millions of boxed
-    // Rows with object headers cost hundreds of driver MB; primitive
-    // tuples are ~3× lighter and never materialize a GenericRow each
-    val bounded: Array[(Long, Long)] =
-      if (integralIds) {
-        import spark.implicits._
-        pairs.select(col("d1").cast("long"), col("d2").cast("long"))
-          .as[(Long, Long)]
-          .limit(DriverUnionFind.probeLimit(driverThreshold)).collect()
-      } else Array.empty
-    if (integralIds && bounded.length <= driverThreshold) {
-      val ids = DriverUnionFind.sortedIds(bounded)
-      val root = DriverUnionFind.unionAll(ids, bounded)
-      val rows = Array.tabulate(ids.length)(i => (ids(i), ids(root(i))))
-      import spark.implicits._
-      // cast back to the coerced d1∪d2 input type so the output schema no
-      // longer depends on which path the data size picks (r16 advisory)
-      val idType = pairs.select(col("d1"))
-        .union(pairs.select(col("d2"))).schema.head.dataType
-      return DriverUnionFind.datasetOf(spark, rows.toSeq)
-        .toDF("id", "component")
-        .select(col("id").cast(idType).as("id"),
-          col("component").cast(idType).as("component"))
-    }
-    val sym = pairs.select(col("d1"), col("d2"))
-      .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-      .distinct()
-      .persist()
-    // Each round interleaves one neighbor-min PROPAGATION with one
-    // POINTER JUMP (comp(u) ← comp(comp(u))) — the star-contraction
-    // family's trick that makes convergence O(log n) rounds instead of
-    // O(diameter): a 1M-hop chain resolves in ~20 rounds, not 1M.
-    // Loop state is localCheckpoint'ed, not persisted: each round
-    // references `comp` several times, so an un-truncated lineage grows
-    // exponentially (planner OOM by ~iteration 30); eager localCheckpoint
-    // cuts it to the materialized blocks, the ContextCleaner reclaims
-    // them, and nothing enters the session's cacheManager.
-    var comp = sym.select(col("d1").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
-    var i = 0
-    var converged = false
-    while (!converged && i < maxIter) {
-      val nbrMin = sym
-        .join(comp, sym("d2") === comp("id"))
-        .groupBy(sym("d1").as("id"))
-        .agg(min("component").as("nbr_min"))
-      val propagated = comp
-        .join(nbrMin, Seq("id"), "left")
-        .select(
-          col("id"),
-          least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("component"))
-      // pointer jump: follow the label one hop (labels are node ids, so
-      // every label exists as an id row)
-      val parents = propagated
-        .select(col("id").as("pid"), col("component").as("pcomp"))
-      val next = propagated
-        .join(parents, propagated("component") === parents("pid"), "left")
-        .select(
-          propagated("id"),
-          least(propagated("component"),
-            coalesce(col("pcomp"), propagated("component"))).as("component"))
-        .localCheckpoint(true)
-      val changed = next.join(
-          comp.withColumnRenamed("component", "prev"), Seq("id"))
-        .filter(col("component") =!= col("prev"))
-        .limit(1).count() > 0
-      comp = next
-      converged = !changed
-      i += 1
-    }
-    if (!converged)
-      System.err.println(
-        s"[graft] WARNING: connectedComponents did not converge in $maxIter " +
-          s"iterations (graph needs more than ~2^$maxIter-hop label reach); " +
-          "components may be split — raise maxIter")
-    sym.unpersist(blocking = false)
-    comp
-  }
-
   /** Full near-dup grouping pipeline: MinHash-LSH candidates → exact
     * shingle-Jaccard ≥ threshold → connected components → (id, group,
     * is_representative). Docs with no near-dup get their own group.
@@ -574,21 +461,28 @@ object Dedup {
       .filter(col("jaccard") >= jaccardThreshold)
       .select("d1", "d2")
       .persist()
-    val comps = connectedComponents(confirmed) // materializes `confirmed`
+    val comps = Graph.connectedComponents(confirmed, "d1", "d2") // materializes `confirmed`
     candidates.unpersist(blocking = false)
     sh.unpersist(blocking = false)
-    val out = df.select(col(idCol).as("id"))
-      .join(comps, Seq("id"), "left")
+    // comps is either a driver-local frame (union-find path) or
+    // localCheckpoint-backed (distributed path) — neither holds a
+    // cacheManager entry, so the result is leak-free without extra actions
+    val out = groupsFrom(df, idCol, comps)
+    confirmed.unpersist(blocking = false)
+    out
+  }
+
+  /** (idCol, group, is_representative) for every row of `df` from the
+    * [[Graph.connectedComponents]] labels of its near-dup pairs: a doc in
+    * no pair is its own group. */
+  private def groupsFrom(df: DataFrame, idCol: String, comps: DataFrame): DataFrame =
+    df.select(col(idCol).as("id"))
+      .join(comps.select(col("node").as("id"), col("label").as("component")),
+        Seq("id"), "left")
       .select(
         col("id").as(idCol),
         coalesce(col("component"), col("id")).as("group"))
       .withColumn("is_representative", col(idCol) === col("group"))
-    // comps is either a driver-local frame (union-find path) or
-    // localCheckpoint-backed (distributed path) — neither holds a
-    // cacheManager entry, so `out` is leak-free without extra actions
-    confirmed.unpersist(blocking = false)
-    out
-  }
 
   /** Embedding-cosine near-dup: hyperplane-LSH bucket (see
     * [[Similarity.hyperplaneSignature]]) then exact cosine within bucket.
@@ -801,14 +695,9 @@ object Dedup {
     // exact cached plan, not a .select derivative of it
     val cached = embeddingNearDupPairs(
       df, idCol, vecCol, planes, seed, threshold, bands, md5Family)
-    val comps = connectedComponents(cached.select("d1", "d2"))
+    val comps = Graph.connectedComponents(cached, "d1", "d2")
     cached.unpersist(blocking = false)
-    df.select(col(idCol).as("id"))
-      .join(comps, Seq("id"), "left")
-      .select(
-        col("id").as(idCol),
-        coalesce(col("component"), col("id")).as("group"))
-      .withColumn("is_representative", col(idCol) === col("group"))
+    groupsFrom(df, idCol, comps)
   }
 
   /** Non-overlapping `chunkTokens`-token chunks of a document, with their

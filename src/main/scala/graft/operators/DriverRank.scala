@@ -1,28 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Driver-side EXACT PageRank kernels over a BOUNDED edge list — the
-  * [[DriverUnionFind]] bounded-collect idiom applied to the rank fixed
-  * point (guide §5: the driver may do O(tiny) work when the distributed
-  * loop's cost is pure per-action overhead).
+/** Driver-side EXACT PageRank kernels over a bounded edge list (routing:
+  * [[DriverGate]]).
   *
-  * Why this exists: the declared rank queries (g1/g2/g3) run over the
-  * event-type TRANSITION graph, whose size is bounded by the square of
-  * the event-type cardinality — a few dozen edges at ANY corpus scale.
-  * The distributed loop pays ~3 exchanges per iteration × 5–20
-  * iterations over those few rows: pure scheduling overhead (measured:
-  * g1 1.56 s / g2 1.47 s / g3 2.06 s at sf0.1·32c, ≥90% of it in
-  * per-action fixed cost). Below `driverThreshold` edges the fixed
-  * point runs here instead; ABOVE it — or for null ids, non-string/
-  * non-integral ids, or `exact = false` — the distributed loop runs
-  * unchanged.
-  *
-  * EXACTNESS CONTRACT: only `exact = true` plans route here, because
-  * only they define a reproducible float-op order. Every IEEE operation
-  * below replicates the distributed exact plan bit-for-bit:
+  * EXACTNESS CONTRACT: every IEEE operation below replicates the
+  * distributed exact plan bit for bit:
   *  - contrib = (rank * w.toDouble) / ow.toDouble — same association
   *    as `col("rank") * col("w").cast("double") / col("ow")
   *    .cast("double")`;
@@ -34,14 +20,8 @@ import org.apache.spark.sql.types._
   *  - next = teleport + damping * inc (personalized:
   *    (1-d) * tele + d * inc) with scalars computed by the same Scala
   *    expressions the distributed plan embeds as literals.
-  * The DuckDB oracle re-checks g1/g2/g3 hashes every round, so a
-  * divergence in any ulp fails the gate loudly.
-  *
-  * Scale safety: the default 100k-edge ceiling costs ~3 MB of driver
-  * heap in the index arrays (far below the [[DriverUnionFind]] 1M-edge
-  * ceiling, because ranks iterate — keep the driver's working set
-  * small); the output frame lifts through [[DriverUnionFind.datasetOf]]
-  * so no multi-million-row LocalRelation can enter a plan.
+  * The DuckDB oracle re-checks g1/g2/g3 hashes, so a divergence in any
+  * ulp fails the gate loudly.
   */
 private[operators] object DriverRank {
 
@@ -72,9 +52,6 @@ private[operators] object DriverRank {
       seedIndex: Any => Int,
       toFrame: Array[Double] => DataFrame)
 
-  private val integralTypes: Set[DataType] =
-    Set(ByteType, ShortType, IntegerType, LongType)
-
   /** True when two id columns are in the same driver-supported family
     * (both strings, or both integral) — a cross-family pair would make
     * the distributed join COERCE (e.g. string node vs int seed) in ways
@@ -82,46 +59,39 @@ private[operators] object DriverRank {
     * distributed. */
   private[operators] def sameIdFamily(a: DataType, b: DataType): Boolean =
     (a == StringType && b == StringType) ||
-      (integralTypes.contains(a) && integralTypes.contains(b))
+      (DriverGate.integral(a) && DriverGate.integral(b))
 
-  /** Bounded collect of the edge list, or None to route distributed:
-    * over `threshold` rows, any null endpoint/weight, or id types
-    * outside {string} / {byte,short,int,long}. The single `limit`-ed
-    * collect is both the size probe and the fetch — no extra pass. */
+  /** The edge list as a [[Graphlet]] when an `exact` call passes the
+    * [[DriverGate]] rank gate, else None to route distributed. An empty
+    * edge list also routes distributed, which keeps its empty-input
+    * shape. */
   private[operators] def collect(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
-      threshold: Long): Option[Graphlet] = {
-    if (threshold <= 0) return None
+      exact: Boolean): Option[Graphlet] = {
+    if (!exact) return None
     val spark = edges.sparkSession
-    val sel = edges.select(col(srcCol), col(dstCol), col(weightCol))
-    val Seq(sT, dT, _) = sel.schema.fields.toSeq.map(_.dataType)
+    val Seq(sT, dT) = edges.select(col(srcCol), col(dstCol)).schema.map(_.dataType)
     val strings = sT == StringType && dT == StringType
-    val ints = integralTypes.contains(sT) && integralTypes.contains(dT)
+    val ints = DriverGate.integral(sT) && DriverGate.integral(dT)
     if (!strings && !ints) return None
-    val probe = (
-      if (ints)
-        edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"),
-          col(weightCol).cast("long"))
-      else
-        edges.select(col(srcCol), col(dstCol), col(weightCol).cast("long"))
-      ).limit(DriverUnionFind.probeLimit(threshold)).collect()
-    if (probe.length > threshold) return None
-    if (probe.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-      return None
-    if (probe.isEmpty) return None // keep the distributed empty-input shape
+    val idCast = if (ints) LongType else StringType
+    val probe = DriverGate.collect(
+        edges.select(col(srcCol).cast(idCast), col(dstCol).cast(idCast),
+          col(weightCol).cast("long")), DriverGate.RankEdges) match {
+      case Some(rows) if rows.nonEmpty => rows
+      case _ => return None
+    }
     val m = probe.length
     val srcIdx = new Array[Int](m)
     val dstIdx = new Array[Int](m)
-    val w = new Array[Long](m)
+    val w = Array.tabulate(m)(i => probe(i).getLong(2))
     var i = 0
-    while (i < m) { w(i) = probe(i).getLong(2); i += 1 }
     if (strings) {
       val set = new java.util.TreeSet[String](utf8Order)
       probe.foreach { r => set.add(r.getString(0)); set.add(r.getString(1)) }
       val ids = set.toArray(new Array[String](0))
       val index = new java.util.HashMap[String, Integer](ids.length * 2)
       ids.zipWithIndex.foreach { case (s, j) => index.put(s, j) }
-      i = 0
       while (i < m) {
         srcIdx(i) = index.get(probe(i).getString(0))
         dstIdx(i) = index.get(probe(i).getString(1))
@@ -129,9 +99,7 @@ private[operators] object DriverRank {
       }
       val toFrame = (ranks: Array[Double]) => {
         import spark.implicits._
-        DriverUnionFind
-          .datasetOf(spark, ids.toSeq.zip(ranks.toSeq))
-          .toDF("node", "rank")
+        DriverGate.datasetOf(spark, ids.toSeq.zip(ranks.toSeq)).toDF("node", "rank")
       }
       val seedIndex = (v: Any) => v match {
         case s: String => Option(index.get(s)).map(_.intValue).getOrElse(-1)
@@ -141,20 +109,15 @@ private[operators] object DriverRank {
     } else {
       val pairs = Array.tabulate(m)(j => (probe(j).getLong(0), probe(j).getLong(1)))
       val ids = DriverUnionFind.sortedIds(pairs)
-      i = 0
       while (i < m) {
         srcIdx(i) = DriverUnionFind.indexOf(ids, pairs(i)._1)
         dstIdx(i) = DriverUnionFind.indexOf(ids, pairs(i)._2)
         i += 1
       }
-      // both paths emit the coerced src∪dst type (the g9/r16-advisory
-      // schema rule)
-      val nodeType = edges.select(col(srcCol).as("n"))
-        .union(edges.select(col(dstCol).as("n"))).schema.head.dataType
+      val nodeType = DriverGate.nodeType(edges, srcCol, dstCol)
       val toFrame = (ranks: Array[Double]) => {
         import spark.implicits._
-        DriverUnionFind
-          .datasetOf(spark, ids.toSeq.zip(ranks.toSeq))
+        DriverGate.datasetOf(spark, ids.toSeq.zip(ranks.toSeq))
           .toDF("node", "rank")
           .select(col("node").cast(nodeType).as("node"), col("rank"))
       }
@@ -248,11 +211,18 @@ private[operators] object DriverRank {
     ranks
   }
 
-  /** [[Graph.personalizedPageRank]]'s exact loop: teleport mass only on
-    * `tele`-weighted nodes, rank₀ = tele. */
+  /** [[Graph.personalizedPageRank]]'s exact loop: teleport mass 1/|S|
+    * on each graph node among the distinct `seeds` (seeds absent from the
+    * graph still count in |S|, as in the distributed plan), rank₀ = tele. */
   private[operators] def personalized(
-      g: Graphlet, tele: Array[Double], iterations: Int,
+      g: Graphlet, seeds: Array[Row], iterations: Int,
       damping: Double): Array[Double] = {
+    require(seeds.nonEmpty, "personalizedPageRank: seeds must be non-empty")
+    val tele = new Array[Double](g.n)
+    seeds.foreach { r =>
+      val j = g.seedIndex(r.get(0))
+      if (j >= 0) tele(j) = 1.0 / seeds.length.toDouble
+    }
     val ow = outWeights(g)
     val incoming = incomingEdges(g)
     var ranks = tele.clone()

@@ -1,20 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-
-/** Driver-side union-find over a BOUNDED edge list — the shared kernel
-  * behind the small-graph shortcuts in [[Dedup.connectedComponents]],
-  * [[Graph.connectedComponents]] and `Similarity.dbscanLabels`.
+/** Driver-side union-find over a bounded edge list — the kernel behind
+  * the small-graph paths of [[Graph.connectedComponents]] and
+  * `Similarity.dbscanLabels` (routing: [[DriverGate]]).
   *
-  * Scale-safety shape (r17): node ids are remapped through ONE sorted
-  * primitive long array (binary search), parents live in an Int array,
-  * and find uses path halving — ~16 bytes/node total instead of the
-  * ~100 bytes/entry a boxed `mutable.Map[Long, Long]` costs, so the
-  * 1M-edge ceiling is ~30 MB of driver heap, not ~0.5 GB, and the
-  * allocation count is O(1) instead of O(E) boxed tuples. Roots are
-  * always the component's MIN node id: ids are sorted, so index order
-  * == id order, and every union links the larger root under the
-  * smaller.
+  * Node ids are remapped through ONE sorted primitive long array (binary
+  * search), parents live in an Int array, and find uses path halving —
+  * ~16 bytes/node instead of the ~100 bytes/entry of a boxed
+  * `mutable.Map[Long, Long]`, and O(1) allocations instead of O(E) boxed
+  * tuples. Roots are always the component's MIN node id: ids are sorted,
+  * so index order == id order, and every union links the larger root
+  * under the smaller.
   */
 private[operators] object DriverUnionFind {
 
@@ -70,26 +66,4 @@ private[operators] object DriverUnionFind {
     while (i < parent.length) { parent(i) = find(i); i += 1 }
     parent
   }
-
-  /** Lift driver-computed label rows into a Dataset WITHOUT embedding a
-    * giant LocalRelation in the plan: up to `localRelationMax` rows stay
-    * a LocalRelation (constant-folds, broadcasts, and keeps the
-    * LocalTableScan plan shape the small case wants); above it the rows
-    * ship through an RDD (`ExternalRDD` scan) so the analyzer/optimizer
-    * never walk a multi-million-row literal and the driver never pays a
-    * second copy inside the plan tree. */
-  def datasetOf[T: Encoder: scala.reflect.ClassTag](
-      spark: SparkSession, rows: Seq[T],
-      localRelationMax: Int = 10000): Dataset[T] =
-    if (rows.length <= localRelationMax) spark.createDataset(rows)
-    else {
-      val slices = math.max(1, math.min(
-        spark.sparkContext.defaultParallelism, rows.length / 100000 + 1))
-      spark.createDataset(spark.sparkContext.parallelize(rows, slices))
-    }
-
-  /** The clamped `limit(n)` for "collect at most threshold + 1 rows":
-    * `(threshold + 1).toInt` overflows negative for thresholds ≥ 2³¹. */
-  @inline def probeLimit(threshold: Long): Int =
-    math.min(threshold + 1L, Int.MaxValue.toLong).toInt
 }

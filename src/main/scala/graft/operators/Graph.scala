@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * at web scale; Catalyst broadcasts it when it fits, and AQE picks the
   * strategy per iteration otherwise. Lineage is cut with
   * `localCheckpoint` every iteration so 20 iterations do not compound a
-  * 20-deep plan (the classic iterative-DataFrame failure mode). No
-  * driver-side row data: the only actions are scalar counts.
+  * 20-deep plan (the classic iterative-DataFrame failure mode). The
+  * distributed loops hold no driver-side row data: their only actions
+  * are scalar counts. Small graphs take a driver kernel ([[DriverGate]]).
   *
   * Two aggregation modes, equal up to float associativity:
   *  - `exact = false` (default, the scale path): incoming contributions
@@ -46,7 +47,8 @@ object Graph {
     * Returns (node, rank) for every node appearing as source or
     * destination. `iterations` fixed (no convergence test — the oracle
     * needs a deterministic step count; callers wanting convergence wrap
-    * the loop and diff successive vectors).
+    * the loop and diff successive vectors). An `exact` run on a small
+    * graph computes the same fixed point on the driver ([[DriverGate]]).
     *
     * With `checkpoint = true` the returned vector is a MATERIALIZED
     * localCheckpoint (caller-owned: unpersist when done); every
@@ -56,62 +58,30 @@ object Graph {
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int = 5, damping: Double = 0.85,
-      exact: Boolean = false, checkpoint: Boolean = false,
-      /** below this edge count an `exact = true` run computes the fixed
-        * point on the DRIVER ([[DriverRank]] — bit-identical IEEE op
-        * order, ~3 MB heap at the ceiling): the declared rank queries
-        * iterate over event-type transition graphs of a few dozen rows,
-        * where each distributed iteration is pure per-action overhead.
-        * Above the threshold, for `exact = false`, or for null/exotic
-        * ids the distributed loop runs unchanged. */
-      driverThreshold: Long = 100000L): DataFrame = {
+      exact: Boolean = false, checkpoint: Boolean = false): DataFrame = {
     require(iterations >= 1, "pageRank: iterations must be >= 1")
-    if (exact) {
-      val g0 = DriverRank.collect(edges, srcCol, dstCol, weightCol, driverThreshold)
-      if (g0.isDefined) {
-        val g = g0.get
-        return g.toFrame(DriverRank.fixed(g, iterations, damping))
-      }
+    DriverRank.collect(edges, srcCol, dstCol, weightCol, exact) match {
+      case Some(g) => g.toFrame(DriverRank.fixed(g, iterations, damping))
+      case None => pageRankDistributed(
+        edges, srcCol, dstCol, weightCol, iterations, damping, exact, checkpoint)
     }
-    val e = edges.select(
-      col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+  }
+
+  /** [[pageRank]]'s distributed loop, whatever the graph size. */
+  private[graft] def pageRankDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
+      iterations: Int, damping: Double,
+      exact: Boolean, checkpoint: Boolean): DataFrame = {
+    val (eo0, nodes) = rankEdges(edges, srcCol, dstCol, weightCol)
     val nodesP = if (checkpoint) nodes.localCheckpoint(eager = true) else nodes
     val n = nodesP.count()
-    // exact integer out-weight per source (long sum of long multiplicities)
-    val outw = e.groupBy("src").agg(sum("w").as("ow"))
-    val eo = {
-      val joined = e.join(outw, "src")
-      if (checkpoint) joined.localCheckpoint(eager = true) else joined
-    }
-    val teleport = (1.0 - damping) / n.toDouble
+    val eo = if (checkpoint) eo0.localCheckpoint(eager = true) else eo0
+    val teleport = lit((1.0 - damping) / n.toDouble)
     var ranks = nodesP.withColumn("rank", lit(1.0 / n.toDouble))
     var prev: DataFrame = null
     var i = 0
     while (i < iterations) {
-      val contribs = eo
-        .join(ranks, eo("src") === ranks("node"))
-        .select(col("dst"), col("src"),
-          (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-            .as("contrib"))
-      val inc =
-        if (exact)
-          contribs.groupBy("dst").agg(
-            aggregate(
-              array_sort(collect_list(struct(col("src"), col("contrib")))),
-              lit(0.0),
-              (acc: Column, x: Column) => acc + x.getField("contrib"))
-              .as("inc"))
-        else
-          contribs.groupBy("dst").agg(sum("contrib").as("inc"))
-      val next = nodesP
-        .join(inc, nodesP("node") === inc("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) + lit(damping) * coalesce(col("inc"), lit(0.0)))
-            .as("rank"))
+      val next = rankStep(eo, nodesP, ranks, teleport, damping, exact)
       if (checkpoint) {
         val cp = next.localCheckpoint(eager = true)
         // the prior iteration's checkpoint blocks are dead the moment the
@@ -142,51 +112,35 @@ object Graph {
     * (broadcast when small, which seed sets are). Nodes unreachable from
     * the seeds converge to rank 0 — that's the feature. Returns a
     * MATERIALIZED caller-owned checkpoint like `pageRank(checkpoint =
-    * true)`. */
+    * true)`. `exact` selects the src-ordered incoming fold, as in
+    * [[pageRank]]; the driver path also needs a bounded, null-free seed
+    * set in the edges' id family. */
   def personalizedPageRank(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       seeds: DataFrame, seedCol: String,
       iterations: Int = 10, damping: Double = 0.85,
-      /** src-ordered incoming fold for bitwise oracle parity, as in
-        * [[pageRank]]. */
-      exact: Boolean = false,
-      /** driver fixed point below this edge count for `exact = true`
-        * runs, as in [[pageRank]]; seeds must be bounded too and share
-        * the node id family, else the call routes distributed. */
-      driverThreshold: Long = 100000L): DataFrame = {
+      exact: Boolean = false): DataFrame = {
     require(iterations >= 1, "personalizedPageRank: iterations must be >= 1")
-    if (exact) {
-      val sT = edges.select(col(srcCol)).schema.head.dataType
-      val seedT = seeds.select(col(seedCol)).schema.head.dataType
-      val g0 =
-        if (DriverRank.sameIdFamily(sT, seedT))
-          DriverRank.collect(edges, srcCol, dstCol, weightCol, driverThreshold)
-        else None
-      if (g0.isDefined) {
-        val g = g0.get
-        // distinct in the ORIGINAL seed type (the distributed path's
-        // s.count()); null or over-threshold seed sets route distributed
-        val sDist = seeds.select(col(seedCol)).distinct()
-          .limit(DriverUnionFind.probeLimit(driverThreshold)).collect()
-        if (sDist.length <= driverThreshold && !sDist.exists(_.isNullAt(0))) {
-          val nSeeds = sDist.length
-          require(nSeeds >= 1, "personalizedPageRank: seeds must be non-empty")
-          val tele = new Array[Double](g.n)
-          sDist.foreach { r =>
-            val j = g.seedIndex(r.get(0))
-            if (j >= 0) tele(j) = 1.0 / nSeeds.toDouble
-          }
-          return g.toFrame(
-            DriverRank.personalized(g, tele, iterations, damping))
-        }
-      }
+    val sameFamily = DriverRank.sameIdFamily(
+      edges.select(col(srcCol)).schema.head.dataType,
+      seeds.select(col(seedCol)).schema.head.dataType)
+    val g = if (sameFamily) DriverRank.collect(edges, srcCol, dstCol, weightCol, exact) else None
+    // distinct in the ORIGINAL seed type, as the distributed path counts them
+    val seedRows = g.flatMap(_ =>
+      DriverGate.collect(seeds.select(col(seedCol)).distinct(), DriverGate.RankEdges))
+    (g, seedRows) match {
+      case (Some(g), Some(s)) => g.toFrame(DriverRank.personalized(g, s, iterations, damping))
+      case _ => personalizedPageRankDistributed(
+        edges, srcCol, dstCol, weightCol, seeds, seedCol, iterations, damping, exact)
     }
-    val e = edges.select(
-      col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+  }
+
+  /** [[personalizedPageRank]]'s distributed loop, whatever the graph size. */
+  private[graft] def personalizedPageRankDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
+      seeds: DataFrame, seedCol: String,
+      iterations: Int, damping: Double, exact: Boolean): DataFrame = {
+    val (eo0, nodes) = rankEdges(edges, srcCol, dstCol, weightCol)
     val s = seeds.select(col(seedCol).as("node")).distinct()
     val nSeeds = s.count()
     require(nSeeds >= 1, "personalizedPageRank: seeds must be non-empty")
@@ -198,32 +152,12 @@ object Graph {
         when(col("__is_seed"), lit(1.0 / nSeeds.toDouble))
           .otherwise(lit(0.0)).as("tele"))
       .localCheckpoint(eager = true)
-    val outw = e.groupBy("src").agg(sum("w").as("ow"))
-    val eo = e.join(outw, "src").localCheckpoint(eager = true)
+    val eo = eo0.localCheckpoint(eager = true)
     var ranks = nodesT.select(col("node"), col("tele").as("rank"))
       .localCheckpoint(eager = true)
     var i = 0
     while (i < iterations) {
-      val contribs = eo
-        .join(ranks, eo("src") === ranks("node"))
-        .select(col("dst"), col("src"),
-          (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-            .as("contrib"))
-      val inc =
-        if (exact)
-          contribs.groupBy("dst").agg(
-            aggregate(
-              array_sort(collect_list(struct(col("src"), col("contrib")))),
-              lit(0.0),
-              (acc: Column, x: Column) => acc + x.getField("contrib"))
-              .as("inc"))
-        else
-          contribs.groupBy("dst").agg(sum("contrib").as("inc"))
-      val next = nodesT
-        .join(inc, nodesT("node") === inc("dst"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("tele") +
-            lit(damping) * coalesce(col("inc"), lit(0.0))).as("rank"))
+      val next = rankStep(eo, nodesT, ranks, lit(1.0 - damping) * col("tele"), damping, exact)
         .localCheckpoint(eager = true)
       ranks.unpersist(blocking = false)
       ranks = next
@@ -238,44 +172,39 @@ object Graph {
     * `blockIters` (checkpointed), stopping when the max absolute rank
     * delta falls below `tol` or `maxIterations` is hit. Returns
     * (ranks, iterationsRun). The delta probe is one scalar agg — no row
-    * data reaches the driver. */
+    * data reaches the driver. `exact` selects the src-ordered incoming
+    * fold, as in [[pageRank]] — which makes the CONVERGENCE STEP COUNT
+    * deterministic too (the unordered sum's last-ulp jitter can flip a
+    * delta probe sitting exactly at `tol`); the driver path replicates
+    * the block/delta/step-count logic exactly (max |Δ| is
+    * order-independent). */
   def pageRankConverged(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       tol: Double = 1e-6, maxIterations: Int = 50,
       damping: Double = 0.85, blockIters: Int = 5,
-      /** src-ordered incoming fold for bitwise oracle parity, as in
-        * [[pageRank]] — makes the CONVERGENCE STEP COUNT deterministic
-        * too (the unordered sum's last-ulp jitter can flip a delta probe
-        * sitting exactly at `tol`). */
-      exact: Boolean = false,
-      /** driver fixed point below this edge count for `exact = true`
-        * runs, as in [[pageRank]] — the block/delta/step-count logic is
-        * replicated exactly (max |Δ| is order-independent). */
-      driverThreshold: Long = 100000L): (DataFrame, Int) = {
-    if (exact) {
-      val g0 = DriverRank.collect(edges, srcCol, dstCol, weightCol, driverThreshold)
-      if (g0.isDefined) {
-        val g = g0.get
+      exact: Boolean = false): (DataFrame, Int) =
+    DriverRank.collect(edges, srcCol, dstCol, weightCol, exact) match {
+      case Some(g) =>
         val (ranks, done) =
           DriverRank.converged(g, tol, maxIterations, damping, blockIters)
-        return (g.toFrame(ranks), done)
-      }
+        (g.toFrame(ranks), done)
+      case None => pageRankConvergedDistributed(
+        edges, srcCol, dstCol, weightCol, tol, maxIterations, damping, blockIters, exact)
     }
+
+  /** [[pageRankConverged]]'s distributed loop, whatever the graph size. */
+  private[graft] def pageRankConvergedDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
+      tol: Double, maxIterations: Int, damping: Double, blockIters: Int,
+      exact: Boolean): (DataFrame, Int) = {
     // the edge scaffolding (node set, out-weights) is loop-INVARIANT —
-    // build it ONCE instead of once per block (the old advance-per-block
-    // shape re-derived the possibly-expensive upstream edge pipeline
-    // every 5 iterations; measured 2.4 s → 1.4 s on the g3 query)
-    val e = edges.select(
-      col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(eager = true)
+    // built ONCE rather than once per block, so the possibly-expensive
+    // upstream edge pipeline runs once (g3: 2.4 s → 1.4 s)
+    val (eo0, nodes0) = rankEdges(edges, srcCol, dstCol, weightCol)
+    val nodes = nodes0.localCheckpoint(eager = true)
     val n = nodes.count()
-    val outw = e.groupBy("src").agg(sum("w").as("ow"))
-    val eo = e.join(outw, "src").localCheckpoint(eager = true)
-    val teleport = (1.0 - damping) / n.toDouble
+    val eo = eo0.localCheckpoint(eager = true)
+    val teleport = lit((1.0 - damping) / n.toDouble)
     var ranks = nodes.withColumn("rank", lit(1.0 / n.toDouble))
       .localCheckpoint(eager = true)
     var done = 0
@@ -284,32 +213,11 @@ object Graph {
       var cur = ranks
       var i = 0
       while (i < blockIters) {
-        val contribs = eo
-          .join(cur, eo("src") === cur("node"))
-          .select(col("dst"), col("src"),
-            (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-              .as("contrib"))
-        val inc =
-          if (exact)
-            contribs.groupBy("dst").agg(
-              aggregate(
-                array_sort(collect_list(struct(col("src"), col("contrib")))),
-                lit(0.0),
-                (acc: Column, x: Column) => acc + x.getField("contrib"))
-                .as("inc"))
-          else
-            contribs.groupBy("dst").agg(sum("contrib").as("inc"))
-        // NOTE (r16): a lazy-within-block variant (checkpoint only at
-        // block end) was tried and MEASURED SLOWER on g3 (2.5 → 3.6 s —
-        // the unrolled exact-mode aggregate trees cost more to optimize
-        // and execute as one deep action than the per-iteration
-        // materializations they replaced); per-iteration checkpoints
-        // stay.
-        val next = nodes
-          .join(inc, nodes("node") === inc("dst"), "left")
-          .select(col("node"),
-            (lit(teleport) + lit(damping) * coalesce(col("inc"), lit(0.0)))
-              .as("rank"))
+        // checkpointed every iteration: checkpointing only at block end
+        // measured slower on g3 (2.5 → 3.6 s) — the unrolled exact-mode
+        // aggregate trees cost more to optimize and execute as one deep
+        // action than the per-iteration materializations
+        val next = rankStep(eo, nodes, cur, teleport, damping, exact)
           .localCheckpoint(eager = true)
         // release superseded in-block checkpoints (never the block start,
         // which the delta probe still needs)
@@ -338,40 +246,15 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       start: DataFrame, iterations: Int, damping: Double = 0.85,
       exact: Boolean = false): DataFrame = {
-    val e = edges.select(
-      col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint(eager = true)
+    val (eo0, nodes0) = rankEdges(edges, srcCol, dstCol, weightCol)
+    val nodes = nodes0.localCheckpoint(eager = true)
     val n = nodes.count()
-    val outw = e.groupBy("src").agg(sum("w").as("ow"))
-    val eo = e.join(outw, "src").localCheckpoint(eager = true)
-    val teleport = (1.0 - damping) / n.toDouble
+    val eo = eo0.localCheckpoint(eager = true)
+    val teleport = lit((1.0 - damping) / n.toDouble)
     var ranks = start
     var i = 0
     while (i < iterations) {
-      val contribs = eo
-        .join(ranks, eo("src") === ranks("node"))
-        .select(col("dst"), col("src"),
-          (col("rank") * col("w").cast("double") / col("ow").cast("double"))
-            .as("contrib"))
-      val inc =
-        if (exact)
-          contribs.groupBy("dst").agg(
-            aggregate(
-              array_sort(collect_list(struct(col("src"), col("contrib")))),
-              lit(0.0),
-              (acc: Column, x: Column) => acc + x.getField("contrib"))
-              .as("inc"))
-        else
-          contribs.groupBy("dst").agg(sum("contrib").as("inc"))
-      val next = nodes
-        .join(inc, nodes("node") === inc("dst"), "left")
-        .select(col("node"),
-          (lit(teleport) + lit(damping) * coalesce(col("inc"), lit(0.0)))
-            .as("rank"))
+      val next = rankStep(eo, nodes, ranks, teleport, damping, exact)
         .localCheckpoint(eager = true)
       // release superseded checkpoints (never the caller's start vector)
       if (i > 0) ranks.unpersist(blocking = false)
@@ -381,6 +264,50 @@ object Graph {
     nodes.unpersist(blocking = false)
     eo.unpersist(blocking = false)
     ranks
+  }
+
+  /** The out-weighted edge frame (src, dst, w, ow) and the node set (node)
+    * every rank loop iterates over, both lazy so each caller keeps its own
+    * checkpoint policy. `ow` is the exact long sum of the long
+    * multiplicities out of `src`. */
+  private def rankEdges(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): (DataFrame, DataFrame) = {
+    val e = edges.select(
+      col(srcCol).as("src"), col(dstCol).as("dst"),
+      col(weightCol).cast("long").as("w"))
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node")))
+      .distinct()
+    (e.join(e.groupBy("src").agg(sum("w").as("ow")), "src"), nodes)
+  }
+
+  /** One rank step: `teleport + damping * inc(v)` for every row of
+    * `nodes`, where inc(v) combines `rank(u) * w / ow(u)` over the edges
+    * into v — a plain `sum`, or with `exact` a left fold in (src, contrib)
+    * order. `teleport` may read `nodes`' columns (the personalized `tele`). */
+  private def rankStep(
+      eo: DataFrame, nodes: DataFrame, ranks: DataFrame,
+      teleport: Column, damping: Double, exact: Boolean): DataFrame = {
+    val contribs = eo
+      .join(ranks, eo("src") === ranks("node"))
+      .select(col("dst"), col("src"),
+        (col("rank") * col("w").cast("double") / col("ow").cast("double"))
+          .as("contrib"))
+    val inc =
+      if (exact)
+        contribs.groupBy("dst").agg(
+          aggregate(
+            array_sort(collect_list(struct(col("src"), col("contrib")))),
+            lit(0.0),
+            (acc: Column, x: Column) => acc + x.getField("contrib"))
+            .as("inc"))
+      else
+        contribs.groupBy("dst").agg(sum("contrib").as("inc"))
+    nodes
+      .join(inc, nodes("node") === inc("dst"), "left")
+      .select(col("node"),
+        (teleport + lit(damping) * coalesce(col("inc"), lit(0.0))).as("rank"))
   }
 
   /** Canonical undirected simple edge list: one row per unordered pair,
@@ -417,7 +344,7 @@ object Graph {
 
   /** [[triangles]] body over an already-materialized canonical edge
     * frame, enumerated by SORTED-ADJACENCY INTERSECTION rather than the
-    * wedge self-join + closing semi-join it replaced (r16 optimization):
+    * wedge self-join + closing semi-join it replaced:
     * group each node's oriented out-neighborhood into one sorted array,
     * attach both endpoints' arrays to every oriented edge, and
     * `array_intersect` them — for the (deg, id)-ordered orientation the
@@ -513,7 +440,7 @@ object Graph {
     * initialized to the node id. This is the fixed-round core of
     * connected components / community seeding: after k rounds every node
     * carries the smallest id reachable within k hops (the unbounded
-    * fixpoint lives in Dedup's pointer-jump union-find; the bounded form
+    * fixpoint is [[connectedComponents]]' pointer jumping; the bounded form
     * is a closed form ANY engine can replay, so it sits in the hard
     * oracle gate where the convergence loop cannot).
     *
@@ -531,7 +458,7 @@ object Graph {
     val nodes = eCp.select(col("src").as("node"))
       .union(eCp.select(col("dst").as("node"))).distinct()
     var labels = nodes.withColumn("label", col("node"))
-    // r16: rounds stay LAZY between periodic cuts — each round references
+    // rounds stay LAZY between periodic cuts — each round references
     // the previous labels twice (identity union + edge join), but the two
     // subtrees are identical so ReusedExchange dedups them at execution;
     // with the edge frame materialized above, a bounded-round run is ONE
@@ -584,59 +511,37 @@ object Graph {
     * analyzable; this loop references `labels` FOUR times per round —
     * identity, edge join, both sides of the pointer jump — so an
     * unpinned logical plan is O(4^rounds) nodes and the ANALYZER, which
-    * runs before cache substitution, hangs long before execution would).
-    * CONTRACT: the loud `not converged` refusal applies to the
-    * DISTRIBUTED loop only — the driver-side union-find below
-    * `driverThreshold` is exact by construction and never consults
-    * `maxRounds` (there is no partial answer it could return). Force
-    * `driverThreshold = 0` to exercise/pin the distributed refusal.
+    * runs before cache substitution, hangs long before execution would);
+    * nothing enters the session cache.
+    * A small integral graph is labelled by the driver-side union-find
+    * instead ([[DriverGate]]), which is exact by construction and never
+    * consults `maxRounds` (it has no partial answer to refuse).
     * Both paths return the same (node, label) schema: ids keep the
     * coerced src∪dst input type. The returned frame is caller-owned. */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 50,
-      /** below this edge count the labeling runs driver-side (the
-        * [[graft.operators.DriverUnionFind]] primitive-array idiom —
-        * min-id roots, exact): the pointer-jumping loop pays ~3 actions
-        * per round and log₂(diameter) rounds, all over a graph that
-        * after any real confirmation step is orders of magnitude
-        * smaller than the corpus (measured: g9 at sf0.1 ran 93 jobs
-        * over a 10k-edge graph). 1M edges ≈ 30 MB of driver heap in the
-        * primitive union-find (r17; the boxed-Map form this replaces
-        * cost ~0.5 GB at the old 5M ceiling — a cluster-driver OOM
-        * shape). Above the threshold, or for non-integral ids, the
-        * distributed loop runs unchanged. */
-      driverThreshold: Long = 1000000L): DataFrame = {
+      maxRounds: Int = 50): DataFrame = {
     require(maxRounds >= 1,
       s"connectedComponents: maxRounds must be >= 1, got $maxRounds")
-    val integralIds = {
-      import org.apache.spark.sql.types._
-      val types = edges.schema.fields
-        .filter(f => f.name == srcCol || f.name == dstCol).map(_.dataType)
-      types.nonEmpty &&
-        types.forall(Set[DataType](ByteType, ShortType, IntegerType, LongType))
-    }
-    // coerced src∪dst type — both paths emit ids in THIS type, so the
-    // output schema no longer depends on which path the data size picks
-    lazy val nodeType = edges.select(col(srcCol).as("n"))
-      .union(edges.select(col(dstCol).as("n"))).schema.head.dataType
-    if (integralIds) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val bounded = edges
-        .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-        .as[(Long, Long)]
-        .limit(DriverUnionFind.probeLimit(driverThreshold)).collect()
-      if (bounded.length <= driverThreshold) {
-        val ids = DriverUnionFind.sortedIds(bounded)
-        val root = DriverUnionFind.unionAll(ids, bounded)
-        val rows = Array.tabulate(ids.length)(i => (ids(i), ids(root(i))))
-        return DriverUnionFind.datasetOf(spark, rows.toSeq)
+    DriverGate.longPairs(edges, srcCol, dstCol) match {
+      case Some(pairs) =>
+        val spark = edges.sparkSession
+        import spark.implicits._
+        val ids = DriverUnionFind.sortedIds(pairs)
+        val root = DriverUnionFind.unionAll(ids, pairs)
+        val nodeType = DriverGate.nodeType(edges, srcCol, dstCol)
+        DriverGate.datasetOf(spark, Seq.tabulate(ids.length)(i => (ids(i), ids(root(i)))))
           .toDF("node", "label")
           .select(col("node").cast(nodeType).as("node"),
             col("label").cast(nodeType).as("label"))
-      }
+      case None => connectedComponentsDistributed(edges, srcCol, dstCol, maxRounds)
     }
+  }
+
+  /** [[connectedComponents]]' distributed loop, whatever the graph size. */
+  private[graft] def connectedComponentsDistributed(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      maxRounds: Int): DataFrame = {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -696,7 +601,7 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"hits: rounds must be >= 1, got $rounds")
-    // materialize the canonical edge frame ONCE (r16): the degree guards
+    // materialize the canonical edge frame ONCE: the degree guards
     // scan it twice and every round joins it twice more — with a derived
     // caller edge list (g8's orders⋈lineitem) the un-pinned form re-ran
     // that join ~6× per query. The iterative-loop localCheckpoint
@@ -825,7 +730,7 @@ object Graph {
         if (checkpoint) fresh.unpersist(blocking = false)
         done = true
       } else {
-        // r16: only the FRONTIER needs eager materialization (the next
+        // only the FRONTIER needs eager materialization (the next
         // round's join re-reads it) — the accumulated dist is a lazy
         // UNION of already-materialized frontier checkpoints, so
         // re-checkpointing it each round just re-serialized the same

@@ -349,123 +349,110 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       tau: Double, minPts: Int,
       planes: Int, seed: Long, bands: Int = 2,
-      md5Family: Boolean = false, maxBucketAllPairs: Int = 1024,
-      /** below this edge count the core/component/border labeling runs
-        * driver-side (the [[graft.operators.DriverUnionFind]]
-        * primitive-array idiom extended to the whole labeling): the
-        * ε-neighborhood pair set is orders of magnitude smaller than the
-        * corpus after cosine confirmation, and the distributed labeling
-        * was 3 multi-stage shuffle actions over a few thousand rows —
-        * pure per-task overhead (measured: s23 at sf0.1 spent ~5 of 7 s
-        * there over 1,363 pairs). 1M edges ≈ 30 MB of driver heap in
-        * the primitive structures (r17 — the boxed-Map form this
-        * replaces cost ~0.5 GB at the old 5M ceiling). Above the
-        * threshold (or for non-integral ids) the original distributed
-        * plan runs unchanged; results are identical — exact integer
-        * min-label logic both sides. */
-      driverThreshold: Long = 1000000L): DataFrame = {
+      md5Family: Boolean = false, maxBucketAllPairs: Int = 1024): DataFrame = {
     require(minPts >= 2, s"minPts must be >= 2: got $minPts")
     val pairs = graft.operators.Dedup.embeddingNearDupPairs(
       corpus, idCol, vecCol, planes, seed, tau, bands, md5Family,
       maxBucketAllPairs)
-    val spark = corpus.sparkSession
-    val integralIds = {
-      import org.apache.spark.sql.types._
-      pairs.schema.fields
-        .filter(f => f.name == "d1" || f.name == "d2")
-        .forall(f => Set[DataType](ByteType, ShortType, IntegerType, LongType)(f.dataType))
-    }
-    val bounded: Array[(Long, Long)] =
-      if (integralIds) {
-        import spark.implicits._
-        pairs.select(col("d1").cast("long"), col("d2").cast("long"))
-          .as[(Long, Long)]
-          .limit(graft.operators.DriverUnionFind.probeLimit(driverThreshold))
-          .collect()
-      } else Array.empty
-    val out = if (integralIds && bounded.length <= driverThreshold) {
-      // ---- driver path: degree → core → union-find → border, exact ----
-      // all primitive arrays indexed by the sorted-id position (r17)
-      import graft.operators.{DriverUnionFind => UF}
-      val ids = UF.sortedIds(bounded)
-      val deg = new Array[Int](ids.length)
-      bounded.foreach { case (a, b) =>
-        deg(UF.indexOf(ids, a)) += 1; deg(UF.indexOf(ids, b)) += 1
-      }
-      val core = Array.tabulate(ids.length)(i => deg(i) + 1 >= minPts)
-      // min-id union-find over core-core edges (roots are always the
-      // component's min id — the connectedComponents invariant)
-      val root = UF.unionAll(ids, bounded, i => core(i))
-      // component of a core index; isolated cores (no core neighbor) are
-      // their own 1-core cluster (their root is themselves already)
-      def comp(i: Int): Long = ids(root(i))
-      // border: non-core with ≥1 core neighbor joins the MIN component
-      val borderComp = Array.fill(ids.length)(Long.MaxValue)
-      def offer(si: Int, ti: Int): Unit =
-        if (!core(si) && core(ti)) {
-          val ct = comp(ti)
-          if (ct < borderComp(si)) borderComp(si) = ct
-        }
-      bounded.foreach { case (a, b) =>
-        val ia = UF.indexOf(ids, a); val ib = UF.indexOf(ids, b)
-        offer(ia, ib); offer(ib, ia)
-      }
-      import spark.implicits._
-      val labels = (0 until ids.length).iterator.flatMap { i =>
-        if (core(i)) Some((ids(i), "core", comp(i)))
-        else if (borderComp(i) != Long.MaxValue)
-          Some((ids(i), "border", borderComp(i)))
-        else None
-      }.toSeq
-      val labelDs = UF.datasetOf(spark, labels)
-        .toDF("__lid", "__role", "cluster")
-      // broadcast only a label set that credibly fits executor memory (a
-      // few MB — r17 scale-safety; bigger label sets shuffle-join, which
-      // at that size is what the distributed path would have done anyway)
-      val labelDf =
-        if (labels.length <= 100000) broadcast(labelDs) else labelDs
-      // equi-join on the ORIGINAL id column (coercion handles narrower
-      // integral types) so the output id keeps the corpus's exact type;
-      // cluster is cast to the coerced pair-id type so both paths emit
-      // the same schema (r16 advisory)
-      val clusterType = pairs.select(col("d1"))
-        .union(pairs.select(col("d2"))).schema.head.dataType
-      val base = corpus.select(col(idCol))
-      base.join(labelDf, base(idCol) === labelDf("__lid"), "left")
-        .select(col(idCol),
-          coalesce(col("__role"), lit("noise")).as("role"),
-          col("cluster").cast(clusterType).as("cluster"))
-    } else {
-      // ---- distributed path (giant or non-integral graphs): unchanged ----
-      val edges = pairs.select(col("d1").as("s"), col("d2").as("t"))
-        .unionByName(pairs.select(col("d2").as("s"), col("d1").as("t")))
-      val core = edges.groupBy("s").agg(count(lit(1)).as("nn"))
-        .filter(col("nn") + 1 >= minPts)
-        .select(col("s").as("id"))
-      val coreEdges = edges
-        .join(core.select(col("id").as("s")), "s")
-        .join(core.select(col("id").as("t")), "t")
-        .select(col("s").as("d1"), col("t").as("d2"))
-      val comps = graft.operators.Dedup.connectedComponents(coreEdges)
-      // isolated cores (no core neighbor) are their own 1-core cluster
-      val coreComp = core.join(comps, Seq("id"), "left")
-        .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      val border = edges
-        .join(coreComp.select(col("id").as("t"), col("component")), "t")
-        .join(core.select(col("id").as("s")), Seq("s"), "left_anti")
-        .groupBy("s").agg(min("component").as("component"))
-      corpus.select(col(idCol).as("id"))
-        .join(coreComp.select(col("id"), col("component").as("c_comp")), Seq("id"), "left")
-        .join(border.select(col("s").as("id"), col("component").as("b_comp")), Seq("id"), "left")
-        .select(col("id").as(idCol),
-          when(col("c_comp").isNotNull, lit("core"))
-            .when(col("b_comp").isNotNull, lit("border"))
-            .otherwise(lit("noise")).as("role"),
-          coalesce(col("c_comp"), col("b_comp")).as("cluster"))
+    // a small integral pair set is labelled on the driver ([[DriverGate]]):
+    // the distributed labelling is 3 multi-stage shuffle actions, which
+    // over a few thousand confirmed pairs is pure per-task overhead
+    // (s23 at sf0.1 spent ~5 of 7 s there over 1,363 pairs)
+    val out = DriverGate.longPairs(pairs, "d1", "d2") match {
+      case Some(bounded) => dbscanDriver(corpus, idCol, pairs, bounded, minPts)
+      case None => dbscanDistributed(corpus, idCol, pairs, minPts)
     }
     out.persist().count()
     pairs.unpersist(blocking = false)
     out
+  }
+
+  /** [[dbscanLabels]]' labelling on the driver: degree → core → min-id
+    * union-find over core-core edges → border, in primitive arrays
+    * indexed by sorted-id position. Same rows and schema as
+    * [[dbscanDistributed]]: exact integer min-label logic on both. */
+  private def dbscanDriver(
+      corpus: DataFrame, idCol: String, pairs: DataFrame,
+      bounded: Array[(Long, Long)], minPts: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import graft.operators.{DriverUnionFind => UF}
+    val ids = UF.sortedIds(bounded)
+    val deg = new Array[Int](ids.length)
+    bounded.foreach { case (a, b) =>
+      deg(UF.indexOf(ids, a)) += 1; deg(UF.indexOf(ids, b)) += 1
+    }
+    val core = Array.tabulate(ids.length)(i => deg(i) + 1 >= minPts)
+    // min-id union-find over core-core edges (roots are always the
+    // component's min id — the connectedComponents invariant)
+    val root = UF.unionAll(ids, bounded, i => core(i))
+    // component of a core index; isolated cores (no core neighbor) are
+    // their own 1-core cluster (their root is themselves already)
+    def comp(i: Int): Long = ids(root(i))
+    // border: non-core with ≥1 core neighbor joins the MIN component
+    val borderComp = Array.fill(ids.length)(Long.MaxValue)
+    def offer(si: Int, ti: Int): Unit =
+      if (!core(si) && core(ti)) {
+        val ct = comp(ti)
+        if (ct < borderComp(si)) borderComp(si) = ct
+      }
+    bounded.foreach { case (a, b) =>
+      val ia = UF.indexOf(ids, a); val ib = UF.indexOf(ids, b)
+      offer(ia, ib); offer(ib, ia)
+    }
+    import spark.implicits._
+    val labels = (0 until ids.length).iterator.flatMap { i =>
+      if (core(i)) Some((ids(i), "core", comp(i)))
+      else if (borderComp(i) != Long.MaxValue)
+        Some((ids(i), "border", borderComp(i)))
+      else None
+    }.toSeq
+    val labelDs = DriverGate.datasetOf(spark, labels)
+      .toDF("__lid", "__role", "cluster")
+    // broadcast only a label set that credibly fits executor memory (a
+    // few MB; bigger label sets shuffle-join, which at that size is what
+    // the distributed path would have done anyway)
+    val labelDf =
+      if (labels.length <= 100000) broadcast(labelDs) else labelDs
+    // equi-join on the ORIGINAL id column (coercion handles narrower
+    // integral types) so the output id keeps the corpus's exact type;
+    // cluster is cast to the coerced pair-id type so both paths emit
+    // the same schema
+    val base = corpus.select(col(idCol))
+    base.join(labelDf, base(idCol) === labelDf("__lid"), "left")
+      .select(col(idCol),
+        coalesce(col("__role"), lit("noise")).as("role"),
+        col("cluster").cast(DriverGate.nodeType(pairs, "d1", "d2")).as("cluster"))
+  }
+
+  /** [[dbscanLabels]]' distributed labelling of the ε-neighborhood pair
+    * set `pairs` (d1, d2), whatever its size. */
+  private[graft] def dbscanDistributed(
+      corpus: DataFrame, idCol: String, pairs: DataFrame, minPts: Int): DataFrame = {
+    val edges = pairs.select(col("d1").as("s"), col("d2").as("t"))
+      .unionByName(pairs.select(col("d2").as("s"), col("d1").as("t")))
+    val core = edges.groupBy("s").agg(count(lit(1)).as("nn"))
+      .filter(col("nn") + 1 >= minPts)
+      .select(col("s").as("id"))
+    val coreEdges = edges
+      .join(core.select(col("id").as("s")), "s")
+      .join(core.select(col("id").as("t")), "t")
+    val comps = Graph.connectedComponents(coreEdges, "s", "t")
+      .select(col("node").as("id"), col("label").as("component"))
+    // isolated cores (no core neighbor) are their own 1-core cluster
+    val coreComp = core.join(comps, Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    val border = edges
+      .join(coreComp.select(col("id").as("t"), col("component")), "t")
+      .join(core.select(col("id").as("s")), Seq("s"), "left_anti")
+      .groupBy("s").agg(min("component").as("component"))
+    corpus.select(col(idCol).as("id"))
+      .join(coreComp.select(col("id"), col("component").as("c_comp")), Seq("id"), "left")
+      .join(border.select(col("s").as("id"), col("component").as("b_comp")), Seq("id"), "left")
+      .select(col("id").as(idCol),
+        when(col("c_comp").isNotNull, lit("core"))
+          .when(col("b_comp").isNotNull, lit("border"))
+          .otherwise(lit("noise")).as("role"),
+        coalesce(col("c_comp"), col("b_comp")).as("cluster"))
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at

@@ -5,13 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** BOTH PageRank paths pinned against each other BIT-FOR-BIT (the g9
-  * lesson, applied before the driver shortcut ships this time): the
+/** BOTH PageRank paths pinned against each other BIT-FOR-BIT: the
   * driver fixed point ([[graft.operators.DriverRank]]) must reproduce
   * the distributed exact plan's every IEEE operation, because the
-  * DuckDB oracle hashes g1/g2/g3 doubles verbatim. Distributed runs are
-  * forced via `driverThreshold = 0`; equality is on raw double BITS,
-  * not a tolerance. */
+  * DuckDB oracle hashes g1/g2/g3 doubles verbatim. The public calls take
+  * the driver path on these small graphs; the distributed loops are
+  * called by name (`Graph.*Distributed`); equality is on raw double
+  * BITS, not a tolerance. */
 class DriverRankSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
@@ -41,11 +41,11 @@ class DriverRankSpec extends AnyFunSuite {
   test("pageRank exact: driver path == distributed path, bitwise (string + int ids)") {
     for (e <- Seq(stringEdges, intEdges)) {
       val drv = Graph.pageRank(e, "src", "dst", "w", iterations = 6, exact = true)
-      val dist = Graph.pageRank(e, "src", "dst", "w", iterations = 6,
-        exact = true, driverThreshold = 0)
+      val dist = Graph.pageRankDistributed(e, "src", "dst", "w", iterations = 6,
+        damping = 0.85, exact = true, checkpoint = false)
       assert(bits(drv) === bits(dist))
       // both paths emit the same column names and types (the coerced
-      // src∪dst id type for integral ids — the g9/r16-advisory rule)
+      // src∪dst id type for integral ids)
       assert(drv.schema.map(f => (f.name, f.dataType)) ===
         dist.schema.map(f => (f.name, f.dataType)))
     }
@@ -57,9 +57,9 @@ class DriverRankSpec extends AnyFunSuite {
     val seeds = Seq("a", "c", "zz").toDF("node")
     val drv = Graph.personalizedPageRank(
       stringEdges, "src", "dst", "w", seeds, "node", iterations = 5, exact = true)
-    val dist = Graph.personalizedPageRank(
+    val dist = Graph.personalizedPageRankDistributed(
       stringEdges, "src", "dst", "w", seeds, "node", iterations = 5,
-      exact = true, driverThreshold = 0)
+      damping = 0.85, exact = true)
     assert(bits(drv) === bits(dist))
   }
 
@@ -67,9 +67,9 @@ class DriverRankSpec extends AnyFunSuite {
     val (drv, di) = Graph.pageRankConverged(
       intEdges, "src", "dst", "w", tol = 1e-7, maxIterations = 40,
       blockIters = 5, exact = true)
-    val (dist, ei) = Graph.pageRankConverged(
+    val (dist, ei) = Graph.pageRankConvergedDistributed(
       intEdges, "src", "dst", "w", tol = 1e-7, maxIterations = 40,
-      blockIters = 5, exact = true, driverThreshold = 0)
+      damping = 0.85, blockIters = 5, exact = true)
     assert(di === ei)
     assert(bits(drv) === bits(dist))
   }
@@ -86,10 +86,10 @@ class DriverRankSpec extends AnyFunSuite {
     val e = Seq((Some("a"), Some("b"), 1L), (None, Some("b"), 2L))
       .toDF("src", "dst", "w")
     // the null src routes the exact run distributed; it must not throw
-    // and must equal the explicitly-forced distributed run
+    // and must equal the distributed loop called by name
     val a = bits(Graph.pageRank(e, "src", "dst", "w", iterations = 3, exact = true))
-    val b = bits(Graph.pageRank(e, "src", "dst", "w", iterations = 3,
-      exact = true, driverThreshold = 0))
+    val b = bits(Graph.pageRankDistributed(e, "src", "dst", "w", iterations = 3,
+      damping = 0.85, exact = true, checkpoint = false))
     assert(a === b)
   }
 }

@@ -68,19 +68,17 @@ class GraphImportanceSpec extends AnyFunSuite {
     val labs = Graph.connectedComponents(chain, "src", "dst")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labs.size === 300 && labs.values.forall(_ == 0L))
-    // BOTH paths pinned explicitly (r17, after the r16 driver-shortcut
-    // regression): the DISTRIBUTED loop — forced via driverThreshold = 0
-    // — must refuse a partial labeling LOUD on too-small maxRounds…
+    // BOTH paths pinned explicitly: the DISTRIBUTED loop — called by
+    // name — must refuse a partial labeling LOUD on too-small maxRounds…
     val ex = intercept[IllegalArgumentException] {
-      Graph.connectedComponents(chain, "src", "dst", maxRounds = 3,
-        driverThreshold = 0)
+      Graph.connectedComponentsDistributed(chain, "src", "dst", maxRounds = 3)
     }
     assert(ex.getMessage.contains("not converged"))
     // …must converge inside the default rounds on the same chain, and
     // must agree exactly with the driver-side union-find (`labs` above,
     // which ignores maxRounds by contract — it has no partial answer)
-    val dist = Graph.connectedComponents(chain, "src", "dst",
-      driverThreshold = 0)
+    val dist = Graph.connectedComponentsDistributed(chain, "src", "dst",
+      maxRounds = 50)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist === labs)
   }

@@ -757,8 +757,8 @@ class PlanSpec extends AnyFunSuite {
     // opaque RDD scan), so the gate inspects the same construction
     // UN-checkpointed: the full 5-iteration tree must contain no nested
     // loop anywhere and keep map-side partial aggregation.
-    // driverThreshold = 0 keeps this small graph on the distributed loop
-    // (DriverRankSpec pins the driver path)
+    // the distributed loop is called by name, since the public call takes
+    // the driver path on this small graph (DriverRankSpec pins that path)
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, count, lag, lit}
     val events = spark.read.parquet(s"$sf/events.parquet")
@@ -768,8 +768,9 @@ class PlanSpec extends AnyFunSuite {
       .filter(col("prev").isNotNull)
       .groupBy(col("prev").as("src"), col("event_type").as("dst"))
       .agg(count(lit(1)).as("w"))
-    val df = graft.operators.Graph.pageRank(
-      edges, "src", "dst", "w", iterations = 5, exact = true, driverThreshold = 0)
+    val df = graft.operators.Graph.pageRankDistributed(
+      edges, "src", "dst", "w", iterations = 5, damping = 0.85,
+      exact = true, checkpoint = false)
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       p.take(3000))

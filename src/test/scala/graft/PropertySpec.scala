@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.{CanonicalJson, HexUtil, PqUtil}
+import graft.operators.Graph
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with JDK reference implementations over generated inputs — the cases a
   * fixture suite can't enumerate. */
 class PropertySpec extends AnyFunSuite {
+  import PropertySpec.RandomGraph
 
   private def check(label: String, p: Prop): Unit = {
     val r = SCTest.check(
@@ -95,5 +98,109 @@ class PropertySpec extends AnyFunSuite {
       val h2 = CanonicalJson.payloadHash16(render(entries.reverse))
       h1 == h2 && h1.length == 16 && h1.forall(c => c.isDigit || ('a' to 'f').contains(c))
     })
+  }
+
+  private val graphGen: Gen[RandomGraph] = for {
+    kind <- Gen.oneOf("int", "long", "string")
+    parts <- Gen.chooseNum(1, 3)
+    partEdges <- Gen.sequence[List[List[(Int, Int, Long)]], List[(Int, Int, Long)]](
+        (0 until parts).map { p =>
+      // part p owns node indices [5p, 5p + 5): no edge crosses parts;
+      // up to 8 edges over 5 nodes gives nodes with 3+ in-edges, where
+      // the order of the exact fold can change the last ulp
+      val node = Gen.chooseNum(5 * p, 5 * p + 4)
+      Gen.listOfN(8, Gen.zip(node, node, Gen.chooseNum(1L, 5L)))
+        .flatMap(es => Gen.chooseNum(1, 8).map(k => es.take(k)))
+    })
+    base = partEdges.flatten.map { case (s, d, w) => (Option(s), Option(d), w) }
+    dups <- Gen.someOf(base).map(_.map { case (s, d, w) => (s, d, w + 1) })
+    nullAt <- Gen.frequency(3 -> Gen.const(-1), 1 -> Gen.chooseNum(0, base.length - 1))
+    nullSrc <- Gen.oneOf(true, false)
+    edges = (base ++ dups).zipWithIndex.map { case ((s, d, w), i) =>
+      if (i != nullAt) (s, d, w) else if (nullSrc) (None, d, w) else (s, None, w)
+    }
+    seedIds <- Gen.nonEmptyListOf(Gen.oneOf(base.flatMap(e => e._1.toList ++ e._2.toList)))
+    absent <- Gen.oneOf(Seq.empty[Option[Int]], Seq(Some(97)))
+    nullSeed <- Gen.frequency(5 -> Gen.const(Seq.empty[Option[Int]]), 1 -> Gen.const(Seq(None)))
+  } yield RandomGraph(kind, edges, seedIds.take(3).map(Option(_)) ++ absent ++ nullSeed)
+
+  test("graph driver twins equal their distributed loops on random small graphs") {
+    val spark = SparkTestSession.spark
+    def bits(df: DataFrame): Map[Any, Long] =
+      df.collect().map(r => r.get(0) ->
+        java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
+    def labels(df: DataFrame): Map[Any, Any] =
+      df.collect().map(r => r.get(0) -> r.get(1)).toMap
+    def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    val started = System.nanoTime()
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(8),
+      Prop.forAllNoShrink(graphGen) { g =>
+        val (e, seeds) = g.frames(spark)
+        val pr = Graph.pageRank(e, "src", "dst", "w", iterations = 3, exact = true)
+        val prRef = Graph.pageRankDistributed(e, "src", "dst", "w",
+          iterations = 3, damping = 0.85, exact = true, checkpoint = false)
+        val ppr = Graph.personalizedPageRank(e, "src", "dst", "w", seeds, "node",
+          iterations = 3, exact = true)
+        val pprRef = Graph.personalizedPageRankDistributed(e, "src", "dst", "w",
+          seeds, "node", iterations = 3, damping = 0.85, exact = true)
+        val (cv, cvSteps) = Graph.pageRankConverged(e, "src", "dst", "w",
+          tol = 1e-3, maxIterations = 6, blockIters = 2, exact = true)
+        val (cvRef, cvRefSteps) = Graph.pageRankConvergedDistributed(e, "src", "dst",
+          "w", tol = 1e-3, maxIterations = 6, damping = 0.85, blockIters = 2,
+          exact = true)
+        val cc = Graph.connectedComponents(e, "src", "dst")
+        val ccRef = Graph.connectedComponentsDistributed(e, "src", "dst", maxRounds = 50)
+        val checks = Seq(
+          "pageRank" -> (bits(pr) == bits(prRef) && shape(pr) == shape(prRef)),
+          "personalizedPageRank" -> (bits(ppr) == bits(pprRef)),
+          "pageRankConverged" -> (bits(cv) == bits(cvRef) && cvSteps == cvRefSteps),
+          "connectedComponents" -> (labels(cc) == labels(ccRef) && shape(cc) == shape(ccRef)))
+        Seq(ppr, pprRef, cv, cvRef).foreach(_.unpersist(blocking = false))
+        Prop.all(checks.map { case (op, ok) => Prop(ok) :| s"$op on $g" }: _*)
+      })
+    info(f"${r.succeeded} cases in ${(System.nanoTime() - started) / 1e9}%.1f s")
+    assert(r.passed, r.status.toString)
+  }
+}
+
+object PropertySpec {
+  /** One random small weighted digraph: 1–3 disconnected parts, ids of
+    * one kind (int, long beyond the int range, or strings including
+    * non-ASCII and supplementary-plane names — the first part mixes
+    * supplementary characters with U+E000..U+FFFF ones, which sort in a
+    * different order as UTF-16 than as UTF-8 bytes, the order Spark
+    * uses), self-loops, duplicate
+    * (src, dst) pairs with different weights, and now and then a null
+    * endpoint; plus a seed set for personalized rank (ids of the graph,
+    * sometimes an absent one, rarely a null). */
+  final case class RandomGraph(
+      kind: String, edges: Seq[(Option[Int], Option[Int], Long)],
+      seeds: Seq[Option[Int]]) {
+    private val names = Vector("\uE000", "\uD800\uDC00", "\uFFFD", "\uD83D\uDE00",
+      "\uF900", "a", "é", "ß", "Ω", "日本", "z", "ｚ", "ñandú", "語", "0")
+    private def id(i: Int): Any = kind match {
+      case "int" => i * 7 - 20
+      case "long" => i * 10000000000L + 3L
+      case _ => names(i % names.length) + (if (i >= names.length) i.toString else "")
+    }
+    def frames(spark: SparkSession): (DataFrame, DataFrame) = {
+      import spark.implicits._
+      def o(x: Option[Int]) = x.map(id).orNull
+      kind match {
+        case "int" =>
+          (edges.map { case (s, d, w) => (s.map(id(_).asInstanceOf[Int]),
+            d.map(id(_).asInstanceOf[Int]), w) }.toDF("src", "dst", "w"),
+            seeds.map(_.map(id(_).asInstanceOf[Int])).toDF("node"))
+        case "long" =>
+          (edges.map { case (s, d, w) => (s.map(id(_).asInstanceOf[Long]),
+            d.map(id(_).asInstanceOf[Long]), w) }.toDF("src", "dst", "w"),
+            seeds.map(_.map(id(_).asInstanceOf[Long])).toDF("node"))
+        case _ =>
+          (edges.map { case (s, d, w) => (o(s).asInstanceOf[String],
+            o(d).asInstanceOf[String], w) }.toDF("src", "dst", "w"),
+            seeds.map(o(_).asInstanceOf[String]).toDF("node"))
+      }
+    }
   }
 }

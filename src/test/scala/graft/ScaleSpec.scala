@@ -14,54 +14,62 @@ class ScaleSpec extends AnyFunSuite {
 
   test("Scale.runValidators: daily stream + split path, split-vs-whole parity") {
     val base = Files.createTempDirectory("graft_scale_val_smoke").toString
-    // 60k entries × ~370 B ≈ 22 MB — above the 8 MB split threshold, so
-    // the smoke really exercises the part path (2 parts per day)
-    val st = Scale.runValidators(spark, days = 2, entries = 60000, base = base)
-    assert(st.validatorRows === 2L * 60000)
-    assert(st.latestRows === st.validatorRows) // single version per (slot, index)
-    assert(st.rawParts === 2L * 2)             // ceil(60000 / 50000) parts per day
-    assert(st.maxSlot === 20211L)              // gnosis day-2 boundary (dailySlots law)
-    assert(st.parityOk, "split path and whole-payload path disagree")
+    try {
+      // 60k entries × ~370 B ≈ 22 MB — above the 8 MB split threshold, so
+      // the smoke really exercises the part path (2 parts per day)
+      val st = Scale.runValidators(spark, days = 2, entries = 60000, base = base)
+      assert(st.validatorRows === 2L * 60000)
+      assert(st.latestRows === st.validatorRows) // single version per (slot, index)
+      assert(st.rawParts === 2L * 2)             // ceil(60000 / 50000) parts per day
+      assert(st.maxSlot === 20211L)              // gnosis day-2 boundary (dailySlots law)
+      assert(st.parityOk, "split path and whole-payload path disagree")
+    } finally core.Fs.deleteDir(spark, base)
   }
 
   test("Scale.run: exact row parity raw -> blocks -> latest at every stage") {
     val base = Files.createTempDirectory("graft_scale_smoke").toString
-    val st = Scale.run(spark, totalSlots = 2000L, chunkSize = 500L,
-      waveChunks = 2, base = base, parallelism = 4)
-    assert(st.chunks === 4 && st.waves === 2)
-    // every 32nd slot is 404-empty by construction
-    assert(st.expectedPresent === (0L until 2000L).count(_ % 32 != 31))
-    assert(st.rawRows === st.expectedPresent)
-    assert(st.blocksRows === st.expectedPresent)   // 1 block row per present slot
-    assert(st.attRows === st.expectedPresent * 4)  // 4 attestations per block
-    assert(st.latestCount === st.blocksRows)       // latest() collapses nothing (single version)
-    assert(st.maxSlot === 1999L)                   // 1999 % 32 == 15 -> present
-    assert(st.monthRows >= 1)
+    try {
+      val st = Scale.run(spark, totalSlots = 2000L, chunkSize = 500L,
+        waveChunks = 2, base = base, parallelism = 4)
+      assert(st.chunks === 4 && st.waves === 2)
+      // every 32nd slot is 404-empty by construction
+      assert(st.expectedPresent === (0L until 2000L).count(_ % 32 != 31))
+      assert(st.rawRows === st.expectedPresent)
+      assert(st.blocksRows === st.expectedPresent)   // 1 block row per present slot
+      assert(st.attRows === st.expectedPresent * 4)  // 4 attestations per block
+      assert(st.latestCount === st.blocksRows)       // latest() collapses nothing (single version)
+      assert(st.maxSlot === 1999L)                   // 1999 % 32 == 15 -> present
+      assert(st.monthRows >= 1)
+    } finally core.Fs.deleteDir(spark, base)
   }
 
   test("Scale.runEvents: exact session / as-of / rolling / interval invariants at tiny N") {
     val base = Files.createTempDirectory("graft_scale_events_smoke").toString
-    val st = Scale.runEvents(spark, nEvents = 4000L, base = base)
-    assert(st.nSessions === 20L * 4)        // 20 users × 4 sessions
-    assert(st.minEvents === 50L && st.maxEvents === 50L)
-    assert(st.nativeSessions === st.nSessions)
-    assert(st.asofRows === 2000L && st.asofWrong === 0L)
-    assert(st.maxRoll === 13L)              // 300 s cadence fills the 1-h frame
-    assert(st.intervalPairs === st.expectedPairs)
-    assert(st.expectedPairs === 3L * 4000 - 9)
+    try {
+      val st = Scale.runEvents(spark, nEvents = 4000L, base = base)
+      assert(st.nSessions === 20L * 4)        // 20 users × 4 sessions
+      assert(st.minEvents === 50L && st.maxEvents === 50L)
+      assert(st.nativeSessions === st.nSessions)
+      assert(st.asofRows === 2000L && st.asofWrong === 0L)
+      assert(st.maxRoll === 13L)              // 300 s cadence fills the 1-h frame
+      assert(st.intervalPairs === st.expectedPairs)
+      assert(st.expectedPairs === 3L * 4000 - 9)
+    } finally core.Fs.deleteDir(spark, base)
   }
 
   test("Scale.runCurate: closed-form funnel invariants at tiny N") {
     val base = Files.createTempDirectory("graft_scale_curate_smoke").toString
-    val st = Scale.runCurate(spark, nDocs = 4000L, base = base)
-    assert(st.n0 === 4000L)
-    assert(st.n1 === 4000L - 40)              // quality drops the 1% shorts exactly
-    val livePairs = 200L - 40                 // pairs whose dup member wasn't a short
-    val found = st.n1 - st.n2
-    assert(found >= (livePairs * 9) / 10 && found <= livePairs,
-      s"found $found of $livePairs")
-    // fuzzy+exact layering: final yield exact regardless of LSH recall
-    assert(st.n3 === st.n1 - livePairs)
+    try {
+      val st = Scale.runCurate(spark, nDocs = 4000L, base = base)
+      assert(st.n0 === 4000L)
+      assert(st.n1 === 4000L - 40)              // quality drops the 1% shorts exactly
+      val livePairs = 200L - 40                 // pairs whose dup member wasn't a short
+      val found = st.n1 - st.n2
+      assert(found >= (livePairs * 9) / 10 && found <= livePairs,
+        s"found $found of $livePairs")
+      // fuzzy+exact layering: final yield exact regardless of LSH recall
+      assert(st.n3 === st.n1 - livePairs)
+    } finally core.Fs.deleteDir(spark, base)
   }
 
   test("Scale.genEmbCorpus: planted pairs near-identical, random pairs far, executor-side gen") {

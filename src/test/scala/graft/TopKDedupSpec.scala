@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{BoundedTopK, Dedup, ScoredId, TopK, TopKBuf}
+import graft.operators.{BoundedTopK, Dedup, Graph, ScoredId, TopK, TopKBuf}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -227,15 +227,27 @@ class TopKDedupSpec extends AnyFunSuite {
     val df = rows.toDF("id", "vec")
     // planes=1 per band, 4 bands: points ≤15° apart co-bucket in ≥1 band
     // with prob ~1-(15/180)^4 — candidate visibility is near-certain here
-    val out = Similarity.dbscanLabels(df, "id", "vec",
+    val drv = Similarity.dbscanLabels(df, "id", "vec",
       tau = 0.92, minPts = 3, planes = 1, seed = 7L, bands = 4)
-      .collect().map(r => r.getLong(0) ->
+    val out = drv.collect().map(r => r.getLong(0) ->
         (r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
     assert(out(1L) === (("core", 1L)), out.toString)   // isolated core
     assert(out(0L) === (("border", 1L)), out.toString)
     assert(out(2L) === (("border", 1L)), out.toString)
     assert(Seq(10L, 11L, 12L).forall(i => out(i) === (("core", 10L))), out.toString)
     assert(out(30L) === (("noise", -1L)), out.toString)
+    // the public call labels this graph on the driver; the distributed
+    // labelling, called by name on the same ε-neighborhood pairs, must
+    // return the same rows under the same schema
+    val pairs = Dedup.embeddingNearDupPairs(df, "id", "vec", planes = 1,
+      seed = 7L, threshold = 0.92, bands = 4)
+    val dist = Similarity.dbscanDistributed(df, "id", pairs, minPts = 3)
+    def rowSet(f: org.apache.spark.sql.DataFrame) = f.collect().map(_.toSeq).toSet
+    assert(rowSet(dist) === rowSet(drv))
+    assert(dist.schema.map(f => (f.name, f.dataType)) ===
+      drv.schema.map(f => (f.name, f.dataType)))
+    pairs.unpersist(blocking = true)
+    drv.unpersist(blocking = true)
   }
 
   test("Similarity.kmeansLloydExact: planted clusters recovered; trajectory partition-invariant") {
@@ -592,20 +604,20 @@ class TopKDedupSpec extends AnyFunSuite {
     // nothing enters the session cache (a persisted loop would also grow
     // its lineage 3x per iteration → planner OOM on long chains)
     val star = (1 until 40).map(i => (0L, i.toLong)).toDF("d1", "d2")
-    val comps = Dedup.connectedComponents(star, maxIter = 10, driverThreshold = 10L)
-    assert(comps.select("component").distinct().count() === 1L)
-    assert(comps.filter(col("component") =!= 0L).count() === 0L)
+    val comps = Graph.connectedComponentsDistributed(star, "d1", "d2", maxRounds = 10)
+    assert(comps.select("label").distinct().count() === 1L)
+    assert(comps.filter(col("label") =!= 0L).count() === 0L)
     assert(!cached, "connectedComponents leaked loop state on the distributed path")
   }
 
   test("distributed CC: pointer jumping resolves a 120-hop chain within ~log n rounds") {
     // plain O(diameter) propagation would need 120 rounds; with pointer
-    // jumping maxIter=12 (~2^12 reach) must fully converge — no warning,
-    // one component rooted at 0
+    // jumping maxRounds=12 (~2^12 reach) must fully converge — no
+    // refusal, one component rooted at 0
     val chain = (0 until 120).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
-    val comps = Dedup.connectedComponents(chain, maxIter = 12, driverThreshold = 10L)
+    val comps = Graph.connectedComponentsDistributed(chain, "d1", "d2", maxRounds = 12)
     assert(comps.count() === 121L)
-    assert(comps.filter(col("component") =!= 0L).count() === 0L)
+    assert(comps.filter(col("label") =!= 0L).count() === 0L)
   }
 
   test("distributed CC matches driver union-find on seeded random graphs") {
@@ -615,9 +627,9 @@ class TopKDedupSpec extends AnyFunSuite {
       val edges = (1 to 150).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
       val df = edges.toDF("d1", "d2")
-      val exact = Dedup.connectedComponents(df, driverThreshold = 5000000L)
+      val exact = Graph.connectedComponents(df, "d1", "d2")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.connectedComponents(df, maxIter = 15, driverThreshold = 1L)
+      val dist = Graph.connectedComponentsDistributed(df, "d1", "d2", maxRounds = 15)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist === exact, s"trial $trial: distributed CC diverged from union-find")
     }
@@ -1204,9 +1216,9 @@ class TopKDedupSpec extends AnyFunSuite {
     val chain = (0L until 299L).map(i => (i, i + 1)).toSet
     assert(got.filter(_._1 < 1000L) === chain)
     // the chain still connects the whole mega-cluster into ONE component
-    val comps = Dedup.connectedComponents(
-      spark.createDataset(got.toSeq).toDF("d1", "d2"))
-    assert(comps.filter(col("id") < 1000L).select("component").distinct().count() === 1L)
+    val comps = Graph.connectedComponents(
+      spark.createDataset(got.toSeq).toDF("d1", "d2"), "d1", "d2")
+    assert(comps.filter(col("node") < 1000L).select("label").distinct().count() === 1L)
     // the small bucket kept exact all-pairs semantics
     assert(got.contains((1000L, 1001L)))
   }
