@@ -8,7 +8,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * Runs each query once untimed (warmup: plan compile + JIT + page
   * cache), then `repeat` (default 1) timed runs through the noop sink,
   * printing every job's (id, duration, #stages, #tasks, callsite) plus
-  * the total, so multi-action operators show where their wall goes. */
+  * the total, so multi-action operators show where their wall goes. Each
+  * run's header also shows the generated classes it compiled and the
+  * compile time: after the warmup a query should compile nothing, and a
+  * count above 0 on every run is a per-call recompile. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -34,9 +37,10 @@ object Profile {
         r.nTasks = js.stageInfos.map(_.numTasks).sum
         jobs.put(js.jobId, r)
       }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = if (recording) {
+      // not gated on `recording`: the bus may deliver a recorded job's
+      // end after the action has returned
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
         Option(jobs.get(je.jobId)).foreach(_.end = je.time)
-      }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = ()
     })
 
@@ -50,16 +54,19 @@ object Profile {
             spark.catalog.clearCache()
             jobs.clear()
             recording = true
+            val cg0 = graft.core.Metrics.codegenReport
             val t0 = System.nanoTime()
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             val wall = (System.nanoTime() - t0) / 1e9
             recording = false
+            val cg = graft.core.Metrics.codegenReport.map { case (k, v) => k -> (v - cg0(k)) }
             // listener events are async; give the bus a moment to drain
             Thread.sleep(300)
             import scala.jdk.CollectionConverters._
             val recs = jobs.values().asScala.toSeq.sortBy(_.id)
             val jsum = recs.map(j => (j.end - j.start) / 1e3).sum
-            println(f"== $name run $r wall=$wall%.3f s jobs=${recs.size} jobsum=$jsum%.3f s (gap=${wall - jsum}%.3f s driver/plan)")
+            println(f"== $name run $r wall=$wall%.3f s jobs=${recs.size} jobsum=$jsum%.3f s (gap=${wall - jsum}%.3f s driver/plan)" +
+              s" codegen compiles=${cg("codegen_compiles")} compile_ms=${cg("codegen_compile_ms")}")
             recs.foreach { j =>
               println(f"   job ${j.id}%4d  ${(j.end - j.start) / 1e3}%8.3f s  stages=${j.nStages}%2d tasks=${j.nTasks}%4d  ${j.desc.take(70)}")
             }

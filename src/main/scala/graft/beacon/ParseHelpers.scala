@@ -1,6 +1,6 @@
 package graft.beacon
 
-import graft.functions.GraftFunctions.safe_long
+import graft.functions.GraftFunctions.{bound_long, safe_long}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -18,8 +18,10 @@ private[beacon] object ParseHelpers {
   def l(c: Column): Column = coalesce(safe_long(c), lit(0L))
 
   /** Every structured table carries the derived slot timestamp and the
-    * merge-on-read version column. */
+    * merge-on-read version column. The version is a per-call value, so it
+    * stays out of the generated source: every call shares one compiled
+    * class per table. */
   def withMeta(df: DataFrame, cfg: ChainConfig, insertVersion: Long): DataFrame =
     df.withColumn("slot_timestamp", cfg.slotTimestamp(col("slot")))
-      .withColumn("insert_version", lit(insertVersion))
+      .withColumn("insert_version", bound_long(insertVersion))
 }

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.util.LongAccumulator
 
 /** D11 observability, Spark-native: the reference's Prometheus counters
@@ -58,6 +60,14 @@ object Metrics {
       "chunks_completed" -> m.chunksCompleted.value,
       "chunks_failed" -> m.chunksFailed.value)
   }
+
+  /** Spark's JVM-wide codegen counters since JVM start: generated classes
+    * compiled (`CodegenMetrics`) and the milliseconds spent compiling them
+    * (`CodeGenerator.compileTime`). A codegen cache hit adds to neither,
+    * so a rise on a repeated call is a recompile. */
+  def codegenReport: Map[String, Long] = Map(
+    "codegen_compiles" -> CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    "codegen_compile_ms" -> CodeGenerator.compileTime / 1000000L)
 
   // Per-endpoint request counters (reference labels its API counters by
   // normalized route, observability.py:124-145 — C16). Accumulators are

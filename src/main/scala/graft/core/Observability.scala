@@ -12,7 +12,9 @@ import scala.jdk.CollectionConverters._
   *
   *  - `/metrics` renders Prometheus text exposition (counters named
   *    `graft_<metric>_total`) from the session's accumulators — the same
-  *    counters the Spark UI/REST API already aggregates per stage.
+  *    counters the Spark UI/REST API already aggregates per stage — and
+  *    from Spark's JVM-wide codegen counters
+  *    (`graft_codegen_compiles_total`, `graft_codegen_compile_ms_total`).
   *  - `/health` returns the mutable health map as JSON; `status` of
   *    `failed`/`error` flips the response to 503 (load-balancer
   *    convention, observability.py:169-176).
@@ -98,10 +100,11 @@ object Observability {
 
   def gaugeValues: Map[String, Long] = gaugeState.toMap
 
-  /** Prometheus text exposition of the engine counters plus any gauges
-    * passed in (e.g. ingest lag). */
+  /** Prometheus text exposition of the engine and codegen counters plus
+    * any gauges passed in (e.g. ingest lag). */
   def prometheusText(spark: SparkSession, gauges: Map[String, Long] = Map.empty): String = {
-    val counters = Metrics.report(spark).toSeq.sortBy(_._1).map { case (k, v) =>
+    val all = Metrics.report(spark) ++ Metrics.codegenReport
+    val counters = all.toSeq.sortBy(_._1).map { case (k, v) =>
       val name = s"graft_${k}_total"
       s"# TYPE $name counter\n$name $v"
     }

@@ -29,9 +29,37 @@ object Tables {
 
 /** Session factory with the engine's defaults: UTC, AQE on, shuffle
   * partitions sized for the local harness (a cluster deployment overrides
-  * `spark.sql.shuffle.partitions` to ~2-3x total cores).
+  * `spark.sql.shuffle.partitions` to ~2-3x total cores), and a codegen
+  * cache of [[CodegenCacheEntries]] classes.
   */
 object Sessions {
+  /** Capacity of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Every pipeline
+    * stage and library query runs as generated Java, and a class is reused
+    * only while it stays in this cache; a miss costs a Janino compile and
+    * a cold JIT on every call. The default is smaller than one call's
+    * working set: one pass over the benchmark's 14 operator queries
+    * compiles 206 distinct classes and one fused backfill operation
+    * (ingest, transform, `latest()`) 160, so at 100 entries each pass
+    * recompiled 191 classes and each backfill operation about 150, all
+    * identical to ones compiled a call earlier.
+    *
+    * Sizing: the cache is a Guava LRU cache of 4 segments of a quarter of
+    * the cap each, and its key hashes the class loader's identity, so how
+    * a working set spreads over the segments changes from run to run. A
+    * cyclic working set larger than its segment thrashes it (a cap of 200
+    * recompiled 119 classes on every operators pass). The cap is the
+    * smallest round one at which a repeated call compiles nothing new in
+    * all but about 1 run in 2,500: at 300 each segment holds 75 classes,
+    * and the operators set puts Binomial(206, 1/4) into each, 52 ± 6, so
+    * one of the 4 overflows with odds of 4e-4 (at 256, 8%; the backfill
+    * set is smaller). Retained heap grows by the classes kept.
+    *
+    * The cache is static: the first session of a JVM fixes its size. Its
+    * key includes the class loader, so a new SparkContext (a new executor
+    * class loader) compiles its task-side classes once more. */
+  val CodegenCacheEntries = 300
+
   def local(cores: Int = 32): SparkSession = {
     val s = SparkSession
       .builder()
@@ -41,6 +69,7 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

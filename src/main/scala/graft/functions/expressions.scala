@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.{Bridge => ExpressionUtils}
@@ -171,6 +173,25 @@ case class RangeBucket(child: Expression, bounds: Array[Double])
   override protected def withNewChildInternal(c: Expression): RangeBucket =
     copy(child = c)
   override def prettyName: String = "range_bucket"
+}
+
+/** A plan-bound LONG constant that generated code reads from the
+  * compiled class's references array. `lit(v)` inlines `vL` into the
+  * generated Java, so two calls that differ only in `v` (a per-call
+  * `insert_version`) compile two classes; with this leaf the source is
+  * the same for every value and Spark's codegen cache serves the second
+  * call. Not foldable, so constant folding keeps it a leaf; not for scan
+  * filters, where a literal is what Parquet pushdown and partition pruning
+  * need. */
+case class BoundLong(value: Long) extends LeafExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("boundLong", java.lang.Long.valueOf(value), "java.lang.Long")
+    ev.copy(code = code"final long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
+  }
+  override def prettyName: String = "bound_long"
 }
 
 object FloatVectorOps {
@@ -588,6 +609,9 @@ object GraftFunctions {
   def payload_hash16(c: Column): Column = col(CanonicalJsonHash16(expr(c)))
   def morton_interleave(a: Column, b: Column): Column =
     col(MortonInterleave(expr(a), expr(b)))
+  /** A LONG constant kept out of the generated source ([[BoundLong]]):
+    * for per-call values in projections, never in scan filters. */
+  def bound_long(v: Long): Column = col(BoundLong(v))
   /** Static-interval (broadcast-dim) lookup: bucket index over sorted
     * plan-constant boundaries — the zero-join range-lookup path. */
   def range_bucket(c: Column, bounds: Array[Double]): Column =

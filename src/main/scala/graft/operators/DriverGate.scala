@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * and g9 ran 93 jobs over a 10k-edge graph at sf0.1.
   *
   * What routes to the driver: the operator collects its edge list with
-  * ONE bounded action ([[collect]]: `limit(ceiling + 1)`, so the size
+  * ONE bounded take ([[collect]]: at most `ceiling + 1` rows, so the size
   * probe is also the fetch) and runs its driver kernel when
   *  - the list has at most the family's ceiling of rows — [[RankEdges]]
   *    (100k) for the PageRank fixed points, [[UnionFindEdges]] (1M) for
@@ -61,10 +61,13 @@ private[operators] object DriverGate {
   def integral(t: DataType): Boolean = integralTypes(t)
 
   /** Every row of `df` when there are at most `ceiling` of them and no
-    * field is null, from one bounded action; None routes the caller
-    * distributed. */
+    * field is null, from one bounded take; None routes the caller
+    * distributed. `RDD.take` scans partitions a few at a time, as
+    * `limit` + `collect` does, but leaves no Limit node in the plan: a
+    * limit pushed into a whole-stage codegen stage names its counter from
+    * a JVM-wide sequence, so that stage would compile anew on every call. */
   def collect(df: DataFrame, ceiling: Int): Option[Array[Row]] = {
-    val rows = df.limit(ceiling + 1).collect()
+    val rows = df.rdd.take(ceiling + 1)
     if (rows.length > ceiling || rows.exists(_.anyNull)) None else Some(rows)
   }
 

@@ -4,14 +4,10 @@ import graft.beacon._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The production session ([[graft.core.Sessions.local]]) on 4 cores,
+  * shared by every suite of the test JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Sessions.local(4)
 }
 
 class BlockParserSpec extends AnyFunSuite {

@@ -33,13 +33,24 @@ class DriverRankSpec extends AnyFunSuite {
     ("�", "b", 1L), ("𐀀", "b", 2L), ("a", "�", 1L)
   ).toDF("src", "dst", "w")
 
+  // "\uE000" sorts AFTER "𐀀" in UTF-16 but BEFORE it in UTF-8 bytes,
+  // and both send to t and u next to "a": t and u each fold three
+  // contributions, and on these weights the UTF-16 fold order changes
+  // ranks in the last ulp (the string graph above rounds alike in both
+  // orders)
+  private def ulpEdges: DataFrame = Seq(
+    ("a", "t", 1L), ("a", "u", 1L), ("\uE000", "t", 1L), ("\uE000", "u", 1L),
+    ("𐀀", "t", 2L), ("𐀀", "u", 5L), ("t", "a", 1L), ("u", "\uE000", 1L),
+    ("t", "𐀀", 2L), ("u", "a", 1L)
+  ).toDF("src", "dst", "w")
+
   private def intEdges: DataFrame = Seq(
     (1, 2, 3L), (1, 3, 1L), (2, 3, 2L), (3, 1, 5L), (3, 3, 1L),
     (3, 4, 2L), (2, 3, 4L), (7, 2, 1L), (9, 2, 2L), (1, 7, 1L)
   ).toDF("src", "dst", "w")
 
   test("pageRank exact: driver path == distributed path, bitwise (string + int ids)") {
-    for (e <- Seq(stringEdges, intEdges)) {
+    for (e <- Seq(stringEdges, ulpEdges, intEdges)) {
       val drv = Graph.pageRank(e, "src", "dst", "w", iterations = 6, exact = true)
       val dist = Graph.pageRankDistributed(e, "src", "dst", "w", iterations = 6,
         damping = 0.85, exact = true, checkpoint = false)

@@ -43,6 +43,32 @@ class ObservabilitySpec extends AnyFunSuite {
     } finally Observability.stop()
   }
 
+  test("codegen counters render in /metrics; a repeated query compiles nothing") {
+    val port = Observability.start(spark, 0)
+    def counter(name: String): Long = {
+      val body = get(port, "/metrics").body()
+      assert(body.contains(s"# TYPE $name counter"), body)
+      body.linesIterator.collectFirst { case l if l.startsWith(s"$name ") => l.split(' ')(1).toLong }.get
+    }
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft_codegen_obs").toString
+      spark.range(0, 1000).selectExpr("id", "id % 7 AS k").write.parquet(s"$dir/t")
+      // the odd constant is inlined into the generated source, so the
+      // first run compiles classes no earlier test compiled
+      def query(): Unit = spark.read.parquet(s"$dir/t")
+        .selectExpr("k", "id + 982451653 AS v").groupBy("k").sum("v").collect()
+      val before = counter("graft_codegen_compiles_total")
+      val msBefore = counter("graft_codegen_compile_ms_total")
+      query()
+      val first = counter("graft_codegen_compiles_total")
+      assert(first > before)
+      assert(counter("graft_codegen_compile_ms_total") >= msBefore)
+      query()
+      assert(counter("graft_codegen_compiles_total") === first)
+      graft.core.Fs.deleteDir(spark, dir)
+    } finally Observability.stop()
+  }
+
   test("normalizeApiEndpoint collapses dynamic paths to bounded routes (C16)") {
     import graft.core.Observability.normalizeApiEndpoint
     assert(normalizeApiEndpoint("/eth/v2/beacon/blocks/123456")
