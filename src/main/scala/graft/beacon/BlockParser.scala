@@ -1,6 +1,6 @@
 package graft.beacon
 
-import graft.functions.GraftFunctions.{hex_popcount, safe_long, safe_long_null}
+import graft.functions.GraftFunctions.{hex_popcount, safe_long_null}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -11,18 +11,19 @@ import org.apache.spark.sql.{Column, DataFrame}
   * constant-folded fork-schedule CASE chain (C10). No per-row dispatch, no
   * fork-grouped shuffle (the reference's D3 step disappears).
   *
-  * Every projection is codegen-friendly (`explode`/`posexplode`, nested
-  * field access, the custom `safe_long`/`hex_popcount` expressions) so the
-  * whole parse of one output table is a single WholeStageCodegen span over
-  * the raw scan.
+  * Each table is one Column over a parsed payload row: an array of
+  * structs holding that payload's rows of the table (a `transform` over
+  * the exploded list, or a one-element array under the table's row
+  * filter). [[shred]] puts all 13 side by side in one row per payload —
+  * the input of the transform's single write — and the per-table frames
+  * ([[parseAll]], the `blocks`/`attestations`/… functions) `inline` the
+  * same Columns, so both outputs share every projection.
   */
 object BlockParser {
 
   import Schemas._
 
-  /** Attach the parsed payload struct. Callers fanning out to many tables
-    * should `.persist()` the result so the JSON parse happens once
-    * (SURVEY §7.4 multi-output transform). */
+  /** Attach the parsed payload struct as column `p`. */
   def withParsed(raw: DataFrame): DataFrame =
     raw.withColumn("p", from_json(col("payload"), blockPayload,
       Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")))
@@ -36,11 +37,24 @@ object BlockParser {
   private def body(path: String): Column = msg("body." + path)
   private def bodyCol: Column = col("p").getField("data").getField("message").getField("body")
 
-  import ParseHelpers.{s, l, withMeta}
+  import ParseHelpers.{s, l}
 
   // counts are UInt64 in the reference schema → LongType uniformly (a
   // mixed int/long landscape breaks schema-sensitive unions downstream)
   private def sizeOr0(c: Column): Column = coalesce(size(c), lit(0)).cast("long")
+
+  /** One row per element of `list`: `row(element, position)` gives the
+    * row's columns, and `extra` columns end every row. */
+  private def rowsOf(list: Column, extra: Seq[Column])(row: (Column, Column) => Seq[Column]): Column =
+    transform(list, (x, i) => struct(row(x, i) ++ extra: _*))
+
+  /** One row when `keep` holds, none otherwise. */
+  private def rowIf(keep: Column, extra: Seq[Column])(row: Seq[Column]): Column =
+    when(keep, array(struct(row ++ extra: _*)))
+
+  /** The rows of one table as a frame (no meta columns). */
+  private def rowsFrame(parsed: DataFrame, rows: Column): DataFrame =
+    parsed.select(inline(rows))
 
   /** P1: blocks — header/eth1 projection + derived counts + popcount
     * participation (reference: fork_base.py:86-139). Valid-but-sparse
@@ -70,12 +84,10 @@ object BlockParser {
     * would drop that row, stricter than "the block document parses").
     * Evaluated only on corrupt rows (rare), so the second parse is off
     * the hot path. */
-  def blocks(parsed: DataFrame, cfg: ChainConfig): DataFrame =
-    parsed
-      .filter(col("p").isNotNull &&
-        (col("p").getField("_corrupt_record").isNull ||
-          get_json_object(col("payload"), "$.data").isNotNull))
-      .select(
+  private def blockRows(cfg: ChainConfig, extra: Seq[Column]): Column =
+    rowIf(col("p").isNotNull &&
+      (col("p").getField("_corrupt_record").isNull ||
+        get_json_object(col("payload"), "$.data").isNotNull), extra)(Seq(
       col("slot"),
       l(msg("proposer_index")).as("proposer_index"),
       s(msg("parent_root")).as("parent_root"),
@@ -93,56 +105,62 @@ object BlockParser {
       sizeOr0(body("blob_kzg_commitments")).as("blob_kzg_commitments_count"),
       (sizeOr0(body("execution_requests.deposits")) +
         sizeOr0(body("execution_requests.withdrawals")) +
-        sizeOr0(body("execution_requests.consolidations"))).as("execution_requests_count"))
+        sizeOr0(body("execution_requests.consolidations"))).as("execution_requests_count")))
 
-  /** P2: attestations — posexplode + checkpoint flattening
+  def blocks(parsed: DataFrame, cfg: ChainConfig): DataFrame =
+    rowsFrame(parsed, blockRows(cfg, Nil))
+
+  /** P2: attestations — enumerate + checkpoint flattening
     * (reference: fork_base.py:163-186). */
+  private def attestationRows(extra: Seq[Column]): Column =
+    rowsOf(body("attestations"), extra)((att, pos) => Seq(
+      col("slot"),
+      pos.cast("long").as("attestation_index"),
+      s(att("aggregation_bits")).as("aggregation_bits"),
+      s(att("signature")).as("signature"),
+      // reference `safe_int(att_data.get("slot", slot), slot)`: BOTH a
+      // missing field AND an unparseable value fall back to the block
+      // slot — safe_long (garbage → 0) would turn garbage into slot 0
+      coalesce(safe_long_null(field(att, "data.slot")), col("slot")).as("attestation_slot"),
+      l(field(att, "data.index")).as("committee_index"),
+      s(field(att, "data.beacon_block_root")).as("beacon_block_root"),
+      l(field(att, "data.source.epoch")).as("source_epoch"),
+      s(field(att, "data.source.root")).as("source_root"),
+      l(field(att, "data.target.epoch")).as("target_epoch"),
+      s(field(att, "data.target.root")).as("target_root")))
+
   def attestations(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("slot"), posexplode(body("attestations")).as(Seq("pos", "att")))
-      .select(
-        col("slot"),
-        col("pos").cast("long").as("attestation_index"),
-        s(col("att.aggregation_bits")).as("aggregation_bits"),
-        s(col("att.signature")).as("signature"),
-        // reference `safe_int(att_data.get("slot", slot), slot)`: BOTH a
-        // missing field AND an unparseable value fall back to the block
-        // slot — safe_long (garbage → 0) would turn garbage into slot 0
-        coalesce(safe_long_null(col("att.data.slot")), col("slot")).as("attestation_slot"),
-        l(col("att.data.index")).as("committee_index"),
-        s(col("att.data.beacon_block_root")).as("beacon_block_root"),
-        l(col("att.data.source.epoch")).as("source_epoch"),
-        s(col("att.data.source.root")).as("source_root"),
-        l(col("att.data.target.epoch")).as("target_epoch"),
-        s(col("att.data.target.root")).as("target_root"))
+    rowsFrame(parsed, attestationRows(Nil))
 
   /** P3: deposits (reference: phase0.py:29-44). */
+  private def depositRows(extra: Seq[Column]): Column =
+    rowsOf(body("deposits"), extra)((d, pos) => Seq(
+      col("slot"),
+      pos.cast("long").as("deposit_index"),
+      s(field(d, "data.pubkey")).as("pubkey"),
+      s(field(d, "data.withdrawal_credentials")).as("withdrawal_credentials"),
+      l(field(d, "data.amount")).as("amount"),
+      s(field(d, "data.signature")).as("signature"),
+      coalesce(d("proof"), array()).as("proof")))
+
   def deposits(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("slot"), posexplode(body("deposits")).as(Seq("pos", "d")))
-      .select(
-        col("slot"),
-        col("pos").cast("long").as("deposit_index"),
-        s(col("d.data.pubkey")).as("pubkey"),
-        s(col("d.data.withdrawal_credentials")).as("withdrawal_credentials"),
-        l(col("d.data.amount")).as("amount"),
-        s(col("d.data.signature")).as("signature"),
-        coalesce(col("d.proof"), array()).as("proof"))
+    rowsFrame(parsed, depositRows(Nil))
 
   /** P4: voluntary_exits (reference: phase0.py:46-59). */
+  private def voluntaryExitRows(extra: Seq[Column]): Column =
+    rowsOf(body("voluntary_exits"), extra)((e, pos) => Seq(
+      col("slot"),
+      pos.cast("long").as("exit_index"),
+      s(e("signature")).as("signature"),
+      l(field(e, "message.epoch")).as("epoch"),
+      l(field(e, "message.validator_index")).as("validator_index")))
+
   def voluntaryExits(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("slot"), posexplode(body("voluntary_exits")).as(Seq("pos", "e")))
-      .select(
-        col("slot"),
-        col("pos").cast("long").as("exit_index"),
-        s(col("e.signature")).as("signature"),
-        l(col("e.message.epoch")).as("epoch"),
-        l(col("e.message.validator_index")).as("validator_index"))
+    rowsFrame(parsed, voluntaryExitRows(Nil))
 
   /** P5: proposer_slashings — two signed headers flattened to 12 columns
     * (reference: phase0.py:61-85). */
-  def proposerSlashings(parsed: DataFrame): DataFrame = {
+  private def proposerSlashingRows(extra: Seq[Column]): Column = {
     def header(prefix: String, h: Column) = Seq(
       l(field(h, "message.slot")).as(s"${prefix}_slot"),
       l(field(h, "message.proposer_index")).as(s"${prefix}_proposer_index"),
@@ -150,21 +168,37 @@ object BlockParser {
       s(field(h, "message.state_root")).as(s"${prefix}_state_root"),
       s(field(h, "message.body_root")).as(s"${prefix}_body_root"),
       s(h("signature")).as(s"${prefix}_signature"))
-    parsed
-      .select(col("slot"), posexplode(body("proposer_slashings")).as(Seq("pos", "ps")))
-      .select(
-        (col("slot") +: col("pos").cast("long").as("slashing_index") +:
-          (header("header_1", col("ps.signed_header_1")) ++
-            header("header_2", col("ps.signed_header_2")))): _*)
+    rowsOf(body("proposer_slashings"), extra)((ps, pos) =>
+      col("slot") +: pos.cast("long").as("slashing_index") +:
+        (header("header_1", ps("signed_header_1")) ++ header("header_2", ps("signed_header_2"))))
   }
 
+  def proposerSlashings(parsed: DataFrame): DataFrame =
+    rowsFrame(parsed, proposerSlashingRows(Nil))
+
+  /** CSV/scalar fallback (reference _parse_attesting_indices): the main
+    * maximal schema nulls a non-array attesting_indices; this re-reads the
+    * payload's attester slashings with those fields as strings. The
+    * second `from_json` runs only for a payload where some slashing's
+    * attesting_indices came out null (the rare CSV/scalar variant), so
+    * the common path never parses a payload twice. */
+  private val SlashingVariant = "__attester_slashings_csv"
+
+  private def withSlashingVariant(parsed: DataFrame): DataFrame =
+    parsed.withColumn(SlashingVariant, when(
+      exists(body("attester_slashings"), as =>
+        as("attestation_1")("attesting_indices").isNull ||
+          as("attestation_2")("attesting_indices").isNull),
+      from_json(col("payload"), Schemas.attesterSlashingsCsvVariant)
+        .getField("data").getField("message").getField("body")
+        .getField("attester_slashings")))
+
   /** P6: attester_slashings — indexed attestations + derived validator
-    * counts and distinct-union total (reference: phase0.py:87-190). */
-  def attesterSlashings(parsed: DataFrame): DataFrame = {
-    // CSV/scalar fallback (reference _parse_attesting_indices): the main
-    // maximal schema nulls a non-array attesting_indices; re-read just
-    // those fields as strings and split on ','. `av` = the variant struct
-    // for the SAME exploded slashing (element_at by pos).
+    * counts and distinct-union total (reference: phase0.py:87-190). Reads
+    * the column [[withSlashingVariant]] adds. */
+  private def attesterSlashingRows(extra: Seq[Column]): Column = {
+    // `av` = the CSV-variant struct of the SAME slashing (by position),
+    // split on ',' where the maximal schema nulled the array
     def indices(a: Column, av: Column): Column =
       coalesce(
         transform(a("attesting_indices"), x => l(x)),
@@ -181,188 +215,190 @@ object BlockParser {
       s(a("signature")).as(s"${prefix}_signature"),
       indices(a, av).as(s"${prefix}_attesting_indices"),
       size(indices(a, av)).cast("long").as(s"${prefix}_validator_count"))
-    val variant = from_json(col("payload"), Schemas.attesterSlashingsCsvVariant)
-      .getField("data").getField("message").getField("body")
-      .getField("attester_slashings")
-    parsed
-      .select(
-        col("slot"), col("payload"),
-        posexplode(body("attester_slashings")).as(Seq("pos", "as")))
-      .select(
-        col("slot"), col("pos"), col("as"),
-        // the CSV fallback re-parse of the whole payload is gated per row:
-        // only when the maximal schema nulled an attesting_indices array
-        // (the rare scalar/CSV variant) does the second from_json run —
-        // the common path never pays a double payload parse
-        when(
-          col("as.attestation_1.attesting_indices").isNull ||
-            col("as.attestation_2.attesting_indices").isNull,
-          element_at(variant, col("pos") + 1)).as("asv"))
-      .select(
-        (col("slot") +: col("pos").cast("long").as("slashing_index") +:
-          (att("att_1", col("as.attestation_1"), col("asv.attestation_1")) ++
-            att("att_2", col("as.attestation_2"), col("asv.attestation_2")) :+
-            size(array_union(
-              indices(col("as.attestation_1"), col("asv.attestation_1")),
-              indices(col("as.attestation_2"), col("asv.attestation_2"))))
-              .cast("long").as("total_slashed_validators"))): _*)
+    rowsOf(body("attester_slashings"), extra) { (as, pos) =>
+      val asv = element_at(col(SlashingVariant), pos + 1)
+      col("slot") +: pos.cast("long").as("slashing_index") +:
+        (att("att_1", as("attestation_1"), asv("attestation_1")) ++
+          att("att_2", as("attestation_2"), asv("attestation_2")) :+
+          size(array_union(
+            indices(as("attestation_1"), asv("attestation_1")),
+            indices(as("attestation_2"), asv("attestation_2"))))
+            .cast("long").as("total_slashed_validators"))
+    }
   }
+
+  def attesterSlashings(parsed: DataFrame): DataFrame =
+    rowsFrame(withSlashingVariant(parsed), attesterSlashingRows(Nil))
 
   /** P7: sync_aggregates (Altair+; null-gated, no fork branch needed)
     * (reference: altair.py:15-60). */
+  private def syncAggregateRows(extra: Seq[Column]): Column =
+    rowIf(bodyCol.getField("sync_aggregate").isNotNull, extra)(Seq(
+      col("slot"),
+      s(body("sync_aggregate.sync_committee_bits")).as("sync_committee_bits"),
+      s(body("sync_aggregate.sync_committee_signature")).as("sync_committee_signature"),
+      coalesce(hex_popcount(body("sync_aggregate.sync_committee_bits")), lit(0))
+        .cast("long").as("participation_count"),
+      coalesce(hex_popcount(body("sync_aggregate.sync_committee_bits")), lit(0))
+        .cast("long").as("participating_validators")))
+
   def syncAggregates(parsed: DataFrame): DataFrame =
-    parsed
-      .filter(bodyCol.getField("sync_aggregate").isNotNull)
-      .select(
-        col("slot"),
-        s(body("sync_aggregate.sync_committee_bits")).as("sync_committee_bits"),
-        s(body("sync_aggregate.sync_committee_signature")).as("sync_committee_signature"),
-        coalesce(hex_popcount(body("sync_aggregate.sync_committee_bits")), lit(0))
-          .cast("long").as("participation_count"),
-        coalesce(hex_popcount(body("sync_aggregate.sync_committee_bits")), lit(0))
-          .cast("long").as("participating_validators"))
+    rowsFrame(parsed, syncAggregateRows(Nil))
 
   /** P8: execution_payloads (Bellatrix+, Deneb blob-gas and Capella
     * withdrawal-count fields default to 0 on older forks)
     * (reference: bellatrix.py:15-58, deneb.py:36-41, capella.py:41-43). */
-  def executionPayloads(parsed: DataFrame): DataFrame = {
+  private def executionPayloadRows(extra: Seq[Column]): Column = {
     val ep = bodyCol.getField("execution_payload")
-    parsed
-      .filter(ep.isNotNull)
-      .select(
-        col("slot"),
-        s(ep("parent_hash")).as("parent_hash"),
-        s(ep("fee_recipient")).as("fee_recipient"),
-        s(ep("state_root")).as("state_root"),
-        s(ep("receipts_root")).as("receipts_root"),
-        s(ep("logs_bloom")).as("logs_bloom"),
-        s(ep("prev_randao")).as("prev_randao"),
-        l(ep("block_number")).as("block_number"),
-        l(ep("gas_limit")).as("gas_limit"),
-        l(ep("gas_used")).as("gas_used"),
-        l(ep("timestamp")).as("timestamp"),
-        s(ep("base_fee_per_gas")).as("base_fee_per_gas"),
-        s(ep("block_hash")).as("block_hash"),
-        s(ep("extra_data")).as("extra_data"),
-        coalesce(size(ep("transactions")), lit(0)).cast("long").as("transactions_count"),
-        l(ep("blob_gas_used")).as("blob_gas_used"),
-        l(ep("excess_blob_gas")).as("excess_blob_gas"),
-        coalesce(size(ep("withdrawals")), lit(0)).cast("long").as("withdrawals_count"))
+    rowIf(ep.isNotNull, extra)(Seq(
+      col("slot"),
+      s(ep("parent_hash")).as("parent_hash"),
+      s(ep("fee_recipient")).as("fee_recipient"),
+      s(ep("state_root")).as("state_root"),
+      s(ep("receipts_root")).as("receipts_root"),
+      s(ep("logs_bloom")).as("logs_bloom"),
+      s(ep("prev_randao")).as("prev_randao"),
+      l(ep("block_number")).as("block_number"),
+      l(ep("gas_limit")).as("gas_limit"),
+      l(ep("gas_used")).as("gas_used"),
+      l(ep("timestamp")).as("timestamp"),
+      s(ep("base_fee_per_gas")).as("base_fee_per_gas"),
+      s(ep("block_hash")).as("block_hash"),
+      s(ep("extra_data")).as("extra_data"),
+      coalesce(size(ep("transactions")), lit(0)).cast("long").as("transactions_count"),
+      l(ep("blob_gas_used")).as("blob_gas_used"),
+      l(ep("excess_blob_gas")).as("excess_blob_gas"),
+      coalesce(size(ep("withdrawals")), lit(0)).cast("long").as("withdrawals_count")))
   }
+
+  def executionPayloads(parsed: DataFrame): DataFrame =
+    rowsFrame(parsed, executionPayloadRows(Nil))
+
+  /** `tx_hash_` + `h` (0 ≤ h < 2^32) as 8 lower-case hex digits — the
+    * `format_string("tx_hash_%08x", h)` value, built without
+    * `java.util.Formatter`. */
+  private[graft] def txHashOf(h: Column): Column =
+    concat(lit("tx_hash_"), lpad(lower(hex(h)), 8, "0"))
 
   /** P9: transactions — raw tx hex list exploded with block-level columns
     * broadcast onto each row. `transaction_hash` is a STABLE placeholder
-    * (xxhash64 masked to 32 bits) replacing the reference's
-    * process-salted Python `hash()` (bellatrix.py:93-96) — documented
-    * divergence, the reference itself is non-reproducible here. */
-  def transactions(parsed: DataFrame): DataFrame = {
+    * (xxhash64 masked to 32 bits, [[txHashOf]]) replacing the reference's process-salted Python
+    * `hash()` (bellatrix.py:93-96) — documented divergence, the reference
+    * itself is non-reproducible here. */
+  private def transactionRows(extra: Seq[Column]): Column = {
     val ep = bodyCol.getField("execution_payload")
-    parsed
-      .filter(ep.isNotNull)
-      .select(
-        col("slot"),
-        l(ep("block_number")).as("block_number"),
-        s(ep("block_hash")).as("block_hash"),
-        s(ep("fee_recipient")).as("fee_recipient"),
-        l(ep("gas_limit")).as("gas_limit"),
-        l(ep("gas_used")).as("gas_used"),
-        s(ep("base_fee_per_gas")).as("base_fee_per_gas"),
-        posexplode(ep("transactions")).as(Seq("pos", "tx")))
-      .select(
-        col("slot"), col("block_number"), col("block_hash"),
-        col("pos").cast("long").as("transaction_index"),
-        format_string("tx_hash_%08x", xxhash64(col("tx")).bitwiseAND(lit(0xffffffffL)))
-          .as("transaction_hash"),
-        col("fee_recipient"), col("gas_limit"), col("gas_used"),
-        col("base_fee_per_gas"),
-        lit("").as("from_address"), lit("").as("to_address"),
-        lit("").as("value"), lit(0L).as("gas_price"), lit(0L).as("nonce"),
-        lit("").as("input"))
+    rowsOf(ep("transactions"), extra)((tx, pos) => Seq(
+      col("slot"),
+      l(ep("block_number")).as("block_number"),
+      s(ep("block_hash")).as("block_hash"),
+      pos.cast("long").as("transaction_index"),
+      txHashOf(xxhash64(tx).bitwiseAND(lit(0xffffffffL))).as("transaction_hash"),
+      s(ep("fee_recipient")).as("fee_recipient"),
+      l(ep("gas_limit")).as("gas_limit"),
+      l(ep("gas_used")).as("gas_used"),
+      s(ep("base_fee_per_gas")).as("base_fee_per_gas"),
+      lit("").as("from_address"), lit("").as("to_address"),
+      lit("").as("value"), lit(0L).as("gas_price"), lit(0L).as("nonce"),
+      lit("").as("input")))
   }
+
+  def transactions(parsed: DataFrame): DataFrame =
+    rowsFrame(parsed, transactionRows(Nil))
 
   /** P10: withdrawals (Capella+) (reference: capella.py:22-43). */
-  def withdrawals(parsed: DataFrame): DataFrame = {
+  private def withdrawalRows(extra: Seq[Column]): Column = {
     val ep = bodyCol.getField("execution_payload")
-    parsed
-      .select(
-        col("slot"),
-        l(ep("block_number")).as("block_number"),
-        s(ep("block_hash")).as("block_hash"),
-        posexplode(ep("withdrawals")).as(Seq("pos", "w")))
-      .select(
-        col("slot"), col("block_number"), col("block_hash"),
-        l(col("w.index")).as("withdrawal_index"),
-        l(col("w.validator_index")).as("validator_index"),
-        s(col("w.address")).as("address"),
-        l(col("w.amount")).as("amount"))
+    rowsOf(ep("withdrawals"), extra)((w, _) => Seq(
+      col("slot"),
+      l(ep("block_number")).as("block_number"),
+      s(ep("block_hash")).as("block_hash"),
+      l(w("index")).as("withdrawal_index"),
+      l(w("validator_index")).as("validator_index"),
+      s(w("address")).as("address"),
+      l(w("amount")).as("amount")))
   }
 
+  def withdrawals(parsed: DataFrame): DataFrame =
+    rowsFrame(parsed, withdrawalRows(Nil))
+
   /** P11: bls_changes (Capella+) (reference: capella.py:46-60). */
+  private def blsChangeRows(extra: Seq[Column]): Column =
+    rowsOf(body("bls_to_execution_changes"), extra)((c, pos) => Seq(
+      col("slot"),
+      pos.cast("long").as("change_index"),
+      s(c("signature")).as("signature"),
+      l(field(c, "message.validator_index")).as("validator_index"),
+      s(field(c, "message.from_bls_pubkey")).as("from_bls_pubkey"),
+      s(field(c, "message.to_execution_address")).as("to_execution_address")))
+
   def blsChanges(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("slot"), posexplode(body("bls_to_execution_changes")).as(Seq("pos", "c")))
-      .select(
-        col("slot"),
-        col("pos").cast("long").as("change_index"),
-        s(col("c.signature")).as("signature"),
-        l(col("c.message.validator_index")).as("validator_index"),
-        s(col("c.message.from_bls_pubkey")).as("from_bls_pubkey"),
-        s(col("c.message.to_execution_address")).as("to_execution_address"))
+    rowsFrame(parsed, blsChangeRows(Nil))
 
   /** P12: blob_commitments (Deneb+) (reference: deneb.py:22-33). */
+  private def blobCommitmentRows(extra: Seq[Column]): Column =
+    rowsOf(body("blob_kzg_commitments"), extra)((c, pos) => Seq(
+      col("slot"),
+      pos.cast("long").as("commitment_index"),
+      s(c).as("commitment")))
+
   def blobCommitments(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("slot"), posexplode(body("blob_kzg_commitments")).as(Seq("pos", "c")))
-      .select(
-        col("slot"),
-        col("pos").cast("long").as("commitment_index"),
-        s(col("c")).as("commitment"))
+    rowsFrame(parsed, blobCommitmentRows(Nil))
 
   /** P14: execution_requests (Electra+) — whole object kept as a JSON
     * string + counts; row emitted only when any count > 0
     * (reference: electra.py:53-84). */
-  def executionRequestsTable(parsed: DataFrame): DataFrame = {
+  private def executionRequestRows(extra: Seq[Column]): Column = {
     val er = bodyCol.getField("execution_requests")
-    parsed
-      .filter(er.isNotNull)
-      .select(
-        col("slot"),
-        coalesce(get_json_object(col("payload"), "$.data.message.body.execution_requests"),
-          lit("")).as("payload"),
-        sizeOr0(er("deposits")).as("deposits_count"),
-        sizeOr0(er("withdrawals")).as("withdrawals_count"),
-        sizeOr0(er("consolidations")).as("consolidations_count"))
-      .filter(
-        col("deposits_count") > 0 || col("withdrawals_count") > 0 ||
-          col("consolidations_count") > 0)
+    rowIf(er.isNotNull &&
+      (sizeOr0(er("deposits")) > 0 || sizeOr0(er("withdrawals")) > 0 ||
+        sizeOr0(er("consolidations")) > 0), extra)(Seq(
+      col("slot"),
+      coalesce(get_json_object(col("payload"), "$.data.message.body.execution_requests"),
+        lit("")).as("payload"),
+      sizeOr0(er("deposits")).as("deposits_count"),
+      sizeOr0(er("withdrawals")).as("withdrawals_count"),
+      sizeOr0(er("consolidations")).as("consolidations_count")))
   }
 
-  /** All block-derived tables (the 1-raw-source → 13-table fan-out of
-    * SURVEY §3.2). Pass `persist = true` when materializing more than a
-    * couple of tables so the JSON parse runs once. */
+  def executionRequestsTable(parsed: DataFrame): DataFrame =
+    rowsFrame(parsed, executionRequestRows(Nil))
+
+  /** Every block table's rows as a Column, by table name. */
+  private def tableRows(cfg: ChainConfig, extra: Seq[Column]): Seq[(String, Column)] = Seq(
+    "blocks" -> blockRows(cfg, extra),
+    "attestations" -> attestationRows(extra),
+    "deposits" -> depositRows(extra),
+    "voluntary_exits" -> voluntaryExitRows(extra),
+    "proposer_slashings" -> proposerSlashingRows(extra),
+    "attester_slashings" -> attesterSlashingRows(extra),
+    "sync_aggregates" -> syncAggregateRows(extra),
+    "execution_payloads" -> executionPayloadRows(extra),
+    "transactions" -> transactionRows(extra),
+    "withdrawals" -> withdrawalRows(extra),
+    "bls_changes" -> blsChangeRows(extra),
+    "blob_commitments" -> blobCommitmentRows(extra),
+    "execution_requests" -> executionRequestRows(extra))
+
+  /** The 1-raw-source → 13-table fan-out (SURVEY §3.2) as ONE frame: per
+    * raw row, `slot`, `month` and one column per table holding that
+    * payload's final rows of the table — `slot_timestamp` and
+    * `insert_version` included — as an `array<struct>` (null or empty:
+    * no rows). The payload is parsed once, inside the same projection. */
+  def shred(raw: DataFrame, cfg: ChainConfig, insertVersion: Long = 0L): DataFrame = {
+    val parsed = ParseHelpers.withMeta(withSlashingVariant(withParsed(raw)), cfg, insertVersion)
+    val meta = Seq(col("slot_timestamp"), col("insert_version"))
+    parsed.select(col("slot") +: ParseHelpers.month(cfg) +:
+      tableRows(cfg, meta).map { case (t, rows) => rows.as(t) }: _*)
+  }
+
+  /** All block-derived tables as frames: the [[shred]] columns, inlined. */
   def parseAll(
       raw: DataFrame, cfg: ChainConfig, insertVersion: Long = 0L,
       allowedTables: Option[Set[String]] = None): Map[String, DataFrame] = {
-    // accept either raw rows or an already-parsed (possibly persisted) frame
-    val parsed = if (raw.columns.contains("p")) raw else withParsed(raw)
-    val all = Map(
-      "blocks" -> blocks(parsed, cfg),
-      "attestations" -> attestations(parsed),
-      "deposits" -> deposits(parsed),
-      "voluntary_exits" -> voluntaryExits(parsed),
-      "proposer_slashings" -> proposerSlashings(parsed),
-      "attester_slashings" -> attesterSlashings(parsed),
-      "sync_aggregates" -> syncAggregates(parsed),
-      "execution_payloads" -> executionPayloads(parsed),
-      "transactions" -> transactions(parsed),
-      "withdrawals" -> withdrawals(parsed),
-      "bls_changes" -> blsChanges(parsed),
-      "blob_commitments" -> blobCommitments(parsed),
-      "execution_requests" -> executionRequestsTable(parsed))
-    val kept = allowedTables match { // F8 allowed-tables filter
-      case Some(allow) => all.view.filterKeys(allow).toMap
-      case None => all
-    }
-    kept.map { case (k, v) => k -> withMeta(v, cfg, insertVersion) }
+    val shredded = shred(raw, cfg, insertVersion)
+    Transformer.blockTables
+      .filter(t => allowedTables.forall(_.contains(t))) // F8 allowed-tables filter
+      .map(t => t -> shredded.select(inline(col(t))))
+      .toMap
   }
 }

@@ -1,6 +1,7 @@
 package graft.beacon
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{array, col, struct}
 
 /** One loader = one beacon endpoint + fetch cadence/gates + the parser for
   * its raw table (reference: src/loaders registry, src/services/
@@ -20,11 +21,11 @@ final case class LoaderDef(
     activationFork: Option[String],
     /** structured tables this loader owns (F8 allowed-tables filter). */
     tables: Set[String],
-    /** parse the raw frame into (table → rows). */
-    parse: (DataFrame, ChainConfig, Long) => Map[String, DataFrame],
-    /** optional pre-parse step shared by all output tables (persist-worthy
-      * multi-table fan-outs); identity when None. */
-    prepare: Option[DataFrame => DataFrame] = None,
+    /** shred the raw frame (insert version given): `slot`, `month` and,
+      * per table, an `array<struct>` column of its final rows, meta
+      * columns included (see [[BlockParser.shred]]). The transform writes
+      * the columns of [[tables]] in one job. */
+    shred: (DataFrame, ChainConfig, Long) => DataFrame,
     /** mega-payload loaders (validators: ~150 MB/slot on mainnet) split
       * the `data[]` array into parts at fetch time (P19,
       * [[RawIngest.fetchSlotsSplit]]); parsers work per part. */
@@ -42,24 +43,27 @@ final case class LoaderDef(
 /** The loader registry (reference: src/loaders/__init__.py:11-33). */
 object Loaders {
 
+  /** A one-table shred: each row of `f`'s output becomes a one-element
+    * array under the column `out`. */
   private def single(out: String)(
-      f: (DataFrame, ChainConfig, Long) => DataFrame): (DataFrame, ChainConfig, Long) => Map[String, DataFrame] =
-    (raw, cfg, v) => Map(out -> f(raw, cfg, v))
+      f: (DataFrame, ChainConfig, Long) => DataFrame): (DataFrame, ChainConfig, Long) => DataFrame =
+    (raw, cfg, v) => {
+      val rows = f(raw, cfg, v)
+      rows.select(col("slot"), ParseHelpers.month(cfg),
+        array(struct(rows.columns.map(col): _*)).as(out))
+    }
 
   val blocks: LoaderDef = LoaderDef(
     "blocks", "/eth/v2/beacon/blocks/{slot}",
     allowEmpty404 = true, dailyOnly = false, activationFork = None,
     tables = Transformer.blockTables,
-    parse = (raw, cfg, v) => BlockParser.parseAll(raw, cfg, v),
-    // one JSON parse shared by the 13-table fan-out (persisted by the
-    // transformer); parseAll detects the pre-parsed column
-    prepare = Some(BlockParser.withParsed))
+    shred = (raw, cfg, v) => BlockParser.shred(raw, cfg, v))
 
   val validators: LoaderDef = LoaderDef(
     "validators", "/eth/v1/beacon/states/{slot}/validators",
     allowEmpty404 = false, dailyOnly = true, activationFork = None,
     tables = Set("validators"),
-    parse = single("validators")(StateParsers.validators),
+    shred = single("validators")(StateParsers.validators),
     splitPayload = true)
 
   /** S3: validators fetch with the optional `id` filter — a comma-joined
@@ -76,37 +80,37 @@ object Loaders {
     "rewards", "/eth/v1/beacon/rewards/blocks/{slot}",
     allowEmpty404 = true, dailyOnly = false, activationFork = None,
     tables = Set("rewards"),
-    parse = single("rewards")(StateParsers.rewards))
+    shred = single("rewards")(StateParsers.rewards))
 
   val pendingConsolidations: LoaderDef = LoaderDef(
     "pending_consolidations", "/eth/v1/beacon/states/{slot}/pending_consolidations",
     allowEmpty404 = false, dailyOnly = true, activationFork = Some("electra"),
     tables = Set("pending_consolidations"),
-    parse = single("pending_consolidations")(StateParsers.pendingConsolidations))
+    shred = single("pending_consolidations")(StateParsers.pendingConsolidations))
 
   val pendingDeposits: LoaderDef = LoaderDef(
     "pending_deposits", "/eth/v1/beacon/states/{slot}/pending_deposits",
     allowEmpty404 = false, dailyOnly = true, activationFork = Some("electra"),
     tables = Set("pending_deposits"),
-    parse = single("pending_deposits")(StateParsers.pendingDeposits))
+    shred = single("pending_deposits")(StateParsers.pendingDeposits))
 
   val pendingPartialWithdrawals: LoaderDef = LoaderDef(
     "pending_partial_withdrawals", "/eth/v1/beacon/states/{slot}/pending_partial_withdrawals",
     allowEmpty404 = false, dailyOnly = true, activationFork = Some("electra"),
     tables = Set("pending_partial_withdrawals"),
-    parse = single("pending_partial_withdrawals")(StateParsers.pendingPartialWithdrawals))
+    shred = single("pending_partial_withdrawals")(StateParsers.pendingPartialWithdrawals))
 
   val blobSidecars: LoaderDef = LoaderDef(
     "blob_sidecars", "/eth/v1/beacon/blobs/{slot}",
     allowEmpty404 = true, dailyOnly = false, activationFork = Some("deneb"),
     tables = Set("blob_sidecars"),
-    parse = single("blob_sidecars")(StateParsers.blobSidecars))
+    shred = single("blob_sidecars")(StateParsers.blobSidecars))
 
   val dataColumnSidecars: LoaderDef = LoaderDef(
     "data_column_sidecars", "/eth/v1/debug/beacon/data_column_sidecars/{slot}",
     allowEmpty404 = true, dailyOnly = false, activationFork = Some("fulu"),
     tables = Set("data_column_sidecars"),
-    parse = single("data_column_sidecars")(StateParsers.dataColumnSidecars))
+    shred = single("data_column_sidecars")(StateParsers.dataColumnSidecars))
 
   val all: Seq[LoaderDef] = Seq(
     blocks, validators, rewards, pendingConsolidations, pendingDeposits,

@@ -24,4 +24,8 @@ private[beacon] object ParseHelpers {
   def withMeta(df: DataFrame, cfg: ChainConfig, insertVersion: Long): DataFrame =
     df.withColumn("slot_timestamp", cfg.slotTimestamp(col("slot")))
       .withColumn("insert_version", bound_long(insertVersion))
+
+  /** The `yyyy-MM` partition of every structured table, from `slot`. */
+  def month(cfg: ChainConfig): Column =
+    date_format(cfg.slotTimestamp(col("slot")), "yyyy-MM").as("month")
 }

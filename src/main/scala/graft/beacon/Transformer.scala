@@ -1,7 +1,8 @@
 package graft.beacon
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 import java.sql.Timestamp
 
@@ -12,7 +13,7 @@ import java.sql.Timestamp
   * design: chunks become *partitions of one job* (Spark's scheduler
   * replaces the worker pool), the fork-group-then-parse step (D3)
   * disappears into the maximal-schema single parse, and the 1→13 table
-  * fan-out reuses one persisted parse of the raw payload.
+  * fan-out is one shredded frame written by one job.
   */
 object Transformer {
 
@@ -85,13 +86,12 @@ object Transformer {
     * anyway. Compares by field name on the overlap; added/dropped columns
     * are fine (parquet unions schemas of nullable fields). */
   private def requireCompatibleSchema(
-      df: DataFrame, dir: String, table: String): Unit =
+      spark: SparkSession, schema: StructType, dir: String, table: String): Unit =
     schemaProbed.getOrElseUpdate(dir, {
-      if (graft.core.Fs.hasParquetFiles(df.sparkSession, dir)) {
-        val existing = df.sparkSession.read.parquet(dir).schema
+      if (graft.core.Fs.hasParquetFiles(spark, dir)) {
+        val existing = spark.read.parquet(dir).schema
           .map(f => f.name -> f.dataType).toMap
-        val drift = df.schema
-          .filter(f => f.name != "month") // partition col: type is inferred on read
+        val drift = schema
           .flatMap { f =>
             existing.get(f.name).filter(_ != f.dataType)
               .map(old => s"${f.name}: on-disk $old vs writer ${f.dataType}")
@@ -104,56 +104,35 @@ object Transformer {
       true
     })
 
-  /** Appends one table and returns its row count and its rows per range of
-    * `perRange`, both observed on the write action itself — a separate
-    * count would re-run the whole parse pipeline once more per table. */
-  private def writeTable(df: DataFrame, cfg: ChainConfig, outDir: String, table: String,
-      perRange: graft.core.RangeCounts): (Long, Array[Long]) = {
-    val out = df.withColumn(
-      "month", date_format(cfg.slotTimestamp(col("slot")), "yyyy-MM"))
-    requireCompatibleSchema(out, s"$outDir/$table", table)
-    val obs = org.apache.spark.sql.Observation()
-    try
-      out.observe(obs, count(lit(1)).as("n"),
-          udaf(perRange, Encoders.LONG)(col("slot")).as("per_range"))
-        .sortWithinPartitions("slot")
-        .write.mode(SaveMode.Append).partitionBy("month")
-        // K3: width-aware output file sizing per table
-        .option("maxRecordsPerFile", Loaders.maxRecordsPerFile(table))
-        .parquet(s"$outDir/$table")
+  /** Appends the loader's tables from `shredded` (see [[LoaderDef.shred]])
+    * in ONE write job and returns the rows written and the rows per range
+    * of `ranges` (sorted by start), summed over the tables, both counted
+    * by the write's tasks. Each table's schema is checked against its
+    * directory first, on the driver. The write commits every table or
+    * none: a failure leaves no file of any table visible, and its rows are
+    * not added to `rows_written`. */
+  private def writeTables(
+      spark: SparkSession, shredded: DataFrame, loader: LoaderDef, outDir: String,
+      ranges: IndexedSeq[(Long, Long)]): (Long, Array[Long]) = {
+    val tables = loader.tables.toSeq.sorted // F8
+    val input = shredded.select((Seq("slot", "month") ++ tables).map(col): _*)
+    tables.foreach { t =>
+      val rowSchema = input.schema(t).dataType.asInstanceOf[ArrayType].elementType
+      requireCompatibleSchema(spark, rowSchema.asInstanceOf[StructType], s"$outDir/$t", t)
+    }
+    val write = new graft.core.ShredWrite(spark, outDir, Loaders.maxRecordsPerFile, ranges)
+    try org.apache.spark.sql.graft.Bridge.appendV2(input.sortWithinPartitions("slot"), write)
     catch {
       case e: Throwable =>
-        // the dir's state is no longer what the probe saw (partial task
-        // files, or the failure itself was an out-of-band rewrite racing
-        // us) — drop the cached probe so the retry re-checks the disk
-        schemaProbed.remove(s"$outDir/$table")
+        // the dirs' state is no longer what the probes saw (the failure
+        // may itself be an out-of-band rewrite racing us) — drop the
+        // cached probes so the retry re-checks the disk
+        tables.foreach(t => schemaProbed.remove(s"$outDir/$t"))
         throw e
     }
-    val m = obs.get
-    (m("n").asInstanceOf[Long], m("per_range").asInstanceOf[scala.collection.Seq[Long]].toArray)
-  }
-
-  /** Appends every parsed table and returns the rows written and the rows
-    * per range of `ranges` (sorted by start), summed over the tables. The
-    * first table, by name, is written alone: when the parse is persisted,
-    * that write fills the cache the other tables read. The rest are then
-    * written at once, one pool thread per table, and this returns only
-    * after every write has finished — the caller may unpersist the parse
-    * on return, even when a write failed. Rows of a failed call are not
-    * added to `rows_written`. */
-  private def writeTables(
-      spark: SparkSession, tables: Map[String, DataFrame], cfg: ChainConfig,
-      outDir: String, ranges: IndexedSeq[(Long, Long)]): (Long, Array[Long]) = {
-    val perRange = new graft.core.RangeCounts(ranges)
-    val ordered = tables.toSeq.sortBy(_._1)
-    def write(t: (String, DataFrame)) =
-      writeTable(t._2.drop("month"), cfg, outDir, t._1, perRange)
-    val written = ordered.take(1).map(write) ++
-      graft.core.Parallel.all(ordered.drop(1).map(t => () => write(t)), ordered.size - 1)
-    val rows = written.map(_._1).sum
-    // accumulator adds are not thread-safe: one add, on the calling thread
-    graft.core.Metrics.of(spark).rowsWritten.add(rows)
-    (rows, written.map(_._2).foldLeft(perRange.zero)(perRange.merge))
+    val result = write.result
+    graft.core.Metrics.of(spark).rowsWritten.add(result.rows)
+    (result.rows, result.rangeRows)
   }
 
   /** Generic chunk transform for any registered loader: read its raw
@@ -180,25 +159,15 @@ object Transformer {
     val t0 = System.nanoTime()
     try {
       val chunk = chunkData(readRaw(spark, rawDir), startSlot, endSlot)
-      // multi-table fan-outs declare a shared pre-parse step (blocks: one
-      // from_json of the whole payload); persist it so the parse runs
-      // once, not once per output table
-      val prepared = loader.prepare match {
-        case Some(prep) => prep(chunk).persist()
-        case None => chunk
-      }
-      try {
-        val tables = loader.parse(prepared, cfg, version)
-          .view.filterKeys(loader.tables).toMap // F8
-        val (total, _) = writeTables(spark, tables, cfg, outDir, Vector((startSlot, endSlot)))
-        progress.append(progressRow(spark, loader.rawTable, startSlot, endSlot,
-          "completed", total, 0L, None, version))
-        graft.core.Metrics.histogram(
-          spark, "chunk_duration_seconds", s"${loader.name}/transform",
-          graft.core.Metrics.chunkDurationBucketsMillis)
-          .add((System.nanoTime() - t0) / 1000000L)
-        true
-      } finally if (loader.prepare.isDefined) prepared.unpersist()
+      val (total, _) = writeTables(spark, loader.shred(chunk, cfg, version), loader, outDir,
+        Vector((startSlot, endSlot)))
+      progress.append(progressRow(spark, loader.rawTable, startSlot, endSlot,
+        "completed", total, 0L, None, version))
+      graft.core.Metrics.histogram(
+        spark, "chunk_duration_seconds", s"${loader.name}/transform",
+        graft.core.Metrics.chunkDurationBucketsMillis)
+        .add((System.nanoTime() - t0) / 1000000L)
+      true
     } catch {
       case scala.util.control.NonFatal(e) =>
         // failed chunks observe their duration too (p99 must see them)
@@ -274,17 +243,16 @@ object Transformer {
       .drop("__bucket")
   }
 
-  /** D2/D4 at scale: transform ALL pending ranges as ONE Spark job per
-    * output table instead of one driver-loop iteration per chunk. The
-    * union of ranges is scanned once (partition/row-group pruned by the
-    * global slot bounds), deduped latest-per-slot once and parsed once,
-    * persisted for the multi-table fan-out. The first table's write fills
-    * that cache; the other tables are then written concurrently. Each
+  /** D2/D4 at scale: transform ALL pending ranges as ONE write job for
+    * every output table instead of one driver-loop iteration per chunk.
+    * The union of ranges is scanned once (partition/row-group pruned by
+    * the global slot bounds), deduped latest-per-slot once, parsed once and
+    * shredded into all tables by the same tasks that write them. The
     * write also counts its rows per range, so the per-chunk progress rows
     * (one progress write for all ranges) need no second pass.
     *
-    * All-or-nothing: any failure rolls up to `false` — only after every
-    * write has finished — and the caller falls back to per-chunk
+    * All-or-nothing: any failure rolls up to `false` — with no file of any
+    * table published — and the caller falls back to per-chunk
     * [[transformChunk]] for failure isolation (the reference's
     * chunk-at-a-time loop, loader.py:463-485, becomes the EXCEPTION path
     * instead of the steady-state).
@@ -330,18 +298,11 @@ object Transformer {
       // through the parse), then latest-retrieval dedup — the global
       // latest-per-slot window equals the per-chunk windows for any grid
       val tagged = latestRetrieval(filterToRanges(raw, ranges))
-      val prepared = (loader.prepare match {
-        case Some(prep) => prep(tagged)
-        case None => tagged
-      }).persist()
-      try {
-        val tables = loader.parse(prepared, cfg, version)
-          .view.filterKeys(loader.tables).toMap // F8
-        val (_, perRange) = writeTables(spark, tables, cfg, outDir, sorted)
-        progress.append(progressRows(spark, loader.rawTable, ranges,
-          "completed", sorted.zip(perRange).toMap, version))
-        true
-      } finally prepared.unpersist()
+      val (_, perRange) = writeTables(spark, loader.shred(tagged, cfg, version), loader,
+        outDir, sorted)
+      progress.append(progressRows(spark, loader.rawTable, ranges,
+        "completed", sorted.zip(perRange).toMap, version))
+      true
     } catch {
       case scala.util.control.NonFatal(e) =>
         // never silent: the per-chunk fallback re-runs the work, but the
@@ -353,10 +314,9 @@ object Transformer {
 
   /** D4 batch loop: discover untransformed chunks (J1) in rounds of
     * `chunksPerFetch` until the backlog drains. The steady-state path is
-    * [[transformChunksFused]] — one parse and one write action per output
-    * table over the whole round (the writes after the first run
-    * concurrently and also yield the per-chunk counts), not one job
-    * cascade per chunk; a fused-round failure
+    * [[transformChunksFused]] — one parse and one write job for every
+    * output table over the whole round (its tasks also count the
+    * per-chunk rows), not one job cascade per chunk; a fused-round failure
     * falls back to per-chunk [[transformChunk]] so one poisoned chunk
     * fails alone. Chunks whose transform FAILS stay "untransformed"
     * (progress row != completed), so each range is attempted at most once
@@ -490,7 +450,8 @@ object Transformer {
       throw new IllegalArgumentException(s"no loader owns table '$table'"))
     val emptyRaw = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], Schemas.rawTable)
-    ld.parse(emptyRaw, cfg, 0L)(table).schema
+    ld.shred(emptyRaw, cfg, 0L).schema(table).dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
   }
 
   /** Schema-drift-tolerant structured read — the 100 TB contract for a

@@ -1,9 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-
 /** Interval coalescing shared by the maintenance and streaming paths —
   * one implementation of the sort-then-fold merge so its edge cases
   * (duplicates, containment, adjacency) are fixed in one place.
@@ -25,15 +21,14 @@ object Ranges {
     merge(slots.map(s => (s, s)))
 }
 
-/** Rows per range as a typed aggregate over a slot column: element `i` of
-  * the result counts the input slots inside `ranges(i)`. A slot inside
+/** Rows per range: [[add]] counts `n` rows of one slot into element `i`
+  * of a counts array for every `ranges(i)` holding the slot. A slot inside
   * several overlapping ranges counts once in each of them; a slot outside
-  * every range, or a null slot, counts nowhere. `ranges` must be sorted by
-  * start. Each slot costs one binary search for the last range starting at
-  * or before it, then a backward walk that stops once no earlier range
-  * reaches the slot — a single step on a disjoint grid. */
-final class RangeCounts(ranges: IndexedSeq[(Long, Long)])
-    extends Aggregator[java.lang.Long, Array[Long], Array[Long]] {
+  * every range counts nowhere. `ranges` must be sorted by start. Each slot
+  * costs one binary search for the last range starting at or before it,
+  * then a backward walk that stops once no earlier range reaches the slot
+  * — a single step on a disjoint grid. */
+final class RangeCounts(ranges: IndexedSeq[(Long, Long)]) extends Serializable {
   private val starts = ranges.map(_._1).toArray
   private val ends = ranges.map(_._2).toArray
   require(starts.indices.drop(1).forall(i => starts(i - 1) <= starts(i)),
@@ -43,31 +38,24 @@ final class RangeCounts(ranges: IndexedSeq[(Long, Long)])
 
   def zero: Array[Long] = new Array[Long](starts.length)
 
-  def reduce(b: Array[Long], slot: java.lang.Long): Array[Long] = {
-    if (slot != null) {
-      val s = slot.longValue
-      var lo = 0
-      var hi = starts.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (starts(mid) <= s) lo = mid + 1 else hi = mid
-      }
-      var i = lo - 1
-      while (i >= 0 && reach(i) >= s) {
-        if (ends(i) >= s) b(i) += 1
-        i -= 1
-      }
+  def add(counts: Array[Long], slot: Long, n: Long): Unit = {
+    var lo = 0
+    var hi = starts.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (starts(mid) <= slot) lo = mid + 1 else hi = mid
     }
-    b
+    var i = lo - 1
+    while (i >= 0 && reach(i) >= slot) {
+      if (ends(i) >= slot) counts(i) += n
+      i -= 1
+    }
   }
 
+  /** Adds `b` into `a`, element by element, and returns `a`. */
   def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var i = 0
     while (i < a.length) { a(i) += b(i); i += 1 }
     a
   }
-
-  def finish(b: Array[Long]): Array[Long] = b
-  def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder()
-  def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
 }

@@ -29,8 +29,9 @@ object Tables {
 
 /** Session factory with the engine's defaults: UTC, AQE on, shuffle
   * partitions sized for the local harness (a cluster deployment overrides
-  * `spark.sql.shuffle.partitions` to ~2-3x total cores), and a codegen
-  * cache of [[CodegenCacheEntries]] classes.
+  * `spark.sql.shuffle.partitions` to ~2-3x total cores), a codegen
+  * cache of [[CodegenCacheEntries]] classes, and [[NioLocalFileSystem]]
+  * for `file:` paths.
   */
 object Sessions {
   /** Capacity of Spark's JVM-wide cache of compiled generated classes
@@ -71,8 +72,10 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    NioLocalFileSystem.install(s.sparkContext.hadoopConfiguration)
     s
   }
 

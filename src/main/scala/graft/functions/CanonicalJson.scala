@@ -25,6 +25,8 @@ object CanonicalJson {
     m
   }
 
+  private val hexFormat = java.util.HexFormat.of()
+
   def canonicalize(json: String): String = {
     rejectNonPythonNonFinite(json)
     val node = mapper.readTree(json)
@@ -141,7 +143,7 @@ object CanonicalJson {
         case '\b' => sb.append("\\b")
         case '\f' => sb.append("\\f")
         case c if c < 0x20 || c > 0x7e =>
-          sb.append(f"\\u${c.toInt}%04x")
+          sb.append("\\u").append(hexFormat.toHexDigits(c))
         case c => sb.append(c)
       }
       i += 1
@@ -149,12 +151,10 @@ object CanonicalJson {
     sb.append('"')
   }
 
-  private def sha256Hex(s: String): String = {
+  /** Lower-case hex of the first `bytes` bytes of sha256(s). */
+  private def sha256Hex(s: String, bytes: Int): String = {
     val md = MessageDigest.getInstance("SHA-256")
-    val digest = md.digest(s.getBytes(StandardCharsets.UTF_8))
-    val sb = new java.lang.StringBuilder(64)
-    digest.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
+    hexFormat.formatHex(md.digest(s.getBytes(StandardCharsets.UTF_8)), 0, bytes)
   }
 
   /** First 16 hex chars of sha256(canonical JSON) — the reference's
@@ -165,6 +165,6 @@ object CanonicalJson {
     val canonical =
       try canonicalize(json)
       catch { case _: Exception => json }
-    sha256Hex(canonical).substring(0, 16)
+    sha256Hex(canonical, 8)
   }
 }

@@ -107,6 +107,24 @@ class BlockParserSpec extends AnyFunSuite {
       again.map(_.getAs[String]("transaction_hash")).toSeq)
   }
 
+  test("transactions: the placeholder hash equals the format_string(\"tx_hash_%08x\") value") {
+    import org.apache.spark.sql.functions.{col, format_string, lit, xxhash64}
+    val rnd = new scala.util.Random(9)
+    val masked = Seq(0L, 0xffffffffL, 0x1L, 0xfL, 0xabcL, 0x0fffffffL, 0x00010000L, 0x80000000L) ++
+      Seq.fill(300)(rnd.nextLong() & 0xffffffffL)
+    val h = masked.toDF("h")
+    def same(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) = {
+      val got = df.select(BlockParser.txHashOf(c).as("a"),
+        format_string("tx_hash_%08x", c).as("b")).collect()
+      assert(got.forall(r => r.getString(0) == r.getString(1)),
+        got.find(r => r.getString(0) != r.getString(1)))
+    }
+    same(h, col("h"))
+    // the production input: xxhash64 of seeded transaction strings
+    val txs = Seq.fill(300)("0x02f8" + rnd.alphanumeric.take(1 + rnd.nextInt(60)).mkString).toDF("tx")
+    same(txs, xxhash64(col("tx")).bitwiseAND(lit(0xffffffffL)))
+  }
+
   test("withdrawals / bls_changes / blob_commitments (P10-P12)") {
     assert(tables("withdrawals").count() === 2)
     val w = tables("withdrawals").orderBy("withdrawal_index").head()

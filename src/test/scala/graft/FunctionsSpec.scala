@@ -151,6 +151,46 @@ class FunctionsSpec extends AnyFunSuite {
     assert(CanonicalJson.canonicalize("""{"x": "INF"}""") === """{"x":"INF"}""")
   }
 
+  test("payloadHash16 equals MessageDigest sha256 with hand-formatted hex on seeded payloads") {
+    val rnd = new scala.util.Random(7001)
+    def hex16(s: String): String = {
+      val d = java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
+      d.take(8).map(b => "0123456789abcdef".charAt((b >> 4) & 0xf).toString +
+        "0123456789abcdef".charAt(b & 0xf)).mkString
+    }
+    // keys and values mix ASCII, control chars, BMP and astral code points
+    def str(): String = (0 until rnd.nextInt(12)).map { _ =>
+      rnd.nextInt(5) match {
+        case 0 => rnd.nextInt(0x20).toChar.toString
+        case 1 => (0x7f + rnd.nextInt(0xd800 - 0x7f)).toChar.toString
+        case 2 => new String(Character.toChars(0x10000 + rnd.nextInt(0x10000)))
+        case _ => ('a' + rnd.nextInt(26)).toChar.toString
+      }
+    }.mkString
+    def quote(s: String): String =
+      "\"" + s.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < 0x20 => "\\u%04x".format(c.toInt)
+        case c => c.toString
+      } + "\""
+    (1 to 300).foreach { _ =>
+      val payload = (0 until 1 + rnd.nextInt(6))
+        .map(_ => s"${quote(str())}: ${if (rnd.nextBoolean()) quote(str()) else rnd.nextLong().toString}")
+        .mkString("{", ", ", "}")
+      val canonical = CanonicalJson.canonicalize(payload)
+      assert(CanonicalJson.payloadHash16(payload) === hex16(canonical), payload)
+      // every non-printable-ASCII UTF-16 unit is escaped as \\u + 4 lower-case hex
+      val unescaped = canonical.replaceAll("\\\\u[0-9a-f]{4}", "")
+      assert(unescaped.forall(c => c >= 0x20 && c <= 0x7e), canonical)
+    }
+    (Seq(0x00, 0x1f, 0x7f, 0x80, 0xff, 0x100, 0xabc, 0xfffe)).foreach { cp =>
+      val c = cp.toChar
+      assert(CanonicalJson.canonicalize(s"""{"k": ${quote(c.toString)}}""") ===
+        "{\"k\":\"\\u%04x\"}".format(cp))
+    }
+  }
+
   test("tokens strips ALL whitespace classes before splitting") {
     import org.apache.spark.sql.SparkSession
     val spark: SparkSession = SparkTestSession.spark

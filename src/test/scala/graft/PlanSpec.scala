@@ -2,7 +2,7 @@ package graft
 
 import graft.queries.{Inventory, LlmInventory}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, substring, udaf}
+import org.apache.spark.sql.functions.{array_repeat, col, lit, pmod, struct, substring}
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -185,14 +185,19 @@ class PlanSpec extends AnyFunSuite {
 
   test("fused transform per-range counts equal a naive count") {
     import spark.implicits._
-    // slots -50..1099 over 7 partitions (merge runs), every 3rd slot twice,
-    // plus null slots that count nowhere
+    // slots -50..1099 over 7 partitions, every 3rd slot twice, plus null
+    // slots that count nowhere; a slot's shred row carries 1 + slot mod 3
+    // rows of one table, so a range counts rows, not shred rows
     val slots: Seq[Option[Long]] =
       (-50L until 1100L).flatMap(s => if (s % 3 == 0) Seq(Some(s), Some(s)) else Seq(Some(s))) ++
         Seq(None, None)
-    val df = slots.toDF("slot").repartition(7)
+    def rowsOf(s: Long) = 1L + math.floorMod(s, 3L)
+    val shredded = slots.toDF("slot").repartition(7)
+      .select(col("slot"), lit("2024-01").as("month"),
+        array_repeat(struct(col("slot").as("slot")), (lit(1) + pmod(col("slot"), lit(3))).cast("int"))
+          .as("t"))
     def naive(ranges: IndexedSeq[(Long, Long)]): Seq[Long] =
-      ranges.map { case (s, e) => slots.flatten.count(x => x >= s && x <= e).toLong }
+      ranges.map { case (s, e) => slots.flatten.filter(x => x >= s && x <= e).map(rowsOf).sum }
     val grids: Seq[(String, IndexedSeq[(Long, Long)])] = Seq(
       "aligned" -> (0 until 10).map(i => (i * 100L, i * 100L + 99L)),
       "non-aligned" -> Vector((5L, 17L), (18L, 40L), (41L, 41L), (60L, 99L), (250L, 612L)),
@@ -201,19 +206,14 @@ class PlanSpec extends AnyFunSuite {
       "nested" -> Vector((0L, 1000L), (10L, 20L), (30L, 40L), (35L, 35L)),
       "equal start slots" -> Vector((0L, 4L), (0L, 9L), (0L, 19L), (10L, 19L)),
       "outside every range" -> Vector((2000L, 2099L), (-500L, -100L), (100L, 100L)).sorted)
-    grids.foreach { case (name, ranges) =>
-      val counts = new graft.core.RangeCounts(ranges)
-      val got = df.agg(udaf(counts, org.apache.spark.sql.Encoders.LONG)(col("slot")))
-        .head().getSeq[Long](0)
-      assert(got === naive(ranges), name)
-    }
-    // the production shape: observed on a write-like action
-    val ranges = grids.find(_._1 == "overlapping grids").get._2
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, udaf(new graft.core.RangeCounts(ranges),
-      org.apache.spark.sql.Encoders.LONG)(col("slot")).as("per_range"))
-      .write.format("noop").mode("overwrite").save()
-    assert(obs.get("per_range").asInstanceOf[scala.collection.Seq[Long]].toSeq === naive(ranges))
+    val base = java.nio.file.Files.createTempDirectory("graft_rangecounts").toString
+    try grids.zipWithIndex.foreach { case ((name, ranges), i) =>
+      // the production shape: the counts come from the write's commit
+      val write = new graft.core.ShredWrite(spark, s"$base/$i", _ => 1000000L, ranges)
+      org.apache.spark.sql.graft.Bridge.appendV2(shredded, write)
+      assert(write.result.rangeRows.toSeq === naive(ranges), name)
+      assert(write.result.tableRows === Map("t" -> slots.flatten.map(rowsOf).sum), name)
+    } finally graft.core.Fs.deleteDir(spark, base)
   }
 
   test("fused transform membership: broadcast LEFT SEMI on the bucket, overlap-safe") {
