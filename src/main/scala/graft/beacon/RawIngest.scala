@@ -87,9 +87,12 @@ final case class MapSlotFetcher(payloads: Map[Long, String]) extends SlotFetcher
 }
 
 /** Raw-table ingest: the Spark shape of the reference's backfill worker
-  * loop (SURVEY §3.1) — `spark.range(slots)` → repartition → per-partition
-  * fetch → `prepare_row` (payload hash C3) → payload-hash dedup (F4) →
-  * month-partitioned parquet + ledger append.
+  * loop (SURVEY §3.1) in one stage with no shuffle — the driver cuts the
+  * slot ranges into `parallelism` contiguous slices, each task fetches its
+  * slice's slots in order, `prepare_row`s them (payload hash C3) and
+  * writes month-partitioned parquet; then the ledger append. Each slot is
+  * fetched once per call, so same-batch payload-hash dedup (F4) holds by
+  * construction.
   */
 object RawIngest {
 
@@ -102,45 +105,13 @@ object RawIngest {
     case _ => "offline"
   }
 
-  /** Fetch a slot list into raw rows. Partition count bounds concurrent
-    * HTTP connections (the reference's BACKFILL_WORKERS knob, D2). */
+  /** Fetch a slot list into raw rows, each distinct slot once. Partition
+    * count bounds concurrent HTTP connections (the reference's
+    * BACKFILL_WORKERS knob, D2). */
   def fetchSlots(
       spark: SparkSession, slots: Seq[Long], fetcher: SlotFetcher,
-      parallelism: Int = 4): DataFrame = {
-    import spark.implicits._
-    fetchSlotsDs(spark.createDataset(slots), fetcher, parallelism)
-  }
-
-  /** Core fetch over an already-distributed slot Dataset — large backfills
-    * must not materialize every slot driver-side (see
-    * [[ingestChunksFused]]). */
-  def fetchSlotsDs(
-      slots: org.apache.spark.sql.Dataset[Long], fetcher: SlotFetcher,
-      parallelism: Int = 4): DataFrame = {
-    val spark = slots.sparkSession
-    import spark.implicits._
-    val m = graft.core.Metrics.of(spark)
-    val byEndpoint = graft.core.Metrics.endpoint(spark, routeOf(fetcher))
-    // per-endpoint latency histogram (reference
-    // api_request_duration_seconds, observability.py:29-35): accumulator
-    // merges per-task bucket arrays driver-side
-    val latency = graft.core.Metrics.histogram(
-      spark, "api_request_duration_seconds", routeOf(fetcher))
-    val ds = slots.repartition(parallelism)
-    ds.mapPartitions { it =>
-      it.flatMap { slot =>
-        val t0 = System.nanoTime()
-        val r = fetcher.fetch(slot)
-        latency.add((System.nanoTime() - t0) / 1000000L)
-        byEndpoint.add(1)
-        if (r.isEmpty) m.apiEmpty.add(1) else m.apiFetched.add(1)
-        r.map { payload =>
-          (slot, payload, CanonicalJson.payloadHash16(payload),
-            new java.sql.Timestamp(System.currentTimeMillis()))
-        }
-      }
-    }.toDF("slot", "payload", "payload_hash", "retrieved_at")
-  }
+      parallelism: Int = 4): DataFrame =
+    fetchRanges(spark, slots.map(s => (s, s)), fetcher, parallelism)
 
   /** Big-payload variant of [[fetchSlots]] (validators snapshots): the
     * canonical `payload_hash` is computed on the INTACT payload, then the
@@ -152,68 +123,142 @@ object RawIngest {
   def fetchSlotsSplit(
       spark: SparkSession, slots: Seq[Long], fetcher: SlotFetcher,
       parallelism: Int = 4, splitThresholdBytes: Int = 8 << 20,
-      entriesPerPart: Int = 50000): DataFrame = {
-    import spark.implicits._
-    fetchSlotsSplitDs(spark.createDataset(slots), fetcher, parallelism,
-      splitThresholdBytes, entriesPerPart)
-  }
+      entriesPerPart: Int = 50000): DataFrame =
+    fetchRanges(spark, slots.map(s => (s, s)), fetcher, parallelism, split = true,
+      splitThresholdBytes = splitThresholdBytes, entriesPerPart = entriesPerPart)
 
-  /** [[fetchSlotsSplit]] over an already-distributed slot Dataset — the
-    * split analog of [[fetchSlotsDs]], so the fused/pooled bulk ingest
-    * paths can honor `LoaderDef.splitPayload` without materializing slots
-    * driver-side. */
-  def fetchSlotsSplitDs(
-      slots: org.apache.spark.sql.Dataset[Long], fetcher: SlotFetcher,
-      parallelism: Int = 4, splitThresholdBytes: Int = 8 << 20,
+  /** Fetch every slot of the inclusive `ranges` that `gate` passes, each
+    * once however the ranges overlap, as one task per slice of
+    * [[slices]] — large backfills never materialize their slots. `split`
+    * adds the part columns of [[fetchSlotsSplit]]. */
+  def fetchRanges(
+      spark: SparkSession, ranges: Seq[(Long, Long)], fetcher: SlotFetcher,
+      parallelism: Int = 4, gate: Option[Long => Boolean] = None,
+      split: Boolean = false, splitThresholdBytes: Int = 8 << 20,
       entriesPerPart: Int = 50000): DataFrame = {
-    val spark = slots.sparkSession
     import spark.implicits._
+    val m = graft.core.Metrics.of(spark)
     val byEndpoint = graft.core.Metrics.endpoint(spark, routeOf(fetcher))
+    // per-endpoint latency histogram (reference
+    // api_request_duration_seconds, observability.py:29-35): accumulator
+    // merges per-task bucket arrays driver-side
     val latency = graft.core.Metrics.histogram(
       spark, "api_request_duration_seconds", routeOf(fetcher))
-    val ds = slots.repartition(parallelism)
-    ds.mapPartitions { it =>
-      it.flatMap { slot =>
-        byEndpoint.add(1)
-        val t0 = System.nanoTime()
-        val fetched = fetcher.fetch(slot)
-        latency.add((System.nanoTime() - t0) / 1000000L)
-        fetched.toSeq.flatMap { payload =>
-          val hash = CanonicalJson.payloadHash16(payload)
-          val ts = new java.sql.Timestamp(System.currentTimeMillis())
-          val parts =
-            if (payload.length >= splitThresholdBytes)
-              PayloadSplitter.split(payload, entriesPerPart)
-            else Seq(payload)
-          parts.zipWithIndex.map { case (p, i) =>
-            (slot, p, hash, ts, i, parts.length)
+    val parts = slices(ranges, gate, parallelism)
+    val keep = gate.getOrElse((_: Long) => true)
+    val rows = spark.sparkContext.parallelize(parts, parts.length).mapPartitions { it =>
+      for {
+        slice <- it
+        (s, e) <- slice.iterator
+        slot <- (s to e).iterator if keep(slot)
+        row <- {
+          val t0 = System.nanoTime()
+          val fetched = fetcher.fetch(slot)
+          latency.add((System.nanoTime() - t0) / 1000000L)
+          byEndpoint.add(1)
+          if (fetched.isEmpty) m.apiEmpty.add(1) else m.apiFetched.add(1)
+          fetched.iterator.flatMap { payload =>
+            val hash = CanonicalJson.payloadHash16(payload)
+            val ts = new java.sql.Timestamp(System.currentTimeMillis())
+            val pieces =
+              if (split && payload.length >= splitThresholdBytes)
+                PayloadSplitter.split(payload, entriesPerPart)
+              else Seq(payload)
+            pieces.iterator.zipWithIndex.map { case (p, i) =>
+              (slot, p, hash, ts, i, pieces.length)
+            }
           }
         }
-      }
+      } yield row
     }.toDF("slot", "payload", "payload_hash", "retrieved_at", "part_index", "part_count")
+    if (split) rows else rows.drop("part_index", "part_count")
   }
 
-  /** F4 write-side dedup + month-partitioned write (reference partitions
-    * every table by `toStartOfMonth(slot_timestamp)`;
-    * migrations/003_raw_tables.sql:16). Sorting within partitions by slot
-    * gives parquet min/max stats → slot-range scans prune row groups (the
-    * ORDER BY slot clustered-key equivalent, SURVEY §4).
+  /** Cuts the union of the inclusive `ranges` (overlapping and adjacent
+    * ones merge, inverted ones are empty) into exactly `n` contiguous
+    * slices in slot order, balanced on the slots `gate` passes: slice i
+    * holds passing slots number ⌊i·G/n⌋ until ⌊(i+1)·G/n⌋ of G. With a
+    * gate the driver walks the slots, holding none of them, to count G
+    * and find the cuts; without one the cuts are arithmetic. */
+  private[graft] def slices(
+      ranges: Seq[(Long, Long)], gate: Option[Long => Boolean],
+      n: Int): Vector[Vector[(Long, Long)]] = {
+    require(n >= 1, s"parallelism must be >= 1, got $n")
+    val merged = ranges.filter { case (s, e) => s <= e }.sortBy(_._1)
+      .foldLeft(Vector.empty[(Long, Long)]) {
+        case (acc :+ ((s, e)), (s2, e2)) if s2 <= e + 1 => acc :+ ((s, math.max(e, e2)))
+        case (acc, r) => acc :+ r
+      }
+    // visits the slots `g` passes, in order, until `f` returns false
+    def passing(g: Long => Boolean)(f: Long => Boolean): Unit = {
+      val it = merged.iterator
+      var go = true
+      while (go && it.hasNext) {
+        val (s, e) = it.next()
+        var x = s
+        while (go && x <= e) { if (g(x)) go = f(x); x += 1 }
+      }
+    }
+    val total = gate match {
+      case Some(g) =>
+        var c = 0L
+        passing(g) { _ => c += 1; true }
+        c
+      case None => merged.map { case (s, e) => e - s + 1 }.sum
+    }
+    // ordinal (among passing slots) of the first slot of slices 1 … n-1
+    val targets = (1 until n).map(i => total / n * i + total % n * i / n)
+    // the slot at each target; Long.MaxValue: no such slot
+    val cuts = Array.fill(n - 1)(Long.MaxValue)
+    gate match {
+      case Some(g) =>
+        var j = 0
+        var ord = 0L
+        passing(g) { slot =>
+          while (j < cuts.length && targets(j) == ord) { cuts(j) = slot; j += 1 }
+          ord += 1
+          j < cuts.length
+        }
+      case None =>
+        val starts = merged.scanLeft(0L) { case (acc, (s, e)) => acc + e - s + 1 }
+        targets.zipWithIndex.foreach { case (t, j) =>
+          val k = starts.lastIndexWhere(_ <= t)
+          if (k < merged.length) cuts(j) = merged(k)._1 + (t - starts(k))
+        }
+    }
+    val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
+    bounds.zip(bounds.tail).map { case (lo, hi) =>
+      merged.flatMap { case (s, e) =>
+        val a = math.max(s, lo)
+        val b = math.min(e, hi - 1)
+        if (a <= b) Some((a, b)) else None
+      }
+    }.toVector
+  }
+
+  /** Month-partitioned raw write (reference partitions every table by
+    * `toStartOfMonth(slot_timestamp)`; migrations/003_raw_tables.sql:16).
+    * Precondition: at most one row per (slot, part_index) — the fetch
+    * functions above fetch each slot once per call, which is the
+    * same-batch dedup (F4). Sorting within partitions by (month, slot) is
+    * the ordering Spark's file writer requires for `partitionBy("month")`,
+    * so it adds no sort of its own, and each file is in slot order: parquet
+    * min/max stats prune slot-range scans (the ORDER BY slot clustered-key
+    * equivalent, SURVEY §4).
     */
   def writeRaw(rows: DataFrame, cfg: ChainConfig, rawDir: String): Unit =
     rows
-      .dropDuplicates(
-        if (rows.columns.contains("part_index")) Seq("slot", "payload_hash", "part_index")
-        else Seq("slot", "payload_hash"))
       .withColumn("month", date_format(cfg.slotTimestamp(col("slot")), "yyyy-MM"))
-      .sortWithinPartitions("slot")
+      .sortWithinPartitions((Seq("month", "slot") ++
+        (if (rows.columns.contains("part_index")) Seq("part_index") else Nil)).map(col): _*)
       .write.mode(SaveMode.Append)
       .partitionBy("month")
       .parquet(rawDir)
 
   /** Full chunk ingest: fetch → write → ledger transition. Failed fetches
     * fail the whole chunk (reference error policy: base.py:87-100).
-    * `split` routes through [[fetchSlotsSplit]] for mega-payload loaders
-    * (P19 — validators snapshots). */
+    * `split` adds the part columns of [[fetchSlotsSplit]] for mega-payload
+    * loaders (P19 — validators snapshots). */
   def ingestChunk(
       spark: SparkSession, cfg: ChainConfig, fetcher: SlotFetcher,
       rawDir: String, ledger: LedgerStore, loader: String,
@@ -226,14 +271,8 @@ object RawIngest {
     // chunk_duration_seconds{loader/load} (reference observability.py:64-69)
     val t0 = System.nanoTime()
     try {
-      val slots = gate match {
-        case Some(g) => startSlot.to(endSlot).filter(g)
-        case None => startSlot.to(endSlot)
-      }
-      val rows =
-        if (split) fetchSlotsSplit(spark, slots, fetcher, parallelism)
-        else fetchSlots(spark, slots, fetcher, parallelism)
-      writeRaw(rows, cfg, rawDir)
+      writeRaw(fetchRanges(spark, Seq((startSlot, endSlot)), fetcher, parallelism, gate, split),
+        cfg, rawDir)
       ledger.append(Ledger.transition(chunk, "completed", "spark", version + 1))
       graft.core.Metrics.of(spark).chunksCompleted.add(1)
       graft.core.Metrics.histogram(spark, "chunk_duration_seconds", s"$loader/load",
@@ -254,7 +293,7 @@ object RawIngest {
   }
 
   /** D2 at scale: ingest MANY chunks as ONE Spark job — the union of all
-    * ranges' slots goes through a single [[fetchSlots]] (Spark's task
+    * ranges' slots goes through a single [[fetchRanges]] (Spark's task
     * scheduler IS the worker pool; `parallelism` bounds concurrent HTTP
     * connections exactly like the reference's BACKFILL_WORKERS,
     * loader.py:463-485), one [[writeRaw]], and bulk ledger transitions
@@ -272,20 +311,10 @@ object RawIngest {
     val chunks = Ledger.chunkRows(spark, loader, ranges)
     ledger.append(Ledger.transition(chunks, "claimed", "spark-fused", version))
     try {
-      // the driver holds only the RANGES; slots explode executor-side (a
-      // 10M-slot backfill must not become a 10M-element LocalRelation);
-      // the loader's fetch gate (fork floor / daily-only) filters there too
-      import spark.implicits._
-      val exploded = spark.createDataset(ranges)
-        .flatMap { case (s, e) => s.to(e) }
-      val slots = gate match {
-        case Some(g) => exploded.filter(g)
-        case None => exploded
-      }
-      val rows =
-        if (split) fetchSlotsSplitDs(slots, fetcher, parallelism)
-        else fetchSlotsDs(slots, fetcher, parallelism)
-      writeRaw(rows, cfg, rawDir)
+      // the driver holds only the RANGES (a 10M-slot backfill must not
+      // become a 10M-element collection); the loader's fetch gate (fork
+      // floor / daily-only) balances the slices and filters executor-side
+      writeRaw(fetchRanges(spark, ranges, fetcher, parallelism, gate, split), cfg, rawDir)
       ledger.append(Ledger.transition(chunks, "completed", "spark-fused", version + 1))
       graft.core.Metrics.of(spark).chunksCompleted.add(ranges.length)
       true
@@ -325,13 +354,7 @@ object RawIngest {
       commitLock.synchronized {
         ledger.append(Ledger.transition(chunk, "claimed", "spark-pool", version))
       }
-      val slots = gate match {
-        case Some(g) => s.to(e).filter(g)
-        case None => s.to(e)
-      }
-      val rows = (
-        if (split) fetchSlotsSplit(spark, slots, fetcher, parallelism)
-        else fetchSlots(spark, slots, fetcher, parallelism)).persist()
+      val rows = fetchRanges(spark, Seq((s, e)), fetcher, parallelism, gate, split).persist()
       try {
         rows.count() // fetch runs NOW, outside the commit lock
         commitLock.synchronized {

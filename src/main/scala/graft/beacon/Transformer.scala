@@ -1,7 +1,7 @@
 package graft.beacon
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 import java.sql.Timestamp
@@ -25,8 +25,14 @@ object Transformer {
     "execution_payloads", "transactions", "withdrawals", "bls_changes",
     "blob_commitments", "execution_requests")
 
-  def readRaw(spark: SparkSession, rawDir: String): DataFrame =
-    spark.read.parquet(rawDir)
+  /** The raw table [[RawIngest.writeRaw]] writes, read with its declared
+    * schema so no job runs to infer one: [[Schemas.rawTable]], the part
+    * columns of a `split` loader's table, and the `month` partition. */
+  def readRaw(spark: SparkSession, rawDir: String, split: Boolean = false): DataFrame =
+    spark.read.schema(StructType(Schemas.rawTable.fields ++
+      (if (split) Seq(StructField("part_index", IntegerType), StructField("part_count", IntegerType))
+       else Nil) :+ StructField("month", StringType)))
+      .parquet(rawDir)
 
   private def rawCols(raw: DataFrame): Seq[String] =
     Seq("slot", "payload", "payload_hash", "retrieved_at") ++
@@ -158,7 +164,7 @@ object Transformer {
     // chunk_duration_seconds{loader/transform} (reference observability.py:64-69)
     val t0 = System.nanoTime()
     try {
-      val chunk = chunkData(readRaw(spark, rawDir), startSlot, endSlot)
+      val chunk = chunkData(readRaw(spark, rawDir, loader.splitPayload), startSlot, endSlot)
       val (total, _) = writeTables(spark, loader.shred(chunk, cfg, version), loader, outDir,
         Vector((startSlot, endSlot)))
       progress.append(progressRow(spark, loader.rawTable, startSlot, endSlot,
@@ -290,7 +296,7 @@ object Transformer {
     try {
       val globalMin = ranges.map(_._1).min
       val globalMax = ranges.map(_._2).max
-      val rawAll = readRaw(spark, rawDir)
+      val rawAll = readRaw(spark, rawDir, loader.splitPayload)
       val raw = rawAll
         .filter(col("slot").between(globalMin, globalMax))
         .select(rawCols(rawAll).map(col): _*)

@@ -51,29 +51,26 @@ object Fs {
 
   /** Walk committed parquet data files under `path`, invoking `visit` per
     * file until it returns false. Skips uncommitted staging output
-    * (_temporary, .spark-staging-*): Spark's own file index ignores
-    * '_'/'.'-prefixed path components BELOW the table root. The root is
-    * qualified and the ancestor walk stops at PATH equality — a
-    * string-length comparison against the unqualified input walks past
-    * (or includes) the table root when listings come back fully
-    * qualified, so a '_'/'.'-prefixed component in the root's own name
-    * or its ancestors would mark every file uncommitted. */
+    * (_temporary, .spark-staging-*): like Spark's own file index it never
+    * enters a '_'/'.'-prefixed entry BELOW the root, whatever the root's
+    * own name or its ancestors'. Lists with `listStatus`, whose statuses
+    * carry no permissions: `listFiles`' located statuses read each one,
+    * which Hadoop's raw local filesystem does by forking `ls -ld`. */
   private def walkDataFiles(spark: SparkSession, path: String)(
       visit: org.apache.hadoop.fs.FileStatus => Boolean): Unit = {
     val (f, p) = fs(spark, path)
-    if (!f.exists(p)) return
-    val root = f.makeQualified(p)
-    val it = f.listFiles(root, true)
-    var continue = true
-    while (continue && it.hasNext) {
-      val st = it.next()
-      val fp = st.getPath
-      val committed = Iterator.iterate(fp)(_.getParent)
-        .takeWhile(q => q != null && q != root)
-        .forall(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
-      val isData = fp.getName.endsWith(".parquet") && !fp.getName.startsWith(".")
-      if (committed && isData) continue = visit(st)
+    val root =
+      try f.getFileStatus(p)
+      catch { case _: java.io.FileNotFoundException => return }
+    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    // depth-first; false once `visit` asks to stop
+    def walk(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+      val name = st.getPath.getName
+      if (st.isDirectory)
+        f.listStatus(st.getPath).iterator.filterNot(c => hidden(c.getPath.getName)).forall(walk)
+      else !name.endsWith(".parquet") || name.startsWith(".") || visit(st)
     }
+    walk(root)
   }
 
   /** Rename `src` → `dst`, creating dst's parent first (HDFS rename does

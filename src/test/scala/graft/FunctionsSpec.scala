@@ -151,6 +151,32 @@ class FunctionsSpec extends AnyFunSuite {
     assert(CanonicalJson.canonicalize("""{"x": "INF"}""") === """{"x":"INF"}""")
   }
 
+  test("every golden line: canonical form (or rejection) and hash16 equal CPython's") {
+    // written by tools/canonical_golden.py; regenerate with the command in its docstring
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/canonical_golden.jsonl"), "UTF-8")
+    val lines = try src.getLines().toVector finally src.close()
+    assert(lines.size > 1500)
+    val failures = lines.flatMap { line =>
+      val g = mapper.readTree(line)
+      val input = g.get("input").textValue
+      val canonical =
+        try Right(CanonicalJson.canonicalize(input))
+        catch { case e: Exception => Left(e.getClass.getSimpleName) }
+      val expected = Option(g.get("canonical")).map(_.textValue).toRight("rejected")
+      val hash = CanonicalJson.payloadHash16(input)
+      val canonicalOk = (canonical.isLeft && expected.isLeft) || canonical == expected
+      if (canonicalOk && hash == g.get("hash16").textValue) None
+      else Some(s"${input.take(80)} → $canonical (want $expected), $hash")
+    }
+    assert(failures.isEmpty, s"${failures.size} of ${lines.size}: ${failures.take(10).mkString("\n")}")
+    // the file covers every float rendering branch and both envelopes
+    Seq("e+16", "e-05", "-0.0", "5e-324", "Infinity", "\"rejected\"").foreach { s =>
+      assert(lines.exists(_.contains(s)), s)
+    }
+  }
+
   test("payloadHash16 equals MessageDigest sha256 with hand-formatted hex on seeded payloads") {
     val rnd = new scala.util.Random(7001)
     def hex16(s: String): String = {

@@ -216,6 +216,33 @@ class PlanSpec extends AnyFunSuite {
     } finally graft.core.Fs.deleteDir(spark, base)
   }
 
+  test("fused raw ingest: one write plan with no Exchange, no aggregate, one sort") {
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val base = java.nio.file.Files.createTempDirectory("graft_rawplan").toString
+    spark.listenerManager.register(listener)
+    try {
+      assert(graft.beacon.RawIngest.ingestChunksFused(spark, graft.beacon.ChainConfig.gnosis,
+        SynthFetcher(5), s"$base/raw", graft.beacon.LedgerStore(s"$base/chunks"), "blocks",
+        Seq((0L, 99L), (50L, 149L)), parallelism = 4))
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val writes = plans.asScala.toSeq.filter(p =>
+      p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(s"$base/raw"))
+    assert(writes.size === 1, plans.asScala.mkString("\n"))
+    val plan = writes.head
+    assert(!plan.contains("Exchange") && !plan.contains("Aggregate"), plan)
+    // one sort, on (month, slot): it meets the writer's partition ordering
+    assert("Sort \\[".r.findAllIn(plan).size === 1, plan)
+    assert("Sort \\[month#\\d+ ASC NULLS FIRST, slot#\\d+L ASC".r.findFirstIn(plan).isDefined, plan)
+  }
+
   test("fused transform membership: broadcast LEFT SEMI on the bucket, overlap-safe") {
     import spark.implicits._
     val raw = (0L until 10000L).map(s => (s, s"p$s")).toDF("slot", "payload")
