@@ -1,6 +1,7 @@
 package graft
 
 import graft.beacon._
+import graft.core.Tables
 import graft.streaming.{ChunkedTail, CompositeTail, HeadProbe, TailLoader}
 import org.apache.spark.sql.SparkSession
 
@@ -122,7 +123,7 @@ object Main {
     val in = opt(args, "in").getOrElse(sys.error("--in required"))
     val idCol = opt(args, "id-col").getOrElse("doc_id")
     val textCol = opt(args, "text-col").getOrElse("text")
-    val docs = spark.read.parquet(in)
+    val docs = Tables.open(spark, in)
     def outDir: String = opt(args, "out").getOrElse(sys.error("--out required"))
     cmd match {
       case "dedup" =>
@@ -134,7 +135,7 @@ object Main {
         // the survivors enter the within-corpus group dedup below
         val fresh = opt(args, "against") match {
           case Some(refDir) =>
-            val ref = spark.read.parquet(refDir)
+            val ref = Tables.open(spark, refDir)
             val exactFresh = graft.operators.Dedup
               .exactDedupAgainst(docs, ref, idCol, textCol)
             val verdicts = graft.operators.Dedup
@@ -153,7 +154,7 @@ object Main {
         fresh.join(keep, Seq(idCol), "left_semi")
           .write.mode("overwrite").parquet(out)
         val total = docs.count()
-        val kept = spark.read.parquet(out).count()
+        val kept = Tables.open(spark, out).count()
         groups.unpersist(blocking = false)
         println(s"[graft] corpus dedup: $total docs -> $kept kept " +
           s"(${total - kept} dropped as duplicates, threshold $threshold" +
@@ -165,7 +166,7 @@ object Main {
         graft.operators.Sampling.perKeyCap(docs, idCol, keyCol, cap)
           .drop("rk").write.mode("overwrite").parquet(out)
         val total = docs.count()
-        val kept = spark.read.parquet(out).count()
+        val kept = Tables.open(spark, out).count()
         println(s"[graft] corpus cap: $total docs -> $kept kept " +
           s"(<= $cap per $keyCol)")
       case "sample" =>
@@ -174,7 +175,7 @@ object Main {
         val out = outDir
         graft.operators.Sampling.deterministicSample(docs, idCol, pct)
           .write.mode("overwrite").parquet(out)
-        println(s"[graft] corpus sample: kept ${spark.read.parquet(out).count()} " +
+        println(s"[graft] corpus sample: kept ${Tables.open(spark, out).count()} " +
           s"of ${docs.count()} docs (pct $pct, hash-deterministic)")
       case "upsample" =>
         val keyCol = opt(args, "key-col").getOrElse(sys.error("--key-col required"))
@@ -189,7 +190,7 @@ object Main {
           .upsampleByWeight(docs, idCol, keyCol, weights, defaultW)
           .write.mode("overwrite").parquet(out)
         println(s"[graft] corpus upsample: ${docs.count()} docs -> " +
-          s"${spark.read.parquet(out).count()} rows (weights $weights, " +
+          s"${Tables.open(spark, out).count()} rows (weights $weights, " +
           s"default $defaultW)")
       case "export" =>
         val shards = opt(args, "shards").map(_.toInt)
@@ -204,7 +205,7 @@ object Main {
           .repartition(shards, col("shard"))
           .sortWithinPartitions(col("shard"), col(idCol))
           .write.mode("overwrite").partitionBy("shard").parquet(out)
-        println(s"[graft] corpus export: ${spark.read.parquet(out).count()} rows " +
+        println(s"[graft] corpus export: ${Tables.open(spark, out).count()} rows " +
           s"into $shards hash shards at $out")
       case "annindex" =>
         // materialize the FAISS-style serving index: coarse k-means lists
@@ -231,7 +232,7 @@ object Main {
           graft.operators.Similarity.appendToIvfIndex(
             docs, vecCol, cents, out, withSq8Codes = true, pqCodebooksOpt = Some(cbs))
           println(s"[graft] corpus annindex --append: index now " +
-            s"${spark.read.parquet(out).count()} vectors at $out")
+            s"${Tables.open(spark, out).count()} vectors at $out")
           return
         }
         val sampleN = math.max(2000, 20 * lists)
@@ -269,7 +270,7 @@ object Main {
           java.nio.file.Paths.get(out, "_ann_codebooks.tsv"),
           s"$m $ksub\n" +
             cbs.flatMap(_.map(_.mkString(","))).mkString("\n"))
-        println(s"[graft] corpus annindex: ${spark.read.parquet(out).count()} vectors " +
+        println(s"[graft] corpus annindex: ${Tables.open(spark, out).count()} vectors " +
           s"in $lists lists at $out (sq8 + residual-pq m=$m ksub=$ksub)")
       case "annquery" =>
         val vecCol = opt(args, "vec-col").getOrElse("embedding")
@@ -298,7 +299,7 @@ object Main {
             // union of their probed lists (ivfSq8TopKJoinIndexed) — the
             // fixed per-job cost amortizes across the batch
             val qids = idsCsv.split(",").map(_.trim.toLong).toSeq
-            val queries = spark.read.parquet(index)
+            val queries = Tables.open(spark, index)
               .filter(col(idCol).isin(qids: _*))
               .select(col(idCol), col(vecCol)).collect()
               .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
@@ -312,7 +313,7 @@ object Main {
           case None =>
             val qid = opt(args, "query-id").map(_.toLong)
               .getOrElse(sys.error("--query-id or --query-ids required"))
-            val query = spark.read.parquet(index)
+            val query = Tables.open(spark, index)
               .filter(col(idCol) === qid).select(vecCol).head().getSeq[Float](0)
             // --diverse: MMR-rerank a wider probe pool (k × pool-factor)
             // instead of returning the raw relevance order — near-duplicate
@@ -330,7 +331,7 @@ object Main {
                 val coarse = opt(args, "coarse").map(_.toInt)
                   .getOrElse(math.max(256, poolSize * 16))
                 graft.operators.Similarity.matryoshkaTopK(
-                  spark.read.parquet(index), idCol, vecCol, query,
+                  Tables.open(spark, index), idCol, vecCol, query,
                   poolSize + 1, prefix, coarse)
               case _ => graft.operators.Similarity.ivfPqTopKIndexed(
                 spark, index, idCol, vecCol, query, poolSize + 1, cents, codebooks,
@@ -345,7 +346,7 @@ object Main {
               val ids = rel.keys.toSeq
               // id-pushdown vector fetch for the bounded pool only (the
               // same two-scan discipline as the probe itself)
-              val vecs = spark.read.parquet(index)
+              val vecs = Tables.open(spark, index)
                 .filter(col(idCol).isin(ids: _*))
                 .select(col(idCol), col(vecCol)).collect()
                 .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
@@ -377,7 +378,7 @@ object Main {
             docs.join(keep, Seq(idCol), "left_semi")
               .write.mode("overwrite").parquet(out)
             val total = docs.count()
-            val kept = spark.read.parquet(out).count()
+            val kept = Tables.open(spark, out).count()
             surv.unpersist(blocking = false)
             println(s"[graft] corpus semdedup --via dbscan: $total docs -> " +
               s"$kept kept (${total - kept} semantic dups dropped, cosine >= " +
@@ -390,7 +391,7 @@ object Main {
             docs.join(keep, Seq(idCol), "left_semi")
               .write.mode("overwrite").parquet(out)
             val total = docs.count()
-            val kept = spark.read.parquet(out).count()
+            val kept = Tables.open(spark, out).count()
             groups.unpersist(blocking = false)
             println(s"[graft] corpus semdedup: $total docs -> $kept kept " +
               s"(${total - kept} semantic dups dropped, cosine >= $threshold, " +
@@ -405,7 +406,7 @@ object Main {
         docs.withColumn(textCol, graft.operators.Pii.redact(col(textCol)))
           .write.mode("overwrite").parquet(out)
         println(s"[graft] corpus scrub: redacted ${pii.getLong(0)} emails, " +
-          s"${pii.getLong(1)} phones across ${spark.read.parquet(out).count()} docs")
+          s"${pii.getLong(1)} phones across ${Tables.open(spark, out).count()} docs")
       case "dsir" =>
         // importance-resampling selection: --target is the exemplar
         // corpus; keep the top --keep-fraction by hashed-n-gram weight
@@ -416,12 +417,12 @@ object Main {
         val buckets = opt(args, "buckets").map(_.toInt).getOrElse(4096)
         val out = outDir
         val ratios = opt(args, "ratios") match {
-          case Some(dir) => spark.read.parquet(dir)
+          case Some(dir) => Tables.open(spark, dir)
           case None =>
             val targetDir = opt(args, "target")
               .getOrElse(sys.error("--target or --ratios required"))
             val t = graft.operators.Importance
-              .ratioTable(spark.read.parquet(targetDir), docs, textCol, buckets)
+              .ratioTable(Tables.open(spark, targetDir), docs, textCol, buckets)
             opt(args, "save-ratios").foreach { rd =>
               t.coalesce(1).write.mode("overwrite").parquet(rd)
               println(s"[graft] corpus dsir: ratio table ($buckets buckets) -> $rd")
@@ -439,7 +440,7 @@ object Main {
             .dsirSelectWithRatios(docs, ratios, idCol, textCol, frac, buckets)
             .write.mode("overwrite").parquet(out)
           val total = docs.count()
-          val kept = spark.read.parquet(out).count()
+          val kept = Tables.open(spark, out).count()
           println(s"[graft] corpus dsir: $total docs -> $kept kept " +
             s"(top ${(frac * 100).round}% by importance)")
         }
@@ -457,7 +458,7 @@ object Main {
           case Some(seedDir) =>
             graft.operators.Graph.personalizedPageRank(
               docs, srcCol, dstCol, wCol,
-              spark.read.parquet(seedDir),
+              Tables.open(spark, seedDir),
               opt(args, "seed-col").getOrElse("node"), iters, damping)
           case None =>
             graft.operators.Graph.pageRank(
@@ -465,7 +466,7 @@ object Main {
         }
         ranks.write.mode("overwrite").parquet(out)
         ranks.unpersist(blocking = false) // caller-owned checkpoint released
-        val n = spark.read.parquet(out).count()
+        val n = Tables.open(spark, out).count()
         println(s"[graft] corpus pagerank: $n nodes ranked ($iters iterations) -> $out")
       case "triangles" =>
         // triangle participation counts + per-edge common-neighbor /
@@ -479,18 +480,18 @@ object Main {
           .write.mode("overwrite").parquet(s"$out/nodes")
         graft.operators.Graph.edgeCommonNeighbors(docs, srcCol, dstCol)
           .write.mode("overwrite").parquet(s"$out/edges")
-        val nn = spark.read.parquet(s"$out/nodes").count()
-        val ne = spark.read.parquet(s"$out/edges").count()
+        val nn = Tables.open(spark, s"$out/nodes").count()
+        val ne = Tables.open(spark, s"$out/edges").count()
         println(s"[graft] corpus triangles: $nn nodes in triangles, $ne scored edges -> $out")
       case "lmfilter" =>
         val ref = opt(args, "ref").getOrElse(sys.error("--ref required"))
         val maxNovelty = opt(args, "max-novelty").map(_.toDouble).getOrElse(0.3)
         val out = outDir
         graft.operators.LmScore
-          .familiarityFiltered(docs, spark.read.parquet(ref), idCol, textCol, maxNovelty)
+          .familiarityFiltered(docs, Tables.open(spark, ref), idCol, textCol, maxNovelty)
           .write.mode("overwrite").parquet(out)
         val total = docs.count()
-        val kept = spark.read.parquet(out).count()
+        val kept = Tables.open(spark, out).count()
         println(s"[graft] corpus lmfilter: $total docs -> $kept kept " +
           s"(${total - kept} above novelty $maxNovelty vs $ref)")
       case "linededup" =>
@@ -519,7 +520,7 @@ object Main {
           .write.mode("overwrite").parquet(out)
         chunkFrame.unpersist(blocking = false)
         val total = docs.count()
-        val kept = spark.read.parquet(out)
+        val kept = Tables.open(spark, out)
         val k = kept.count()
         val chunks = kept.agg(sum("n_chunks"), sum("n_kept")).head()
         println(s"[graft] corpus linededup: $total docs -> $k kept " +
@@ -623,10 +624,10 @@ object Main {
               .select(col(idCol).as("q_id"), col(vecCol))
             val hits = fixedEntries(qids.toSet) match {
               case Some(entries) => graft.operators.Similarity.graphSearchBatch(
-                docs, spark.read.parquet(graphDir), idCol, vecCol,
+                docs, Tables.open(spark, graphDir), idCol, vecCol,
                 queries, "q_id", vecCol, entries, k, beam, hops)
               case None => graft.operators.Similarity.graphSearchBatchSeeded(
-                docs, spark.read.parquet(graphDir), idCol, vecCol,
+                docs, Tables.open(spark, graphDir), idCol, vecCol,
                 queries, "q_id", vecCol, k, beam, hops,
                 seedPlanes, lshSeed, seedBands)
             }
@@ -641,10 +642,10 @@ object Main {
             val corpus = docs.filter(col(idCol) =!= qid)
             val hits = fixedEntries(Set(qid)) match {
               case Some(entries) => graft.operators.Similarity.graphSearch(
-                corpus, spark.read.parquet(graphDir),
+                corpus, Tables.open(spark, graphDir),
                 idCol, vecCol, query, entries, k, beam, hops)
               case None => graft.operators.Similarity.graphSearchSeeded(
-                corpus, spark.read.parquet(graphDir),
+                corpus, Tables.open(spark, graphDir),
                 idCol, vecCol, query, k, beam, hops,
                 seedPlanes, lshSeed, seedBands)
             }
@@ -679,7 +680,7 @@ object Main {
         val pairs = graft.operators.Dedup.imageNearDupPairs(
           hashed, idCol, "width", "height", "ahash", maxHamming, bands)
         pairs.write.mode("overwrite").parquet(outDir)
-        val nP = spark.read.parquet(outDir).count()
+        val nP = Tables.open(spark, outDir).count()
         pairs.unpersist(blocking = false)
         println(s"[graft] corpus imagededup: $nP near-dup pairs " +
           s"(hamming <= $maxHamming, $bands bands) -> $outDir")
@@ -690,7 +691,7 @@ object Main {
         // writes the NEW band cache (--out/bands) + pairs (--out/pairs)
         val refDir = opt(args, "against")
           .getOrElse(sys.error("corpus incrneardup needs --against OLDDIR"))
-        val old = spark.read.parquet(refDir)
+        val old = Tables.open(spark, refDir)
         val numHashes = opt(args, "num-hashes").map(_.toInt).getOrElse(8)
         val rowsPerBand = opt(args, "rows-per-band").map(_.toInt).getOrElse(4)
         val shingleW = opt(args, "shingle-w").map(_.toInt).getOrElse(3)
@@ -706,7 +707,7 @@ object Main {
               s"corpus incrneardup: --out ($outDir) must differ from " +
                 s"--cache ($c) — write the new snapshot's cache to a fresh " +
                 "dir and rotate afterwards")
-            (spark.read.parquet(s"$c/bands"), spark.read.parquet(s"$c/pairs"))
+            (Tables.open(spark, s"$c/bands"), Tables.open(spark, s"$c/pairs"))
           case None => // bootstrap: previous run's assets from OLDDIR
             val b = graft.operators.Dedup.minhashBandRows(
               old, idCol, textCol, numHashes, rowsPerBand, shingleW).persist()
@@ -717,7 +718,7 @@ object Main {
             numHashes, rowsPerBand, shingleW)
         newBands.write.mode("overwrite").parquet(s"$outDir/bands")
         pairs.write.mode("overwrite").parquet(s"$outDir/pairs")
-        val nP = spark.read.parquet(s"$outDir/pairs").count()
+        val nP = Tables.open(spark, s"$outDir/pairs").count()
         newBands.unpersist(blocking = false)
         pairs.unpersist(blocking = false)
         v1b.unpersist(blocking = false)
@@ -729,16 +730,16 @@ object Main {
         // added ∪ changed delta only, write the NEW verdict cache
         val refDir = opt(args, "against")
           .getOrElse(sys.error("corpus incremental needs --against OLDDIR"))
-        val old = spark.read.parquet(refDir)
+        val old = Tables.open(spark, refDir)
         val op = graft.operators.IncrementalCurate
         val v1Done = opt(args, "cache") match {
-          case Some(c) => spark.read.parquet(c)
+          case Some(c) => Tables.open(spark, c)
           case None => op.perDocVerdicts(old, idCol, textCol) // bootstrap
         }
         val verdicts = op.incrementalVerdicts(old, docs, v1Done, idCol, textCol)
         verdicts.write.mode("overwrite").parquet(outDir)
-        val nV = spark.read.parquet(outDir).count()
-        val nG = op.dedupGroups(spark.read.parquet(outDir), idCol).count()
+        val nV = Tables.open(spark, outDir).count()
+        val nG = op.dedupGroups(Tables.open(spark, outDir), idCol).count()
         verdicts.unpersist(blocking = false)
         println(s"[graft] corpus incremental: $nV per-doc verdicts " +
           s"(next-snapshot cache at $outDir), $nG distinct-content groups")
@@ -746,10 +747,10 @@ object Main {
         // corpus snapshot diff: --against OLDDIR; (id, status)
         val refDir = opt(args, "against")
           .getOrElse(sys.error("corpus diff needs --against OLDDIR"))
-        val old = spark.read.parquet(refDir)
+        val old = Tables.open(spark, refDir)
         val out = graft.operators.Dedup.corpusDiff(old, docs, idCol, textCol)
         out.write.mode("overwrite").parquet(outDir)
-        val byStatus = spark.read.parquet(outDir).groupBy("status").count()
+        val byStatus = Tables.open(spark, outDir).groupBy("status").count()
           .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
         println(s"[graft] corpus diff: $byStatus -> $outDir")
       case "shuffle" =>
@@ -801,7 +802,7 @@ object Main {
         graft.operators.Classifier.filtered(docs, textCol, seed, threshold)
           .write.mode("overwrite").parquet(out)
         val total = docs.count()
-        val kept = spark.read.parquet(out).count()
+        val kept = Tables.open(spark, out).count()
         println(s"[graft] corpus classify: $total docs -> $kept kept " +
           s"(hashed-linear score > $threshold, seed '$seed')")
       case "curate" =>
@@ -839,7 +840,7 @@ object Main {
           case Some(tgt) =>
             val keep = opt(args, "dsir-keep").map(_.toDouble).getOrElse(0.5)
             graft.operators.Importance.dsirSelect(
-              classified, spark.read.parquet(tgt), idCol, textCol, keep)
+              classified, Tables.open(spark, tgt), idCol, textCol, keep)
           case None => classified
         }
         if (opt(args, "dsir-target").isDefined)
@@ -865,7 +866,7 @@ object Main {
         // 5. benchmark decontamination, opt-in
         val decontamed = opt(args, "ref-bench") match {
           case Some(bench) => graft.operators.Decontam.decontaminated(
-            lineDeduped, spark.read.parquet(bench), idCol, textCol, w = 8)
+            lineDeduped, Tables.open(spark, bench), idCol, textCol, w = 8)
           case None => lineDeduped
         }
         if (opt(args, "ref-bench").isDefined) funnel += "decontam" -> decontamed.count()
@@ -893,7 +894,7 @@ object Main {
         }
         groups.unpersist(blocking = false)
         chunkFrame.unpersist(blocking = false)
-        val kept = spark.read.parquet(out).count()
+        val kept = Tables.open(spark, out).count()
         funnel += "written" -> kept
         println("[graft] corpus curate funnel: " +
           funnel.map { case (k, v) => s"$k=$v" }.mkString(" -> "))
@@ -909,7 +910,7 @@ object Main {
           packed.withColumnRenamed("__n_tokens", "n_tokens")
             .write.mode("overwrite").parquet(out)
         }
-        val packedDf = spark.read.parquet(out)
+        val packedDf = Tables.open(spark, out)
         val crossing = packedDf.filter(col("crosses")).count()
         println(s"[graft] corpus pack: ${packedDf.count()} docs into " +
           s"${windowTokens}-token windows ($crossing cross a boundary)")
@@ -921,7 +922,7 @@ object Main {
         graft.operators.TextAnalysis
           .passageChunks(docs, idCol, textCol, chunkTokens, stride)
           .write.mode("overwrite").parquet(out)
-        val n = spark.read.parquet(out).count()
+        val n = Tables.open(spark, out).count()
         println(s"[graft] corpus chunk: $n passages " +
           s"($chunkTokens tokens, stride $stride) at $out")
       case "stats" =>
@@ -950,7 +951,7 @@ object Main {
     val spark = session()
     val base = opt(args, "base").getOrElse(sys.error("--base required"))
     val preset = cfgOf(args)
-    val raw = spark.read.parquet(s"$base/raw_blocks")
+    val raw = Tables.open(spark, s"$base/raw_blocks")
     val detected = ForkDetect.configFromDetection(raw, preset)
     detected.forks.foreach(f =>
       println(s"${f.name}\tepoch=${f.epoch}\tversion=${f.version}"))

@@ -27,8 +27,9 @@ import java.nio.file.{Files, Paths}
   *
   * The harness builds the session ([[graft.core.Sessions.local]] on
   * `SPARK_GRAFT_CPUS` cores, default 32), gives the stage a temp base dir
-  * that it deletes afterwards, times the stage, reads peak heap, splices
-  * the stage's section into the markdown file and prints one JSON line.
+  * that it deletes afterwards, times the stage, reads peak and live
+  * heap, splices the stage's section into the markdown file and prints
+  * one JSON line.
   */
 object Scale {
 
@@ -79,13 +80,23 @@ object Scale {
     }
   }
 
-  final case class Outcome(result: StageResult, wallSec: Double, heapPeakMb: Long, base: String)
+  final case class Outcome(
+      result: StageResult, wallSec: Double, heapPeakMb: Long, heapLiveMb: Long, base: String)
 
   private def heapPeakMb(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getType == java.lang.management.MemoryType.HEAP)
       .map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
+  }
+
+  /** Used heap after a forced collection and a short settle, in MB: what
+    * the JVM still holds live, which unlike the pools' peaks does not
+    * depend on when the collector last ran. */
+  private def heapLiveMb(): Long = {
+    System.gc()
+    Thread.sleep(200)
+    java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / (1024L * 1024L)
   }
 
   /** Median-of-3 walls of two variants, run interleaved A,B,A,B,A,B after
@@ -126,12 +137,13 @@ object Scale {
     val base = Files.createTempDirectory(s"graft_scale_${stage.name}_").toString
     try {
       val (r, sec) = timed(stage.run(spark, params, base))
-      Outcome(r, sec, heapPeakMb(), base)
+      Outcome(r, sec, heapPeakMb(), heapLiveMb(), base)
     } finally Fs.deleteDir(spark, base)
   }
 
   private def rows(out: Outcome): Seq[(String, Any)] =
-    out.result.metrics :+ ("peak heap" -> s"${out.heapPeakMb} MB")
+    out.result.metrics :+ ("peak heap" -> s"${out.heapPeakMb} MB") :+
+      ("live heap" -> s"${out.heapLiveMb} MB")
 
   /** The stage's SCALE.md section. */
   def render(stage: Stage, params: Params, cores: Int, out: Outcome): String = {

@@ -1,5 +1,6 @@
 package graft.beacon
 
+import graft.core.Tables
 import org.apache.spark.sql.SparkSession
 
 /** SQL catalog surface: registers every materialized structured table as a
@@ -18,7 +19,7 @@ object BeaconCatalog {
       .filter(Transformer.tableKeys.contains)
       .sorted
     val slotViews = present.flatMap { table =>
-      val df = spark.read.parquet(s"$outDir/$table")
+      val df = Tables.open(spark, s"$outDir/$table")
       df.createOrReplaceTempView(table)
       val latestName = s"${table}_latest"
       Transformer
@@ -31,7 +32,7 @@ object BeaconCatalog {
     val foundationViews = Seq("genesis", "specs", "time_helpers")
       .filter(name => graft.core.Fs.hasParquetFiles(spark, s"$outDir/$name"))
       .map { t =>
-        spark.read.parquet(s"$outDir/$t").createOrReplaceTempView(t)
+        Tables.open(spark, s"$outDir/$t").createOrReplaceTempView(t)
         t
       }
     slotViews ++ foundationViews

@@ -1,5 +1,6 @@
 package graft.beacon
 
+import graft.core.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
@@ -143,7 +144,7 @@ object Compaction {
       val (filesBefore, bytesBefore) = graft.core.Fs.dataFileStats(spark, live)
       if (filesBefore < minFiles) None
       else {
-        val out = dedup(spark.read.parquet(live))
+        val out = dedup(Tables.open(spark, live))
           // total order by slot across the partition's output files: range
           // exchange + in-partition sort; AQE coalesces the post-shuffle
           // partitions of a small month to one, so tiny months collapse to
@@ -156,8 +157,8 @@ object Compaction {
         // IO) — NOT Observation: the range sort's partitioner runs a
         // sampling job over the same plan first, and Observation.get
         // returns whichever job finishes first, yielding garbage counts
-        val rowsBefore = spark.read.parquet(live).count()
-        val rowsAfter = spark.read.parquet(s"${tmpRoot(tableDir)}/$mdir").count()
+        val rowsBefore = Tables.open(spark, live).count()
+        val rowsAfter = Tables.open(spark, s"${tmpRoot(tableDir)}/$mdir").count()
         require(graft.core.Fs.rename(spark, live, s"${oldRoot(tableDir)}/$mdir"),
           s"compact: cannot park $live")
         require(graft.core.Fs.rename(spark, s"${tmpRoot(tableDir)}/$mdir", live),

@@ -1,5 +1,6 @@
 package graft.beacon
 
+import graft.core.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -147,7 +148,7 @@ object Foundation {
     val s = specs(spark, specsJson)
     val gDir = genesisDir(baseDir)
     if (graft.core.Fs.hasParquetFiles(spark, gDir)) {
-      val stored = genesisTimeOf(spark.read.parquet(gDir))
+      val stored = genesisTimeOf(Tables.open(spark, gDir))
       val fetched = genesisTimeOf(g)
       require(stored == fetched,
         s"genesis verify failed: stored=$stored node=$fetched — refusing to mix chains")
@@ -170,7 +171,7 @@ object Foundation {
     // from a node for a DIFFERENT chain would silently overwrite the
     // stored schedule (slot cadence, fork epochs) with the wrong one
     if (graft.core.Fs.hasParquetFiles(spark, genesisDir(baseDir))) {
-      val stored = genesisTimeOf(spark.read.parquet(genesisDir(baseDir)))
+      val stored = genesisTimeOf(Tables.open(spark, genesisDir(baseDir)))
       val nodeGenesis = genesisTimeOf(genesis(spark, fetcher.genesis()))
       require(stored == nodeGenesis,
         s"refresh-specs verify failed: stored genesis=$stored node=$nodeGenesis — refusing to mix chains")
@@ -180,11 +181,11 @@ object Foundation {
     rawPayload(spark, specsJson).write.mode("overwrite").parquet(rawSpecsDir(baseDir))
     s.write.mode("overwrite").parquet(specsDir(baseDir))
     if (graft.core.Fs.hasParquetFiles(spark, genesisDir(baseDir))) {
-      val g = spark.read.parquet(genesisDir(baseDir))
-      timeHelpers(g, spark.read.parquet(specsDir(baseDir)))
+      val g = Tables.open(spark, genesisDir(baseDir))
+      timeHelpers(g, Tables.open(spark, specsDir(baseDir)))
         .write.mode("overwrite").parquet(timeHelpersDir(baseDir))
     }
-    spark.read.parquet(specsDir(baseDir)).count()
+    Tables.open(spark, specsDir(baseDir)).count()
   }
 
   /** Rebuild the ChainConfig from previously-bootstrapped foundation
@@ -193,8 +194,8 @@ object Foundation {
     if (graft.core.Fs.hasParquetFiles(spark, genesisDir(baseDir)) &&
         graft.core.Fs.hasParquetFiles(spark, specsDir(baseDir)))
       chainConfig(
-        spark.read.parquet(genesisDir(baseDir)),
-        spark.read.parquet(specsDir(baseDir)), network)
+        Tables.open(spark, genesisDir(baseDir)),
+        Tables.open(spark, specsDir(baseDir)), network)
     // unknown networks default to the mainnet preset — the SAME fallback
     // ChainConfig.fromSpecs uses, so the derived and preset paths agree
     // for an identical CLI invocation

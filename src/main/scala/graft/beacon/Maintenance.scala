@@ -1,5 +1,6 @@
 package graft.beacon
 
+import graft.core.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -66,7 +67,7 @@ object Maintenance {
     // only _SUCCESS (all-empty-slot chunk): nothing to delete either way
     if (!graft.core.Fs.hasParquetFiles(spark, tableDir)) return
     val months = monthsOf(cfg, startSlot, endSlot)
-    val df = spark.read.parquet(tableDir)
+    val df = Tables.open(spark, tableDir)
     val kept = df
       .filter(col("month").isin(months: _*))
       .filter(!col("slot").between(startSlot, endSlot))

@@ -1,5 +1,6 @@
 package graft.beacon
 
+import graft.core.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -95,7 +96,7 @@ object Transformer {
       spark: SparkSession, schema: StructType, dir: String, table: String): Unit =
     schemaProbed.getOrElseUpdate(dir, {
       if (graft.core.Fs.hasParquetFiles(spark, dir)) {
-        val existing = spark.read.parquet(dir).schema
+        val existing = Tables.open(spark, dir).schema
           .map(f => f.name -> f.dataType).toMap
         val drift = schema
           .flatMap { f =>
@@ -443,7 +444,7 @@ object Transformer {
     * at max insert_version) — the engine-wide `latest(table)` surface. */
   def latestTable(spark: SparkSession, outDir: String, table: String,
       keys: Seq[String]): DataFrame =
-    Ledger.latest(spark.read.parquet(s"$outDir/$table"), keys, "insert_version")
+    Ledger.latest(Tables.open(spark, s"$outDir/$table"), keys, "insert_version")
 
   /** Maximal declared schema of a structured table, derived from the
     * parser lineage itself: plan the table's parser over an EMPTY raw
@@ -462,7 +463,7 @@ object Transformer {
 
   /** Schema-drift-tolerant structured read — the 100 TB contract for a
     * directory written across fork eras (older files predate columns a
-    * later fork added). `spark.read.parquet(dir)` picks ONE footer to
+    * later fork added). `Tables.open(spark, dir)` picks ONE footer to
     * infer from, so whether a late-added column exists depends on which
     * file is sampled; `mergeSchema=true` fixes that by reading EVERY
     * footer — a full-directory metadata pass that gets expensive at

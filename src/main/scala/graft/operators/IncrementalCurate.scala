@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -232,7 +233,7 @@ object IncrementalCurate {
         s"$batchId — versions are keyed to the batchId, which requires " +
         "exactly one staged delta file per trigger (seed v0 before the " +
         "stream; keep maxFilesPerTrigger = 1)")
-    val prev = spark.read.parquet(s"$cacheDir/v$batchId")
+    val prev = Tables.open(spark, s"$cacheDir/v$batchId")
     val drop = batch.filter(col("status").isin("removed", "changed"))
       .select(col(idCol))
     val fresh = perDocVerdicts(
@@ -279,7 +280,7 @@ object IncrementalCurate {
     val deltaBuckets = batch.select(bucketOf.as("bucket"))
       .distinct().collect().map(_.getLong(0)).sorted
     if (deltaBuckets.nonEmpty) {
-      val live = spark.read.parquet(s"$cacheDir/live")
+      val live = Tables.open(spark, s"$cacheDir/live")
         .filter(col("bucket").isin(deltaBuckets: _*))
       val dropAll = batch.select(col(idCol))
       val fresh = perDocVerdicts(

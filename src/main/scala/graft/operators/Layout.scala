@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Tables
 import graft.functions.GraftFunctions.morton_interleave
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -71,7 +72,7 @@ object Layout {
     * the parquet reader from the same numbers.) */
   def fileStats(
       spark: SparkSession, dir: String, aCol: String, bCol: String): DataFrame =
-    spark.read.parquet(dir)
+    Tables.open(spark, dir)
       .groupBy(input_file_name().as("file"))
       .agg(
         min(aCol).as("a_min"), max(aCol).as("a_max"),

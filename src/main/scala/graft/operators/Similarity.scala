@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Tables
 import graft.functions.GraftFunctions.{mat_vec, pq_adc, pq_encode, sq8_dot, sq8_encode, vec_cosine, vec_dot}
 import graft.functions.{PqUtil, Sq8Util}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -1468,11 +1469,11 @@ object Similarity {
       val files = lists.flatMap(l => byList.getOrElse(l, Nil))
         .map(rel => s"$indexDir/$rel")
       if (files.isEmpty)
-        spark.read.parquet(indexDir).filter(col("list_id").isin(lists: _*))
+        Tables.open(spark, indexDir).filter(col("list_id").isin(lists: _*))
       else
         spark.read.option("basePath", indexDir).parquet(files: _*)
     } else
-      spark.read.parquet(indexDir).filter(col("list_id").isin(lists: _*))
+      Tables.open(spark, indexDir).filter(col("list_id").isin(lists: _*))
   }
 
   /** IVF top-k over a materialized [[writeIvfIndex]] directory: identical

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Tables
 import graft.core.Tables._
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.expressions.Window
@@ -1291,7 +1292,7 @@ object Inventory {
   private[queries] def drainStream(
       s: SparkSession, d: String, tableFile: String, prefix: String,
       mode: String)(build: DataFrame => DataFrame): DataFrame = {
-    val schema = s.read.parquet(s"$d/$tableFile").schema
+    val schema = Tables.open(s, s"$d/$tableFile").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", tableFile).parquet(d)
     val tbl = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -1323,7 +1324,7 @@ object Inventory {
         * volume) applied to every split drain. */
       shufflePartitions: Option[String] = Some("8"))(
       build: DataFrame => DataFrame): DataFrame = {
-    val src = s.read.parquet(s"$d/$tableFile")
+    val src = Tables.open(s, s"$d/$tableFile")
     val tmp = scratchDir(prefix + "src_")
     src.repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
     val stream = s.readStream.schema(src.schema)
@@ -1568,7 +1569,7 @@ object Inventory {
     * dominated the gate's wall time. A production deployment sizes this
     * to sustained throughput instead; the join plan is identical. */
   val r10StreamAttribution: Q = (s, d) => {
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.open(s, s"$d/events.parquet").schema
     def side(tpe: String, user: String, id: String, ts: String): DataFrame = {
       val ev = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -1637,7 +1638,7 @@ object Inventory {
     * against real data (user −1 matches only sentinels; filtered). */
   private def outerAttributionDrain(
       s: SparkSession, d: String, prefix: String, joinType: String): DataFrame = {
-    val src = s.read.parquet(s"$d/events.parquet")
+    val src = Tables.open(s, s"$d/events.parquet")
     val schema = src.schema
     val tsIsLong = schema("ts").dataType == org.apache.spark.sql.types.LongType
     val maxUs = src.select(max(unix_micros(eventTs(src).cast("timestamp"))))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Tables
 import graft.core.Tables._
 import graft.functions.GraftFunctions.{char_stats, nfc_normalize}
 import graft.operators.{BloomSet, Classifier, Decontam, Dedup, Importance, LmScore, Multimodal, Pii, Sampling, Similarity, Sketches, Skew, TextAnalysis, UrlOps}
@@ -1787,7 +1788,7 @@ object LlmInventory {
         cacheDir.toString, batch, id, "doc_id", "text")
     }
     val streamed = IncrementalCurate.dedupGroups(
-        s.read.parquet(s"$cacheDir/v${frames.length}"), "doc_id")
+        Tables.open(s, s"$cacheDir/v${frames.length}"), "doc_id")
       // localCheckpoint (eager) truncates lineage off the temp cache
       // files so the dir can be deleted before the frame is consumed
       .localCheckpoint(true)
@@ -1846,7 +1847,7 @@ object LlmInventory {
         cacheDir.toString, batch, "doc_id", "text", buckets = 8)
     }
     val streamed = IncrementalCurate.dedupGroups(
-        s.read.parquet(s"$cacheDir/live").select("doc_id", "h"), "doc_id")
+        Tables.open(s, s"$cacheDir/live").select("doc_id", "h"), "doc_id")
       .localCheckpoint(true)
     val full = IncrementalCurate.dedupGroups(
       IncrementalCurate.perDocVerdicts(v2, "doc_id", "text"), "doc_id")

@@ -55,11 +55,11 @@ final class ChunkedTail(
 
   /** Resume point: max ingested slot (A5), falling back to ledger state.
     * hasParquetFiles, not exists: a raw dir holding only _SUCCESS (all
-    * slots so far were 404-empty) has no inferable schema. */
+    * slots so far were 404-empty) has no rows to read. */
   def resumeSlot(): Long = {
     val fromRaw =
       if (graft.core.Fs.hasParquetFiles(spark, rawDir))
-        Ledger.maxSlot(spark.read.parquet(rawDir))
+        Ledger.maxSlot(Transformer.readRaw(spark, rawDir, Loaders.byName(loader).splitPayload))
       else None
     fromRaw.getOrElse(-1L)
   }
@@ -268,7 +268,7 @@ final class CompositeTail(
   def resumeSlot(l: LoaderDef): Long = {
     val dir = rawDirOf(l)
     (if (graft.core.Fs.hasParquetFiles(spark, dir))
-       Ledger.maxSlot(spark.read.parquet(dir))
+       Ledger.maxSlot(Transformer.readRaw(spark, dir, l.splitPayload))
      else None).getOrElse(-1L)
   }
 

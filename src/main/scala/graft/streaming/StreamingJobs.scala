@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.beacon._
+import graft.core.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -547,7 +548,7 @@ object StreamingJobs {
   /** Convenience: stream the `events` testdata directory as a file source
     * (schema-required for streaming reads). */
   def eventsFileStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.open(spark, s"$dir/events.parquet").schema
     val tsMicros = schema("ts").dataType match {
       // nanosecond-epoch LONG data (legacy nanosAsLong read)
       case org.apache.spark.sql.types.LongType => timestamp_micros(expr("ts div 1000"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{CanonicalJson, HexUtil, PqUtil}
-import graft.operators.Graph
+import graft.operators.{Dedup, Graph, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -122,7 +122,13 @@ class PropertySpec extends AnyFunSuite {
     seedIds <- Gen.nonEmptyListOf(Gen.oneOf(base.flatMap(e => e._1.toList ++ e._2.toList)))
     absent <- Gen.oneOf(Seq.empty[Option[Int]], Seq(Some(97)))
     nullSeed <- Gen.frequency(5 -> Gen.const(Seq.empty[Option[Int]]), 1 -> Gen.const(Seq(None)))
-  } yield RandomGraph(kind, edges, seedIds.take(3).map(Option(_)) ++ absent ++ nullSeed)
+    angles <- Gen.listOfN(15, Gen.chooseNum(0, 359))
+    minPts <- Gen.chooseNum(2, 4)
+  } yield RandomGraph(kind, edges, seedIds.take(3).map(Option(_)) ++ absent ++ nullSeed,
+    angles.toVector, minPts)
+
+  /** DBSCAN's ε as a cosine: about 23° between unit vectors. */
+  private val DbscanTau = 0.92
 
   test("graph driver twins equal their distributed loops on random small graphs") {
     val spark = SparkTestSession.spark
@@ -151,12 +157,20 @@ class PropertySpec extends AnyFunSuite {
           exact = true)
         val cc = Graph.connectedComponents(e, "src", "dst")
         val ccRef = Graph.connectedComponentsDistributed(e, "src", "dst", maxRounds = 50)
+        val corpus = g.corpus(spark)
+        val db = Similarity.dbscanLabels(corpus, "id", "vec", tau = DbscanTau,
+          minPts = g.minPts, planes = 1, seed = 7L, bands = 4)
+        val dbPairs = Dedup.embeddingNearDupPairs(corpus, "id", "vec", planes = 1,
+          seed = 7L, threshold = DbscanTau, bands = 4)
+        val dbRef = Similarity.dbscanDistributed(corpus, "id", dbPairs, g.minPts)
         val checks = Seq(
           "pageRank" -> (bits(pr) == bits(prRef) && shape(pr) == shape(prRef)),
           "personalizedPageRank" -> (bits(ppr) == bits(pprRef)),
           "pageRankConverged" -> (bits(cv) == bits(cvRef) && cvSteps == cvRefSteps),
-          "connectedComponents" -> (labels(cc) == labels(ccRef) && shape(cc) == shape(ccRef)))
-        Seq(ppr, pprRef, cv, cvRef).foreach(_.unpersist(blocking = false))
+          "connectedComponents" -> (labels(cc) == labels(ccRef) && shape(cc) == shape(ccRef)),
+          "dbscanLabels" -> (db.collect().map(_.toSeq).toSet == dbRef.collect().map(_.toSeq).toSet &&
+            shape(db) == shape(dbRef)))
+        Seq(ppr, pprRef, cv, cvRef, db, dbPairs).foreach(_.unpersist(blocking = false))
         Prop.all(checks.map { case (op, ok) => Prop(ok) :| s"$op on $g" }: _*)
       })
     info(f"${r.succeeded} cases in ${(System.nanoTime() - started) / 1e9}%.1f s")
@@ -173,10 +187,12 @@ object PropertySpec {
     * uses), self-loops, duplicate
     * (src, dst) pairs with different weights, and now and then a null
     * endpoint; plus a seed set for personalized rank (ids of the graph,
-    * sometimes an absent one, rarely a null). */
+    * sometimes an absent one, rarely a null); plus, for DBSCAN, an angle
+    * in degrees per node index, placing the graph's nodes as unit
+    * vectors on a circle, and a `minPts`. */
   final case class RandomGraph(
       kind: String, edges: Seq[(Option[Int], Option[Int], Long)],
-      seeds: Seq[Option[Int]]) {
+      seeds: Seq[Option[Int]], angles: Vector[Int], minPts: Int) {
     private val names = Vector("\uE000", "\uD800\uDC00", "\uFFFD", "\uD83D\uDE00",
       "\uF900", "a", "é", "ß", "Ω", "日本", "z", "ｚ", "ñandú", "語", "0")
     private def id(i: Int): Any = kind match {
@@ -184,6 +200,22 @@ object PropertySpec {
       case "long" => i * 10000000000L + 3L
       case _ => names(i % names.length) + (if (i >= names.length) i.toString else "")
     }
+    /** (id: long, vec: array<float>) over the graph's non-null nodes: the
+      * id is the node's own for the integral kinds and its index for
+      * strings, so the driver labelling always runs. */
+    def corpus(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      edges.flatMap(e => e._1.toList ++ e._2.toList).distinct.map { i =>
+        val r = math.toRadians(angles(i).toDouble)
+        val key = id(i) match {
+          case n: Int => n.toLong
+          case n: Long => n
+          case _ => i.toLong
+        }
+        (key, Seq(math.cos(r).toFloat, math.sin(r).toFloat, 0f))
+      }.toDF("id", "vec")
+    }
+
     def frames(spark: SparkSession): (DataFrame, DataFrame) = {
       import spark.implicits._
       def o(x: Option[Int]) = x.map(id).orNull

@@ -108,7 +108,9 @@ class ScaleSpec extends AnyFunSuite {
       val md = Scale.render(stage, params, 4, out)
       assert(md.startsWith(stage.header))
       assert(md.contains(s"runMain graft.Scale ${stage.name} ${params.cli}"))
-      assert(md.contains("| peak heap |"))
+      assert(md.contains(s"| peak heap | ${out.heapPeakMb} MB |"))
+      assert(md.contains(s"| live heap | ${out.heapLiveMb} MB |"))
+      assert(out.heapLiveMb <= out.heapPeakMb)
       val json = Scale.json(stage, out)
       assert(json.startsWith(s"""{"metric":"scale_${stage.name}","value":"""))
       assert(json.forall(c => c >= ' ' && c <= '~'), json)
